@@ -74,8 +74,17 @@ object RowValidator {
     * RowValidatorSpec pins the single-evaluation shape.
     */
   def violations(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
+    violations(docs, rules, Nil)
+
+  /** [[violations]] with the `carry` columns of `docs` copied onto every
+    * violation row after doc_id (the batch job's `src_file` lineage).
+    */
+  private[graft] def violations(docs: DataFrame, rules: RuleSet,
+      carry: Seq[String]): DataFrame = {
+    val keys = (col("doc_id") +: carry.map(col))
     withViolations(docs, rules)
-      .select(col("doc_id"), explode_outer(col("violations")).as("v"))
+      .select(keys :+ explode_outer(col("violations")).as("v"): _*)
       .where(col("v").isNotNull)
-      .select(col("doc_id"), col("v.*"))
+      .select(keys :+ col("v.*"): _*)
+  }
 }

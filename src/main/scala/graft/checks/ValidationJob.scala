@@ -1,6 +1,6 @@
 package graft.checks
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.{Ledger, ParquetSnapshotIO, Snapshot}
@@ -66,6 +66,13 @@ object ValidationJob {
     if (files.isEmpty) Nil
     else files.grouped(math.max(1, math.ceil(files.size.toDouble / batches).toInt)).toSeq
 
+  /** The batch's violation sink rows: [[RowValidator.violations]] (one
+    * kernel evaluation per row) with the `src_file` lineage carried.
+    */
+  private[graft] def violationRows(docs: DataFrame, rules: RuleSet): DataFrame =
+    RowValidator.violations(docs.withColumn("src_file", input_file_name()), rules,
+      Seq("src_file"))
+
   private def runBatch(spark: SparkSession, snap: Snapshot, files: Seq[String],
       outDir: String, runId: String, rules: RuleSet): BatchResult = {
     val t0 = System.nanoTime()
@@ -74,8 +81,6 @@ object ValidationJob {
     val batchId = java.lang.Integer.toUnsignedString(
       scala.util.hashing.MurmurHash3.orderedHash(files), 16)
     val docs = ParquetSnapshotIO.readSnapshot(spark, snap, files)
-    val validated = RowValidator.withViolations(docs, rules)
-      .withColumn("src_file", input_file_name())
 
     // one distributed pass: write per-doc verdicts (with per-file lineage);
     // violations expand only for failing docs
@@ -85,7 +90,8 @@ object ValidationJob {
     // observed metric — no second scan of the corpus — and lands on the
     // batch's ledger rows for cross-run merging.
     val obs = org.apache.spark.sql.Observation()
-    val verdicts = validated
+    val verdicts = RowValidator.withViolations(docs, rules)
+      .withColumn("src_file", input_file_name())
       .observe(obs, graft.agg.Kmv.sketch(col("doc_id"), Ledger.SketchK)
         .as("docid_sketch"))
       .select(col("doc_id"), col("passed"),
@@ -94,10 +100,7 @@ object ValidationJob {
       .parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
     val batchSketch = obs.get("docid_sketch").asInstanceOf[Array[Byte]]
 
-    val violations = validated.where(not(col("passed")))
-      .select(col("doc_id"), col("src_file"), explode(col("violations")).as("v"))
-      .select(col("doc_id"), col("src_file"), col("v.*"))
-    violations.write.mode(SaveMode.Overwrite)
+    violationRows(docs, rules).write.mode(SaveMode.Overwrite)
       .parquet(s"$outDir/violations/run_id=$runId/batch=$batchId")
 
     // per-file metrics from the tiny verdict output (not the corpus)

@@ -272,8 +272,8 @@ case class HyperplaneBands(child: Expression, bands: Int, rowsPerBand: Int,
   // Plane weights are pure functions of (band, row, dim): precompute them
   // ONCE per expression instance (per task after deserialization; ~128 KB at
   // 16x16x64) instead of re-deriving 2 Mix64 calls per multiply-add in the
-  // row kernel — measured ~2.4x kernel speedup (tools/KernelBench, see
-  // BENCH/BASELINE.md). Values identical to the in-loop derivation, so
+  // row kernel — measured ~2.4x kernel speedup (see BENCH/BASELINE.md).
+  // Values identical to the in-loop derivation (pinned in OpsSpec), so
   // signatures (and every persisted LSH key) are unchanged.
   @transient private lazy val planeTable: Array[Double] =
     HyperplaneBands.planes(bands, rowsPerBand, dims)

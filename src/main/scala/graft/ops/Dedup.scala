@@ -85,20 +85,65 @@ object Dedup {
     when(size(array_union(a, b)) === 0, lit(1.0))
       .otherwise(size(array_intersect(a, b)).cast("double") / size(array_union(a, b)))
 
-  /** Intra-row i<j expansion of a sorted bucket-member array into candidate
-    * structs (the shared shape of every LSH bucket expansion here), with an
-    * optional intra-row `keep` predicate applied BEFORE the flatten so
-    * filtered candidates never materialize. All pair operators share this
-    * one definition; their contract assumes UNIQUE ids — a duplicated input
+  /** Intra-row i<j expansion of a sorted bucket-member array into an
+    * array of candidate structs (the shared shape of every bucket
+    * expansion here). `keep` on the two members runs first, so rejected
+    * pairs never build an `mk` struct. Needs >= 2 members (callers drop
+    * smaller buckets). The contract assumes UNIQUE ids — a duplicated input
     * id would expand to (x, x) self-pairs, which callers must drop.
     */
-  private def expandPairs(ms: Column, mk: (Column, Column) => Column,
-      keep: Column => Column = _ => lit(true)): Column =
-    explode(flatten(transform(sequence(lit(0), size(ms) - 2), i =>
-      filter(
-        transform(sequence(i + 1, size(ms) - 1), j =>
-          mk(element_at(ms, i + 1), element_at(ms, j + 1))),
-        keep))))
+  private def expandPairs(ms: Column)(mk: (Column, Column) => Column,
+      keep: (Column, Column) => Column = (_, _) => lit(true)): Column =
+    flatten(transform(sequence(lit(0), size(ms) - 2), i =>
+      transform(filter(sequence(i + 1, size(ms) - 1),
+          j => keep(element_at(ms, i + 1), element_at(ms, j + 1))),
+        j => mk(element_at(ms, i + 1), element_at(ms, j + 1)))))
+
+  /** Every i<j pair inside each `key` group of `members` (columns `key`,
+    * `id`, payload): exact and uncapped, yet no row holds a quadratic
+    * array and no task gets a mass-duplicate group's whole pair list (hot
+    * keys split, not serialized — DS2, ICDE 2021). Group sizes `gn` come
+    * from a map-side-combined count joined back; a group splits into
+    * nb = ceil(gn / maxFlat) blocks by pmod(xxhash64(id), nb), and each
+    * member is emitted once per block pair (least(blk, o), greatest(blk, o)).
+    * Every unordered pair thus lands in exactly one (key, lo, hi) row: the
+    * within-block row when lo = hi ([[expandPairs]]), else the cross-block
+    * row, which pairs each member of block lo with each of block hi. A
+    * group of <= maxFlat members is one row, the plain [[expandPairs]]
+    * case; a larger one spreads over about nb²/2 rows of ~2·maxFlat
+    * members. `mk` and `keep` get member structs (id, payload...); `mk`
+    * sees the smaller id first, and `keep` (symmetric in its two members)
+    * runs first, so rejected pairs never build an `mk` struct.
+    *
+    * @return the fields of `mk`'s struct, one row per kept pair
+    */
+  private[graft] def groupPairs(members: DataFrame, key: String, maxFlat: Int)(
+      mk: (Column, Column) => Column, keep: (Column, Column) => Column): DataFrame = {
+    require(maxFlat >= 1, s"block size must be positive, got $maxFlat")
+    val gsize = members.groupBy(col(key)).agg(count(lit(1)).as("gn"))
+      .where(col("gn") > 1)
+    val payload = members.columns.toSeq.filterNot(Set(key, "id")).map(col)
+    val m = struct((col("id") +: payload): _*)
+    // a cross-block pair goes to mk smaller id first
+    def across(xs: Column, ys: Column): Column = flatten(transform(xs, x =>
+      transform(filter(ys, y => keep(x, y)), y =>
+        when(x.getField("id") < y.getField("id"), mk(x, y)).otherwise(mk(y, x)))))
+    members.join(gsize, Seq(key))
+      .withColumn("nb", ceil(col("gn") / lit(maxFlat)))
+      .withColumn("blk", pmod(xxhash64(col("id")), col("nb")))
+      .withColumn("o", explode(sequence(lit(0L), col("nb") - 1)))
+      .withColumn("lo", least(col("blk"), col("o")))
+      .withColumn("hi", greatest(col("blk"), col("o")))
+      // all three keys, or the planner reuses a partitioning on `key` alone
+      .repartition(col(key), col("lo"), col("hi"))
+      .groupBy(col(key), col("lo"), col("hi"))
+      .agg(sort_array(collect_list(when(col("blk") === col("lo"), m))).as("xs"),
+        sort_array(collect_list(when(col("blk") =!= col("lo"), m))).as("ys"))
+      .where(size(col("xs")) + size(col("ys")) > 1)
+      .select(explode(when(col("lo") === col("hi"), expandPairs(col("xs"))(mk, keep))
+        .otherwise(across(col("xs"), col("ys")))).as("p"))
+      .select(col("p.*"))
+  }
 
   /** MinHash + LSH near-dup pairs: shingle -> k-min-hash signature -> band
     * buckets -> capped intra-bucket candidate pairs (signature-estimate
@@ -164,47 +209,45 @@ object Dedup {
         1, maxBucket).as("ms"))
       .where(size(col("ms")) > 1)
     val estMatches = lit((math.ceil((threshold - estMargin) * numHashes)).toInt)
-    val candidates = buckets.select(expandPairs(col("ms"), (a, b) => {
-        val matches = size(filter(
-          zip_with(a.getField("sige"), b.getField("sige"),
-            (x, y) => x === y), m => m))
-        struct(
-          least(a.getField("id"), b.getField("id")).as("a"),
-          greatest(a.getField("id"), b.getField("id")).as("b"),
-          matches.as("m"))
-      },
-      p => p.getField("m") >= estMatches).as("p"))
+    val candidates = buckets.select(explode(expandPairs(col("ms"))(
+        (x, y) => struct(least(x.getField("id"), y.getField("id")).as("a"),
+          greatest(x.getField("id"), y.getField("id")).as("b")),
+        (x, y) => size(filter(zip_with(x.getField("sige"), y.getField("sige"),
+          (u, v) => u === v), m => m)) >= estMatches)).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .where(col("a") =!= col("b")) // duplicate-id inputs expand to self-pairs
       .groupBy(col("a"), col("b")).agg(lit(1)) // dedupe across bands
       .select(struct(col("a"), col("b")).as("p"))
-    verifyPairs(candidates, withSh, threshold)
+    verifyPairs(candidates, withSh, "sh", jaccard, "jaccard", threshold)
   }
 
-  /** Exact-Jaccard verification tail shared by [[minhashPairs]] and
-    * [[ngramJaccardPairs]]: ONE scan of the per-doc shingle table, joined
-    * to both pair sides (the small side broadcasts), exact jaccard once
-    * per surviving pair. Shingles are computed per DOCUMENT, not per
-    * candidate side — a doc appearing in many candidates must not pay the
-    * shingle computation once per pair (an A/B with post-join shingling
-    * measured 2x slower on dedup_ngram_pairs for exactly that reason).
+  /** Exact verification tail shared by [[minhashPairs]],
+    * [[ngramJaccardPairs]] and [[embeddingCosinePairs]]: ONE scan of the
+    * per-doc payload table, joined to both pair sides (the small side
+    * broadcasts), `score` computed once per surviving pair. Payloads are
+    * computed per DOCUMENT, not per candidate side — a doc appearing in
+    * many candidates must not pay the shingle computation once per pair (an
+    * A/B with post-join shingling measured 2x slower on dedup_ngram_pairs
+    * for exactly that reason). A pair with a side missing or duplicated in
+    * `payload` (non-unique ids) fails the two-sides check and is dropped.
     *
     * @param candidates one column `p` = struct(a, b)
-    * @param withSh     (id, sh) distinct-shingle table
-    * @return (a, b, jaccard) with exact jaccard >= threshold
+    * @param payload    (id, `value`) per-doc table
+    * @param score      similarity of the two sides' values ([[jaccard]],
+    *                   [[cosineSim]])
+    * @return (a, b, `out`) with `out` = score >= threshold
     */
-  private def verifyPairs(candidates: DataFrame, withSh: DataFrame,
-      threshold: Double): DataFrame = {
+  private def verifyPairs(candidates: DataFrame, payload: DataFrame, value: String,
+      score: (Column, Column) => Column, out: String, threshold: Double): DataFrame = {
     val sides = candidates
       .select(col("p"), explode(array(col("p.a"), col("p.b"))).as("id"))
-    sides.join(withSh, Seq("id"))
+    sides.join(payload, Seq("id"))
       .groupBy(col("p"))
-      .agg(min_by(col("sh"), col("id")).as("sha"), max_by(col("sh"), col("id")).as("shb"),
+      .agg(min_by(col(value), col("id")).as("va"), max_by(col(value), col("id")).as("vb"),
         count(lit(1)).as("nsides"))
       .where(col("nsides") === 2)
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        jaccard(col("sha"), col("shb")).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+      .select(col("p.a").as("a"), col("p.b").as("b"), score(col("va"), col("vb")).as(out))
+      .where(col(out) >= threshold)
   }
 
   /** Band-bucket occupancy audit for [[minhashPairs]]: per-bucket member
@@ -242,18 +285,17 @@ object Dedup {
     * combined aggregate + join back — NOT a count window over the shingle
     * partition, which would concentrate a hot shingle's every occurrence
     * in one task with no AQE skew splitting) -> per-doc rank window
-    * (shuffle by id) -> HYBRID candidate expansion routed by prefix-group
-    * size: groups of <= maxFlatGroup members are grouped per shingle and
-    * expanded i<j INTRA-ROW with the size + positional filters applied
-    * before the flatten (the [[expandPairs]] bucket shape — the common
-    * case, replacing a prefix-index SELF-JOIN that shuffled and
-    * recomputed the whole upstream pipeline once per side: measured
-    * 9.8s -> ~2s at sf0.1 together with the shingle bindOnce fix), while
-    * larger groups (mass-duplicated boilerplate) stream through the
-    * self-join so the quadratic pair set is never materialized in one
-    * array — exactness forbids a cap, and both routes apply identical
-    * filters -> one shingle fetch per surviving candidate side -> exact
-    * Jaccard verify.
+    * (shuffle by id) -> per-shingle candidate expansion by [[groupPairs]]
+    * with the size + positional filters applied before the flatten (it
+    * replaced a prefix-index SELF-JOIN that shuffled and recomputed the
+    * whole upstream pipeline once per side: measured 9.8s -> ~2s at sf0.1
+    * together with the shingle bindOnce fix). Prefix groups of up to
+    * `maxFlatGroup` members expand in one row; larger ones (mass-duplicated
+    * boilerplate, where every copy shares every prefix shingle) split into
+    * blocks of about `maxFlatGroup` members, so the quadratic pair set is
+    * never one array and never one task — exactness forbids a cap, and the
+    * pair set does not depend on the block size -> one shingle fetch per
+    * surviving candidate side -> exact Jaccard verify.
     */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       threshold: Double = 0.8, n: Int = 3, maxFlatGroup: Int = 256): DataFrame = {
@@ -280,64 +322,36 @@ object Dedup {
       // threshold could then be missed for unlucky thresholds)
       .where(col("rn") <= col("len") - ceil(lit(threshold) * col("len") - lit(1e-9)) + 1)
       .select(col("shingle"), col("id"), col("len"), col("rn"))
-    // group prefix members per shingle (one exchange on the shingle) and
-    // expand i<j candidate pairs intra-row; members sort by id so a < b for
-    // free. The AllPairs size filter (jaccard >= t forces t*|A| <= |B| and
+    // group prefix members per shingle and expand i<j candidate pairs
+    // intra-row ([[groupPairs]]: members sort by id so a < b for free).
+    // The AllPairs size filter (jaccard >= t forces t*|A| <= |B| and
     // t*|B| <= |A|; exactness-preserving, epsilons only LOOSEN) and the
     // PPJoin positional filter (a match at global-order prefix positions
     // (rn, rnb) bounds the reachable overlap by 1 + min(remaining), which
     // must reach ceil(t/(1+t)*(|A|+|B|)); a qualifying pair's FIRST shared
     // shingle always passes, and one surviving row per pair is all the
     // dedup groupBy needs) are applied BEFORE the flatten so pruned
-    // candidates never materialize.
-    val reqOverlap: (Column, Column) => Column = (la, lb) =>
+    // candidates never materialize; so is the id inequality (duplicate-id
+    // inputs expand to self-pairs).
+    def reqOverlap(la: Column, lb: Column): Column =
       ceil(lit(threshold / (1 + threshold)) * (la + lb) - lit(1e-9))
-    val sizeAndPosFilter: (Column, Column, Column, Column) => Column =
-      (la, ra, lb, rb) =>
+    def keep(x: Column, y: Column): Column = {
+      val (la, ra, lb, rb) = (x.getField("len"), x.getField("rn"),
+        y.getField("len"), y.getField("rn"))
+      x.getField("id") =!= y.getField("id") &&
         lb >= lit(threshold) * la - lit(1e-9) &&
-          lit(threshold) * lb <= la + lit(1e-9) &&
-          lit(1) + least(la - ra, lb - rb) >= reqOverlap(la, lb)
-    // HYBRID expansion routed by prefix-group size (a map-side-combined
-    // count — huge groups are never collected into one row): groups up to
-    // `maxFlatGroup` members expand i<j INTRA-ROW (filters applied before
-    // the flatten, so pruned candidates never materialize — the common
-    // case, and what replaced the old always-self-join: measured 9.8s ->
-    // ~2s at sf0.1 with the bindOnce fix); LARGER groups — mass-duplicated
-    // boilerplate, where every copy shares every prefix shingle — stream
-    // through the self-join instead, because a flatten materializes the
-    // group's FULL quadratic candidate set in one array (70k copies of one
-    // doc = 2.4e9 structs in a single row, over the JVM array limit; the
-    // join emits the same pairs as spillable streamed rows). Both routes
-    // apply identical filters; exactness is route-independent.
-    val psize = prefix.groupBy(col("shingle")).agg(count(lit(1)).as("gn"))
-    val routed = prefix.join(psize.where(col("gn") > 1), Seq("shingle"))
-    val smallPairs = routed.where(col("gn") <= maxFlatGroup)
-      .groupBy(col("shingle"))
-      .agg(sort_array(collect_list(struct(col("id"), col("len"), col("rn")))).as("ms"))
-      .select(expandPairs(col("ms"), (x, y) =>
-        struct(x.getField("id").as("a"), y.getField("id").as("b"),
-          sizeAndPosFilter(x.getField("len"), x.getField("rn"),
-            y.getField("len"), y.getField("rn")).as("keep")),
-        p => p.getField("keep")).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-    val big = routed.where(col("gn") > maxFlatGroup)
-      .select(col("shingle"), col("id"), col("len"), col("rn"))
-    val bigPairs = big
-      .join(big.select(col("shingle"), col("id").as("b"),
-          col("len").as("lenb"), col("rn").as("rnb")),
-        Seq("shingle"))
-      .where(col("id") < col("b"))
-      .where(sizeAndPosFilter(col("len"), col("rn"), col("lenb"), col("rnb")))
-      .select(col("id").as("a"), col("b"))
-    val candidates = smallPairs.unionByName(bigPairs)
-      .where(col("a") =!= col("b")) // duplicate-id inputs expand to self-pairs
+        lit(threshold) * lb <= la + lit(1e-9) &&
+        lit(1) + least(la - ra, lb - rb) >= reqOverlap(la, lb)
+    }
+    val candidates = groupPairs(prefix, "shingle", maxFlatGroup)(
+        (x, y) => struct(x.getField("id").as("a"), y.getField("id").as("b")), keep)
       .groupBy(col("a"), col("b")).agg(lit(1))
       .select(struct(col("a"), col("b")).as("p"))
     // exact verify: ONE scan of the shingle table joined to both pair
     // sides (see [[verifyPairs]] — shingling per DOC, not per candidate
     // side: an A/B of shingling after the join measured 2x slower here
     // because a doc pays once per candidate it appears in)
-    verifyPairs(candidates, withSh, threshold)
+    verifyPairs(candidates, withSh, "sh", jaccard, "jaccard", threshold)
   }
 
   /** SimHash near-dup pairs: 64-bit signature, bucketed with the
@@ -361,8 +375,9 @@ object Dedup {
     * `maxBucket` ([[simhashSigPairs]]). The emitted PAIR LIST is still
     * quadratic inside a true duplicate group — that is the contract;
     * feed [[dupClusters]] when clusters, not pairs, are the goal. The
-    * quadratic list STREAMS (r6): over-`maxBucket` groups pair via a
-    * self-join and cross products via chained explodes, never as one
+    * quadratic list STREAMS: hamming-0 groups over `maxBucket` members
+    * split into blocks of about `maxBucket` ([[groupPairs]]; exact, no
+    * cap), and cross products expand via chained explodes, never as one
     * materialized array per row.
     */
   def simhashPairs(df: DataFrame, id: Column, text: Column,
@@ -384,26 +399,18 @@ object Dedup {
     // hamming-0 pairs inside each group come for free from the collapse.
     val sigGroups = withSig.groupBy(col("sig"))
       .agg(sort_array(collect_list(col("id"))).as("ids"))
-    // hamming-0 pairs, HYBRID-routed like ngramJaccardPairs' expansion:
-    // the pair list inside a true duplicate group is quadratic BY CONTRACT,
-    // but it must stream, never materialize as one array — expandPairs'
-    // flatten on a 70k-copy boilerplate group would allocate C(70k,2)
-    // structs in a single row (over the JVM array limit). Small groups
-    // keep the intra-row expansion; larger ones self-join their exploded
-    // members on the signature (spillable streamed rows, same pairs).
-    val zeroSmall = sigGroups
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(expandPairs(col("ids"), (a, b) =>
-        struct(a.as("a"), b.as("b"))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"), lit(0).as("hamming"))
-    val zeroBigM = sigGroups.where(size(col("ids")) > maxBucket)
-      .select(col("sig"), explode(col("ids")).as("m"))
-    val zeroBig = zeroBigM
-      .join(zeroBigM.select(col("sig"), col("m").as("mb")), Seq("sig"))
-      .where(col("m") < col("mb"))
-      .select(col("m").as("a"), col("mb").as("b"), lit(0).as("hamming"))
-    val zeroPairs = zeroSmall.unionByName(zeroBig)
-      .where(col("a") =!= col("b")) // duplicate-id inputs expand to self-pairs
+    // hamming-0 pairs: the pair list inside a true duplicate group is
+    // quadratic BY CONTRACT, but it must stream, never materialize as one
+    // array — one flatten over a 70k-copy boilerplate group would allocate
+    // C(70k,2) structs in a single row (over the JVM array limit).
+    // [[groupPairs]] splits groups over `maxBucket` members into blocks.
+    // Its members come from the collapsed groups, so the signature is not
+    // recomputed.
+    val zeroPairs = groupPairs(
+        sigGroups.select(col("sig"), explode(col("ids")).as("id")), "sig", maxBucket)(
+        (x, y) => struct(x.getField("id").as("a"), y.getField("id").as("b")),
+        (x, y) => x.getField("id") =!= y.getField("id")) // duplicate-id inputs
+      .withColumn("hamming", lit(0))
     // cross-signature candidates over DISTINCT sigs only, capped buckets
     val sigPairs = simhashSigPairs(sigGroups.select(col("sig")),
       maxHamming, cleanBlocks, maxBucket)
@@ -451,10 +458,10 @@ object Dedup {
     val buckets = keyed.groupBy(col("table"), col("tk"))
       .agg(slice(sort_array(collect_list(col("sig"))), 1, maxBucket).as("sigs"))
       .where(size(col("sigs")) > 1)
-    buckets.select(expandPairs(col("sigs"), (sa, sb) =>
-        struct(sa.as("siga"), sb.as("sigb"),
+    buckets.select(explode(expandPairs(col("sigs"))(
+        (sa, sb) => struct(sa.as("siga"), sb.as("sigb"),
           bit_count(sa.bitwiseXOR(sb)).as("hamming")),
-        p => p.getField("hamming") <= maxHamming).as("p"))
+        (sa, sb) => bit_count(sa.bitwiseXOR(sb)) <= maxHamming)).as("p"))
       .select(col("p.siga").as("siga"), col("p.sigb").as("sigb"),
         col("p.hamming").as("hamming"))
       .groupBy(col("siga"), col("sigb")).agg(min(col("hamming")).as("hamming"))
@@ -710,24 +717,15 @@ object Dedup {
     // across bands before any vector is touched. Requires unique ids: a
     // duplicated id expands to self-pairs (dropped) and makes its genuine
     // pairs ambiguous at the vector fetch (nsides filter drops those too).
-    val candidates = buckets.select(expandPairs(col("ids"), (a, b) =>
-        struct(a.as("a"), b.as("b"))).as("p"))
+    val candidates = buckets.select(explode(expandPairs(col("ids"))(
+        (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
       .select(col("p.a").as("a"), col("p.b").as("b"))
       .where(col("a") =!= col("b"))
       .groupBy(col("a"), col("b")).agg(lit(1))
       .select(struct(col("a"), col("b")).as("p"))
     // exact verify: ONE scan of the vector table joined to both pair sides,
     // cosine computed once per surviving pair
-    val sides = candidates
-      .select(col("p"), explode(array(col("p.a"), col("p.b"))).as("id"))
-    sides.join(withVec, Seq("id"))
-      .groupBy(col("p"))
-      .agg(min_by(col("v"), col("id")).as("va"), max_by(col("v"), col("id")).as("vb"),
-        count(lit(1)).as("nsides"))
-      .where(col("nsides") === 2)
-      .select(col("p.a").as("a"), col("p.b").as("b"),
-        cosineSim(col("va"), col("vb")).as("cosine"))
-      .where(col("cosine") >= minCosine)
+    verifyPairs(candidates, withVec, "v", cosineSim, "cosine", minCosine)
   }
 
   /** Band-bucket occupancy audit for [[embeddingCosinePairs]] (the

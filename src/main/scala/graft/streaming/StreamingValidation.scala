@@ -24,10 +24,7 @@ object StreamingValidation {
 
   /** Violation rows on a streaming docs frame. */
   def violationStream(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
-    RowValidator.withViolations(docs, rules)
-      .where(not(col("passed")))
-      .select(col("doc_id"), explode(col("violations")).as("v"))
-      .select(col("doc_id"), col("v.*"))
+    RowValidator.violations(docs, rules)
 
   /** Windowed violation-rate over an event-time column: watermarked tumbling
     * windows, late data dropped past the watermark (stateful aggregation).

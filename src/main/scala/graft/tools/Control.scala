@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * `workload_rate / control_rate` across rounds: the ratio cancels the
   * weather, while a genuine code regression moves it.
   *
-  * The workload is identical to [[CpuScale]]'s (the standalone control
-  * used since round 2), so historical CpuScale readings remain comparable.
+  * The workload is the one the former standalone `CpuScale` main
+  * measured, so historical CpuScale readings remain comparable.
   */
 object Control {
 

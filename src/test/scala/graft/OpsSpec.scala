@@ -106,6 +106,35 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(diff == 0)
   }
 
+  test("hyperplane plane-table kernel equals the in-loop weight derivation") {
+    // the plane table precomputes Mix64 weights once per expression; the
+    // band keys (and every persisted LSH key) must match the formulation
+    // that derives two Mix64 calls per multiply-add, bit for bit
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import graft.expr.{HyperplaneBands, Mix64, SketchKernels}
+    def inLoopBands(vec: GenericArrayData, bands: Int, rows: Int, dims: Int): Array[Long] =
+      Array.tabulate(bands) { b =>
+        val key = (0 until rows).foldLeft(0L) { (k, r) =>
+          val planeSeed = Mix64.mix((b * rows + r).toLong)
+          val dot = (0 until dims).map(d => vec.getFloat(d).toDouble *
+            (Mix64.mix(planeSeed ^ Mix64.mix(d.toLong)).toDouble / 9.223372036854776e18)).sum
+          (k << 1) | (if (dot >= 0) 1L else 0L)
+        }
+        Mix64.mix(Mix64.mix(b.toLong) ^ key)
+      }
+    for ((bands, rows, dims) <- Seq((16, 16, 64), (4, 3, 7))) {
+      val planes = HyperplaneBands.planes(bands, rows, dims)
+      (0 until 16).foreach { i =>
+        val v = new GenericArrayData(Array.tabulate(dims)(d =>
+          (Mix64.mix(i.toLong * 65537 + d).toDouble / 9.2e18).toFloat))
+        val table = SketchKernels.hyperplaneBands(v, bands, rows, dims, true, planes)
+          .asInstanceOf[GenericArrayData].toLongArray()
+        assert(table.sameElements(inLoopBands(v, bands, rows, dims)),
+          s"vector $i at $bands x $rows x $dims")
+      }
+    }
+  }
+
   test("langIdNgram kernel is value-identical to the replace()-count column formulation") {
     // the r6 optimization fused the per-gram replace()-count columns into
     // one kernel; this pins the kernel row-for-row against the original
@@ -565,6 +594,52 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
         s"vector payload rides ${vecExchanges.size} exchanges (want <=1, the " +
           s"re-rank fetch; aqe=$aqe): ${vecExchanges.map(_.output)}")
     }
+  }
+
+  test("groupPairs block split yields exactly the brute-force i<j pairs") {
+    // maxFlat = 4 with groups of 1, 2, 4 (one block each), 5 and 13 (2 and
+    // 4 blocks): every unordered pair must land in exactly one block row,
+    // and `keep` must run on cross-block rows too
+    val sizes = Seq(1, 2, 4, 5, 13)
+    val members = sizes.zipWithIndex.flatMap { case (n, g) =>
+      (0 until n).map(i => (g.toLong, g * 100L + i * 7 % 13, i.toLong)) }
+    def keep(a: Long, b: Long) = (a + b) % 5 != 0
+    val expected = members.groupBy(_._1).values.toSeq.flatMap { ms =>
+      val ids = ms.map(_._2).sorted
+      for (i <- ids.indices; j <- i + 1 until ids.size if keep(ids(i), ids(j)))
+        yield (ids(i), ids(j), ids(i) * 1000 + ids(j))
+    }
+    assert(expected.size > 50)
+    val wOf = members.map(m => m._2 -> m._3).toMap
+    val got = Dedup.groupPairs(members.toDF("g", "id", "w"), "g", maxFlat = 4)(
+        (x, y) => struct(x.getField("id").as("a"), y.getField("id").as("b"),
+          (x.getField("id") * 1000 + y.getField("id")).as("ab"),
+          (x.getField("w") * 1000 + y.getField("w")).as("wab")),
+        (x, y) => (x.getField("id") + y.getField("id")) % 5 =!= 0)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got.map(_._4) == got.map(r => wOf(r._1) * 1000 + wOf(r._2))) // payload rides
+    val pairs = got.map(r => (r._1, r._2, r._3))
+    assert(pairs.size == pairs.distinct.size, "a pair was emitted twice")
+    assert(pairs.toSet == expected.toSet)
+  }
+
+  test("ngramJaccardPairs plans the shared upstream twice, not once per route") {
+    // static plan (AQE off, as PlanDump), counted before exchange reuse so
+    // every recomputation shows: the prefix pipeline (2 scans, 1 window)
+    // feeds only groupPairs' size count and its member side, plus one
+    // verify scan. The size-routed hybrid planned 13 scans and 6 windows.
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plan = Dedup.ngramJaccardPairs(docs, $"doc_id", $"text")
+        .queryExecution.sparkPlan
+      val scans = plan.collect { case s: FileSourceScanExec => s }.size
+      val windows = plan.collect { case w: WindowExec => w }.size
+      assert(scans <= 5, s"$scans parquet scans:\n$plan")
+      assert(windows <= 2, s"$windows windows:\n$plan")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
   }
 
   test("simhash mass-duplicate boilerplate keeps candidate volume sub-quadratic") {

@@ -92,6 +92,14 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
       RowValidator.violations(docs).groupBy($"rule_id").count())
     assert(aggNodes.sum == 1, s"kernel evaluated ${aggNodes.sum}x in agg plan")
 
+    // the batch job's violation sink (with src_file lineage) and the
+    // streaming violation sink share the same one-evaluation shape
+    val jobNodes = kernelNodes(
+      graft.checks.ValidationJob.violationRows(docs, graft.rules.RuleSet.default))
+    assert(jobNodes.sum == 1, s"kernel evaluated ${jobNodes.sum}x in job sink plan")
+    val streamNodes = kernelNodes(graft.streaming.StreamingValidation.violationStream(docs))
+    assert(streamNodes.sum == 1, s"kernel evaluated ${streamNodes.sum}x in stream sink plan")
+
     // verdicts: all occurrences must sit in a single node so runtime
     // subexpression elimination applies (passed + n_violations share one
     // Project)
