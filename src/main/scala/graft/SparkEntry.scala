@@ -602,15 +602,16 @@ object SparkEntry {
       val qs = lens.agg(
         percentile_approx(col("v"), typedLit(ps.map(_ / 100.0)), lit(accuracy))
           .as("q")).collect().head.getSeq[Long](0)
-      // exact discrete quantiles computed DISTRIBUTIVELY (range-partitioned
-      // prefix-sum CDF; only the 1-row result is collected) with shared
-      // integer rank math — smallest v with cumulative count >=
-      // ceilDiv(p*n, 100), the same definition the DuckDB oracle uses.
-      // The sketch rank-audit counts (rows <= q / < q per approx quantile)
-      // ride the SAME final aggregation pass (percentilesWithCuts), so the
-      // flag computation below is pure driver arithmetic on the collected
-      // one-row result instead of a second full scan of the value column
-      // (r6; flags are the identical double comparisons the scan computed).
+      // exact discrete quantiles computed DISTRIBUTIVELY (a radix select
+      // on the value: per-prefix counts, then only the rows of the target
+      // prefixes reach the driver) with shared integer rank math — smallest
+      // v with cumulative count >= ceilDiv(p*n, 100), the same definition
+      // the DuckDB oracle uses. The sketch rank-audit counts (rows <= q /
+      // < q per approx quantile) ride the select's first aggregate
+      // (percentilesWithCuts), so the flag computation below is pure driver
+      // arithmetic on the collected one-row result instead of a second full
+      // scan of the value column (flags are the identical double
+      // comparisons the scan computed).
       val ex = checks.ExactQuantile.percentilesWithCuts(lens, col("v"), ps, qs)
         .collect().head
       val nRows = ex.getLong(0)

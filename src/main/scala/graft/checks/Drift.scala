@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * "KS/PSI distribution-drift tests on span-offset and kind-frequency
   * histograms"). Both reduce to small-cardinality aggregations (≤ a few
   * hundred rows after groupBy), so the heavy work is one distributed
-  * aggregate per side; the final statistic is computed with a tiny
-  * full-outer join + reduce — no driver-side math on big data.
+  * aggregate (per side for PSI, over both sides at once for KS); the final
+  * statistic is a tiny join or window plus a reduce — no driver-side math
+  * on big data.
   */
 object Drift {
 
@@ -36,24 +37,30 @@ object Drift {
     * Exact for discrete/bucketed data; an upper-bounded approximation
     * (±1/buckets) for continuous data — the scale-path tradeoff chosen by
     * SURVEY.md §2 Part B (aggregate histograms, never sort 10^12 rows).
+    * A side with no non-null value gives ks = null.
     */
   def ksBucketed(current: DataFrame, baseline: DataFrame, value: Column,
       lo: Double, hi: Double, buckets: Int = 256): DataFrame = {
-    def hist(df: DataFrame, cName: String): DataFrame = {
-      val b = least(greatest(
-        floor((value - lit(lo)) / lit((hi - lo) / buckets)), lit(0L)),
-        lit(buckets.toLong - 1)).as("bucket")
-      df.where(value.isNotNull).groupBy(b).agg(count(lit(1)).as(cName))
-    }
-    val joined = hist(current, "n_cur").join(hist(baseline, "n_base"), Seq("bucket"), "full_outer")
-      .na.fill(0L, Seq("n_cur", "n_base"))
+    val bucket = least(greatest(
+      floor((value - lit(lo)) / lit((hi - lo) / buckets)), lit(0L)),
+      lit(buckets.toLong - 1)).as("bucket")
+    // both sides in one aggregate: each row is tagged 1 for its own side's
+    // count and 0 for the other's, so a bucket seen on one side only gets
+    // a 0 count on the other, as a full-outer join of two histograms would
+    def side(df: DataFrame, cur: Long): DataFrame =
+      df.where(value.isNotNull).select(bucket, lit(cur).as("n_cur"), lit(1L - cur).as("n_base"))
+    val hist = side(current, 1L).unionByName(side(baseline, 0L))
+      .groupBy(col("bucket"))
+      .agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("bucket"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    joined
+    // a side with no non-null value has a null CDF (try_divide: under ANSI
+    // a plain 0/0 throws), so ks is null
+    hist
       .select(
-        (sum(col("n_cur")).over(w) / sum(col("n_cur")).over()).as("cdf_cur"),
-        (sum(col("n_base")).over(w) / sum(col("n_base")).over()).as("cdf_base"))
+        try_divide(sum(col("n_cur")).over(w), sum(col("n_cur")).over()).as("cdf_cur"),
+        try_divide(sum(col("n_base")).over(w), sum(col("n_base")).over()).as("cdf_base"))
       .agg(max(abs(col("cdf_cur") - col("cdf_base"))).as("ks"))
   }
 

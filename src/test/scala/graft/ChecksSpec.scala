@@ -1,15 +1,107 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.agg.StatsAgg
-import graft.checks.{Drift, Referential, Uniqueness}
+import graft.checks.{Drift, ExactQuantile, Referential, Uniqueness}
 
 /** Stats aggregator, uniqueness (incl. adversarial skew), referential, drift. */
 class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   import spark.implicits._
+
+  /** Waits until the listener bus has delivered every posted event (the bus
+    * accessor is not public API, hence reflection).
+    */
+  private def drainBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
+  /** Runs `body`; returns the Spark jobs it started and the final physical
+    * plans (adaptive stages unwrapped) of every query it executed.
+    */
+  private def traced(body: => Unit): (Int, Seq[SparkPlan]) = {
+    val jobs = new AtomicInteger
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val planListener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans ++= collectWithSubqueries(qe.executedPlan) { case p => p } }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    drainBus()
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try { body; drainBus() }
+    finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+    (jobs.get, plans.synchronized(plans.toSeq))
+  }
+
+  /** percentilesWithCuts over `df`'s column v must equal the nearest ranks
+    * of its collected non-null values sorted in Spark's order (-0.0 = 0.0,
+    * NaN above +Infinity), and the cut counts must equal a count over them.
+    * Values compare with `equals`: NaN must come back as NaN, a zero as
+    * 0.0 (never -0.0), and an int column's percentiles as ints.
+    */
+  private def assertExactQuantiles(df: DataFrame, cuts: Seq[Long] = Nil): Unit = {
+    val ps = Seq(1, 50, 90, 99, 100)
+    def cmp(a: Any, b: Any): Int = (a, b) match {
+      case (x: Double, y: Double) => java.lang.Double.compare(x, y)
+      case (x: Number, y: Number) => java.lang.Long.compare(x.longValue, y.longValue)
+    }
+    val vals = df.select("v").collect().toIndexedSeq.filterNot(_.isNullAt(0)).map(_.get(0) match {
+      case d: Double => if (d == 0.0) 0.0 else d
+      case x => x
+    }).sortWith(cmp(_, _) < 0)
+    val n = vals.size.toLong
+    val longs = if (cuts.isEmpty) Nil else vals.map(_.asInstanceOf[Number].longValue)
+    val expected = n +: (ps.map(p => if (n == 0) null else vals((ExactQuantile.rankOf(n, p) - 1).toInt)) ++
+      cuts.flatMap(q => Seq(longs.count(_ <= q).toLong, longs.count(_ < q).toLong)))
+    val got = ExactQuantile.percentilesWithCuts(df, col("v"), ps, cuts).collect().head.toSeq
+    assert(got.size == expected.size &&
+      got.zip(expected).forall { case (a, b) => java.util.Objects.equals(a, b) },
+      s"got $got, expected $expected")
+  }
+
+  /** Fixed-bucket KS recomputed on the driver from the collected values;
+    * None when a side has no non-null value.
+    */
+  private def ksDriver(cur: DataFrame, base: DataFrame, lo: Double, hi: Double,
+      buckets: Int): Option[Double] = {
+    def bucket(v: Double): Long =
+      math.min(math.max(math.floor((v - lo) / ((hi - lo) / buckets)).toLong, 0L), buckets - 1L)
+    def hist(df: DataFrame): Map[Long, Long] = df.select("v").collect()
+      .filterNot(_.isNullAt(0)).toSeq.groupMapReduce(r => bucket(r.getDouble(0)))(_ => 1L)(_ + _)
+    val (hc, hb) = (hist(cur), hist(base))
+    val bs = (hc.keySet ++ hb.keySet).toSeq.sorted
+    def cdf(h: Map[Long, Long]): Seq[Double] =
+      bs.scanLeft(0L)((acc, b) => acc + h.getOrElse(b, 0L)).tail.map(_.toDouble / h.values.sum)
+    if (hc.isEmpty || hb.isEmpty) None
+    else Some(cdf(hc).zip(cdf(hb)).map { case (a, b) => math.abs(a - b) }.max)
+  }
 
   test("StatsAgg computes counts, nulls, min/max, and length histogram in one pass") {
     val df = Seq(Some("a"), Some("bb" * 60), None, Some("ccc"), None).toDF("s")
@@ -116,7 +208,8 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val nodes = org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(executed)
     val partialAggs = nodes.collect {
       case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec
-          if h.toString.contains("partial_count") => h
+          if h.aggregateExpressions.exists(e => e.mode == Partial
+            && e.aggregateFunction.isInstanceOf[Count]) => h
     }
     assert(partialAggs.nonEmpty,
       s"dupKeys lost its map-side partial aggregation:\n${nodes.mkString("\n")}")
@@ -225,7 +318,6 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("ExactQuantile: distributed percentiles equal the brute-force ranks") {
-    import graft.checks.ExactQuantile
     // deterministic values with heavy ties and a skewed tail — the shapes
     // where FP ceil and tie-group boundaries bite
     val vals = (0 until 997).map(i => ((i * i) % 37).toLong) ++
@@ -247,6 +339,97 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val empty = ExactQuantile.percentiles(
       Seq.empty[java.lang.Long].toDF("v"), col("v"), Seq(50)).collect().head
     assert(empty.getLong(0) == 0L && empty.isNullAt(1))
+  }
+
+  test("ExactQuantile equals sorted nearest ranks on adversarial inputs") {
+    val rnd = new scala.util.Random(7)
+    // both signs, both zeros, both infinities, NaN, extremes and nulls: p1
+    // lands on -Infinity, p50 on the zeros (as 0.0) and p99 on NaN
+    val doubles = Seq.fill(40)(Double.NegativeInfinity) ++ Seq.fill(40)(Double.NaN) ++
+      Seq.fill(500)(-0.0) ++ Seq.fill(500)(0.0) ++
+      Seq(Double.PositiveInfinity, Double.MinPositiveValue, -Double.MinPositiveValue,
+        Double.MaxValue, -Double.MaxValue) ++
+      Seq.fill(2000)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(13) - 6))
+    assertExactQuantiles((doubles.map(Some(_)) ++ Seq.fill(25)(None)).toDF("v").repartition(8))
+    // one value repeated more than 2^16 times: its prefix is refined down to
+    // shift 0 (the value itself), while p100 resolves in a narrow prefix
+    val (repeatedJobs, _) = traced(assertExactQuantiles(
+      spark.range(0, 70100, 1, 8).select(when($"id" < 70000, 7L).otherwise($"id").as("v")),
+      Seq(6L, 7L, 8L, 70050L)))
+    // values packed into one top prefix, so refinement rounds run: longs of
+    // both signs (negatives narrow at once, positives refined twice) and
+    // doubles in [1, 1.01) (refined once)
+    val (packedJobs, _) = traced {
+      assertExactQuantiles(spark.range(0, 200000, 1, 8).select(($"id" * 3 - 100000).as("v")),
+        Seq(-100000L, 0L, 299999L, 499997L))
+      assertExactQuantiles(spark.range(0, 100000, 1, 8).select((lit(1.0) + $"id" * 1e-7).as("v")))
+    }
+    // each call collects its input once and, with every target narrow, runs
+    // at most 3 jobs; more jobs mean refinement aggregates ran
+    assert(repeatedJobs > 1 + 3 && packedJobs > 2 * (1 + 3),
+      s"refinement did not run: $repeatedJobs, $packedJobs jobs")
+    // an int column comes back as ints, with cut counts over its own values
+    val ints = Seq(Int.MinValue, Int.MaxValue, -1, 0, 1) ++ Seq.fill(500)(rnd.nextInt(2001) - 1000)
+    assertExactQuantiles((ints.map(Some(_)) :+ None).toDF("v").repartition(4),
+      Seq(Int.MinValue.toLong, -1L, 0L, 500L, Int.MaxValue.toLong + 1))
+    // nulls only, and empty: n_rows 0, null percentiles, zero cut counts
+    assertExactQuantiles(Seq[Option[Long]](None, None).toDF("v"), Seq(0L))
+    assertExactQuantiles(Seq.empty[Long].toDF("v"), Seq(0L))
+  }
+
+  test("ExactQuantile cut counts need an integral value column") {
+    val e = intercept[IllegalArgumentException] {
+      ExactQuantile.percentilesWithCuts(Seq(1.5, 2.5).toDF("v"), col("v"), Seq(50), Seq(2L))
+    }
+    assert(e.getMessage.contains("integral"), e.getMessage)
+    // without cuts a double column is fine; a non-numeric column never is
+    assert(ExactQuantile.percentiles(Seq(1.5, 2.5).toDF("v"), col("v"), Seq(50))
+      .collect().head.getDouble(1) == 1.5)
+    intercept[IllegalArgumentException] {
+      ExactQuantile.percentiles(Seq("a").toDF("v"), col("v"), Seq(50))
+    }
+  }
+
+  test("ExactQuantile runs at most 3 jobs, with no window and no range partitioning") {
+    val df = spark.range(0, 20000, 1, 8).select((($"id" * 7919) % 10007).cast("double").as("v"))
+    val (jobs, plans) = traced(ExactQuantile.percentiles(df, col("v"), Seq(50, 90, 99)).collect())
+    assert(plans.nonEmpty)
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(!plans.exists(_.isInstanceOf[WindowExec]), plans.mkString("\n"))
+    assert(!plans.exists {
+      case x: ShuffleExchangeLike => x.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }, plans.mkString("\n"))
+  }
+
+  test("bucketed KS is one aggregate over both sides: no join, one hash exchange") {
+    val a = spark.range(0, 5000, 1, 4).select(($"id" % 100).cast("double").as("v"))
+    val b = spark.range(0, 5000, 1, 4).select((($"id" % 100) + 20).cast("double").as("v"))
+    val ks = Drift.ksBucketed(a, b, col("v"), 0, 200, 200)
+    ks.collect()
+    val nodes = Bridge.finalPlanNodes(ks)
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), nodes.mkString("\n"))
+    val hashExchanges = nodes.collect {
+      case x: ShuffleExchangeLike if x.outputPartitioning.isInstanceOf[HashPartitioning] => x
+    }
+    assert(hashExchanges.size == 1 && nodes.exists(_.isInstanceOf[WindowExec]),
+      nodes.mkString("\n"))
+  }
+
+  test("bucketed KS equals a driver recomputation with one-sided buckets and an all-null side") {
+    // cur covers buckets 0-9 only, base 6-19 only; both clamp strays into
+    // the end buckets
+    val cur = spark.range(0, 3000, 1, 4).select(
+      when($"id" % 97 === 0, lit(-5.0)).otherwise(($"id" % 50).cast("double")).as("v"))
+    val base = spark.range(0, 2000, 1, 4).select(
+      when($"id" % 89 === 0, lit(250.0)).otherwise(($"id" % 70 + 30).cast("double") + 0.5).as("v"))
+    val nulls = spark.range(0, 100, 1, 2).select(lit(null).cast("double").as("v"))
+    for ((c, b) <- Seq(cur -> base, base -> cur, cur -> nulls, nulls -> base, nulls -> nulls)) {
+      val got = Drift.ksBucketed(c, b, col("v"), 0.0, 100.0, 20).collect().head
+      val want = ksDriver(c, b, 0.0, 100.0, 20)
+      assert((if (got.isNullAt(0)) None else Some(got.getDouble(0))) == want, s"$got vs $want")
+    }
+    assert(ksDriver(cur, base, 0.0, 100.0, 20).exists(_ > 0.5))
   }
 
   test("kind frequencies over the synthetic corpus") {
