@@ -38,25 +38,8 @@ case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_sig"
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val base = Mix64.hashUtf8(arr.getUTF8String(i))
-        var j = 0
-        while (j < numHashes) {
-          val h = Mix64.mix(base ^ Mix64.mix(j.toLong))
-          if (h < sig(j)) sig(j) = h
-          j += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
+  override def nullSafeEval(input: Any): Any =
+    SketchKernels.minhash(input.asInstanceOf[ArrayData], numHashes)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>

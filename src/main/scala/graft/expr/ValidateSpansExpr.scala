@@ -209,18 +209,6 @@ case class ValidateSpans(children: Seq[Expression], rules: RuleSet,
 }
 
 object ValidateSpans {
-  /** Column-level API over the spans struct column:
-    * `ValidateSpans(col("spans"), rules)` — extracts `spans.kind` and
-    * `spans.text` so the scan can prune the other span fields.
-    */
-  def apply(spans: Column, rules: RuleSet): Column =
-    apply(spans.getField("kind"), spans.getField("text"), rules)
-
-  /** Column-level API over pre-extracted parallel field arrays. */
-  def apply(kinds: Column, texts: Column, rules: RuleSet): Column =
-    Bridge.column(ValidateSpans(
-      Seq(Bridge.expression(kinds), Bridge.expression(texts)), rules))
-
   /** Full three-scope form: context scope (plan constant) plus data-driven
     * record/span override columns (pass lit(null) shapes when absent).
     */

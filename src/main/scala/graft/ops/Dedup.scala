@@ -145,19 +145,83 @@ object Dedup {
       .select(col("p.*"))
   }
 
+  /** Capped band-bucket candidate pairs of [[minhashPairs]],
+    * [[embeddingCosinePairs]] and [[simhashSigPairs]]: each (band, bh)
+    * bucket of band rows (`band`, `bh`, `id`, payload...) keeps its first
+    * `maxBucket` members in (id, payload) order — deterministic, so a
+    * mass-duplicated mega-bucket cannot go quadratic (audit the cap with
+    * [[bucketStats]]) — and expands i<j pairs intra-row ([[expandPairs]],
+    * `keep` first). Self-pairs of duplicate-id inputs are dropped and the
+    * rest deduped across bands.
+    *
+    * @return distinct (a, b) with a < b
+    */
+  private def bucketPairs(bands: DataFrame, maxBucket: Int)(
+      keep: (Column, Column) => Column): DataFrame = {
+    val payload = bands.columns.toSeq.filterNot(Set("band", "bh", "id")).map(col)
+    bands.groupBy(col("band"), col("bh"))
+      .agg(slice(sort_array(collect_list(struct((col("id") +: payload): _*))),
+        1, maxBucket).as("ms"))
+      .where(size(col("ms")) > 1)
+      // members sort by id, so the first of a pair has the smaller id
+      .select(explode(expandPairs(col("ms"))(
+        (x, y) => struct(x.getField("id").as("a"), y.getField("id").as("b")),
+        keep)).as("p"))
+      .select(col("p.a").as("a"), col("p.b").as("b"))
+      .where(col("a") =!= col("b"))
+      .distinct()
+  }
+
+  /** Bucket occupancy audit of a capped operator's band rows: (band, bh, n)
+    * for buckets of at least `minSize` members, largest first — run before
+    * choosing `maxBucket` on a new corpus. It must read the SAME band rows
+    * its operator shuffles, or it reports buckets the operator never builds.
+    */
+  private def bucketStats(bands: DataFrame, minSize: Long): DataFrame =
+    bands.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
+      .where(col("n") >= minSize)
+      .orderBy(col("n").desc)
+
+  /** (id, sh) distinct-shingle table. Null text is EXCLUDED (no content to
+    * compare) — without this, null tokens shingle to [""] and every
+    * null-text doc pairs with every other at jaccard 1.0 (the simhashPairs
+    * null-pooling hazard, same fix).
+    */
+  private def shingled(df: DataFrame, id: Column, text: Column, n: Int = 3): DataFrame =
+    df.where(text.isNotNull).select(id.as("id"), shingles(text, n).as("sh"))
+
+  /** MinHash band rows (id, sige, band, bh), one per doc and band. Band
+    * keys come from one fused kernel (MinhashBandKeys), bit-identical to
+    * xxhash64(band, sig-slice) (parity-pinned in OpsSpec): a sequence lambda
+    * over `sig` re-evaluated the minhash per band (176 s vs 23 s), and a
+    * literal array of 32 slices made janino compile 32 inlined hashers.
+    * `sige` is the signature cut to 7 bits per component (array<tinyint>,
+    * ~6x fewer bytes than the full sig, which was the operator's dominant
+    * shuffle volume). It feeds only the estimate prefilter, and equal
+    * components stay equal when cut, so the prefilter admits a (negligibly)
+    * wider superset and the exact verify decides as before (7 bits: ANSI-safe
+    * tinyint; false equality 2^-7 per component adds ~0.5 of 64 matches).
+    * Shingle arrays never ride the fan-out (in v1 they did: x32 shuffle).
+    */
+  private def minhashBands(withSh: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    val rows = numHashes / bands
+    require(rows * bands == numHashes, "bands must divide numHashes")
+    withSh.select(col("id"), minhashSig(col("sh"), numHashes).as("sig"))
+      .select(col("id"),
+        transform(col("sig"), h => h.bitwiseAND(lit(127L)).cast("tinyint")).as("sige"),
+        posexplode(minhashBandKeys(col("sig"), bands, rows)).as(Seq("band", "bh")))
+  }
+
   /** MinHash + LSH near-dup pairs: shingle -> k-min-hash signature -> band
     * buckets -> capped intra-bucket candidate pairs (signature-estimate
     * prefilter) -> exact-Jaccard verification over ONE extra scan.
     *
     * Scale shape: the band shuffle carries only (band, bucket-hash, id,
-    * signature) — the shingle arrays never ride the x`bands` fan-out (they
-    * did in v1: a measured x32 shuffle-volume multiplier). Buckets are
-    * capped at `maxBucket` members (deterministic by id order) so one
-    * degenerate mega-bucket — mass-duplicated boilerplate, a real 100 TB
-    * phenomenon — cannot go quadratic; use [[minhashBucketStats]] to audit
-    * what a cap would drop. Candidate pairs are prefiltered by the unbiased
-    * signature estimate (matching minhash components / numHashes >=
-    * threshold - estMargin; at 64 hashes the estimate's sigma is ~0.05 so
+    * truncated signature) ([[minhashBands]]). Buckets are capped at
+    * `maxBucket` members ([[bucketPairs]]); use [[minhashBucketStats]] to
+    * audit what a cap would drop. Candidate pairs are prefiltered by the
+    * unbiased signature estimate (matching minhash components / numHashes
+    * >= threshold - estMargin; at 64 hashes the estimate's sigma is ~0.05 so
     * the default margin is ~4 sigma), then exactly verified by fetching the
     * two shingle sets per surviving pair with one scan + one shuffle.
     *
@@ -166,58 +230,16 @@ object Dedup {
   def minhashPairs(df: DataFrame, id: Column, text: Column, threshold: Double = 0.8,
       numHashes: Int = 64, bands: Int = 32, maxBucket: Int = 256,
       estMargin: Double = 0.2, inputPartitions: Int = 0): DataFrame = {
-    val rows = numHashes / bands
-    require(rows * bands == numHashes, "bands must divide numHashes")
     // Small single-split inputs (one parquet row group) pin the signature
     // stage — the CPU-heavy part — to one task; callers pass inputPartitions
     // to fan it out. At real scale the scan has thousands of splits and the
     // knob stays 0 (no extra shuffle).
     val in = if (inputPartitions > 0) df.repartition(inputPartitions) else df
-    // null text is EXCLUDED (no content to compare) — without this, null
-    // tokens shingle to [""] and every null-text doc pairs with every other
-    // at jaccard 1.0 (the simhashPairs null-pooling hazard, same fix)
-    val withSh = in.where(text.isNotNull)
-      .select(id.as("id"), shingles(text).as("sh"))
-    val withSig = withSh.select(col("id"), minhashSig(col("sh"), numHashes).as("sig"))
-    // Band keys are ONE fused kernel (MinhashBandKeys) producing the same
-    // xxhash64(band, sig-slice) values as the literal-indexed SQL array it
-    // replaces (parity-pinned in OpsSpec). History of this expression:
-    // a transform/sequence lambda with sig inside re-evaluated the minhash
-    // per band element (176s vs 23s, 2026-08-16); the literal 32-slice
-    // array fixed that but janino-compiled ~32 inlined hashers on every
-    // session's first minhash query.
-    //
-    // The signature copy riding the band fan-out exists ONLY for the
-    // estimate prefilter, so it is truncated to 7 bits per component
-    // (array<tinyint>, ~6x fewer bytes than the full array<bigint> — the
-    // full sig was ~16 KB per doc across 32 bands, the dominant shuffle
-    // volume of the whole operator). Truncation is output-preserving:
-    // equal 64-bit components are equal truncated, so the estimated match
-    // count only GROWS — the prefilter admits a (negligibly) wider
-    // candidate superset and the exact-Jaccard verify decides membership
-    // exactly as before. (7 bits: ANSI-safe tinyint range; false equality
-    // 2^-7 per component inflates the estimate by ~0.5 of 64 components.)
-    val bandRows = withSig.select(col("id"),
-      transform(col("sig"), h => h.bitwiseAND(lit(127L)).cast("tinyint")).as("sige"),
-      posexplode(minhashBandKeys(col("sig"), bands, rows))
-        .as(Seq("band", "bh")))
-    // ONE candidate shuffle: aggregate bucket members per (band, bucket),
-    // deterministically capped, then expand i<j pairs intra-row
-    val buckets = bandRows
-      .groupBy(col("band"), col("bh"))
-      .agg(slice(sort_array(collect_list(struct(col("id"), col("sige")))),
-        1, maxBucket).as("ms"))
-      .where(size(col("ms")) > 1)
+    val withSh = shingled(in, id, text)
     val estMatches = lit((math.ceil((threshold - estMargin) * numHashes)).toInt)
-    val candidates = buckets.select(explode(expandPairs(col("ms"))(
-        (x, y) => struct(least(x.getField("id"), y.getField("id")).as("a"),
-          greatest(x.getField("id"), y.getField("id")).as("b")),
-        (x, y) => size(filter(zip_with(x.getField("sige"), y.getField("sige"),
-          (u, v) => u === v), m => m)) >= estMatches)).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .where(col("a") =!= col("b")) // duplicate-id inputs expand to self-pairs
-      .groupBy(col("a"), col("b")).agg(lit(1)) // dedupe across bands
-      .select(struct(col("a"), col("b")).as("p"))
+    val candidates = bucketPairs(minhashBands(withSh, numHashes, bands), maxBucket)(
+      (x, y) => size(filter(zip_with(x.getField("sige"), y.getField("sige"),
+        (u, v) => u === v), m => m)) >= estMatches)
     verifyPairs(candidates, withSh, "sh", jaccard, "jaccard", threshold)
   }
 
@@ -231,7 +253,7 @@ object Dedup {
     * for exactly that reason). A pair with a side missing or duplicated in
     * `payload` (non-unique ids) fails the two-sides check and is dropped.
     *
-    * @param candidates one column `p` = struct(a, b)
+    * @param candidates distinct (a, b) pairs
     * @param payload    (id, `value`) per-doc table
     * @param score      similarity of the two sides' values ([[jaccard]],
     *                   [[cosineSim]])
@@ -239,8 +261,12 @@ object Dedup {
     */
   private def verifyPairs(candidates: DataFrame, payload: DataFrame, value: String,
       score: (Column, Column) => Column, out: String, threshold: Double): DataFrame = {
-    val sides = candidates
-      .select(col("p"), explode(array(col("p.a"), col("p.b"))).as("id"))
+    // keyed on struct(a, b), not (a, b): a column key reuses the candidates'
+    // (a, b) partitioning, so scoring runs in the few partitions AQE left
+    // the thin candidate exchange (dedup_near medians, 4 cores: minhash 7.9
+    // -> 10.3 s, ngram 4.9 -> 7.4 s); the struct key adds an exchange here
+    val sides = candidates.select(struct(col("a"), col("b")).as("p"),
+      explode(array(col("a"), col("b"))).as("id"))
     sides.join(payload, Seq("id"))
       .groupBy(col("p"))
       .agg(min_by(col(value), col("id")).as("va"), max_by(col(value), col("id")).as("vb"),
@@ -250,23 +276,13 @@ object Dedup {
       .where(col(out) >= threshold)
   }
 
-  /** Band-bucket occupancy audit for [[minhashPairs]]: per-bucket member
-    * counts above `minSize`, descending — run before choosing `maxBucket`
-    * on a new corpus (a capped bucket trades recall inside mass-duplicated
-    * boilerplate clusters for a quadratic-explosion guarantee).
+  /** Band-bucket occupancy audit for [[minhashPairs]]: (band, bh, n) for
+    * buckets of at least `minSize` docs, over the operator's own band rows
+    * ([[bucketStats]]).
     */
   def minhashBucketStats(df: DataFrame, id: Column, text: Column,
-      numHashes: Int = 64, bands: Int = 32, minSize: Long = 2): DataFrame = {
-    val rows = numHashes / bands
-    val withSig = df.select(id.as("id"), shingles(text).as("sh"))
-      .select(col("id"), minhashSig(col("sh"), numHashes).as("sig"))
-    withSig.select(col("id"),
-      posexplode(minhashBandKeys(col("sig"), bands, rows))
-        .as(Seq("band", "bh")))
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
-      .where(col("n") >= minSize)
-      .orderBy(col("n").desc)
-  }
+      numHashes: Int = 64, bands: Int = 32, minSize: Long = 2): DataFrame =
+    bucketStats(minhashBands(shingled(df, id, text), numHashes, bands), minSize)
 
   /** n-gram Jaccard near-dup pairs without LSH: EXACT, via prefix filtering
     * (the AllPairs/PPJoin principle, Bayardo et al. WWW'07 / Xiao et al.
@@ -300,8 +316,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       threshold: Double = 0.8, n: Int = 3, maxFlatGroup: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // null text excluded — see minhashPairs
-    val withSh = df.where(text.isNotNull).select(id.as("id"), shingles(text, n).as("sh"))
+    val withSh = shingled(df, id, text, n)
     // explode_OUTER, deliberately: `sh` is provably non-null and non-empty
     // here (text is filtered non-null and rawShingles always yields >= 1
     // element), so outer and inner explode emit identical rows — but the
@@ -345,8 +360,7 @@ object Dedup {
     }
     val candidates = groupPairs(prefix, "shingle", maxFlatGroup)(
         (x, y) => struct(x.getField("id").as("a"), y.getField("id").as("b")), keep)
-      .groupBy(col("a"), col("b")).agg(lit(1))
-      .select(struct(col("a"), col("b")).as("p"))
+      .distinct()
     // exact verify: ONE scan of the shingle table joined to both pair
     // sides (see [[verifyPairs]] — shingling per DOC, not per candidate
     // side: an A/B of shingling after the join measured 2x slower here
@@ -432,12 +446,11 @@ object Dedup {
   }
 
   /** Cross-signature candidate pairs for [[simhashPairs]]: Manku block keys
-    * over a DISTINCT-signature table, bucket members aggregated per table
-    * key and capped at `maxBucket` (deterministic by signature order — the
-    * [[minhashPairs]] cap, same audit tradeoff), i<j expansion with the
-    * hamming filter applied intra-row, then deduped across tables. Exposed
-    * `private[graft]` so the mass-duplicate test can assert the candidate
-    * volume stays sub-quadratic.
+    * over a DISTINCT-signature table, one band row per (table, signature),
+    * expanded by [[bucketPairs]] (the [[minhashPairs]] cap, deterministic by
+    * signature order — same audit tradeoff) with the hamming filter applied
+    * intra-row. Exposed `private[graft]` so the mass-duplicate test can
+    * assert the candidate volume stays sub-quadratic.
     *
     * @param sigs one column `sig` (distinct 64-bit signatures)
     * @return (siga, sigb, hamming) with 1 <= hamming <= maxHamming
@@ -450,21 +463,16 @@ object Dedup {
       val loBit = 64 * b / m; val hiBit = 64 * (b + 1) / m
       shiftrightunsigned(sig, loBit).bitwiseAND(lit((1L << (hiBit - loBit)) - 1))
     }
+    def hamming(x: Column, y: Column): Column = bit_count(x.bitwiseXOR(y))
     val tables = (0 until m).combinations(cleanBlocks).toSeq
-    val keyed = sigs.select(col("sig"),
+    val bands = sigs.select(col("sig").as("id"),
       posexplode(array(tables.zipWithIndex.map { case (blocks, t) =>
         xxhash64(lit(t) +: blocks.map(b => blockVal(col("sig"), b)): _*)
-      }: _*)).as(Seq("table", "tk")))
-    val buckets = keyed.groupBy(col("table"), col("tk"))
-      .agg(slice(sort_array(collect_list(col("sig"))), 1, maxBucket).as("sigs"))
-      .where(size(col("sigs")) > 1)
-    buckets.select(explode(expandPairs(col("sigs"))(
-        (sa, sb) => struct(sa.as("siga"), sb.as("sigb"),
-          bit_count(sa.bitwiseXOR(sb)).as("hamming")),
-        (sa, sb) => bit_count(sa.bitwiseXOR(sb)) <= maxHamming)).as("p"))
-      .select(col("p.siga").as("siga"), col("p.sigb").as("sigb"),
-        col("p.hamming").as("hamming"))
-      .groupBy(col("siga"), col("sigb")).agg(min(col("hamming")).as("hamming"))
+      }: _*)).as(Seq("band", "bh")))
+    bucketPairs(bands, maxBucket)(
+        (x, y) => hamming(x.getField("id"), y.getField("id")) <= maxHamming)
+      .select(col("a").as("siga"), col("b").as("sigb"),
+        hamming(col("a"), col("b")).as("hamming"))
   }
 
   /** Benchmark decontamination screening: per-doc count of distinct word
@@ -705,43 +713,33 @@ object Dedup {
       dims: Int = 64, maxBucket: Int = 256, inputPartitions: Int = 0): DataFrame = {
     val in = if (inputPartitions > 0) df.repartition(inputPartitions) else df
     val withVec = in.select(id.as("id"), vec.as("v"))
-    // band rows: (band, bh, id) only — no vector column in this exchange
-    // (asserted by a plan test in OpsSpec)
-    val bandRows = withVec.select(col("id"),
-      posexplode(Similarity.bandKeys(col("v"), bands, rowsPerBand, dims))
-        .as(Seq("band", "bh")))
-    val buckets = bandRows.groupBy(col("band"), col("bh"))
-      .agg(slice(sort_array(collect_list(col("id"))), 1, maxBucket).as("ids"))
-      .where(size(col("ids")) > 1)
-    // intra-bucket i<j expansion (ids sorted, so a < b for free), deduped
-    // across bands before any vector is touched. Requires unique ids: a
-    // duplicated id expands to self-pairs (dropped) and makes its genuine
-    // pairs ambiguous at the vector fetch (nsides filter drops those too).
-    val candidates = buckets.select(explode(expandPairs(col("ids"))(
-        (a, b) => struct(a.as("a"), b.as("b")))).as("p"))
-      .select(col("p.a").as("a"), col("p.b").as("b"))
-      .where(col("a") =!= col("b"))
-      .groupBy(col("a"), col("b")).agg(lit(1))
-      .select(struct(col("a"), col("b")).as("p"))
-    // exact verify: ONE scan of the vector table joined to both pair sides,
-    // cosine computed once per surviving pair
+    // requires unique ids: a duplicated id expands to self-pairs (dropped)
+    // and makes its genuine pairs ambiguous at the vector fetch (the nsides
+    // filter drops those too)
+    val candidates = bucketPairs(
+      embeddingBands(withVec, bands, rowsPerBand, dims), maxBucket)((_, _) => lit(true))
     verifyPairs(candidates, withVec, "v", cosineSim, "cosine", minCosine)
   }
 
-  /** Band-bucket occupancy audit for [[embeddingCosinePairs]] (the
-    * [[minhashBucketStats]] analog): per-bucket member counts above
-    * `minSize`, descending — run before choosing `maxBucket` on a new
-    * embedding corpus.
+  /** Hyperplane band rows (id, band, bh) of an (id, v) vector table — no
+    * vector column in the band exchange (asserted by a plan test in
+    * OpsSpec).
+    */
+  private def embeddingBands(withVec: DataFrame, bands: Int, rowsPerBand: Int,
+      dims: Int): DataFrame =
+    withVec.select(col("id"),
+      posexplode(Similarity.bandKeys(col("v"), bands, rowsPerBand, dims))
+        .as(Seq("band", "bh")))
+
+  /** Band-bucket occupancy audit for [[embeddingCosinePairs]]: (band, bh,
+    * n) for buckets of at least `minSize` vectors, over the operator's own
+    * band rows ([[bucketStats]]).
     */
   def embeddingBucketStats(df: DataFrame, id: Column, vec: Column,
       bands: Int = 16, rowsPerBand: Int = 16, dims: Int = 64,
       minSize: Long = 2): DataFrame =
-    df.select(id.as("id"),
-        posexplode(Similarity.bandKeys(vec, bands, rowsPerBand, dims))
-          .as(Seq("band", "bh")))
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("n"))
-      .where(col("n") >= minSize)
-      .orderBy(col("n").desc)
+    bucketStats(embeddingBands(df.select(id.as("id"), vec.as("v")),
+      bands, rowsPerBand, dims), minSize)
 
   /** Intra-document line dedup: drop repeated lines WITHIN each document,
     * keeping the first occurrence — the per-page counterpart of the global

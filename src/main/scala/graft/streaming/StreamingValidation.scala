@@ -5,26 +5,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.checks.RowValidator
-import graft.expr.SketchExprs.minhashSig
+import graft.expr.SketchExprs.{minhashBandKeys, minhashSig}
 import graft.ops.Dedup
 import graft.rules.RuleSet
 
 /** Structured-Streaming form of the engine. The batch core is a pure
   * DataFrame -> DataFrame function, so the streaming variant is the same
   * plan bound to a streaming source (SURVEY.md §2 Part B "Streaming"):
-  * `readStream.parquet(docsDir) |> validate |> writeStream`.
+  * `readStream.parquet(docsDir) |> validate |> writeStream`; the per-doc
+  * verdicts and violation rows are [[graft.checks.RowValidator.verdicts]]
+  * and [[graft.checks.RowValidator.violations]] applied to a streaming frame.
   */
 object StreamingValidation {
-
-  /** Per-doc verdicts on a streaming docs frame (stateless: one row in, one
-    * row out — safe in append mode with no watermark).
-    */
-  def verdictStream(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
-    RowValidator.verdicts(docs, rules)
-
-  /** Violation rows on a streaming docs frame. */
-  def violationStream(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
-    RowValidator.violations(docs, rules)
 
   /** Windowed violation-rate over an event-time column: watermarked tumbling
     * windows, late data dropped past the watermark (stateful aggregation).
@@ -256,8 +248,7 @@ object StreamingValidation {
       .select(id.cast("string").as("doc_id"),
         minhashSig(Dedup.shingles(text), numHashes).as("sig"),
         col(tsCol).as("ts"))
-      .select(posexplode(array((0 until bands).map(b =>
-          xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows))): _*))
+      .select(posexplode(minhashBandKeys(col("sig"), bands, rows))
           .as(Seq("band", "bh")),
         col("doc_id"), col("sig"), col("ts"))
       .as[BandIn]

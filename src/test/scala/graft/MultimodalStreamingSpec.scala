@@ -117,7 +117,7 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     Synth.corpusDF(spark, 90).write.mode("overwrite").parquet(s"$dir/in")
     val schema = spark.read.parquet(s"$dir/in").schema
     val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-    val q = StreamingValidation.verdictStream(stream)
+    val q = graft.checks.RowValidator.verdicts(stream)
       .writeStream.format("memory").queryName("verdicts_stream")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)

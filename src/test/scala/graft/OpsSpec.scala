@@ -442,32 +442,31 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(expected.subsetOf(pairs))
   }
 
-  test("ngramJaccardPairs hybrid routes agree; mass-dup groups stream via the join") {
-    // the r6 hybrid sends prefix-groups over maxFlatGroup through the
-    // streamed self-join instead of the intra-row flatten (a group's full
-    // quadratic candidate set must never materialize in one array);
-    // exactness must be route-independent
+  test("ngramJaccardPairs does not depend on block size; mass-dup groups give every pair") {
+    // groupPairs splits prefix groups over maxFlatGroup members into blocks
+    // (a group's full quadratic candidate set must never materialize in one
+    // array); exactness must not depend on the block size
     val sample = docs.where($"text".isNotNull && $"doc_id" < 200)
     def pairsOf(mfg: Int) = Dedup.ngramJaccardPairs(sample, $"doc_id", $"text",
         threshold = 0.7, maxFlatGroup = mfg)
       .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaFlatten = pairsOf(1000000)
-    val viaJoin = pairsOf(1) // every group of >= 2 takes the join route
-    assert(viaFlatten == viaJoin)
-    assert(viaFlatten.nonEmpty) // the comparison must actually exercise pairs
+    val oneBlock = pairsOf(1000000)
+    val singletonBlocks = pairsOf(1) // every group of >= 2 splits into blocks
+    assert(oneBlock == singletonBlocks)
+    assert(oneBlock.nonEmpty) // the comparison must actually exercise pairs
     // mass-duplicate farm: 300 identical docs -> every prefix group has 300
-    // members (> default 256), so the join route carries them; all pairs
-    // must still surface
+    // members (> default 256), so it splits into blocks; all pairs must
+    // still surface
     val farm = spark.range(300).select($"id",
       lit("alpha beta gamma delta epsilon zeta eta theta iota kappa").as("t"))
     val n = Dedup.ngramJaccardPairs(farm, $"id", $"t").count()
     assert(n == 300L * 299 / 2)
   }
 
-  test("simhash hamming-0 routes agree; an over-maxBucket dup farm streams via the join") {
-    // same hybrid contract as the ngram expansion: identical results on
-    // both routes, and a duplicate group larger than maxBucket must go
-    // through the streamed self-join (never one intra-row flatten)
+  test("simhash hamming-0 pairs do not depend on block size; a 600-copy farm gives all pairs") {
+    // same groupPairs contract as the ngram expansion: identical results at
+    // any block size, and a duplicate group larger than maxBucket splits
+    // into blocks (never one intra-row flatten) yet yields its full list
     val farm = spark.range(600).select($"id",
       lit("alpha beta gamma delta epsilon zeta eta theta").as("t"))
       .unionByName(spark.range(600, 610).select($"id",
@@ -481,20 +480,20 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val farmPairs = pairs.filter { case (a, b) => a < 600 && b < 600 }
     assert(farmPairs.size == 600 * 599 / 2) // full quadratic list, streamed
     assert(farmPairs.forall { case (a, b) => a < b })
-    // hamming-0 route parity on a mixed corpus: maxBucket=1 forces every
-    // dup group through the join route (hamming-0 only — maxBucket also
-    // caps the cross-signature buckets, which is a different, documented
-    // recall trade)
+    // hamming-0 block-size independence on a mixed corpus: maxBucket=1
+    // splits every dup group into singleton blocks (hamming-0 only —
+    // maxBucket also caps the cross-signature buckets, which is a
+    // different, documented recall trade)
     val mixed = spark.range(40).select($"id",
       concat(lit("shared boilerplate text block"),
         when($"id" % 4 === 0, lit("")).otherwise(concat(lit(" v"), $"id"))).as("t"))
-    def zeroRoute(mb: Int) = Dedup.simhashPairs(mixed, $"id", $"t", maxBucket = mb)
+    def zeroPairs(mb: Int) = Dedup.simhashPairs(mixed, $"id", $"t", maxBucket = mb)
       .where($"hamming" === 0)
       .select($"a", $"b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaFlat = zeroRoute(1000)
-    assert(viaFlat == zeroRoute(1))
-    assert(viaFlat.nonEmpty)
+    val oneBlock = zeroPairs(1000)
+    assert(oneBlock == zeroPairs(1))
+    assert(oneBlock.nonEmpty)
   }
 
   test("ngram jaccard baseline agrees with minhash on the same corpus") {
@@ -694,6 +693,11 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val estats = Dedup.embeddingBucketStats(vflood.toDF("vec_id", "embedding"),
       $"vec_id", $"embedding", minSize = 2).collect()
     assert(estats.length == 16 && estats.forall(_.getLong(2) == 40L))
+    // the audit reads minhashPairs' own band rows, so null-text docs (which
+    // the operator excludes) report no bucket
+    val withNulls = Seq((1L, "alpha beta gamma delta"), (2L, null),
+      (3L, null), (4L, null)).toDF("doc_id", "text")
+    assert(Dedup.minhashBucketStats(withNulls, $"doc_id", $"text", minSize = 2).isEmpty)
   }
 
   test("null-text and duplicate-id inputs produce no degenerate pairs") {
