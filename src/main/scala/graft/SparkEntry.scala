@@ -301,13 +301,9 @@ object SparkEntry {
     // brute-force cosine top-10 to the vec_id=0 embedding (ANN baseline)
     "ann_topk" -> ((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val q = emb.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
-      val top = Similarity.topKCosine(
-        emb.where(col("vec_id") =!= 0), col("vec_id"), col("embedding"), q, 10)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("cosine").desc, col("id"))
-      top.withColumn("rank", row_number().over(w).cast("long"))
+      Similarity.topKCosine(emb.where(col("vec_id") =!= 0), col("vec_id"),
+          col("embedding"), emb.where(col("vec_id") === 0), col("vec_id"),
+          col("embedding"), 10)
         .select(col("rank"), col("id").as("vec_id"))
     }),
     // IVF ANN (the scale path): spherical k-means quantizer trained with the
@@ -317,15 +313,11 @@ object SparkEntry {
     // partial-probe recall + partition pruning are covered in IvfSpec.
     "ann_ivf_topk" -> ((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val q = emb.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
       val rest = emb.where(col("vec_id") =!= 0)
       val model = ops.Ivf.train(rest, col("vec_id"), col("embedding"), k = 16, iters = 2)
       val index = ops.Ivf.assign(rest, col("vec_id"), col("embedding"), model)
-      val top = ops.Ivf.search(index, model, q, topK = 10, nProbe = 16)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("cosine").desc, col("id"))
-      top.withColumn("rank", row_number().over(w).cast("long"))
+      ops.Ivf.search(index, model, emb.where(col("vec_id") === 0), col("vec_id"),
+          col("embedding"), topK = 10, nProbe = 16)
         .select(col("rank"), col("id").as("vec_id"))
     }),
     // IVF PARTIAL probe driven end-to-end: assign with the deterministic
@@ -337,18 +329,14 @@ object SparkEntry {
     // clusters + probes re-derived in DuckDB SQL.
     "ann_ivf_pruned" -> ((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val q = emb.where(col("vec_id") === 0).select(col("embedding"))
-        .collect().head.getSeq[Float](0)
       val rest = emb.where(col("vec_id") =!= 0)
-      val model = ops.Ivf.Model.axis(4, q.length)
+      val model = ops.Ivf.Model.axis(4, 64) // embeddings are 64-dim
       val idxDir = s"/tmp/graft_ivf_pruned_${new java.io.File(dir).getName}"
       ops.Ivf.writeIndex(
         ops.Ivf.assign(rest, col("vec_id"), col("embedding"), model), idxDir)
       val index = ops.Ivf.readIndex(s, idxDir)
-      val top = ops.Ivf.search(index, model, q, topK = 10, nProbe = 2)
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("cosine").desc, col("id"))
-      top.withColumn("rank", row_number().over(w).cast("long"))
+      ops.Ivf.search(index, model, emb.where(col("vec_id") === 0), col("vec_id"),
+          col("embedding"), topK = 10, nProbe = 2)
         .select(col("rank"), col("id").as("vec_id"))
     }),
     // token counting: whitespace tokens + BPE-ish subword pieces per doc
@@ -663,7 +651,7 @@ object SparkEntry {
     "ann_batch_topk" -> ((s, dir) => {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val q = emb.where(col("vec_id") % 100 === 0)
-      Similarity.topKCosineBatch(emb, col("vec_id"), col("embedding"),
+      Similarity.topKCosine(emb, col("vec_id"), col("embedding"),
           q, col("vec_id"), col("embedding"), k = 10)
         .select(col("qid"), col("rank"), col("id").as("vec_id"))
     }),
@@ -677,7 +665,7 @@ object SparkEntry {
       val q = emb.where(col("vec_id") % 100 === 0)
       val model = ops.Ivf.train(emb, col("vec_id"), col("embedding"), k = 16, iters = 2)
       val index = ops.Ivf.assign(emb, col("vec_id"), col("embedding"), model)
-      ops.Ivf.searchBatch(index, model, q, col("vec_id"), col("embedding"),
+      ops.Ivf.search(index, model, q, col("vec_id"), col("embedding"),
           topK = 10, nProbe = 16)
         .select(col("qid"), col("rank"), col("id").as("vec_id"))
     }),
@@ -1131,7 +1119,8 @@ object SparkEntry {
       // axis-model IVF: cluster = argmax(embedding[1..4]) with lowest-index
       // tie-break (matches Ivf.clusterOf: cosine vs axis centroid e_j is
       // embedding[j]/|v|, same argmax); probes = top-2 clusters by the
-      // query's own components (matches Model.rankClusters)
+      // query's own components (matches Ivf.probeClusters, the same cosine
+      // ranking)
       "ann_ivf_pruned" -> """
         WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
              probes AS (

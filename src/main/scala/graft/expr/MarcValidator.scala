@@ -2,7 +2,7 @@ package graft.expr
 
 import scala.collection.mutable
 
-import graft.rules.{RuleSet, TagRule}
+import graft.rules.RuleSet
 import graft.schema.{Span, Violation}
 
 /** The per-document MARC21 rule kernel: one pass over a doc's spans producing

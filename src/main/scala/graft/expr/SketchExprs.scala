@@ -1,7 +1,7 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -86,26 +86,24 @@ case class Fnv64(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** argmax_cosine(vec) -> int: index of the centroid (row of the constant
-  * `centroids` matrix) with the highest cosine to `vec`, ties to the lower
-  * index — the IVF assignment kernel. Bit-identical to the HOF formulation
-  * it replaces (`array_min(transform(sequence(...), j ->
-  * struct(-cosine_sim(vec, cm[j]), j))).cluster`): the cosine uses the same
-  * double accumulation order as [[SketchKernels.cosine]], and the running
-  * comparison replicates struct-min ordering via `Double.compare` (so
-  * -0.0/0.0 edge ordering matches). A dimension mismatch made every
-  * negcos null in the old form, which struct-min resolved to cluster 0 —
-  * replicated explicitly. One fused codegen'd loop (k·dims multiply-adds)
-  * instead of k interpreted struct allocations + an interpreted array_min
-  * per row; the centroid matrix rides a codegen reference object, so the
-  * generated source is identical across models and the codegen cache hits
-  * (the typedLit formulation recompiled per trained model).
+/** cosine_rank(vec) -> array<int>: the `n` best centroids (rows of the
+  * constant `centroids` matrix) for `vec`, best first — the one IVF
+  * cluster-ranking kernel: assignment is rank 1 ([[graft.ops.Ivf.clusterOf]]),
+  * probing is the first nProbe ([[graft.ops.Ivf.probeClusters]]), so a
+  * partial probe always reaches the cluster a vector was assigned to. Order:
+  * `Double.compare` on the negated cosine (the cosine uses the same double
+  * accumulation order as [[SketchKernels.cosine]]), ties to the lower
+  * index, so a NaN cosine ranks LAST; on a dimension mismatch the clusters
+  * come back in index order. One fused codegen'd loop (k·dims multiply-adds
+  * plus an n·k selection); the centroid matrix rides a codegen reference
+  * object, so the generated source is identical across models and the
+  * codegen cache hits.
   */
-case class ArgmaxCosine(child: Expression, centroids: Array[Array[Float]])
+case class CosineRank(child: Expression, centroids: Array[Array[Float]], n: Int)
     extends UnaryExpression {
-  require(centroids.nonEmpty)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "argmax_cosine"
+  require(centroids.nonEmpty && n >= 1 && n <= centroids.length)
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "cosine_rank"
 
   @transient private lazy val isFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _) => true
@@ -113,15 +111,16 @@ case class ArgmaxCosine(child: Expression, centroids: Array[Array[Float]])
   }
 
   override def nullSafeEval(input: Any): Any =
-    SketchKernels.argmaxCosine(input.asInstanceOf[ArrayData], centroids, isFloat)
+    SketchKernels.rankCosine(input.asInstanceOf[ArrayData], centroids, isFloat, n)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cRef = ctx.addReferenceObj("centroids", centroids, "float[][]")
     defineCodeGen(ctx, ev, c =>
-      s"graft.expr.SketchKernels.argmaxCosine($c, $cRef, $isFloat)")
+      s"(org.apache.spark.sql.catalyst.util.ArrayData) " +
+        s"graft.expr.SketchKernels.rankCosine($c, $cRef, $isFloat, $n)")
   }
 
-  override protected def withNewChildInternal(newChild: Expression): ArgmaxCosine =
+  override protected def withNewChildInternal(newChild: Expression): CosineRank =
     copy(child = newChild)
 }
 
@@ -411,16 +410,20 @@ object SketchKernels {
     if (bestScore > 0) bestLang else Und
   }
 
-  def argmaxCosine(vec: ArrayData, centroids: Array[Array[Float]],
-      isFloat: Boolean): Int = {
+  def rankCosine(vec: ArrayData, centroids: Array[Array[Float]],
+      isFloat: Boolean, n: Int): ArrayData = {
+    val k = centroids.length
     val dims = centroids(0).length
-    // dimension mismatch: the HOF formulation yielded null negcos for every
-    // centroid, and struct-min resolved the all-null tie to cluster 0
-    if (vec.numElements() != dims) return 0
-    var bestJ = 0
-    var bestNeg = java.lang.Double.POSITIVE_INFINITY
+    val out = new Array[Int](n)
+    if (vec.numElements() != dims) {
+      // dimension mismatch: no cosine is defined, so every cluster ties
+      var r = 0
+      while (r < n) { out(r) = r; r += 1 }
+      return UnsafeArrayData.fromPrimitiveArray(out)
+    }
+    val neg = new Array[Double](k)
     var j = 0
-    while (j < centroids.length) {
+    while (j < k) {
       val c = centroids(j)
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
@@ -430,19 +433,28 @@ object SketchKernels {
         dot += x * y; na += x * x; nb += y * y
         i += 1
       }
-      val cos = if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb)
-      // track min NEGATED cosine with Double.compare — the literal
-      // struct-min field comparison, so the NaN edge matches the HOF form:
-      // a NaN cosine ranks LAST (Double.compare(NaN, x) > 0), it must
-      // never beat a finite one (an earlier cos-maximizing formulation
-      // selected NaN first and let one bad vector poison every assignment)
-      val neg = -cos
-      if (j == 0 || java.lang.Double.compare(neg, bestNeg) < 0) {
-        bestNeg = neg; bestJ = j
-      }
+      neg(j) = -(if (na == 0.0 || nb == 0.0) 0.0 else dot / math.sqrt(na * nb))
       j += 1
     }
-    bestJ
+    // n selection passes, min NEGATED cosine by Double.compare: a NaN
+    // cosine ranks LAST (Double.compare(NaN, x) > 0), so one bad vector or
+    // centroid never takes a finite row's rank 1; the strict `<` keeps ties
+    // on the lower index
+    val taken = new Array[Boolean](k)
+    var r = 0
+    while (r < n) {
+      var best = -1
+      j = 0
+      while (j < k) {
+        if (!taken(j) && (best < 0 || java.lang.Double.compare(neg(j), neg(best)) < 0))
+          best = j
+        j += 1
+      }
+      taken(best) = true
+      out(r) = best
+      r += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): java.lang.Double = {
@@ -472,8 +484,8 @@ object SketchExprs {
     Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
   def hyperplaneBands(vec: Column, bands: Int, rowsPerBand: Int, dims: Int): Column =
     Bridge.column(HyperplaneBands(Bridge.expression(vec), bands, rowsPerBand, dims))
-  def argmaxCosine(vec: Column, centroids: Array[Array[Float]]): Column =
-    Bridge.column(ArgmaxCosine(Bridge.expression(vec), centroids))
+  def cosineRank(vec: Column, centroids: Array[Array[Float]], n: Int): Column =
+    Bridge.column(CosineRank(Bridge.expression(vec), centroids, n))
   def langIdNgram(loweredText: Column, profiles: Seq[(String, Seq[String])]): Column =
     Bridge.column(LangIdNgram(Bridge.expression(loweredText), profiles))
   def minhashBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =

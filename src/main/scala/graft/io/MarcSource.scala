@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.schema.{Span, Violation}
 
@@ -31,12 +31,6 @@ object MarcSource {
       .select("path", "content")
       .as[(String, Array[Byte])]
       .flatMap { case (file, bytes) => decodeFile(file, bytes) }
-  }
-
-  /** DataFrame form with the engine's standard (doc_id, spans) columns. */
-  def readDocs(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    read(spark, path).toDF()
   }
 
   private[io] def decodeFile(file: String, bytes: Array[Byte]): Iterator[MarcDoc] =

@@ -93,7 +93,7 @@ object Dedup {
     * id would expand to (x, x) self-pairs, which callers must drop.
     */
   private def expandPairs(ms: Column)(mk: (Column, Column) => Column,
-      keep: (Column, Column) => Column = (_, _) => lit(true)): Column =
+      keep: (Column, Column) => Column): Column =
     flatten(transform(sequence(lit(0), size(ms) - 2), i =>
       transform(filter(sequence(i + 1, size(ms) - 1),
           j => keep(element_at(ms, i + 1), element_at(ms, j + 1))),
@@ -688,9 +688,9 @@ object Dedup {
   }
 
   /** Embedding near-dup pairs: random-hyperplane LSH (deterministic in-plan
-    * hash-derived planes, any dimensionality — see [[Similarity.bandKeys]])
-    * -> capped band buckets -> exact cosine verification, mirroring the
-    * [[minhashPairs]] scale shape exactly:
+    * hash-derived planes, any dimensionality — see
+    * [[graft.expr.HyperplaneBands]]) -> capped band buckets -> exact cosine
+    * verification, mirroring the [[minhashPairs]] scale shape exactly:
     *
     *   - the band shuffle carries only (band, bucket-hash, id) — the vector
     *     never rides the x`bands` fan-out (an earlier formulation shuffled
@@ -728,7 +728,7 @@ object Dedup {
   private def embeddingBands(withVec: DataFrame, bands: Int, rowsPerBand: Int,
       dims: Int): DataFrame =
     withVec.select(col("id"),
-      posexplode(Similarity.bandKeys(col("v"), bands, rowsPerBand, dims))
+      posexplode(hyperplaneBands(col("v"), bands, rowsPerBand, dims))
         .as(Seq("band", "bh")))
 
   /** Band-bucket occupancy audit for [[embeddingCosinePairs]]: (band, bh,

@@ -8,7 +8,9 @@ import graft.expr.SketchExprs.cosineSim
 
 /** IVF (inverted-file) approximate-nearest-neighbor index: spherical
   * k-means coarse quantizer + per-cluster inverted lists, the scale path the
-  * brute-force [[Similarity.topKCosine]] baseline graduates to.
+  * brute-force [[Similarity.topKCosine]] graduates to. Like every search in
+  * `graft.ops`, [[search]] takes a query TABLE (qid, qvec) and returns
+  * (qid, rank, id, cosine).
   *
   * Scale shape (the reason IVF beats both brute force and LSH at 100 TB for
   * repeated queries):
@@ -16,12 +18,13 @@ import graft.expr.SketchExprs.cosineSim
   *     map-side-combined state is k × dims doubles per partition
   *     ([[graft.agg.VectorAvgAgg]]) — never a N × dims shuffle. Train on a
   *     sample at extreme scale; assignment quality degrades gracefully.
-  *   - ASSIGN: map-only (argmax of k dot products per row, one codegen'd
+  *   - ASSIGN: map-only (rank 1 of k cosines per row, one codegen'd
   *     expression); write the index `partitionBy("cluster")` so the cluster
   *     id becomes a *partition column*.
-  *   - SEARCH: probing nProbe of k clusters turns into partition pruning at
-  *     the scan — the query reads ~nProbe/k of the bytes, no shuffle, then
-  *     exact re-rank of the candidates.
+  *   - SEARCH: each query ranks the clusters with the SAME kernel and probes
+  *     its best nProbe; the probe set becomes a partition filter at the
+  *     scan — the queries read ~nProbe/k of the bytes, no shuffle of the
+  *     index, then exact re-rank of the candidates.
   *
   * Everything is deterministic given the input (seeds are the k rows with
   * the smallest xxhash64(id); Lloyd mean order-sensitivity only perturbs
@@ -50,54 +53,28 @@ object Ivf {
   final case class Model(centroids: Array[Array[Float]]) {
     def k: Int = centroids.length
     def dims: Int = centroids.head.length
-
-    /** Clusters ranked by cosine to `q`, best first (driver-side, k is small). */
-    def rankClusters(q: Seq[Float]): Seq[Int] = {
-      val qn = normalize(q.toArray)
-      centroids.zipWithIndex
-        .map { case (c, i) => (dot(c, qn), i) }
-        .sortBy { case (d, i) => (-d, i) }
-        .map(_._2).toSeq
-    }
-  }
-
-  private def dot(a: Array[Float], b: Array[Float]): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < a.length && i < b.length) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-    s
   }
 
   private def normalize(v: Array[Float]): Array[Float] = {
-    val n = math.sqrt(dot(v, v))
+    val n = math.sqrt(v.map(x => x.toDouble * x.toDouble).sum)
     if (n == 0) v else v.map(x => (x / n).toFloat)
   }
 
-  /** Argmax-cosine cluster id for `vec` against the centroid matrix — ties
-    * break to the lower cluster id. One codegen'd kernel
-    * ([[graft.expr.ArgmaxCosine]]: k × dims fused multiply-adds per row),
-    * bit-identical to the interpreted
-    * `array_min(scoredClusters(...)).cluster` formulation it replaces —
-    * [[probeClusters]] still uses [[scoredClusters]], and the shared
-    * ranking contract (cosine DESC, ties to the lower cluster id) is
-    * pinned by IvfSpec against both formulations.
+  /** Cosine-nearest cluster id for `vec`, ties to the lower cluster id: rank
+    * 1 of [[graft.expr.CosineRank]], the kernel [[probeClusters]] ranks
+    * with — so a partial probe always reaches the cluster a vector was
+    * assigned to, and full probe is exact.
     */
   def clusterOf(vec: Column, model: Model): Column =
-    graft.expr.SketchExprs.argmaxCosine(vec, model.centroids)
+    graft.expr.SketchExprs.cosineRank(vec, model.centroids, 1).getItem(0)
 
-  /** (negated-cosine, cluster-id) structs for `vec` against the broadcast-
-    * literal centroid matrix — the ONE ranking contract (cosine DESC, ties
-    * to the lower cluster id) that assignment ([[clusterOf]]) and probing
-    * ([[probeClusters]]) must share: if these ever diverge, a partial probe
-    * can miss the cluster a vector was assigned to and "full probe is
-    * exact" breaks.
+  /** The `nProbe` clusters nearest `vec`, best first, as an array column
+    * (cosine DESC, ties to the lower cluster id; [[graft.expr.CosineRank]]).
+    * k × dims multiply-adds per query row, map-only.
     */
-  private def scoredClusters(vec: Column, model: Model): Column = {
-    val cm = typedLit(model.centroids.map(_.toSeq).toSeq)
-    transform(sequence(lit(0), lit(model.k - 1)), j =>
-      struct(
-        (-cosineSim(vec, element_at(cm, j + 1))).as("negcos"),
-        j.cast("int").as("cluster")))
+  def probeClusters(vec: Column, model: Model, nProbe: Int): Column = {
+    require(nProbe >= 1 && nProbe <= model.k)
+    graft.expr.SketchExprs.cosineRank(vec, model.centroids, nProbe)
   }
 
   /** Train the coarse quantizer: deterministic seeding (k smallest
@@ -146,9 +123,9 @@ object Ivf {
       .withColumn("cluster", clusterOf(col("v"), model))
 
   /** Persist the inverted lists partitioned by cluster id: the cluster
-    * becomes a PARTITION COLUMN, so [[search]]'s probe filter prunes whole
-    * directories at the scan — a probe of nProbe/k clusters reads ~nProbe/k
-    * of the index bytes (asserted via scan numFiles in IvfSpec).
+    * becomes a PARTITION COLUMN, so [[search]]'s probe-set filter prunes
+    * whole directories at the scan — a probe of nProbe/k clusters reads
+    * ~nProbe/k of the index bytes (asserted via scan numFiles in IvfSpec).
     *
     * The rows are REBALANCED on `cluster` before the write (guide §6,
     * small files): without it every upstream task writes a sliver into
@@ -159,62 +136,48 @@ object Ivf {
     * partition — skew splitting applies to rebalance origins only), so a
     * hot cluster would serialize the write into one giant task/file;
     * AQE both merges sliver partitions and splits oversized ones under
-    * the rebalance origin.
+    * the rebalance origin. The hint is an AQE feature: with
+    * `spark.sql.adaptive.enabled=false` the planner drops it and plans no
+    * exchange at all, so that session falls back to `repartition` (one
+    * file per cluster directory, hot clusters unsplit).
     */
-  def writeIndex(index: DataFrame, dir: String): Unit =
-    index.hint("rebalance", col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster").parquet(dir)
+  def writeIndex(index: DataFrame, dir: String): Unit = {
+    val grouped =
+      if (index.sparkSession.conf.get("spark.sql.adaptive.enabled").toBoolean)
+        index.hint("rebalance", col("cluster"))
+      else index.repartition(col("cluster"))
+    grouped.write.mode("overwrite").partitionBy("cluster").parquet(dir)
+  }
 
   /** Read a partitioned index written by [[writeIndex]]. */
   def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir)
 
-  /** Top-k by cosine probing the `nProbe` clusters nearest the query:
-    * cluster filter (partition pruning on a partitioned index) -> exact
-    * re-rank. nProbe = model.k degenerates to exact brute force.
-    */
-  def search(index: DataFrame, model: Model, query: Seq[Float], topK: Int,
-      nProbe: Int): DataFrame = {
-    require(nProbe >= 1 && nProbe <= model.k)
-    val probes = model.rankClusters(query).take(nProbe)
-    index
-      .where(col("cluster").isin(probes.map(Int.box): _*))
-      .select(col("id"), cosineSim(col("v"), typedLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(topK)
-  }
-
-  /** Per-query ranked probe clusters as a COLUMN — the columnar face of
-    * [[Model.rankClusters]] (same ordering: cosine to each centroid DESC,
-    * ties to the lower cluster id; cosine is scale-invariant so skipping
-    * the query normalization changes nothing). k × dims multiplies per
-    * query row, map-only.
-    */
-  def probeClusters(vec: Column, model: Model, nProbe: Int): Column = {
-    require(nProbe >= 1 && nProbe <= model.k)
-    slice(transform(array_sort(scoredClusters(vec, model)),
-      s => s.getField("cluster")), 1, nProbe)
-  }
-
-  /** Batch search: a TABLE of queries against the inverted lists in ONE job
-    * (replacing the collect-the-vector, one-job-per-query shape — a driver
-    * bottleneck at 10^4+ queries). Each query fans out to its `nProbe`
-    * ranked clusters ([[probeClusters]], map-only); the (cluster, qid, qv)
-    * rows are broadcast, so the index side never shuffles — on a
-    * partitionBy("cluster") on-disk index the broadcast join's cluster keys
-    * drive dynamic partition pruning at the scan. Per-query top-k is the
-    * bounded [[graft.agg.TopKAgg]] (O(k) state, map-side combine: the
-    * shuffle carries <= k rows per task per query). nProbe = model.k is
-    * exact by construction — the oracle-pinned configuration.
+  /** Top-k by cosine for a TABLE of queries, probing each query's `nProbe`
+    * nearest clusters ([[probeClusters]], map-only). The probe clusters are
+    * collected in one small job with no shuffle (nProbe ints per query —
+    * less than the broadcast query rows themselves) and their distinct set
+    * filters the index with `cluster IN (probes)` BEFORE the join, so a
+    * partitionBy("cluster") on-disk index prunes at the scan for any query
+    * table (a join key alone does not: dynamic partition pruning needs a
+    * selective filter on the query side's plan). The (cluster, qid, qv) rows are broadcast, so the
+    * index side never shuffles; per-query top-k is the bounded
+    * [[graft.agg.TopKAgg]] ([[Similarity.rankTopK]]). nProbe = model.k
+    * reads every list, needs no probe set, and is exact by construction —
+    * the oracle-pinned configuration.
     *
-    * @return (qid, rank, id, cosine), rank 1..topK per query.
+    * @return (qid, rank, id, cosine), rank 1..topK per query by
+    *         (cosine DESC, id ASC).
     */
-  def searchBatch(index: DataFrame, model: Model, queries: DataFrame,
+  def search(index: DataFrame, model: Model, queries: DataFrame,
       qid: Column, qvec: Column, topK: Int, nProbe: Int): DataFrame = {
-    require(nProbe >= 1 && nProbe <= model.k)
     val q = queries.select(qid.as("qid"), qvec.as("qv"))
       .withColumn("cluster", explode(probeClusters(col("qv"), model, nProbe)))
-    val scored = index.join(broadcast(q), Seq("cluster"))
+    val probed =
+      if (nProbe == model.k) index
+      else index.where(col("cluster").isin(
+        q.select(col("cluster")).collect().map(_.getInt(0)).distinct.map(Int.box): _*))
+    val scored = probed.join(broadcast(q), Seq("cluster"))
       .select(col("qid"), col("id"), cosineSim(col("v"), col("qv")).as("cosine"))
     Similarity.rankTopK(scored, topK)
   }

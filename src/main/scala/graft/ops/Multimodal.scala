@@ -1,9 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.MediaCodec
 import graft.io.MediaCodec.{Bmp, BmpCodec, FrameContainer, Wav, WavCodec}
 
 /** Multimodal columns: image/audio/video as opaque `binary` columns with

@@ -3,56 +3,34 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.expr.SketchExprs.cosineSim
+import graft.expr.SketchExprs.{cosineSim, hyperplaneBands}
 
-/** Approximate-nearest-neighbor search over an embedding column.
+/** Approximate-nearest-neighbor search over an embedding column. Every
+  * search here (and [[Ivf.search]]) takes a query TABLE `(qid, qvec)` —
+  * one row or 10^4, one job either way — and returns (qid, rank, id,
+  * cosine), rank 1..k per query by (cosine DESC, id ASC), through the shared
+  * [[rankTopK]] tail.
   *
-  * Baseline: brute-force cosine top-k (one scan, no shuffle beyond the final
-  * k-row takeOrdered — correct at any scale, O(N·d) work).
-  * Scale path: deterministic random-hyperplane LSH bucketing — candidates
-  * share a bucket in >=1 band, then exact re-rank. At 100 TB the bucket join
-  * replaces the full scan per query batch.
+  * Baseline: brute-force cosine top-k ([[topKCosine]]: one scan, no shuffle
+  * of corpus data — correct at any scale, O(N·Q·d) work).
+  * Scale path: deterministic random-hyperplane LSH bucketing
+  * ([[annTopKCosine]]) — candidates share a bucket in >=1 band, then exact
+  * re-rank. At 100 TB the bucket join replaces the full scan per query batch.
   */
 object Similarity {
 
-  /** Per-band hyperplane LSH keys: array of `bands` longs, element b =
-    * mixed hash of (band, packed sign bits of `rowsPerBand` hyperplanes).
-    * One codegen'd kernel ([[graft.expr.HyperplaneBands]]): plane weights
-    * derive from splitmix64(planeSeed, dim) in-loop — deterministic on every
-    * executor, no plane table, loud failure on a dimension mismatch. (The
-    * previous formulation was an interpreted transform/aggregate lambda
-    * tower — bands x rows x dims interpreted closures per row, measured
-    * ~minutes for a few hundred 64-dim rows; the kernel is ~16k fused
-    * multiply-adds, microseconds.)
-    *
-    * Bucket-space sizing: each band key has 2^rowsPerBand values, so at
-    * 10^12 rows use rowsPerBand >= 16 to keep expected bucket occupancy
-    * sub-quadratic; recall is then tuned with `bands`.
-    */
-  def bandKeys(vec: Column, bands: Int, rowsPerBand: Int, dims: Int): Column =
-    graft.expr.SketchExprs.hyperplaneBands(vec, bands, rowsPerBand, dims)
-
-  /** Brute-force top-k by cosine to a literal query vector. */
-  def topKCosine(df: DataFrame, id: Column, vec: Column, query: Seq[Float],
-      k: Int): DataFrame =
-    df.select(id.as("id"), cosineSim(vec, typedLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
-
-  /** Brute-force batch top-k: a TABLE of queries scored against the corpus
-    * in one job (the one-collect-one-job-per-query shape this replaces is a
-    * driver-side bottleneck at 10^4+ queries). Queries ride a broadcast —
-    * a query batch is small relative to the corpus — so the corpus streams
-    * map-side with NO shuffle of corpus data; the grouped top-k is
-    * [[graft.agg.TopKAgg]], whose bounded O(k) buffer partial-aggregates
-    * map-side, so the only shuffle carries <= k rows per (task, query).
-    * Exact at any scale (O(N·Q·d) compute — the LSH/IVF batch paths trade
-    * exactness for less of it).
+  /** Brute-force top-k: the query table is scored against the corpus in one
+    * job. Queries ride a broadcast — a query batch is small relative to the
+    * corpus — so the corpus streams map-side with NO shuffle of corpus data;
+    * the grouped top-k is [[graft.agg.TopKAgg]], whose bounded O(k) buffer
+    * partial-aggregates map-side, so the only shuffle carries <= k rows per
+    * (task, query). Exact at any scale (the LSH/IVF paths trade exactness
+    * for less compute).
     *
     * @return (qid, rank, id, cosine), rank 1..k per query by
     *         (cosine DESC, id ASC).
     */
-  def topKCosineBatch(df: DataFrame, id: Column, vec: Column,
+  def topKCosine(df: DataFrame, id: Column, vec: Column,
       queries: DataFrame, qid: Column, qvec: Column, k: Int): DataFrame = {
     val corpus = df.select(id.as("id"), vec.as("v"))
     val q = queries.select(qid.as("qid"), qvec.as("qv"))
@@ -61,24 +39,34 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** LSH-bucketed batch top-k: the [[annTopKCosine]] prefilter for a TABLE
-    * of queries. The corpus band rows carry (id, bh) ONLY (same no-vector
-    * exchange contract, plan-tested in OpsSpec); the query band keys are
-    * broadcast, candidates are deduped to thin (qid, id) rows across bands,
-    * then ONE vector fetch per surviving candidate and a bounded
-    * [[graft.agg.TopKAgg]] top-k per query. Approximate — recall measured
-    * against [[topKCosineBatch]] in OpsSpec. Banding defaults are
-    * scale-safe; coarsen explicitly on toy corpora (see [[annTopKCosine]]).
+  /** LSH-bucketed top-k: prefilter each query to the vectors sharing >=1
+    * hyperplane band bucket with it ([[graft.expr.HyperplaneBands]]), then
+    * exact cosine re-rank. The corpus band rows carry (id, bh) ONLY — the
+    * vector must not ride the x`bands` explode (it did in v1: a x32 copy of
+    * every embedding through the band join); same shape as
+    * [[Dedup.embeddingCosinePairs]], plan-tested in OpsSpec. The query band
+    * keys are broadcast, candidates are deduped to thin (qid, id) rows
+    * across bands, then ONE vector fetch per surviving candidate and a
+    * bounded [[graft.agg.TopKAgg]] top-k per query. Approximate — recall
+    * measured against [[topKCosine]] in OpsSpec.
+    *
+    * Defaults are scale-safe: each band key has 2^rowsPerBand values, so
+    * rowsPerBand=16 (65k buckets per band) keeps expected bucket occupancy
+    * sub-quadratic at corpus scale, and bands=32 buys recall back. On toy
+    * corpora — thousands of rows, where even moderately-similar vectors
+    * must collide to be found — pass a coarser banding explicitly (e.g.
+    * bands=8, rowsPerBand=4, as the OpsSpec recall test does on 500
+    * near-orthogonal vectors).
     */
-  def annTopKCosineBatch(df: DataFrame, id: Column, vec: Column,
+  def annTopKCosine(df: DataFrame, id: Column, vec: Column,
       queries: DataFrame, qid: Column, qvec: Column, k: Int,
       bands: Int = 32, rowsPerBand: Int = 16, dims: Int = 64): DataFrame = {
     val corpus = df.select(id.as("id"), vec.as("v"))
     val bandRows = corpus.select(col("id"),
-      explode(bandKeys(col("v"), bands, rowsPerBand, dims)).as("bh"))
+      explode(hyperplaneBands(col("v"), bands, rowsPerBand, dims)).as("bh"))
     val q = queries.select(qid.as("qid"), qvec.as("qv"))
     val qBands = q.select(col("qid"),
-      explode(bandKeys(col("qv"), bands, rowsPerBand, dims)).as("bh"))
+      explode(hyperplaneBands(col("qv"), bands, rowsPerBand, dims)).as("bh"))
     val candIds = bandRows
       .join(broadcast(qBands), Seq("bh"))
       .select(col("qid"), col("id")).distinct() // thin (qid, id) exchange
@@ -87,7 +75,7 @@ object Similarity {
     rankTopK(scored, k)
   }
 
-  /** Shared tail of every batch search: bounded top-k per query
+  /** Shared tail of every search: bounded top-k per query
     * ([[graft.agg.TopKAgg]] — O(k) state, map-side combine), exploded to
     * (qid, rank, id, cosine) rows.
     */
@@ -97,36 +85,4 @@ object Similarity {
       .select(col("qid"), posexplode(col("top")).as(Seq("r", "e")))
       .select(col("qid"), (col("r") + 1).cast("long").as("rank"),
         col("e.id").as("id"), col("e.score").as("cosine"))
-
-  /** LSH-bucketed top-k: prefilter to vectors sharing >=1 band bucket with
-    * the query, then exact cosine re-rank. Approximate — recall measured in
-    * OpsSpec against the brute-force baseline.
-    *
-    * Defaults are scale-safe (rowsPerBand=16 -> 65k buckets per band, the
-    * sizing the bucket-occupancy note above mandates at corpus scale;
-    * bands=32 buys recall back). On toy corpora — thousands of rows, where
-    * even moderately-similar vectors must collide to be found — pass a
-    * coarser banding explicitly (e.g. bands=8, rowsPerBand=4, as the
-    * OpsSpec recall test does on 500 near-orthogonal vectors).
-    */
-  def annTopKCosine(df: DataFrame, id: Column, vec: Column, query: Seq[Float],
-      k: Int, bands: Int = 32, rowsPerBand: Int = 16, dims: Int = 64): DataFrame = {
-    val withVec = df.select(id.as("id"), vec.as("v"))
-    // band rows carry (id, bh) ONLY — the vector must not ride the x`bands`
-    // explode (it did in v1: a x32 copy of every embedding through the band
-    // join and a (id, vector) shuffle in the candidate distinct). Same shape
-    // as [[Dedup.embeddingCosinePairs]]; asserted by a plan test in OpsSpec.
-    val bandRows = withVec.select(col("id"),
-      explode(bandKeys(col("v"), bands, rowsPerBand, dims)).as("bh"))
-    val qKeys = bandKeys(typedLit(query), bands, rowsPerBand, dims)
-    val candIds = bandRows
-      .join(broadcast(
-        df.sparkSession.range(1).select(explode(qKeys).as("bh"))), Seq("bh"))
-      .select(col("id")).distinct() // thin id-only exchange across bands
-    // ONE vector fetch per surviving candidate, cosine computed once per id
-    candIds.join(withVec, Seq("id"))
-      .select(col("id"), cosineSim(col("v"), typedLit(query)).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
-  }
 }

@@ -32,16 +32,6 @@ final case class Violation(
     ctx: Map[String, String])
 
 object DocSchema {
-  val spanType: StructType = StructType(Seq(
-    StructField("kind", StringType, nullable = false),
-    StructField("text", StringType, nullable = true),
-    StructField("media_ref", StringType, nullable = true),
-    StructField("offset", IntegerType, nullable = false)))
-
-  val docType: StructType = StructType(Seq(
-    StructField("doc_id", StringType, nullable = false),
-    StructField("spans", ArrayType(spanType, containsNull = false), nullable = false)))
-
   val violationType: StructType = StructType(Seq(
     StructField("rule_id", StringType, nullable = false),
     StructField("loc", ArrayType(StringType, containsNull = false), nullable = false),

@@ -223,7 +223,6 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("streaming: watermarked windowed violation-rate aggregates by hour") {
-    import java.sql.Timestamp
     val dir = Files.createTempDirectory("graft-stream2").toString
     val docs = Synth.corpusDF(spark, 90)
       .withColumn("ts", timestamp_seconds(

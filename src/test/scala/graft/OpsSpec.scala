@@ -579,19 +579,6 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
         assert(shingleCols.isEmpty,
           s"shingles ride the band exchange (aqe=$aqe): ${e.output}")
       }
-      // ANN query path (annTopKCosine): the candidate dedup after the band
-      // join must be id-only; the ONLY exchange allowed to carry the
-      // embedding is the single vector fetch for the exact re-rank. (v1
-      // exploded (id, vector, bh) x bands and distinct'ed (id, vector).)
-      val q = (0 until 64).map(_ => 0.1f)
-      val annPlan = Similarity.annTopKCosine(emb, $"vec_id", $"embedding", q, 10)
-      val vecExchanges = exchanges(annPlan, aqe).filter(_.output.exists(_.dataType match {
-        case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-        case _                                                  => false
-      }))
-      assert(vecExchanges.size <= 1,
-        s"vector payload rides ${vecExchanges.size} exchanges (want <=1, the " +
-          s"re-rank fetch; aqe=$aqe): ${vecExchanges.map(_.output)}")
     }
   }
 
@@ -623,7 +610,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("ngramJaccardPairs plans the shared upstream twice, not once per route") {
-    // static plan (AQE off, as PlanDump), counted before exchange reuse so
+    // static plan (AQE off), counted before exchange reuse so
     // every recomputation shows: the prefix pipeline (2 scans, 1 window)
     // feeds only groupPairs' size count and its member side, plus one
     // verify scan. The size-routed hybrid planned 13 scans and 6 windows.
@@ -749,38 +736,65 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       s"expected exactly 1 surviving checkpoint dir, got: $rddDirs")
   }
 
+  test("bindOnce keeps one split per row in the optimized plan") {
+    // bindOnce binds a value through element_at(transform(array(x), f), 1);
+    // an optimizer rewrite that inlined that back into f(x) would put the
+    // split once per lambda reference into the plan and re-split the text
+    // per array element
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    def splits(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case s: StringSplit => s
+      }))
+    assert(splits(docs.select(Dedup.rawShingles($"text"))).size == 1)
+    assert(splits(Dedup.lineDedupIntra(docs, $"doc_id", $"text")).size == 1)
+  }
+
+  /** Plain-Scala cosine: the ANN tests' independent reference. */
+  private def cos(a: Seq[Double], b: Seq[Double]): Double = {
+    val dot = a.zip(b).map { case (x, y) => x * y }.sum
+    dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
+  }
+
+  /** (vec_id, embedding as doubles) rows of an embeddings frame. */
+  private def vectors(df: org.apache.spark.sql.DataFrame): Array[(Long, Seq[Double])] =
+    df.select($"vec_id", $"embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble)))
+
   test("brute-force cosine top-k is deterministic and self-excludes correctly") {
-    val q = emb.where($"vec_id" === 0).select($"embedding").collect()
-      .head.getSeq[Float](0)
-    val top = Similarity.topKCosine(emb.where($"vec_id" =!= 0), $"vec_id", $"embedding", q, 10)
-      .collect().map(_.getLong(0))
-    assert(top.length == 10)
+    // a multi-row query frame (every 100th vector, vec 0 among them) against
+    // the corpus without vec 0: one job, ranks 1..10 per query
+    val queries = emb.where($"vec_id" % 100 === 0)
+    val corpus = emb.where($"vec_id" =!= 0)
+    val top = Similarity.topKCosine(corpus, $"vec_id", $"embedding",
+        queries, $"vec_id", $"embedding", 10)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._2).map(_._3).toSeq }
     // exact local oracle: cosine computed in plain Scala over collected rows
-    val all = emb.where($"vec_id" =!= 0).select($"vec_id", $"embedding").collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
-    def cos(a: Array[Double], b: Array[Double]) = {
-      val dot = a.zip(b).map { case (x, y) => x * y }.sum
-      dot / (math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum))
+    val all = vectors(corpus)
+    val qs = vectors(queries)
+    assert(qs.length == 5 && top.keySet == qs.map(_._1).toSet)
+    qs.foreach { case (qid, qd) =>
+      val expected = all.map { case (i, v) => (i, cos(qd, v)) }
+        .sortBy { case (i, c) => (-c, i) }.take(10).map(_._1).toSeq
+      assert(top(qid) == expected, s"query $qid diverged")
     }
-    val qd = q.map(_.toDouble).toArray
-    val expected = all.map { case (i, v) => (i, cos(qd, v)) }
-      .sortBy { case (i, c) => (-c, i) }.take(10).map(_._1)
-    assert(top.toSeq == expected.toSeq)
+    assert(!top(0L).contains(0L)) // vec 0 is not in the corpus
   }
 
   test("LSH ANN achieves usable recall vs brute force on 500 vectors") {
-    val q = emb.where($"vec_id" === 0).select($"embedding").collect()
-      .head.getSeq[Float](0)
-    val exact = Similarity.topKCosine(emb, $"vec_id", $"embedding", q, 10)
-      .collect().map(_.getLong(0)).toSet
+    val q = emb.where($"vec_id" === 0)
+    val exact = Similarity.topKCosine(emb, $"vec_id", $"embedding",
+        q, $"vec_id", $"embedding", 10)
+      .collect().map(_.getLong(2)).toSet
     // toy banding, passed EXPLICITLY: 500 near-orthogonal vectors need
     // coarse buckets for moderately-similar vectors to collide at all. The
     // defaults (bands=32, rowsPerBand=16) are sized for corpus-scale bucket
     // occupancy, where this corpus is far below the collision regime — see
     // the annTopKCosine scaladoc.
-    val approx = Similarity.annTopKCosine(emb, $"vec_id", $"embedding", q, 10,
-        bands = 8, rowsPerBand = 4)
-      .collect().map(_.getLong(0)).toSet
+    val approx = Similarity.annTopKCosine(emb, $"vec_id", $"embedding",
+        q, $"vec_id", $"embedding", 10, bands = 8, rowsPerBand = 4)
+      .collect().map(_.getLong(2)).toSet
     assert(approx.intersect(exact).size >= 5, s"recall too low: $approx vs $exact")
   }
 
@@ -808,18 +822,19 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("batch brute-force top-k matches the single-query baseline per query") {
     val queries = emb.where($"vec_id" % 100 === 0)
-    val batch = Similarity.topKCosineBatch(emb, $"vec_id", $"embedding",
+    val batch = Similarity.topKCosine(emb, $"vec_id", $"embedding",
         queries, $"vec_id", $"embedding", k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1).map { case (q, rs) =>
         q -> rs.sortBy(_._2).map(_._3).toSeq }
     val qids = queries.select($"vec_id").collect().map(_.getLong(0))
     assert(batch.keySet == qids.toSet)
+    // the baseline: one search per query, each with a one-row query frame
     qids.foreach { qid =>
-      val qv = emb.where($"vec_id" === qid).select($"embedding")
-        .collect().head.getSeq[Float](0)
-      val single = Similarity.topKCosine(emb, $"vec_id", $"embedding", qv, 10)
-        .collect().map(_.getLong(0)).toSeq
+      val single = Similarity.topKCosine(emb, $"vec_id", $"embedding",
+          emb.where($"vec_id" === qid), $"vec_id", $"embedding", k = 10)
+        .collect().map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
+        .map(_._2).toSeq
       assert(batch(qid) == single, s"query $qid diverged")
     }
   }
@@ -828,11 +843,11 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
     val queries = emb.where($"vec_id" % 100 === 0)
-    // toy banding (see the single-query recall test above): 16 bands of 4
+    // toy banding (see the one-query recall test above): 16 bands of 4
     // hyperplanes — the batch test spans 5 queries, so it needs a higher
     // per-query collision floor than one lucky query does. Fresh plan per
     // phase — a Dataset caches its QueryExecution on first access.
-    def mkPlan = Similarity.annTopKCosineBatch(emb, $"vec_id", $"embedding",
+    def mkPlan = Similarity.annTopKCosine(emb, $"vec_id", $"embedding",
       queries, $"vec_id", $"embedding", k = 10, bands = 16, rowsPerBand = 4)
     // the thin-exchange invariant, pinned BOTH AQE-off (static plan) and
     // AQE-on (final executed plan via Bridge.finalPlanNodes — round-5
@@ -864,7 +879,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(adaptiveVec.size <= 1,
         s"vector payload rides ${adaptiveVec.size} exchanges (aqe final): " +
           s"${adaptiveVec.map(_.output)}")
-      val exact = Similarity.topKCosineBatch(emb, $"vec_id", $"embedding",
+      val exact = Similarity.topKCosine(emb, $"vec_id", $"embedding",
           queries, $"vec_id", $"embedding", k = 10)
         .collect().map(r => (r.getLong(0), r.getLong(2))).groupBy(_._1)
         .map { case (q, rs) => q -> rs.map(_._2).toSet }
@@ -880,30 +895,35 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
-  test("IVF batch search: full probe exact, partial probe matches per-query") {
+  test("IVF search: full probe exact, partial probe equals a re-rank of the probed lists") {
     val queries = emb.where($"vec_id" % 100 === 0)
     val model = ops.Ivf.train(emb, $"vec_id", $"embedding", k = 8, iters = 2)
     val index = ops.Ivf.assign(emb, $"vec_id", $"embedding", model)
-    // full probe = exact: must equal the brute-force batch, ranks included
-    val full = ops.Ivf.searchBatch(index, model, queries, $"vec_id", $"embedding",
+    // full probe = exact: must equal the brute-force search, ranks included
+    val full = ops.Ivf.search(index, model, queries, $"vec_id", $"embedding",
         topK = 10, nProbe = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val brute = Similarity.topKCosineBatch(emb, $"vec_id", $"embedding",
+    val brute = Similarity.topKCosine(emb, $"vec_id", $"embedding",
         queries, $"vec_id", $"embedding", k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(full == brute)
-    // partial probe: the batch path must agree with the single-query path
-    // (same clusters probed, same re-rank) for every query
-    val partial = ops.Ivf.searchBatch(index, model, queries, $"vec_id", $"embedding",
+    // partial probe: each query's result is the plain-Scala re-rank of the
+    // members of its 2 nearest clusters (cluster ranking in Scala too)
+    val partial = ops.Ivf.search(index, model, queries, $"vec_id", $"embedding",
         topK = 10, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .groupBy(_._1).map { case (q, rs) => q -> rs.sortBy(_._2).map(_._3).toSeq }
-    queries.select($"vec_id").collect().map(_.getLong(0)).foreach { qid =>
-      val qv = emb.where($"vec_id" === qid).select($"embedding")
-        .collect().head.getSeq[Float](0)
-      val single = ops.Ivf.search(index, model, qv, topK = 10, nProbe = 2)
-        .collect().map(_.getLong(0)).toSeq
-      assert(partial(qid) == single, s"query $qid diverged from per-query probe")
+    val members = index.select($"id", $"v", $"cluster").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble), r.getInt(2)))
+    val qs = vectors(queries)
+    assert(partial.keySet == qs.map(_._1).toSet)
+    qs.foreach { case (qid, qv) =>
+      val probes = model.centroids.indices
+        .sortBy(j => (-cos(qv, model.centroids(j).map(_.toDouble).toSeq), j)).take(2).toSet
+      val expected = members.filter(m => probes(m._3))
+        .map { case (id, v, _) => (id, cos(qv, v)) }
+        .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSeq
+      assert(partial(qid) == expected, s"query $qid: probes $probes")
     }
   }
 

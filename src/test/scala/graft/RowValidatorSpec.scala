@@ -57,7 +57,6 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("verdicts read only doc_id+spans from a parquet scan (column pruning)") {
-    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-prune").toString
     Synth.corpusDF(spark, 90)
       .withColumn("extra_fat_column", lit("x" * 100))
@@ -74,7 +73,7 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // that matters: runtime subexpression elimination collapses duplicates
     // WITHIN a Project/Filter but never ACROSS nodes, so a filter on
     // `passed` pushed below the violations projection silently doubles the
-    // hot kernel (BENCH/PLANS.md round-3 finding: 4x in one Filter node)
+    // hot kernel (a round-3 plan audit found it 4x in one Filter node)
     def kernelNodes(df: org.apache.spark.sql.DataFrame): Seq[Int] =
       df.queryExecution.optimizedPlan.collect {
         case n => n.expressions.map(
