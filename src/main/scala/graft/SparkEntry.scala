@@ -871,7 +871,7 @@ object SparkEntry {
         WITH cur AS (SELECT event_type AS cat, count(*) AS n_cur FROM events WHERE event_id % 2 = 0 GROUP BY 1),
              base AS (SELECT event_type AS cat, count(*) AS n_base FROM events WHERE event_id % 2 = 1 GROUP BY 1),
              j AS (SELECT coalesce(n_cur, 0) AS n_cur, coalesce(n_base, 0) AS n_base
-                   FROM cur FULL OUTER JOIN base USING (cat)),
+                   FROM cur FULL OUTER JOIN base ON cur.cat IS NOT DISTINCT FROM base.cat),
              pq AS (SELECT greatest(n_cur / (SELECT sum(n_cur) FROM j), 1e-6) AS p,
                            greatest(n_base / (SELECT sum(n_base) FROM j), 1e-6) AS q FROM j)
         SELECT round(sum((p - q) * ln(p / q)), 6) AS psi FROM pq
@@ -884,8 +884,8 @@ object SparkEntry {
                        UNION SELECT h, cat FROM cur),
              j AS (SELECT f.h, coalesce(c.n_cur, 0) AS n_cur, coalesce(b.n_base, 0) AS n_base
                    FROM frame f
-                   LEFT JOIN cur c ON f.h = c.h AND f.cat = c.cat
-                   LEFT JOIN base b ON f.cat = b.cat),
+                   LEFT JOIN cur c ON f.h = c.h AND f.cat IS NOT DISTINCT FROM c.cat
+                   LEFT JOIN base b ON f.cat IS NOT DISTINCT FROM b.cat),
              pq AS (SELECT h,
                       greatest(n_cur / sum(n_cur) OVER (PARTITION BY h), 1e-6) AS p,
                       greatest(n_base / (SELECT sum(n_base) FROM base), 1e-6) AS q

@@ -22,19 +22,15 @@ import org.apache.spark.sql.types._
 final class TopKBuf(val k: Int) {
   // head = current WORST kept element (lowest score, then highest id) so
   // one compare decides admission and evict-on-overflow is poll()
-  val heap: PriorityQueue[TopKBuf.Entry] = new PriorityQueue[TopKBuf.Entry](
-    math.max(k, 1),
-    (a: TopKBuf.Entry, b: TopKBuf.Entry) => {
-      val c = java.lang.Double.compare(a.score, b.score)
-      if (c != 0) c else java.lang.Long.compare(b.id, a.id)
-    })
+  val heap: PriorityQueue[TopKBuf.Entry] =
+    new PriorityQueue[TopKBuf.Entry](math.max(k, 1), TopKBuf.worstFirst)
 
   def offer(score: Double, id: Long): Unit = {
     if (heap.size < k) { heap.add(new TopKBuf.Entry(score, id)); return }
     val worst = heap.peek()
-    // admit iff strictly better than the current worst under (score DESC,
-    // id ASC)
-    if (score > worst.score || (score == worst.score && id < worst.id)) {
+    // admit iff strictly better than the current worst in the heap's own
+    // order, so a NaN score ranks first whatever order it arrives in
+    if (TopKBuf.compare(score, id, worst.score, worst.id) > 0) {
       heap.poll()
       heap.add(new TopKBuf.Entry(score, id))
     }
@@ -48,16 +44,25 @@ final class TopKBuf(val k: Int) {
   /** Best-first (score DESC, id ASC). */
   def sorted: Array[TopKBuf.Entry] = {
     val arr = heap.toArray(new Array[TopKBuf.Entry](heap.size))
-    java.util.Arrays.sort(arr, (a: TopKBuf.Entry, b: TopKBuf.Entry) => {
-      val c = java.lang.Double.compare(b.score, a.score)
-      if (c != 0) c else java.lang.Long.compare(a.id, b.id)
-    })
+    java.util.Arrays.sort(arr, TopKBuf.worstFirst.reversed())
     arr
   }
 }
 
 object TopKBuf {
   final class Entry(val score: Double, val id: Long)
+
+  /** Worst-first order (score ASC, then id DESC). Scores compare by
+    * `Double.compare`, which ranks NaN above every other score, as Spark's
+    * `ORDER BY score DESC` does.
+    */
+  private def compare(s1: Double, i1: Long, s2: Double, i2: Long): Int = {
+    val c = java.lang.Double.compare(s1, s2)
+    if (c != 0) c else java.lang.Long.compare(i2, i1)
+  }
+
+  private val worstFirst: java.util.Comparator[Entry] =
+    (a: Entry, b: Entry) => compare(a.score, a.id, b.score, b.id)
 }
 
 object TopKAgg {

@@ -16,21 +16,14 @@ object Drift {
   private val Epsilon = 1e-6 // PSI guard for empty cells (standard practice)
 
   /** Population Stability Index between two categorical distributions:
-    * PSI = Σ (p−q) · ln(p/q) over category frequencies. Returns one row
-    * (psi: double).
+    * PSI = Σ (p−q) · ln(p/q) over category frequencies, with null as one
+    * category on both sides. The one-group case of [[psiGrouped]]; returns
+    * one row (psi: double) for a non-empty `current`.
     */
-  def psi(current: DataFrame, baseline: DataFrame, category: Column): DataFrame = {
-    val cur = current.groupBy(category.as("cat")).agg(count(lit(1)).as("n_cur"))
-    val base = baseline.groupBy(category.as("cat")).agg(count(lit(1)).as("n_base"))
-    cur.join(base, Seq("cat"), "full_outer")
-      .na.fill(0L, Seq("n_cur", "n_base"))
-      .select(
-        (col("n_cur") / sum(col("n_cur")).over()).as("p"),
-        (col("n_base") / sum(col("n_base")).over()).as("q"))
-      .select(greatest(col("p"), lit(Epsilon)).as("p"),
-        greatest(col("q"), lit(Epsilon)).as("q"))
-      .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
-  }
+  def psi(current: DataFrame, baseline: DataFrame, category: Column): DataFrame =
+    psiGrouped(current, baseline.select(category.as("cat"), lit(1L).as("n_base")),
+      lit(0), category, lit(1L))
+      .select(col("psi"))
 
   /** Kolmogorov–Smirnov statistic between two numeric distributions via a
     * fixed bucketing: KS = max |CDF_cur − CDF_base| over bucket edges.
@@ -111,10 +104,13 @@ object Drift {
     * (feed [[graft.streaming.StreamingValidation.kindFrequencyStream]]'s
     * closed windows in as `grouped`), per source shard, per day, etc.
     *
-    * The baseline is tiny (category cardinality) and rides a broadcast
-    * join; categories present in the baseline but absent from a group
-    * still contribute (a vanished category IS drift), via a per-group
-    * fill-in of the full baseline category set. One shuffle on (group).
+    * Every group is scored over its own categories and the baseline's, so
+    * both a vanished category (in the baseline, absent from the group) and
+    * a novel one (in the group, absent from the baseline) register as
+    * drift. Categories are matched by grouping, not by joining, so null is
+    * one category on both sides. The baseline is tiny (category
+    * cardinality) and is broadcast to every group; duplicated (group, cat)
+    * or baseline cat rows are summed.
     *
     * @param grouped  observed counts; `group`/`category`/`n` name its columns
     * @param baseline histogram with columns named `cat` and `n_base`
@@ -123,33 +119,21 @@ object Drift {
     */
   def psiGrouped(grouped: DataFrame, baseline: DataFrame,
       group: Column, category: Column, n: Column): DataFrame = {
-    // defensive pre-aggregation: the contract says pre-aggregated counts,
-    // but a duplicated (group, cat) row would otherwise fan out through the
-    // frame join and silently double-count its PSI term — summing here is
-    // the same shuffle the frame join needs anyway
-    val cur = grouped.select(group.as("g"), category.as("cat"), n.as("n_cur"))
-      .groupBy(col("g"), col("cat")).agg(sum(col("n_cur")).as("n_cur"))
+    val cur = grouped.groupBy(group.as("g"), category.as("cat")).agg(sum(n).as("n_cur"))
     val base = baseline.groupBy(col("cat")).agg(sum(col("n_base")).as("n_base"))
-    // per-group FULL category frame (the grouped analog of psi's full-outer
-    // join): the group's own categories union the baseline's, so both a
-    // vanished category (in baseline, absent from the window) and a novel
-    // one (in the window, absent from baseline) register as drift
-    val frame = cur.select(col("g"), col("cat"))
+    // each side's count tagged onto one shared (g, cat) row, as ksBucketed
+    // tags its two histograms: the cross join gives every group every
+    // baseline category, so a category one side lacks gets a 0 count there
+    val tagged = cur.withColumn("n_base", lit(0L))
       .unionByName(cur.select(col("g")).distinct()
-        .crossJoin(broadcast(base.select(col("cat")))))
-      .distinct()
-    frame.join(cur, Seq("g", "cat"), "left_outer")
-      .join(broadcast(base), Seq("cat"), "left_outer")
-      .na.fill(0L, Seq("n_cur", "n_base"))
-      .select(col("g"), col("n_cur"), col("n_base"))
-      .withColumn("p", greatest(
-        col("n_cur") / sum(col("n_cur")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("g"))),
-        lit(Epsilon)))
-      .withColumn("q", greatest(
-        col("n_base") / sum(col("n_base")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("g"))),
-        lit(Epsilon)))
+        .crossJoin(broadcast(base.withColumn("n_cur", lit(0L)))))
+    val byG = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
+    tagged
+      .groupBy(col("g"), col("cat"))
+      .agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
+      .select(col("g"),
+        greatest(col("n_cur") / sum(col("n_cur")).over(byG), lit(Epsilon)).as("p"),
+        greatest(col("n_base") / sum(col("n_base")).over(byG), lit(Epsilon)).as("q"))
       .groupBy(col("g"))
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
   }

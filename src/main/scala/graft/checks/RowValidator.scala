@@ -39,26 +39,23 @@ object RowValidator {
     */
   def withViolations(docs: DataFrame, rules: RuleSet = RuleSet.default,
       contextRules: Option[RuleSet] = None, recordRules: Option[Column] = None,
-      spanRules: Option[Column] = None): DataFrame = {
-    val kinds = col("spans.kind"); val texts = col("spans.text")
-    val validated =
-      if (recordRules.isEmpty && spanRules.isEmpty)
-        ValidateSpans(kinds, texts, rules, contextRules)
-      else
-        ValidateSpans(kinds, texts, rules, contextRules,
-          recordRules.getOrElse(lit(null).cast("string")),
-          spanRules.getOrElse(lit(null).cast("array<string>")))
+      spanRules: Option[Column] = None): DataFrame =
     docs
-      .withColumn("violations", validated)
+      .withColumn("violations", ValidateSpans(col("spans.kind"), col("spans.text"),
+        recordRules.getOrElse(lit(null).cast("string")),
+        spanRules.getOrElse(lit(null).cast("array<string>")), rules, contextRules))
       .withColumn("passed", size(col("violations")) === 0)
-  }
 
-  /** Per-doc verdicts only: (doc_id, passed, n_violations). */
-  def verdicts(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
-    withViolations(docs, rules)
-      .select(col("doc_id"), col("passed"), size(col("violations")).as("n_violations"))
+  /** Per-doc verdicts: (doc_id, passed, n_violations), then the `carry`
+    * columns of `docs` (the batch job's `src_file` lineage).
+    */
+  def verdicts(docs: DataFrame, rules: RuleSet = RuleSet.default,
+      carry: Seq[String] = Nil): DataFrame =
+    withViolations(docs, rules).select(Seq(col("doc_id"), col("passed"),
+      size(col("violations")).as("n_violations")) ++ carry.map(col): _*)
 
-  /** Violation rows for the sink: one row per violation, failing docs only.
+  /** Violation rows for the sink: one row per violation, failing docs only,
+    * with the `carry` columns of `docs` copied onto every row after doc_id.
     * (The fan-out is forced here: the sink's unit IS the violation.)
     *
     * Deliberately NO `where(not(passed))` prefilter, and `explode_outer` +
@@ -73,15 +70,9 @@ object RowValidator {
     * attribute, so it cannot be pushed below the kernel. A plan test in
     * RowValidatorSpec pins the single-evaluation shape.
     */
-  def violations(docs: DataFrame, rules: RuleSet = RuleSet.default): DataFrame =
-    violations(docs, rules, Nil)
-
-  /** [[violations]] with the `carry` columns of `docs` copied onto every
-    * violation row after doc_id (the batch job's `src_file` lineage).
-    */
-  private[graft] def violations(docs: DataFrame, rules: RuleSet,
-      carry: Seq[String]): DataFrame = {
-    val keys = (col("doc_id") +: carry.map(col))
+  def violations(docs: DataFrame, rules: RuleSet = RuleSet.default,
+      carry: Seq[String] = Nil): DataFrame = {
+    val keys = col("doc_id") +: carry.map(col)
     withViolations(docs, rules)
       .select(keys :+ explode_outer(col("violations")).as("v"): _*)
       .where(col("v").isNotNull)

@@ -1,6 +1,6 @@
 package graft.checks
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.io.{Ledger, ParquetSnapshotIO, Snapshot}
@@ -16,9 +16,10 @@ import graft.rules.RuleSet
   * ledger row certifies durable output. Within a batch, all files process
   * in ONE distributed job — full cluster parallelism, no per-file loop.
   *
-  * Per-file metrics come from a groupBy on input_file_name() over the
-  * batch's written verdict output — the corpus is scanned exactly once per
-  * batch; only the (tiny) verdict table is re-read for the breakdown.
+  * Each batch scans its files twice: the verdict write and the violation
+  * write each run the kernel over every doc. Per-file metrics come from a
+  * groupBy on the `src_file` (input_file_name()) lineage of the batch's
+  * written verdict output; only that (tiny) table is re-read for them.
   */
 object ValidationJob {
 
@@ -66,13 +67,6 @@ object ValidationJob {
     if (files.isEmpty) Nil
     else files.grouped(math.max(1, math.ceil(files.size.toDouble / batches).toInt)).toSeq
 
-  /** The batch's violation sink rows: [[RowValidator.violations]] (one
-    * kernel evaluation per row) with the `src_file` lineage carried.
-    */
-  private[graft] def violationRows(docs: DataFrame, rules: RuleSet): DataFrame =
-    RowValidator.violations(docs.withColumn("src_file", input_file_name()), rules,
-      Seq("src_file"))
-
   private def runBatch(spark: SparkSession, snap: Snapshot, files: Seq[String],
       outDir: String, runId: String, rules: RuleSet): BatchResult = {
     val t0 = System.nanoTime()
@@ -82,25 +76,22 @@ object ValidationJob {
       scala.util.hashing.MurmurHash3.orderedHash(files), 16)
     val docs = ParquetSnapshotIO.readSnapshot(spark, snap, files)
 
-    // one distributed pass: write per-doc verdicts (with per-file lineage);
-    // violations expand only for failing docs
     // Overwrite (not Append): a replayed batch must clobber a crashed
     // attempt's partial files in this deterministic directory.
-    // The batch's distinct-doc_id KMV sketch rides the SAME pass as an
-    // observed metric — no second scan of the corpus — and lands on the
-    // batch's ledger rows for cross-run merging.
+    // The batch's distinct-doc_id KMV sketch rides the verdict write as an
+    // observed metric and lands on the batch's ledger rows for cross-run
+    // merging.
+    val lineage = docs.withColumn("src_file", input_file_name())
     val obs = org.apache.spark.sql.Observation()
-    val verdicts = RowValidator.withViolations(docs, rules)
-      .withColumn("src_file", input_file_name())
+    RowValidator.verdicts(lineage, rules, Seq("src_file"))
       .observe(obs, graft.agg.Kmv.sketch(col("doc_id"), Ledger.SketchK)
         .as("docid_sketch"))
-      .select(col("doc_id"), col("passed"),
-        size(col("violations")).as("n_violations"), col("src_file"))
-    verdicts.write.mode(SaveMode.Overwrite)
+      .write.mode(SaveMode.Overwrite)
       .parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
     val batchSketch = obs.get("docid_sketch").asInstanceOf[Array[Byte]]
 
-    violationRows(docs, rules).write.mode(SaveMode.Overwrite)
+    // violations expand only for failing docs
+    RowValidator.violations(lineage, rules, Seq("src_file")).write.mode(SaveMode.Overwrite)
       .parquet(s"$outDir/violations/run_id=$runId/batch=$batchId")
 
     // per-file metrics from the tiny verdict output (not the corpus)

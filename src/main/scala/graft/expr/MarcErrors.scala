@@ -28,20 +28,17 @@ object MarcErrors {
 
   private val US = "\u001f"
 
-  private def isListInput(v: Violation): Boolean = v.rule_id match {
-    case "multiple_1xx_fields" | "non_repeatable_subfield" | "subfield_not_allowed" => true
-    case _ => false
-  }
-
-  /** The reference's per-error input value, as Python repr pieces. */
-  private def inputReprs(v: Violation): Seq[String] = v.rule_id match {
-    case "multiple_1xx_fields" =>
-      v.loc.drop(1).map(MarcValidator.pyRepr) // loc = fields :: tags
+  /** The items of a list-typed reference input, or None for a scalar one:
+    * a multiple_1xx_fields error lists its tags (loc = fields :: tags), a
+    * subfield error its PydanticSubfield objects, held as their reprs.
+    */
+  private def listItems(v: Violation): Option[Seq[String]] = v.rule_id match {
+    case "multiple_1xx_fields" => Some(v.loc.drop(1))
     case "non_repeatable_subfield" | "subfield_not_allowed" =>
       val values = v.ctx.get("values").map(_.split(US, -1).toSeq).getOrElse(Seq.empty)
-      values.map(x =>
-        s"PydanticSubfield(code=${MarcValidator.pyRepr(v.code)}, value=${MarcValidator.pyRepr(x)})")
-    case _ => Seq(MarcValidator.pyRepr(if (v.input == null) "None" else v.input))
+      Some(values.map(x =>
+        s"PydanticSubfield(code=${MarcValidator.pyRepr(v.code)}, value=${MarcValidator.pyRepr(x)})"))
+    case _ => None
   }
 
   // ---- human format (pydantic str(e)) ------------------------------------
@@ -56,10 +53,15 @@ object MarcErrors {
       .append(" for ").append(title)
     violations.foreach { v =>
       sb.append('\n').append(v.loc.mkString("."))
-      val (inputValue, inputType) =
-        if (isListInput(v)) (inputReprs(v).mkString("[", ", ", "]"), "list")
-        else if (v.input == null) ("None", "NoneType")
-        else (MarcValidator.pyRepr(v.input), "str")
+      val (inputValue, inputType) = listItems(v) match {
+        case Some(items) =>
+          // tags are Python strs; subfield items are already reprs
+          val reprs =
+            if (v.rule_id == "multiple_1xx_fields") items.map(MarcValidator.pyRepr) else items
+          (reprs.mkString("[", ", ", "]"), "list")
+        case None if v.input == null => ("None", "NoneType")
+        case None => (MarcValidator.pyRepr(v.input), "str")
+      }
       sb.append("\n  ").append(v.msg)
         .append(" [type=").append(v.rule_id)
         .append(", input_value=").append(truncateRepr(inputValue))
@@ -86,20 +88,16 @@ object MarcErrors {
       }
       sb.append("],\"msg\":"); jstr(sb, v.msg)
       sb.append(",\"input\":")
-      if (isListInput(v)) {
-        sb.append('[')
-        val items: Seq[String] = v.rule_id match {
-          case "multiple_1xx_fields" => v.loc.drop(1)
-          case _ => v.ctx.get("values").map(_.split(US, -1).toSeq).getOrElse(Seq.empty)
-            .map(x => s"PydanticSubfield(code=${MarcValidator.pyRepr(v.code)}, " +
-              s"value=${MarcValidator.pyRepr(x)})")
-        }
-        items.zipWithIndex.foreach { case (x, i) =>
-          if (i > 0) sb.append(','); jstr(sb, x)
-        }
-        sb.append(']')
-      } else if (v.input == null) sb.append("null")
-      else jstr(sb, v.input)
+      listItems(v) match {
+        case Some(items) =>
+          sb.append('[')
+          items.zipWithIndex.foreach { case (x, i) =>
+            if (i > 0) sb.append(','); jstr(sb, x)
+          }
+          sb.append(']')
+        case None if v.input == null => sb.append("null")
+        case None => jstr(sb, v.input)
+      }
       sb.append(",\"ctx\":{")
       v.ctx.zipWithIndex.foreach { case ((k, value), i) =>
         if (i > 0) sb.append(',')

@@ -52,7 +52,9 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
     if (fastCheck.clean(kinds, texts)) noViolations
     else validateFull(kinds, texts, rules, fieldDefault, _ => None)
 
-  /** Override-aware entry: recordJson/spanRules may be null (no override). */
+  /** The expression's one entry: recordJson/spanRules may be null (no
+    * override), and with neither set this is [[validate]].
+    */
   def validateOverride(kinds: ArrayData, texts: ArrayData,
       recordJson: UTF8String, spanRules: ArrayData): ArrayData = {
     val hasSpanRules = spanRules != null && {
@@ -111,10 +113,10 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
   }
 }
 
-/** Catalyst expression `validate_marc(kinds, texts[, record_rules,
-  * span_rules])` -> `array<struct<violation>>`, over the two parallel
-  * span-field arrays (`spans.kind`, `spans.text`) plus optional data-driven
-  * rule-override columns.
+/** Catalyst expression `validate_marc(kinds, texts, record_rules,
+  * span_rules)` -> `array<struct<violation>>`, over the two parallel
+  * span-field arrays (`spans.kind`, `spans.text`) plus the data-driven
+  * rule-override columns (typed null literals when a caller has none).
   *
   * Custom because the check bundle (escape-aware subfield parsing, per-code
   * counters, Python-repr message rendering across 241 tag rules) is not
@@ -127,10 +129,13 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
   * the kind/text leaf columns of `spans` (verified by plan inspection in
   * RowValidatorSpec), with no `arrays_zip` row materialization in between.
   */
-case class ValidateSpans(children: Seq[Expression], rules: RuleSet,
-    contextRules: Option[RuleSet] = None) extends Expression {
+case class ValidateSpans(kinds: Expression, texts: Expression,
+    recordRules: Expression, spanRules: Expression, rules: RuleSet,
+    contextRules: Option[RuleSet]) extends Expression {
 
-  override def nullable: Boolean = children.exists(_.nullable)
+  override def children: Seq[Expression] = Seq(kinds, texts, recordRules, spanRules)
+  // null overrides mean "no override": only a null kinds/texts nulls the result
+  override def nullable: Boolean = kinds.nullable || texts.nullable
   override def foldable: Boolean = false
   override lazy val deterministic: Boolean = true
 
@@ -139,17 +144,13 @@ case class ValidateSpans(children: Seq[Expression], rules: RuleSet,
     case _                        => false
   }
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val shapes = children.map(_.dataType)
-    val ok = (children.length == 2 || children.length == 4) &&
-      isStringArray(shapes(0)) && isStringArray(shapes(1)) &&
-      (children.length == 2 ||
-        (shapes(2) == StringType && isStringArray(shapes(3))))
-    if (ok) TypeCheckResult.TypeCheckSuccess
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (isStringArray(kinds.dataType) && isStringArray(texts.dataType) &&
+        recordRules.dataType == StringType && isStringArray(spanRules.dataType))
+      TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"validate_marc expects (array<string>, array<string>[, string, " +
-        s"array<string>]), got ${shapes.map(_.sql).mkString(", ")}")
-  }
+      "validate_marc expects (array<string>, array<string>, string, " +
+        s"array<string>), got ${children.map(_.dataType.sql).mkString(", ")}")
 
   @transient private lazy val kernel: ValidatorKernel =
     new ValidatorKernel(rules, contextRules)
@@ -165,64 +166,44 @@ case class ValidateSpans(children: Seq[Expression], rules: RuleSet,
   override def sql: String = s"validate_marc(${children.map(_.sql).mkString(", ")})"
 
   override def eval(input: InternalRow): Any = {
-    val kinds = children(0).eval(input)
-    val texts = children(1).eval(input)
-    if (kinds == null || texts == null) return null
-    if (children.length == 2)
-      kernel.validate(kinds.asInstanceOf[ArrayData], texts.asInstanceOf[ArrayData])
-    else {
-      val rj = children(2).eval(input)
-      val sr = children(3).eval(input)
-      kernel.validateOverride(
-        kinds.asInstanceOf[ArrayData], texts.asInstanceOf[ArrayData],
-        rj.asInstanceOf[UTF8String],
-        if (sr == null) null else sr.asInstanceOf[ArrayData])
-    }
+    val k = kinds.eval(input)
+    val t = texts.eval(input)
+    if (k == null || t == null) null
+    else kernel.validateOverride(k.asInstanceOf[ArrayData], t.asInstanceOf[ArrayData],
+      recordRules.eval(input).asInstanceOf[UTF8String],
+      spanRules.eval(input).asInstanceOf[ArrayData])
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val kernelRef =
       ctx.addReferenceObj("marcKernel", kernel, classOf[ValidatorKernel].getName)
-    val gens = children.map(_.genCode(ctx))
+    val Seq(k, t, rr, sr) = children.map(_.genCode(ctx))
     val javaType = "org.apache.spark.sql.catalyst.util.ArrayData"
-    val call =
-      if (children.length == 2)
-        s"$kernelRef.validate(${gens(0).value}, ${gens(1).value})"
-      else
-        s"$kernelRef.validateOverride(${gens(0).value}, ${gens(1).value}, " +
-          s"${gens(2).isNull} ? null : ${gens(2).value}, " +
-          s"${gens(3).isNull} ? null : ${gens(3).value})"
-    val childCode = gens.map(_.code.toString).mkString("\n")
     ev.copy(code = code"""
-      $childCode
-      boolean ${ev.isNull} = ${gens(0).isNull} || ${gens(1).isNull};
+      ${k.code}
+      ${t.code}
+      ${rr.code}
+      ${sr.code}
+      boolean ${ev.isNull} = ${k.isNull} || ${t.isNull};
       $javaType ${ev.value} = null;
       if (!${ev.isNull}) {
-        ${ev.value} = ($javaType) $call;
+        ${ev.value} = ($javaType) $kernelRef.validateOverride(${k.value}, ${t.value},
+          ${rr.isNull} ? null : ${rr.value}, ${sr.isNull} ? null : ${sr.value});
       }""")
   }
 
   override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): ValidateSpans =
-    copy(children = newChildren)
+      c: IndexedSeq[Expression]): ValidateSpans =
+    copy(kinds = c(0), texts = c(1), recordRules = c(2), spanRules = c(3))
 }
 
 object ValidateSpans {
-  /** Full three-scope form: context scope (plan constant) plus data-driven
-    * record/span override columns (pass lit(null) shapes when absent).
+  /** Column form: context scope (plan constant) plus the data-driven
+    * record/span override columns (typed nulls when absent).
     */
-  def apply(kinds: Column, texts: Column, rules: RuleSet,
-      contextRules: Option[RuleSet], recordRulesJson: Column,
-      spanRulesJson: Column): Column =
-    Bridge.column(ValidateSpans(
-      Seq(Bridge.expression(kinds), Bridge.expression(texts),
-        Bridge.expression(recordRulesJson), Bridge.expression(spanRulesJson)),
-      rules, contextRules))
-
-  /** Context-scope-only form (no data-driven columns). */
-  def apply(kinds: Column, texts: Column, rules: RuleSet,
-      contextRules: Option[RuleSet]): Column =
-    Bridge.column(ValidateSpans(
-      Seq(Bridge.expression(kinds), Bridge.expression(texts)), rules, contextRules))
+  def apply(kinds: Column, texts: Column, recordRules: Column, spanRules: Column,
+      rules: RuleSet, contextRules: Option[RuleSet]): Column =
+    Bridge.column(ValidateSpans(Bridge.expression(kinds), Bridge.expression(texts),
+      Bridge.expression(recordRules), Bridge.expression(spanRules), rules, contextRules))
 }

@@ -5,26 +5,18 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Snapshot-pinned table reads (SURVEY.md §2 Part B "Scans").
-  *
-  * The production target is an Iceberg table (snapshot id = Iceberg snapshot;
-  * `spark.read.format("iceberg").option("snapshot-id", ...)`); no Iceberg
-  * runtime ships in this sandbox, so the same contract is implemented over a
-  * deterministic parquet layout + a JSON snapshot manifest: a snapshot is the
-  * sorted file list captured once, and every (re)read of that snapshot sees
-  * exactly those files — late-arriving files cannot leak into a running or
-  * resumed job. All engine code goes through this trait, so swapping in the
-  * Iceberg implementation is a one-class change.
-  */
-trait TableIO {
-  def pinSnapshot(spark: SparkSession, inputDir: String, manifestDir: String): Snapshot
-  def readSnapshot(spark: SparkSession, snapshot: Snapshot, files: Seq[String]): DataFrame
-}
-
 /** An immutable view of a table: id = 64-bit hash of the sorted file list. */
 final case class Snapshot(snapshotId: String, inputDir: String, files: Vector[String])
 
-object ParquetSnapshotIO extends TableIO {
+/** Snapshot-pinned table reads (SURVEY.md §2 Part B "Scans") over a
+  * deterministic parquet layout plus a JSON snapshot manifest: a snapshot is
+  * the sorted file list captured once, and every (re)read of that snapshot
+  * sees exactly those files, so late-arriving files cannot leak into a
+  * running or resumed job. This is the contract an Iceberg snapshot id gives
+  * (`spark.read.format("iceberg").option("snapshot-id", ...)`); no Iceberg
+  * runtime ships with this build.
+  */
+object ParquetSnapshotIO {
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -32,7 +24,7 @@ object ParquetSnapshotIO extends TableIO {
   /** List data files, compute the snapshot id, persist the manifest (idempotent:
     * re-pinning the same file list yields the same snapshot id and manifest).
     */
-  override def pinSnapshot(spark: SparkSession, inputDir: String,
+  def pinSnapshot(spark: SparkSession, inputDir: String,
       manifestDir: String): Snapshot = {
     val dfs = fs(spark, inputDir)
     val files = dfs.listStatus(new Path(inputDir))
@@ -54,7 +46,7 @@ object ParquetSnapshotIO extends TableIO {
   }
 
   /** Read a subset of the snapshot's files (resume path: only unfinished ones). */
-  override def readSnapshot(spark: SparkSession, snapshot: Snapshot,
+  def readSnapshot(spark: SparkSession, snapshot: Snapshot,
       files: Seq[String]): DataFrame = {
     require(files.forall(snapshot.files.contains),
       "attempted to read files outside the pinned snapshot")

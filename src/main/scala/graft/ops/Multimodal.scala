@@ -14,10 +14,10 @@ import graft.io.MediaCodec.{Bmp, BmpCodec, FrameContainer, Wav, WavCodec}
   * (mm_* queries) that recomputes the decoded features from the generative
   * formulas.
   *
-  * Scale shape: decode is embarrassingly parallel (mapPartitions with an
-  * explicit batch loop — amortized per-batch init, bounded memory, no
-  * shuffle); metadata-only stages (mediaStats, sampleFramePlan) never touch
-  * the binary column, so column pruning keeps payload bytes out of the scan.
+  * Scale shape: decode is embarrassingly parallel (one mapPartitions pass,
+  * one asset at a time, no shuffle); metadata-only stages (mediaStats,
+  * sampleFramePlan) never touch the binary column, so column pruning keeps
+  * payload bytes out of the scan.
   */
 object Multimodal {
 
@@ -111,21 +111,19 @@ object Multimodal {
     // non-audio rows never deserialize their payload bytes (plan-tested in
     // MultimodalStreamingSpec).
     assets.where(col("kind") === "audio").mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { a =>
-          WavCodec.decode(a.bytes).toOption.map { w =>
-            var absSum = 0L
-            var peak = 0L
-            var i = 0
-            while (i < w.samples.length) {
-              val v = math.abs(w.samples(i).toLong)
-              absSum += v
-              if (v > peak) peak = v
-              i += 1
-            }
-            (a.doc_id, w.sampleRate.toLong, w.samples.length.toLong,
-              w.samples.length.toLong * 1000 / w.sampleRate, absSum, peak)
+      it.flatMap { a =>
+        WavCodec.decode(a.bytes).toOption.map { w =>
+          var absSum = 0L
+          var peak = 0L
+          var i = 0
+          while (i < w.samples.length) {
+            val v = math.abs(w.samples(i).toLong)
+            absSum += v
+            if (v > peak) peak = v
+            i += 1
           }
+          (a.doc_id, w.sampleRate.toLong, w.samples.length.toLong,
+            w.samples.length.toLong * 1000 / w.sampleRate, absSum, peak)
         }
       }
     }.toDF("doc_id", "sample_rate", "n_samples", "duration_ms", "abs_sum", "peak")
@@ -137,18 +135,9 @@ object Multimodal {
   def imageFeatures(assets: Dataset[Asset]): DataFrame = {
     import assets.sparkSession.implicits._
     assets.where(col("kind") === "image").mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { a =>
-          BmpCodec.decode(a.bytes).toOption.map { img =>
-            var lumSum = 0L
-            var y = 0
-            while (y < img.height) {
-              var x = 0
-              while (x < img.width) { lumSum += img.lum(x, y); x += 1 }
-              y += 1
-            }
-            (a.doc_id, img.width.toLong, img.height.toLong, lumSum, BmpCodec.aHash(img))
-          }
+      it.flatMap { a =>
+        BmpCodec.decode(a.bytes).toOption.map { img =>
+          (a.doc_id, img.width.toLong, img.height.toLong, lumSum(img), BmpCodec.aHash(img))
         }
       }
     }.toDF("doc_id", "width", "height", "lum_sum", "ahash")
@@ -163,43 +152,39 @@ object Multimodal {
     import assets.sparkSession.implicits._
     require(everyNth >= 1)
     assets.where(col("kind") === "video").mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.flatMap { a =>
-          (for {
-            h <- FrameContainer.header(a.bytes)
-            picked = (0 until h.nFrames by everyNth).toSeq
-            frames <- FrameContainer.sampleFrames(a.bytes, picked)
-          } yield frames.map { case (idx, img) =>
-            var lumSum = 0L
-            var y = 0
-            while (y < img.height) {
-              var x = 0
-              while (x < img.width) { lumSum += img.lum(x, y); x += 1 }
-              y += 1
-            }
-            (a.doc_id, idx.toLong, idx.toLong * h.frameMs, lumSum)
-          }).getOrElse(Seq.empty)
-        }
+      it.flatMap { a =>
+        (for {
+          h <- FrameContainer.header(a.bytes)
+          picked = (0 until h.nFrames by everyNth).toSeq
+          frames <- FrameContainer.sampleFrames(a.bytes, picked)
+        } yield frames.map { case (idx, img) =>
+          (a.doc_id, idx.toLong, idx.toLong * h.frameMs, lumSum(img))
+        }).getOrElse(Seq.empty)
       }
     }.toDF("doc_id", "frame_idx", "ts_ms", "lum_sum")
   }
 
   /** Unified FeatureDim-float embedding per asset (any modality): image ->
     * 4x4 nearest-neighbor resize luminances / 255; audio -> 16-window RMS /
-    * 32768; video -> frame 0's 4x4 luminances / 255. The mapPartitions batch
-    * loop is where a vectorized/codec-context init would amortize.
+    * 32768; video -> frame 0's 4x4 luminances / 255.
     */
   def extractFeatures(assets: Dataset[Asset]): DataFrame = {
     import assets.sparkSession.implicits._
-    val batched = assets.mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        // per-batch decoder init would go here (codec context, model handle)
-        batch.iterator.flatMap { a =>
-          decodeEmbedding(a).map(f => (a.doc_id, a.kind, f))
-        }
-      }
+    assets.mapPartitions { it =>
+      it.flatMap(a => decodeEmbedding(a).map(f => (a.doc_id, a.kind, f)))
+    }.toDF("doc_id", "kind", "features")
+  }
+
+  /** Sum of the luminances of every pixel of a decoded image. */
+  private def lumSum(img: Bmp): Long = {
+    var sum = 0L
+    var y = 0
+    while (y < img.height) {
+      var x = 0
+      while (x < img.width) { sum += img.lum(x, y); x += 1 }
+      y += 1
     }
-    batched.toDF("doc_id", "kind", "features")
+    sum
   }
 
   private def imageEmbedding(img: Bmp): Array[Float] = {

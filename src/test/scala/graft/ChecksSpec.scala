@@ -242,6 +242,24 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(drifted > 0.5)
   }
 
+  test("PSI and grouped PSI treat null as one category on both sides") {
+    val cur = Seq("x", "y", null, null).toDF("c")
+    val moreNulls = (Seq("x", "y") ++ Seq.fill(200)(null: String)).toDF("c")
+    def psi(base: DataFrame): Double =
+      Drift.psi(cur, base, col("c")).collect().head.getDouble(0)
+    assert(psi(cur) == 0.0)
+    assert(psi(moreNulls) > 0.5)
+    val grouped = Seq(("g1", "x", 1L), ("g1", "y", 1L), ("g1", null, 2L))
+      .toDF("g", "cat", "n")
+    def psiGrouped(nullBase: Long): Double =
+      Drift.psiGrouped(grouped,
+        Seq(("x", 1L), ("y", 1L), (null, nullBase)).toDF("cat", "n_base"),
+        col("g"), col("cat"), col("n")).collect().head.getDouble(1)
+    assert(psiGrouped(2L) == 0.0)
+    assert(psiGrouped(200L) > 0.5)
+    assert(math.abs(psiGrouped(200L) - psi(moreNulls)) < 1e-12)
+  }
+
   test("bucketed KS is 0 for identical and ~shift/range for a uniform shift") {
     val a = spark.range(10000).select(($"id" % 100).cast("double").as("v"))
     val b = spark.range(10000).select((($"id" % 100) + 20).cast("double").as("v"))

@@ -820,6 +820,27 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(grouped == Map(1 -> Seq(3L, 2L), 2 -> Seq(4L, 5L)))
   }
 
+  test("TopKAgg ranks a NaN score first whatever order it arrives in") {
+    // NaN ranks above every score, as in ORDER BY score DESC: an early NaN
+    // used to stay as the best hit while a late one was never admitted
+    def keep(offers: Seq[(Double, Long)]): Seq[Long] = {
+      val buf = new graft.agg.TopKBuf(2)
+      offers.foreach { case (s, i) => buf.offer(s, i) }
+      buf.sorted.map(_.id).toSeq
+    }
+    val offers = Seq((Double.NaN, 1L), (0.5, 2L), (0.9, 3L))
+    assert(keep(offers) == Seq(1L, 3L))
+    assert(keep(offers.reverse) == Seq(1L, 3L))
+    val df = Seq((1L, 0.5), (2L, Double.NaN), (3L, 0.9), (4L, 0.1), (5L, 0.7))
+      .toDF("id", "score").repartition(8)
+    val top2 = df.agg(graft.agg.TopKAgg.topK($"score", $"id", 2).as("t"))
+      .select(explode($"t").as("e")).select($"e.id").collect().map(_.getLong(0)).toSeq
+    val ordered = df.orderBy($"score".desc, $"id").limit(2)
+      .collect().map(_.getLong(0)).toSeq
+    assert(top2 == Seq(2L, 3L))
+    assert(top2 == ordered)
+  }
+
   test("batch brute-force top-k matches the single-query baseline per query") {
     val queries = emb.where($"vec_id" % 100 === 0)
     val batch = Similarity.topKCosine(emb, $"vec_id", $"embedding",

@@ -93,8 +93,9 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
     // the batch job's violation sink (with src_file lineage) shares the same
     // one-evaluation shape
-    val jobNodes = kernelNodes(
-      graft.checks.ValidationJob.violationRows(docs, graft.rules.RuleSet.default))
+    val jobNodes = kernelNodes(RowValidator.violations(
+      docs.withColumn("src_file", input_file_name()), graft.rules.RuleSet.default,
+      Seq("src_file")))
     assert(jobNodes.sum == 1, s"kernel evaluated ${jobNodes.sum}x in job sink plan")
 
     // verdicts: all occurrences must sit in a single node so runtime
@@ -103,5 +104,36 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val verNodes = kernelNodes(RowValidator.verdicts(docs))
     assert(verNodes.size == 1,
       s"kernel spread across ${verNodes.size} plan nodes in verdicts plan")
+  }
+
+  test("every validate_marc has four children and sits in a whole-stage-codegen node") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    // (kernel, fused) per occurrence: fused while the walk is below a
+    // WholeStageCodegenExec and above its next InputAdapter, i.e. the node
+    // prints with a "*(n)" prefix
+    def placements(p: SparkPlan, fused: Boolean): Seq[(graft.expr.ValidateSpans, Boolean)] = {
+      val here = p.expressions.flatMap(
+        _.collect { case v: graft.expr.ValidateSpans => v }).map(_ -> fused)
+      val below = p match {
+        case _: WholeStageCodegenExec => true
+        case _: InputAdapter          => false
+        case _                        => fused
+      }
+      here ++ p.children.flatMap(placements(_, below))
+    }
+    val docs = Synth.corpusDF(spark, 90).withColumn("rr", lit(null).cast("string"))
+    val plans = Map(
+      "verdicts" -> RowValidator.verdicts(docs),
+      "violations" -> RowValidator.violations(docs),
+      "override" -> RowValidator.withViolations(docs, recordRules = Some(col("rr"))))
+    plans.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      val found = placements(plan, fused = false)
+      assert(found.nonEmpty, s"$name: no validate_marc in\n$plan")
+      found.foreach { case (v, fused) =>
+        assert(v.children.size == 4, s"$name: $v has ${v.children.size} children")
+        assert(fused, s"$name: $v is not codegen-fused:\n$plan")
+      }
+    }
   }
 }
