@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
   * "KS/PSI distribution-drift tests on span-offset and kind-frequency
   * histograms"). Both reduce to small-cardinality aggregations (≤ a few
   * hundred rows after groupBy), so the heavy work is one distributed
-  * aggregate (per side for PSI, over both sides at once for KS); the final
-  * statistic is a tiny join or window plus a reduce — no driver-side math
-  * on big data.
+  * aggregate over both sides at once; the final statistic is a tiny
+  * window plus a reduce — no driver-side math on big data.
   */
 object Drift {
 
@@ -17,13 +16,17 @@ object Drift {
 
   /** Population Stability Index between two categorical distributions:
     * PSI = Σ (p−q) · ln(p/q) over category frequencies, with null as one
-    * category on both sides. The one-group case of [[psiGrouped]]; returns
-    * one row (psi: double) for a non-empty `current`.
+    * category on both sides. The one-group case of [[psiGrouped]]: each
+    * side is counted per category on its own scan, and the tagged counts
+    * are scored by the same kernel. Returns one row (psi: double).
     */
-  def psi(current: DataFrame, baseline: DataFrame, category: Column): DataFrame =
-    psiGrouped(current, baseline.select(category.as("cat"), lit(1L).as("n_base")),
-      lit(0), category, lit(1L))
-      .select(col("psi"))
+  def psi(current: DataFrame, baseline: DataFrame, category: Column): DataFrame = {
+    def side(df: DataFrame, cur: Long): DataFrame =
+      df.groupBy(category.as("cat")).agg(count(lit(1)).as("n"))
+        .select(lit(0).as("g"), col("cat"),
+          (col("n") * cur).as("n_cur"), (col("n") * (1L - cur)).as("n_base"))
+    psiTagged(side(current, 1L).unionByName(side(baseline, 0L))).select(col("psi"))
+  }
 
   /** Kolmogorov–Smirnov statistic between two numeric distributions via a
     * fixed bucketing: KS = max |CDF_cur − CDF_base| over bucket edges.
@@ -121,12 +124,20 @@ object Drift {
       group: Column, category: Column, n: Column): DataFrame = {
     val cur = grouped.groupBy(group.as("g"), category.as("cat")).agg(sum(n).as("n_cur"))
     val base = baseline.groupBy(col("cat")).agg(sum(col("n_base")).as("n_base"))
-    // each side's count tagged onto one shared (g, cat) row, as ksBucketed
-    // tags its two histograms: the cross join gives every group every
-    // baseline category, so a category one side lacks gets a 0 count there
+    // the cross join gives every group a row per baseline category, so a
+    // category the group lacks still meets its baseline count
     val tagged = cur.withColumn("n_base", lit(0L))
       .unionByName(cur.select(col("g")).distinct()
         .crossJoin(broadcast(base.withColumn("n_cur", lit(0L)))))
+    psiTagged(tagged)
+  }
+
+  /** PSI per group `g` of (g, cat, n_cur, n_base) rows, each carrying one
+    * side's count (0 on the other side): a (g, cat) seen on one side only
+    * gets a 0 count on the other, as a full-outer join would give it, and
+    * null is one category because the rows are matched by grouping.
+    */
+  private def psiTagged(tagged: DataFrame): DataFrame = {
     val byG = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
     tagged
       .groupBy(col("g"), col("cat"))

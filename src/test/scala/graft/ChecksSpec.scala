@@ -103,6 +103,18 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     else Some(cdf(hc).zip(cdf(hb)).map { case (a, b) => math.abs(a - b) }.max)
   }
 
+  /** PSI over two category -> count maps, null as the `None` category:
+    * Σ (p−q)·ln(p/q) over the union of categories, each share clamped at 1e-6.
+    */
+  private def refPsi(cur: Map[Option[String], Long], base: Map[Option[String], Long]): Double = {
+    val (nCur, nBase) = (cur.values.sum.toDouble, base.values.sum.toDouble)
+    (cur.keySet ++ base.keySet).toSeq.map { c =>
+      val p = math.max(cur.getOrElse(c, 0L) / nCur, 1e-6)
+      val q = math.max(base.getOrElse(c, 0L) / nBase, 1e-6)
+      (p - q) * math.log(p / q)
+    }.sum
+  }
+
   test("StatsAgg computes counts, nulls, min/max, and length histogram in one pass") {
     val df = Seq(Some("a"), Some("bb" * 60), None, Some("ccc"), None).toDF("s")
     val row = df.agg(StatsAgg.columnStats($"s").as("st")).select("st.*").collect().head
@@ -257,7 +269,10 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
         col("g"), col("cat"), col("n")).collect().head.getDouble(1)
     assert(psiGrouped(2L) == 0.0)
     assert(psiGrouped(200L) > 0.5)
-    assert(math.abs(psiGrouped(200L) - psi(moreNulls)) < 1e-12)
+    val ref = refPsi(Map(Some("x") -> 1L, Some("y") -> 1L, None -> 2L),
+      Map(Some("x") -> 1L, Some("y") -> 1L, None -> 200L))
+    assert(math.abs(psi(moreNulls) - ref) < 1e-12, s"${psi(moreNulls)} vs $ref")
+    assert(math.abs(psiGrouped(200L) - ref) < 1e-12, s"${psiGrouped(200L)} vs $ref")
   }
 
   test("bucketed KS is 0 for identical and ~shift/range for a uniform shift") {
@@ -305,17 +320,15 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .toDF("g", "cat", "n")
     val got = Drift.psiGrouped(cur, base, col("g"), col("cat"), col("n"))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    // scalar reference: expand counts to raw rows and run Drift.psi per group
-    def expand(rows: Seq[(String, Long)]) =
-      rows.flatMap { case (c, n) => Seq.fill(n.toInt)(c) }.toDF("c")
-    val baseRaw = expand(Seq("a" -> 50L, "b" -> 30L, "c" -> 20L))
+    // plain-Scala reference per group over the count maps
+    def counts(rows: (String, Long)*) = rows.map { case (c, n) => Option(c) -> n }.toMap
+    val baseCounts = counts("a" -> 50L, "b" -> 30L, "c" -> 20L)
     val curRows = Map(
-      "g1" -> Seq("a" -> 10L, "b" -> 80L, "c" -> 10L),
-      "g2" -> Seq("a" -> 500L, "b" -> 300L, "c" -> 200L),
-      "g3" -> Seq("a" -> 50L, "b" -> 30L, "d" -> 20L))
+      "g1" -> counts("a" -> 10L, "b" -> 80L, "c" -> 10L),
+      "g2" -> counts("a" -> 500L, "b" -> 300L, "c" -> 200L),
+      "g3" -> counts("a" -> 50L, "b" -> 30L, "d" -> 20L))
     curRows.foreach { case (g, rows) =>
-      val scalar = Drift.psi(expand(rows), baseRaw, col("c"))
-        .collect().head.getDouble(0)
+      val scalar = refPsi(rows, baseCounts)
       assert(math.abs(got(g) - scalar) < 1e-12, s"$g: ${got(g)} vs $scalar")
     }
     assert(got("g2") == 0.0)          // identical mix -> exactly 0
