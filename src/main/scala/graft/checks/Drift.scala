@@ -18,7 +18,8 @@ object Drift {
     * PSI = Σ (p−q) · ln(p/q) over category frequencies, with null as one
     * category on both sides. The one-group case of [[psiGrouped]]: each
     * side is counted per category on its own scan, and the tagged counts
-    * are scored by the same kernel. Returns one row (psi: double).
+    * are scored by the same kernel. Returns one row (psi: double), with
+    * psi = null when one side is empty, and no row when both are.
     */
   def psi(current: DataFrame, baseline: DataFrame, category: Column): DataFrame = {
     def side(df: DataFrame, cur: Long): DataFrame =
@@ -113,7 +114,8 @@ object Drift {
     * drift. Categories are matched by grouping, not by joining, so null is
     * one category on both sides. The baseline is tiny (category
     * cardinality) and is broadcast to every group; duplicated (group, cat)
-    * or baseline cat rows are summed.
+    * or baseline cat rows are summed. An empty baseline, or a group whose
+    * counts sum to 0, gives psi = null; an empty `grouped` gives no rows.
     *
     * @param grouped  observed counts; `group`/`category`/`n` name its columns
     * @param baseline histogram with columns named `cat` and `n_base`
@@ -135,16 +137,21 @@ object Drift {
   /** PSI per group `g` of (g, cat, n_cur, n_base) rows, each carrying one
     * side's count (0 on the other side): a (g, cat) seen on one side only
     * gets a 0 count on the other, as a full-outer join would give it, and
-    * null is one category because the rows are matched by grouping.
+    * null is one category because the rows are matched by grouping. A
+    * group with a zero total on either side has no shares on that side, so
+    * its psi is null (try_divide: under ANSI a plain n / 0 throws).
     */
   private def psiTagged(tagged: DataFrame): DataFrame = {
     val byG = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
+    // greatest skips a null share, so a zero total must null it explicitly
+    def share(n: String): Column = {
+      val total = sum(col(n)).over(byG)
+      when(total =!= 0, greatest(try_divide(col(n), total), lit(Epsilon)))
+    }
     tagged
       .groupBy(col("g"), col("cat"))
       .agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
-      .select(col("g"),
-        greatest(col("n_cur") / sum(col("n_cur")).over(byG), lit(Epsilon)).as("p"),
-        greatest(col("n_base") / sum(col("n_base")).over(byG), lit(Epsilon)).as("q"))
+      .select(col("g"), share("n_cur").as("p"), share("n_base").as("q"))
       .groupBy(col("g"))
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
   }

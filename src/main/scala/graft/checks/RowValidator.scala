@@ -2,16 +2,22 @@ package graft.checks
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ValidateScanStrategy
 
 import graft.expr.ValidateSpans
 import graft.rules.RuleSet
 
 /** The per-row validation pass: docs(doc_id, spans) -> + violations + passed.
   *
-  * Shuffle-free by construction — one projection over the scan, fused by
-  * whole-stage codegen; the only columns read are doc_id and spans (nested
-  * pruning keeps media-only stages narrower still). Scale shape: at 10^12
-  * docs this is embarrassingly parallel, no exchange anywhere.
+  * Shuffle-free by construction — one projection over the scan; the only
+  * columns read are doc_id and spans (nested pruning keeps media-only stages
+  * narrower still). Over a columnar parquet read with no override column,
+  * the projection is planned as one `ValidateScanExec` that validates
+  * straight from the scan's column vectors (`graftbridge.ValidateScanStrategy`,
+  * installed on the session by [[withViolations]]); every other source or
+  * shape, override columns included, is a projection fused by whole-stage
+  * codegen. Scale shape: at 10^12 docs this is embarrassingly parallel, no
+  * exchange anywhere.
   *
   * The spans hot path never explodes (north-star invariant); the one
   * violation-per-row fan-out happens only on the violations sink path, after
@@ -39,19 +45,25 @@ object RowValidator {
     */
   def withViolations(docs: DataFrame, rules: RuleSet = RuleSet.default,
       contextRules: Option[RuleSet] = None, recordRules: Option[Column] = None,
-      spanRules: Option[Column] = None): DataFrame =
+      spanRules: Option[Column] = None): DataFrame = {
+    ValidateScanStrategy.install(docs.sparkSession)
     docs
       .withColumn("violations", ValidateSpans(col("spans.kind"), col("spans.text"),
         recordRules.getOrElse(lit(null).cast("string")),
         spanRules.getOrElse(lit(null).cast("array<string>")), rules, contextRules))
       .withColumn("passed", size(col("violations")) === 0)
+  }
 
   /** Per-doc verdicts: (doc_id, passed, n_violations), then the `carry`
     * columns of `docs` (the batch job's `src_file` lineage).
     */
   def verdicts(docs: DataFrame, rules: RuleSet = RuleSet.default,
       carry: Seq[String] = Nil): DataFrame =
-    withViolations(docs, rules).select(Seq(col("doc_id"), col("passed"),
+    verdictRows(withViolations(docs, rules), carry)
+
+  /** [[verdicts]] of a frame [[withViolations]] already validated. */
+  private[checks] def verdictRows(validated: DataFrame, carry: Seq[String]): DataFrame =
+    validated.select(Seq(col("doc_id"), col("passed"),
       size(col("violations")).as("n_violations")) ++ carry.map(col): _*)
 
   /** Violation rows for the sink: one row per violation, failing docs only,
@@ -71,9 +83,13 @@ object RowValidator {
     * RowValidatorSpec pins the single-evaluation shape.
     */
   def violations(docs: DataFrame, rules: RuleSet = RuleSet.default,
-      carry: Seq[String] = Nil): DataFrame = {
+      carry: Seq[String] = Nil): DataFrame =
+    violationRows(withViolations(docs, rules), carry)
+
+  /** [[violations]] of a frame [[withViolations]] already validated. */
+  private[checks] def violationRows(validated: DataFrame, carry: Seq[String]): DataFrame = {
     val keys = col("doc_id") +: carry.map(col)
-    withViolations(docs, rules)
+    validated
       .select(keys :+ explode_outer(col("violations")).as("v"): _*)
       .where(col("v").isNotNull)
       .select(keys :+ col("v.*"): _*)

@@ -16,10 +16,11 @@ import graft.rules.RuleSet
   * ledger row certifies durable output. Within a batch, all files process
   * in ONE distributed job — full cluster parallelism, no per-file loop.
   *
-  * Each batch scans its files twice: the verdict write and the violation
-  * write each run the kernel over every doc. Per-file metrics come from a
-  * groupBy on the `src_file` (input_file_name()) lineage of the batch's
-  * written verdict output; only that (tiny) table is re-read for them.
+  * Each batch scans its files once and runs the kernel over every doc
+  * once: the validated frame (doc_id, src_file, violations, passed) is
+  * persisted for the batch, and the verdict write, the violation write and
+  * the per-file metrics (a groupBy on the `src_file` input_file_name()
+  * lineage) all read it.
   */
 object ValidationJob {
 
@@ -81,26 +82,31 @@ object ValidationJob {
     // The batch's distinct-doc_id KMV sketch rides the verdict write as an
     // observed metric and lands on the batch's ledger rows for cross-run
     // merging.
-    val lineage = docs.withColumn("src_file", input_file_name())
-    val obs = org.apache.spark.sql.Observation()
-    RowValidator.verdicts(lineage, rules, Seq("src_file"))
-      .observe(obs, graft.agg.Kmv.sketch(col("doc_id"), Ledger.SketchK)
-        .as("docid_sketch"))
-      .write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
-    val batchSketch = obs.get("docid_sketch").asInstanceOf[Array[Byte]]
+    val carry = Seq("src_file")
+    val validated = RowValidator
+      .withViolations(docs.withColumn("src_file", input_file_name()), rules)
+      .select("doc_id", "src_file", "violations", "passed")
+      .persist()
+    val (batchSketch, perFile) = try {
+      val obs = org.apache.spark.sql.Observation()
+      RowValidator.verdictRows(validated, carry)
+        .observe(obs, graft.agg.Kmv.sketch(col("doc_id"), Ledger.SketchK)
+          .as("docid_sketch"))
+        .write.mode(SaveMode.Overwrite)
+        .parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
 
-    // violations expand only for failing docs
-    RowValidator.violations(lineage, rules, Seq("src_file")).write.mode(SaveMode.Overwrite)
-      .parquet(s"$outDir/violations/run_id=$runId/batch=$batchId")
+      // violations expand only for failing docs
+      RowValidator.violationRows(validated, carry).write.mode(SaveMode.Overwrite)
+        .parquet(s"$outDir/violations/run_id=$runId/batch=$batchId")
 
-    // per-file metrics from the tiny verdict output (not the corpus)
-    val perFile = spark.read.parquet(s"$outDir/verdicts/run_id=$runId/batch=$batchId")
-      .groupBy(col("src_file"))
-      .agg(count(lit(1)).as("rows"), sum(col("n_violations")).as("viols"),
-        count(when(not(col("passed")), 1)).as("failed"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val perFile = validated
+        .groupBy(col("src_file"))
+        .agg(count(lit(1)).as("rows"), sum(size(col("violations"))).as("viols"),
+          count(when(not(col("passed")), 1)).as("failed"))
+        .collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      (obs.get("docid_sketch").asInstanceOf[Array[Byte]], perFile)
+    } finally validated.unpersist()
     val elapsed = (System.nanoTime() - t0) / 1000000L
 
     // ledger rows LAST: their presence certifies the batch's durable output.

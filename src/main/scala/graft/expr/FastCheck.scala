@@ -18,8 +18,11 @@ import graft.rules.RuleSet
   * Catalyst's nested-schema pruning (the parquet scan reads only the kind and
   * text leaf columns) without `arrays_zip`'s per-span row materialization,
   * and one `getUTF8String(i)` per field is the only per-span allocation on
-  * every ArrayData implementation (Tungsten, generic, and the vectorized
-  * reader's ColumnarArray alike).
+  * every ArrayData implementation. Three reach it: Tungsten arrays from the
+  * codegen'd projection, generic arrays, and, over a columnar parquet read,
+  * `ColumnarArray` views of the scan's kind and text vectors passed by
+  * `graftbridge.ValidateScanExec` (FastCheckSpec runs its generators over
+  * that layout too).
   *
   * Why: violations are rare in healthy corpora, so the hot loop is "prove
   * clean". The full path allocates ~30 objects/doc (spans, Strings,

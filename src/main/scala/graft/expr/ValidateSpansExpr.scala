@@ -41,7 +41,10 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
 
   private val fieldDefault = contextRules.getOrElse(rules)
   private val fastCheck = new FastCheck(fieldDefault, rules)
-  private val noViolations = new GenericArrayData(Array.empty[Any])
+  /** The result of every doc FastCheck proves clean; the full path always
+    * returns a fresh array, so `eq` tells the two apart.
+    */
+  val noViolations: ArrayData = new GenericArrayData(Array.empty[Any])
 
   /** (kinds, texts) ArrayData pair -> violations ArrayData. The
     * allocation-light fast path proves the common clean-doc case (FastCheck);

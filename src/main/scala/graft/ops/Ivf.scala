@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType, StructField,
+  StructType}
 
 import graft.agg.VectorAvgAgg
 import graft.expr.SketchExprs.cosineSim
@@ -149,9 +151,19 @@ object Ivf {
     grouped.write.mode("overwrite").partitionBy("cluster").parquet(dir)
   }
 
-  /** Read a partitioned index written by [[writeIndex]]. */
+  /** The schema of an index [[writeIndex]] writes from [[assign]] over long
+    * ids and float vectors: (id, v, cluster), `cluster` the partition column.
+    */
+  private val IndexSchema: StructType = StructType(Seq(
+    StructField("id", LongType), StructField("v", ArrayType(FloatType)),
+    StructField("cluster", IntegerType)))
+
+  /** Read a partitioned index written by [[writeIndex]]. The schema is
+    * given, so the read runs no schema-inference job; the cluster values
+    * still come from the partition directories.
+    */
   def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir)
+    spark.read.schema(IndexSchema).parquet(dir)
 
   /** Top-k by cosine for a TABLE of queries, probing each query's `nProbe`
     * nearest clusters ([[probeClusters]], map-only). The probe clusters are

@@ -26,15 +26,6 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   import spark.implicits._
 
-  /** Waits until the listener bus has delivered every posted event (the bus
-    * accessor is not public API, hence reflection).
-    */
-  private def drainBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-  }
-
   /** Runs `body`; returns the Spark jobs it started and the final physical
     * plans (adaptive stages unwrapped) of every query it executed.
     */
@@ -273,6 +264,26 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
       Map(Some("x") -> 1L, Some("y") -> 1L, None -> 200L))
     assert(math.abs(psi(moreNulls) - ref) < 1e-12, s"${psi(moreNulls)} vs $ref")
     assert(math.abs(psiGrouped(200L) - ref) < 1e-12, s"${psiGrouped(200L)} vs $ref")
+  }
+
+  test("PSI and grouped PSI with an empty side are null, not a division by zero") {
+    val cur = Seq("x", "y", "y").toDF("c")
+    val empty = cur.limit(0)
+    def psi(c: DataFrame, b: DataFrame): Seq[Any] =
+      Drift.psi(c, b, col("c")).collect().map(_.get(0)).toSeq
+    assert(psi(cur, empty) == Seq(null), "empty baseline")
+    assert(psi(empty, cur) == Seq(null), "empty current side")
+    assert(psi(empty, empty).isEmpty, "both sides empty")
+    // group 2's counts sum to 0: no current shares, so its psi is null too
+    val grouped = Seq((1, "x", 5L), (1, "y", 3L), (2, "x", 0L)).toDF("g", "cat", "n")
+    val base = Seq(("x", 4L), ("y", 4L)).toDF("cat", "n_base")
+    def psiGrouped(g: DataFrame, b: DataFrame): Map[Int, Any] =
+      Drift.psiGrouped(g, b, col("g"), col("cat"), col("n"))
+        .collect().map(r => r.getInt(0) -> r.get(1)).toMap
+    assert(psiGrouped(grouped, base.limit(0)) == Map(1 -> null, 2 -> null), "empty baseline")
+    assert(psiGrouped(grouped.limit(0), base).isEmpty, "empty current side")
+    val scored = psiGrouped(grouped, base)
+    assert(scored(2) == null && scored(1).asInstanceOf[Double] > 0.0, scored)
   }
 
   test("bucketed KS is 0 for identical and ~shift/range for a uniform shift") {

@@ -197,6 +197,30 @@ class IvfSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(assertPrunes(two).forall(id => id % 4 == 1 || id % 4 == 2))
   }
 
+  test("readIndex reads the written index's schema and rows with no inference job") {
+    val model = Ivf.train(clustered, $"vec_id", $"embedding", k = 4, iters = 2)
+    val dir = Files.createTempDirectory("graft-ivf-schema").toString
+    val written = Ivf.assign(clustered, $"vec_id", $"embedding", model)
+    Ivf.writeIndex(written, dir)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drainBus()
+    sc.addSparkListener(listener)
+    val index = try { val i = Ivf.readIndex(spark, dir); drainBus(); i }
+      finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0, s"${jobs.get} jobs to read an index")
+    def types(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType.catalogString).sortBy(_._1)
+    assert(types(index) == types(written) && types(index) == types(spark.read.parquet(dir)))
+    val cols = Seq($"id", $"v", $"cluster")
+    assert(index.select(cols: _*).exceptAll(written.select(cols: _*)).isEmpty &&
+      written.select(cols: _*).exceptAll(index.select(cols: _*)).isEmpty)
+  }
+
   test("writeIndex with AQE off writes one file per cluster directory") {
     // the rebalance hint is planned only by AQE; with AQE off it must fall
     // back to a cluster repartition, not write one sliver per input task

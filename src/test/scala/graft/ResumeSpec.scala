@@ -165,4 +165,25 @@ class ResumeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val again = ValidationJob.run(spark, s"$in/docs", out, "runB")
     assert(again.batchesSkipped == 0 && again.rows == 90)
   }
+
+  test("a batch scans its files once: input records are the batch's docs once, not twice") {
+    val in = tmp(); val out = tmp()
+    val n = 900L
+    writeCorpus(s"$in/docs", n, 3)
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) read.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    drainBus()
+    spark.sparkContext.addSparkListener(listener)
+    val summary =
+      try { val s = ValidationJob.run(spark, s"$in/docs", out, "run1", batches = 1); drainBus(); s }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(summary.rows == n && summary.batchesRun == 1)
+    // the corpus once; the rest are reads of the persisted frame, one record
+    // per cached batch (a few per partition), far fewer than a second scan
+    assert(read.get >= n && read.get < n + n / 10,
+      s"${read.get} input records for a batch of $n docs")
+  }
 }

@@ -3,8 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.graftbridge.ValidateScanExec
+
 import graft.checks.RowValidator
+import graft.expr.ValidateSpans
 import graft.gen.{Fixtures, Synth}
+import graft.schema.Doc
 
 /** End-to-end Spark path: ValidateSpans expression (codegen) over DataFrames. */
 class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
@@ -135,5 +139,117 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
         assert(fused, s"$name: $v is not codegen-fused:\n$plan")
       }
     }
+  }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def writeDocs(docs: org.apache.spark.sql.DataFrame, prefix: String): String = {
+    val dir = tempDir(prefix)
+    docs.write.mode("overwrite").parquet(dir)
+    dir
+  }
+
+  private def nodes(df: org.apache.spark.sql.DataFrame) =
+    org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(df)
+
+  private def scanNodes(df: org.apache.spark.sql.DataFrame): Seq[ValidateScanExec] =
+    nodes(df).collect { case v: ValidateScanExec => v }
+
+  /** Runs `body` with the parquet vectorized reader off: today's row plan. */
+  private def rowReader[T](body: => T): T = {
+    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
+    try body finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+  }
+
+  test("over a parquet read, validate_marc is one ValidateScanExec over a batched scan") {
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec}
+    val dir = writeDocs(Synth.corpusDF(spark, 90), "graft-vscan")
+    val plans = Map(
+      "verdicts" -> RowValidator.verdicts(spark.read.parquet(dir)),
+      "violations" -> RowValidator.violations(spark.read.parquet(dir)))
+    plans.foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan
+      val Seq(node) = scanNodes(df)
+      node.child match {
+        case scan: FileSourceScanExec =>
+          assert(scan.supportsColumnar && scan.toString.contains("Batched: true"), s"$name:\n$plan")
+          // nested pruning as before: only doc_id and the two span fields
+          assert(scan.toString.contains(
+            "ReadSchema: struct<doc_id:string,spans:array<struct<kind:string,text:string>>>"),
+            s"$name:\n$plan")
+        case other => fail(s"$name: ValidateScanExec over $other")
+      }
+      assert(nodes(df).collect { case c: ColumnarToRowExec => c }.isEmpty, s"$name:\n$plan")
+      val kernels = nodes(df).flatMap(_.expressions.flatMap(_.collect { case v: ValidateSpans => v }))
+      assert(kernels.size == 1, s"$name: ${kernels.size} kernel calls in\n$plan")
+    }
+  }
+
+  test("override columns, file lineage, row sources and the row reader keep the codegen Project") {
+    val corpus = Synth.corpusDF(spark, 90)
+    val dir = writeDocs(corpus.withColumn("rr", lit(null).cast("string")), "graft-vscan-rr")
+    val orc = tempDir("graft-vscan-orc")
+    corpus.write.mode("overwrite").orc(orc)
+    def assertCodegenProject(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(scanNodes(df).isEmpty, s"$name planned ValidateScanExec:\n$plan")
+      val line = plan.linesIterator.find(_.contains("validate_marc")).get
+      assert(line.contains("*(") && line.contains("Project ["), s"$name:\n$plan")
+    }
+    assertCodegenProject("override", RowValidator.withViolations(spark.read.parquet(dir),
+      recordRules = Some(col("rr"))))
+    assertCodegenProject("lineage", RowValidator.verdicts(
+      spark.read.parquet(dir).withColumn("src_file", input_file_name()), carry = Seq("src_file")))
+    assertCodegenProject("row source", RowValidator.verdicts(corpus))
+    assertCodegenProject("orc", RowValidator.verdicts(spark.read.orc(orc)))
+    rowReader(assertCodegenProject("row reader", RowValidator.verdicts(spark.read.parquet(dir))))
+  }
+
+  test("ValidateScanExec rows equal the row reader's rows (synth, fixtures, adversarial)") {
+    import spark.implicits._
+    // one doc with null spans and one with none, next to the hand-built and
+    // generated edge cases
+    val edge = (FastCheckSpec.adversarial ++ FastCheckSpec.generated.take(500))
+      .zipWithIndex.map { case (spans, i) => Doc(s"adv$i", spans) } ++
+      Seq(Doc("null-spans", null), Doc("no-spans", Nil))
+    val corpora = Map(
+      "synth" -> Synth.corpusDF(spark, 900),
+      "fixtures" -> Seq(Fixtures.validDoc, Fixtures.invalidDoc).toDF(),
+      "adversarial" -> edge.toDF())
+    corpora.foreach { case (name, docs) =>
+      val dir = writeDocs(docs, s"graft-vscan-$name")
+      def rows(df: => org.apache.spark.sql.DataFrame): Map[org.apache.spark.sql.Row, Int] =
+        df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
+      // the last output inlines the call: Project [size(validate_marc(...)) AS n_violations]
+      val outputs = Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        RowValidator.verdicts(_), RowValidator.violations(_), RowValidator.withViolations(_),
+        RowValidator.verdicts(_).select(col("n_violations")))
+      outputs.foreach { out =>
+        val node = out(spark.read.parquet(dir))
+        assert(scanNodes(node).size == 1, s"$name: no ValidateScanExec")
+        val got = rows(node)
+        val want = rowReader {
+          val df = out(spark.read.parquet(dir))
+          assert(scanNodes(df).isEmpty)
+          rows(df)
+        }
+        assert(got == want, s"$name: ${(got.keySet diff want.keySet).take(3)} vs " +
+          s"${(want.keySet diff got.keySet).take(3)}")
+      }
+    }
+  }
+
+  test("ValidateScanExec metrics: clean + full = rows, full = failing docs") {
+    val n = 900L
+    val dir = writeDocs(Synth.corpusDF(spark, n), "graft-vscan-metrics")
+    val verdicts = RowValidator.verdicts(spark.read.parquet(dir))
+    val out = verdicts.collect()
+    val m = scanNodes(verdicts).head.metrics.map { case (k, v) => k -> v.value }
+    val failing = out.count(!_.getAs[Boolean]("passed"))
+    assert(m("fastClean") + m("fullPath") == n, m)
+    assert(m("fullPath") == failing, m)
+    assert(m("violations") == out.map(_.getAs[Int]("n_violations").toLong).sum, m)
+    assert(m("numOutputRows") == n, m)
   }
 }

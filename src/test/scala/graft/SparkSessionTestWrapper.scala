@@ -15,4 +15,13 @@ object TestSpark {
 
 trait SparkSessionTestWrapper {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Waits until the listener bus has delivered every posted event (the bus
+    * accessor is not public API, hence reflection).
+    */
+  def drainBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
 }
