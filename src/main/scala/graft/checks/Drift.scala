@@ -1,14 +1,18 @@
 package graft.checks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Distribution-drift statistics against a baseline snapshot (north-star:
   * "KS/PSI distribution-drift tests on span-offset and kind-frequency
-  * histograms"). Both reduce to small-cardinality aggregations (≤ a few
-  * hundred rows after groupBy), so the heavy work is one distributed
-  * aggregate over both sides at once; the final statistic is a tiny
-  * window plus a reduce — no driver-side math on big data.
+  * histograms"). Both reduce to small histograms, so the heavy work is one
+  * distributed pass over both sides at once and only the histogram reaches
+  * the final step. KS folds both sides' bucket counts in one job with no
+  * exchange ([[Bridge.foldRows]]) and computes the CDFs on the driver from
+  * 2 × buckets counts; PSI keeps its category histogram in Catalyst, since
+  * category cardinality has no bound.
   */
 object Drift {
 
@@ -35,41 +39,65 @@ object Drift {
     * (±1/buckets) for continuous data — the scale-path tradeoff chosen by
     * SURVEY.md §2 Part B (aggregate histograms, never sort 10^12 rows).
     * A side with no non-null value gives ks = null.
+    *
+    * Runs its one job when called (a fold of both sides' bucket counts, no
+    * exchange) and returns a one-row local frame (ks: double). The driver
+    * holds 2 × buckets counts.
     */
   def ksBucketed(current: DataFrame, baseline: DataFrame, value: Column,
       lo: Double, hi: Double, buckets: Int = 256): DataFrame = {
     val bucket = least(greatest(
       floor((value - lit(lo)) / lit((hi - lo) / buckets)), lit(0L)),
-      lit(buckets.toLong - 1)).as("bucket")
-    // both sides in one aggregate: each row is tagged 1 for its own side's
-    // count and 0 for the other's, so a bucket seen on one side only gets
-    // a 0 count on the other, as a full-outer join of two histograms would
-    def side(df: DataFrame, cur: Long): DataFrame =
-      df.where(value.isNotNull).select(bucket, lit(cur).as("n_cur"), lit(1L - cur).as("n_base"))
-    val hist = side(current, 1L).unionByName(side(baseline, 0L))
-      .groupBy(col("bucket"))
-      .agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("bucket"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    // a side with no non-null value has a null CDF (try_divide: under ANSI
-    // a plain 0/0 throws), so ks is null
-    hist
-      .select(
-        try_divide(sum(col("n_cur")).over(w), sum(col("n_cur")).over()).as("cdf_cur"),
-        try_divide(sum(col("n_base")).over(w), sum(col("n_base")).over()).as("cdf_base"))
-      .agg(max(abs(col("cdf_cur") - col("cdf_base"))).as("ks"))
+      lit(buckets.toLong - 1))
+    // each row's slot in one count array: bucket b of the current side is
+    // slot b, of the baseline slot buckets + b
+    def side(df: DataFrame, offset: Long): DataFrame =
+      df.where(value.isNotNull).select((bucket + lit(offset)).as("slot"))
+    val counts = Bridge.foldRows(side(current, 0L).unionByName(side(baseline, buckets.toLong)))(
+      new Array[Long](2 * buckets))(
+      (a, row) => { a(row.getLong(0).toInt) += 1; a },
+      (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
+    ksRow(current, ksOfCounts(counts, buckets))
   }
 
+  /** max |cdf_cur − cdf_base| over the buckets that hold a row on either
+    * side, each CDF its cumulative count divided (as doubles) by its side's
+    * total; None when either side's total is 0.
+    */
+  private def ksOfCounts(counts: Array[Long], buckets: Int): Option[Double] = {
+    val totalCur = counts.iterator.take(buckets).sum
+    val totalBase = counts.iterator.drop(buckets).sum
+    if (totalCur == 0L || totalBase == 0L) None
+    else {
+      var cumCur, cumBase = 0L
+      var ks = 0.0
+      for (b <- 0 until buckets if counts(b) + counts(buckets + b) > 0L) {
+        cumCur += counts(b)
+        cumBase += counts(buckets + b)
+        ks = math.max(ks, math.abs(cumCur.toDouble / totalCur - cumBase.toDouble / totalBase))
+      }
+      Some(ks)
+    }
+  }
+
+  private val KsSchema = StructType(Seq(StructField("ks", DoubleType, nullable = true)))
+
+  private def ksRow(like: DataFrame, ks: Option[Double]): DataFrame =
+    like.sparkSession.createDataFrame(java.util.List.of(Row(ks.orNull)), KsSchema)
+
   /** Auto-ranged [[ksBucketed]]: pass 1 computes the combined [min, max] of
-    * both sides (one tiny map-side-combined aggregate over the union — a
-    * (double, double) row per partition), pass 2 buckets on exactly that
-    * range. A 100 TB corpus with an unknown value range cannot silently
-    * clip into [[ksBucketed]]'s clamp buckets — with a fixed guess, every
-    * out-of-range value collapses into bucket 0 or buckets-1 and the
-    * statistic quietly understates (or misplaces) tail drift. Costs one
-    * extra scan of the value column; at extreme scale substitute a sketch
-    * range (e.g. a t-digest's [q0, q100]) and call [[ksBucketed]] directly.
+    * both sides, pass 2 buckets on exactly that range. A 100 TB corpus with
+    * an unknown value range cannot silently clip into [[ksBucketed]]'s clamp
+    * buckets — with a fixed guess, every out-of-range value collapses into
+    * bucket 0 or buckets-1 and the statistic quietly understates (or
+    * misplaces) tail drift.
+    *
+    * Cost: two jobs, both folds with no exchange. Pass 1 reads the value
+    * column of both sides once more, folding it into one (lo, hi) pair per
+    * task with no per-row allocation; it returns what Spark's min/max
+    * return (NaN sorts above +∞, −0.0 equals 0.0). At extreme scale
+    * substitute a sketch range (e.g. a t-digest's [q0, q100]) and call
+    * [[ksBucketed]] directly.
     *
     * Degenerate inputs: no non-null values on either side -> ks = null;
     * a single distinct value -> both CDFs are a step at the same bucket ->
@@ -77,17 +105,31 @@ object Drift {
     */
   def ksAuto(current: DataFrame, baseline: DataFrame, value: Column,
       buckets: Int = 256): DataFrame = {
-    val r = current.select(value.cast("double").as("v"))
-      .unionByName(baseline.select(value.cast("double").as("v")))
-      .agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-      .collect().head
-    if (r.isNullAt(0))
-      current.sparkSession.sql("SELECT CAST(NULL AS DOUBLE) AS ks")
+    val range = Bridge.foldRows(current.select(value.cast("double"))
+      .unionByName(baseline.select(value.cast("double"))))(new MinMax)(
+      (r, row) => { if (!row.isNullAt(0)) r.add(row.getDouble(0)); r },
+      (r, o) => { if (o.seen) { r.add(o.lo); r.add(o.hi) }; r })
+    if (!range.seen) ksRow(current, None)
     else {
-      val lo = r.getDouble(0)
-      val hi = if (r.getDouble(1) > lo) r.getDouble(1) else lo + 1.0
-      ksBucketed(current, baseline, value, lo, hi, buckets)
+      val hi = if (range.hi > range.lo) range.hi else range.lo + 1.0
+      ksBucketed(current, baseline, value, range.lo, hi, buckets)
     }
+  }
+
+  /** Running min and max of doubles in Spark's order: NaN above +∞, and
+    * −0.0 equal to 0.0.
+    */
+  private final class MinMax extends Serializable {
+    var seen = false
+    var lo = 0.0
+    var hi = 0.0
+    private def lt(a: Double, b: Double): Boolean = !a.isNaN && (b.isNaN || a < b)
+    def add(v: Double): Unit =
+      if (!seen) { seen = true; lo = v; hi = v }
+      else {
+        if (lt(v, lo)) lo = v
+        if (lt(hi, v)) hi = v
+      }
   }
 
   /** Kind-frequency histogram of a docs table: (kind, freq) rows, the input

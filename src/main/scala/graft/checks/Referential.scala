@@ -5,18 +5,22 @@ import org.apache.spark.sql.functions._
 
 /** Referential-integrity check of a fact key against a (small) dimension —
   * the north-star's "broadcast-hash referential checks of media_ref against
-  * an asset catalog". The catalog is broadcast, so the check is shuffle-free
-  * on the fact side regardless of fact scale (left_anti = dangling refs).
+  * an asset catalog". The dimension is broadcast as its key column alone,
+  * one row per dimension row (no `distinct`: an anti-join gives the same
+  * rows with duplicate keys on the build side), so nothing is shuffled on
+  * either side regardless of fact scale (left_anti = dangling refs). The
+  * dimension's row count, not its distinct key count, must fit a broadcast.
   */
 object Referential {
 
   /** Fact rows whose key has no match in the dimension (nulls excluded —
-    * a null ref is "no media", not a dangling one).
+    * a null ref is "no media", not a dangling one; a null dimension key
+    * matches nothing).
     */
   def dangling(fact: DataFrame, factKey: Column, dim: DataFrame, dimKey: Column): DataFrame =
     fact
       .where(factKey.isNotNull)
-      .join(broadcast(dim.select(dimKey.as("_dim_key")).distinct()),
+      .join(broadcast(dim.select(dimKey.as("_dim_key"))),
         factKey === col("_dim_key"), "left_anti")
 
   /** Dangling media_ref spans of a docs table vs an asset catalog: returns

@@ -1,7 +1,9 @@
 package graft.checks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Exact key-uniqueness check (north-star: "exact uniqueness on doc_id via
   * hash-partitioned repartition with salted-key skew mitigation").
@@ -18,7 +20,9 @@ import org.apache.spark.sql.functions._
   *    exchange of the (key, count) rows — removed (r6 optimization, same
   *    results by construction).
   *  - No sort, no window function, no collect: dup detection is a pure
-  *    aggregation.
+  *    aggregation. [[dupStats]] folds the duplicated keys' counts into two
+  *    longs per task ([[Bridge.foldRows]]), so its summary adds no exchange
+  *    after dupKeys' one hash exchange.
   */
 object Uniqueness {
 
@@ -28,10 +32,19 @@ object Uniqueness {
       .agg(count(lit(1)).as("n"))
       .where(col("n") > 1)
 
-  /** One-row summary: total rows, distinct keys, duplicated keys, surplus rows. */
-  def dupStats(df: DataFrame, key: Column): DataFrame =
-    dupKeys(df, key)
-      .agg(
-        coalesce(count(lit(1)), lit(0L)).as("n_dup_keys"),
-        coalesce(sum(col("n") - 1), lit(0L)).as("n_surplus_rows"))
+  private val StatsSchema = StructType(Seq(
+    StructField("n_dup_keys", LongType, nullable = false),
+    StructField("n_surplus_rows", LongType, nullable = false)))
+
+  /** One-row summary: duplicated keys, and the rows beyond each key's first
+    * (0 and 0 on unique or empty input). Runs its job when called and
+    * returns a one-row local frame.
+    */
+  def dupStats(df: DataFrame, key: Column): DataFrame = {
+    val Array(nDupKeys, nSurplus) = Bridge.foldRows(dupKeys(df, key).select(col("n")))(
+      new Array[Long](2))(
+      (a, row) => { a(0) += 1; a(1) += row.getLong(0) - 1; a },
+      (a, b) => { a(0) += b(0); a(1) += b(1); a })
+    df.sparkSession.createDataFrame(java.util.List.of(Row(nDupKeys, nSurplus)), StatsSchema)
+  }
 }

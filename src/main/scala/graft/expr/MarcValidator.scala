@@ -90,7 +90,10 @@ object MarcValidator extends Serializable {
 
     // --- MARC fields = every span that is neither leader nor media --------
     val fields = spans.filter(s => s.kind != "LDR" && s.kind != "media")
-    val tags = fields.map(_.kind)
+    // a null kind (a null span element) cannot be non-repeatable, required
+    // or 1XX, so the record-level checks skip it; validateData still gives
+    // the span its pattern violation
+    val tags = fields.map(_.kind).filter(_ != null)
 
     // counts + first-occurrence key order (the reference's Counter semantics)
     val counts = mutable.LinkedHashMap.empty[String, Int]

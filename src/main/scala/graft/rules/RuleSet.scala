@@ -64,8 +64,10 @@ object RuleSet {
   /** Subfield code partition; codes are single chars packed into strings. */
   final case class Sf(valid: String, repeatable: String, nonRepeatable: String)
       extends Serializable {
-    def validSet: Set[Char] = valid.toSet
-    def nonRepeatableSet: Set[Char] = nonRepeatable.toSet
+    // built once per rule, not per subfield code tested; transient, so the
+    // serialized form stays the three strings
+    @transient lazy val validSet: Set[Char] = valid.toSet
+    @transient lazy val nonRepeatableSet: Set[Char] = nonRepeatable.toSet
   }
 
   /** Acceptable lengths plus the reference's rendered form ("18" / "[6, 14]")

@@ -8,13 +8,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.aggregate.{Count, Partial}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{QueryExecution, RangeExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -50,6 +50,16 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
     (jobs.get, plans.synchronized(plans.toSeq))
   }
+
+  /** Runs `body` once with AQE on and once with it off. */
+  private def withAndWithoutAqe(body: String => Unit): Unit =
+    for (on <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.adaptive.enabled", on)
+      try body(s"AQE $on") finally spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+
+  private def shuffles(plans: Seq[SparkPlan]): Seq[ShuffleExchangeLike] =
+    plans.collect { case x: ShuffleExchangeLike => x }
 
   /** percentilesWithCuts over `df`'s column v must equal the nearest ranks
     * of its collected non-null values sorted in Spark's order (-0.0 = 0.0,
@@ -92,6 +102,36 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
       bs.scanLeft(0L)((acc, b) => acc + h.getOrElse(b, 0L)).tail.map(_.toDouble / h.values.sum)
     if (hc.isEmpty || hb.isEmpty) None
     else Some(cdf(hc).zip(cdf(hb)).map { case (a, b) => math.abs(a - b) }.max)
+  }
+
+  /** KS over column v in the Catalyst form [[Drift.ksAuto]] had before it
+    * became two folds: a min/max aggregate for the range, then both sides'
+    * per-bucket counts in one aggregate and window CDFs over the buckets.
+    * The window is partitioned by `bucket >= 0`, true on every row, so it
+    * runs as one partition as an unpartitioned window does, without that
+    * window's warning in the log (Catalyst drops a literal partition key).
+    */
+  private def ksAutoCatalyst(cur: DataFrame, base: DataFrame, buckets: Int): Option[Double] = {
+    val v = col("v")
+    val r = cur.select(v.cast("double").as("v")).unionByName(base.select(v.cast("double").as("v")))
+      .agg(min(v), max(v)).collect().head
+    if (r.isNullAt(0)) None
+    else {
+      val lo = r.getDouble(0)
+      val hi = if (r.getDouble(1) > lo) r.getDouble(1) else lo + 1.0
+      val bucket = least(greatest(floor((v - lit(lo)) / lit((hi - lo) / buckets)), lit(0L)),
+        lit(buckets - 1L)).as("bucket")
+      def side(df: DataFrame, c: Long): DataFrame =
+        df.where(v.isNotNull).select(bucket, lit(c).as("n_cur"), lit(1L - c).as("n_base"))
+      val all = Window.partitionBy(col("bucket") >= 0)
+      val upTo = all.orderBy(col("bucket")).rowsBetween(Window.unboundedPreceding, 0)
+      def cdf(n: String) = try_divide(sum(col(n)).over(upTo), sum(col(n)).over(all))
+      val ks = side(cur, 1L).unionByName(side(base, 0L))
+        .groupBy(col("bucket")).agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
+        .select(cdf("n_cur").as("cdf_cur"), cdf("n_base").as("cdf_base"))
+        .agg(max(abs(col("cdf_cur") - col("cdf_base")))).collect().head
+      if (ks.isNullAt(0)) None else Some(ks.getDouble(0))
+    }
   }
 
   /** PSI over two category -> count maps, null as the `None` category:
@@ -221,6 +261,58 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("dupStats on all-unique keys returns zeros (not an empty frame)") {
     val st = Uniqueness.dupStats(spark.range(100).toDF("k"), col("k")).collect().head
     assert(st.getLong(0) == 0 && st.getLong(1) == 0)
+  }
+
+  test("dupStats on empty input is (0, 0), with non-null long columns") {
+    val st = Uniqueness.dupStats(spark.range(0).toDF("k"), col("k"))
+    assert(st.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((0L, 0L)))
+    assert(st.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ==
+      Seq(("n_dup_keys", "bigint", false), ("n_surplus_rows", "bigint", false)))
+  }
+
+  test("dupStats runs at most 2 jobs and one hash exchange (AQE on and off)") {
+    val data = spark.range(0, 20000, 1, 8).select(($"id" % 7000).as("k"))
+    withAndWithoutAqe { aqe =>
+      val (jobs, plans) = traced {
+        val st = Uniqueness.dupStats(data, col("k")).collect().head
+        assert(st.getLong(0) == 7000L && st.getLong(1) == 13000L, s"$aqe: $st")
+      }
+      assert(jobs <= 2, s"$aqe: $jobs jobs")
+      val xs = shuffles(plans)
+      assert(xs.size == 1 && xs.head.outputPartitioning.isInstanceOf[HashPartitioning],
+        s"$aqe:\n${plans.mkString("\n")}")
+    }
+  }
+
+  test("dangling broadcasts the dimension keys with no shuffle (AQE on and off)") {
+    val fact = spark.range(0, 5000, 1, 4).select(($"id" % 600).as("fk"))
+    val dim = spark.range(0, 2000, 1, 4).select(($"id" % 500).as("dk"))
+    withAndWithoutAqe { aqe =>
+      val (_, plans) = traced {
+        assert(Referential.dangling(fact, col("fk"), dim, col("dk")).collect().length == 800)
+      }
+      assert(plans.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$aqe:\n${plans.mkString("\n")}")
+      assert(shuffles(plans).isEmpty, s"$aqe:\n${plans.mkString("\n")}")
+    }
+  }
+
+  test("dangling with duplicate and null dimension keys equals the distinct-key join") {
+    val fact = Seq[Option[Long]](Some(1), Some(2), Some(3), Some(4), None, Some(5), Some(5), Some(7))
+      .toDF("fk")
+    val dims = Map(
+      "duplicates and nulls" -> Seq[Option[Long]](Some(1), Some(1), None, Some(3), Some(3), Some(3),
+        None, Some(5)),
+      "nulls only" -> Seq[Option[Long]](None, None),
+      "empty" -> Nil)
+    dims.foreach { case (name, keys) =>
+      val dim = keys.toDF("dk").repartition(3)
+      def rows(df: DataFrame): Map[Any, Int] =
+        df.collect().groupBy(_.get(0)).map { case (k, rs) => k -> rs.length }
+      val want = fact.where(col("fk").isNotNull)
+        .join(broadcast(dim.select(col("dk").as("_k")).distinct()), col("fk") === col("_k"),
+          "left_anti")
+      assert(rows(Referential.dangling(fact, col("fk"), dim, col("dk"))) == rows(want), name)
+    }
   }
 
   test("referential: dangling media refs vs broadcast asset catalog") {
@@ -444,18 +536,47 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }, plans.mkString("\n"))
   }
 
-  test("bucketed KS is one aggregate over both sides: no join, one hash exchange") {
+  test("KS folds: ksBucketed 1 job, ksAuto at most 2, no exchange or window") {
     val a = spark.range(0, 5000, 1, 4).select(($"id" % 100).cast("double").as("v"))
     val b = spark.range(0, 5000, 1, 4).select((($"id" % 100) + 20).cast("double").as("v"))
-    val ks = Drift.ksBucketed(a, b, col("v"), 0, 200, 200)
-    ks.collect()
-    val nodes = Bridge.finalPlanNodes(ks)
-    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), nodes.mkString("\n"))
-    val hashExchanges = nodes.collect {
-      case x: ShuffleExchangeLike if x.outputPartitioning.isInstanceOf[HashPartitioning] => x
+    withAndWithoutAqe { aqe =>
+      for ((name, maxJobs, ks) <- Seq(
+          ("ksBucketed", 1, () => Drift.ksBucketed(a, b, col("v"), 0, 200, 200)),
+          ("ksAuto", 2, () => Drift.ksAuto(a, b, col("v"), 200)))) {
+        val (jobs, plans) = traced(assert(ks().collect().head.getDouble(0) > 0.1))
+        assert(plans.exists(_.isInstanceOf[RangeExec]),
+          s"$aqe $name: the folds' plans reached no listener")
+        assert(jobs <= maxJobs, s"$aqe $name: $jobs jobs")
+        val windowOrJoin = plans.exists(p => p.isInstanceOf[WindowExec] || p.isInstanceOf[BaseJoinExec])
+        assert(shuffles(plans).isEmpty && !windowOrJoin, s"$aqe $name:\n${plans.mkString("\n")}")
+      }
     }
-    assert(hashExchanges.size == 1 && nodes.exists(_.isInstanceOf[WindowExec]),
-      nodes.mkString("\n"))
+  }
+
+  test("ksAuto matches the Catalyst min/max and window-CDF form on edge values") {
+    val rnd = new scala.util.Random(11)
+    def frame(vs: Seq[Option[Double]]): DataFrame = vs.toDF("v").repartition(3)
+    val nan = Double.NaN
+    val (inf, ninf) = (Double.PositiveInfinity, Double.NegativeInfinity)
+    val mixed = Seq.fill(1500)(Some((rnd.nextDouble() - 0.3) * 200)) ++ Seq.fill(30)(None)
+    val cases = Seq[(String, Seq[Option[Double]], Seq[Option[Double]])](
+      ("signed zeros as the min", Seq(-0.0, 1.0, 2.0, 3.0).map(Some(_)),
+        Seq(0.0, 2.5, 3.0).map(Some(_))),
+      ("NaN as the max", Seq(1.0, 2.0, nan).map(Some(_)), Seq(0.5, 5.0, 0.75).map(Some(_))),
+      ("NaN everywhere", Seq(nan, nan).map(Some(_)), Seq(Some(nan), None)),
+      ("infinities", Seq(ninf, 1.0, 2.0).map(Some(_)), Seq(3.0, inf).map(Some(_))),
+      ("+∞ as the max", Seq(1.0, 2.0, inf).map(Some(_)), Seq(3.0, 4.0).map(Some(_))),
+      ("−∞ as the min", Seq(ninf, 2.0, 1.0).map(Some(_)), Seq(3.0, 4.0).map(Some(_))),
+      ("mixed with nulls", mixed, mixed.map(_.map(_ * 1.1 + 3)) ++ Seq(Some(-0.0), Some(nan))),
+      ("one empty side", mixed, Nil),
+      ("one all-null side", mixed, Seq(None, None)),
+      ("two all-null sides", Seq(None, None, None), Seq(None)))
+    for ((name, c, b) <- cases; (cur, base) <- Seq(c -> b, b -> c); buckets <- Seq(7, 100)) {
+      val got = Drift.ksAuto(frame(cur), frame(base), col("v"), buckets).collect().head
+      val want = ksAutoCatalyst(frame(cur), frame(base), buckets)
+      assert((if (got.isNullAt(0)) None else Some(got.getDouble(0))) == want,
+        s"$name, $buckets buckets: $got vs $want")
+    }
   }
 
   test("bucketed KS equals a driver recomputation with one-sided buckets and an all-null side") {

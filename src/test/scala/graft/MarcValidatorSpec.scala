@@ -210,6 +210,20 @@ class MarcValidatorSpec extends AnyFunSuite {
     assert(vs.exists(v => v.rule_id == "non_repeatable_field" && v.tag == "100"))
   }
 
+  test("a null span kind skips the record-level checks instead of failing the job") {
+    val ldr = Span("LDR", "00454cam a22001575i 4500", null, 0)
+    val nul = Span(null, null, null, 1)
+    def ids(spans: Span*): Seq[(String, String)] = run(spans).map(v => (v.rule_id, v.tag))
+    assert(ids(ldr, nul, Span("245", "00$aT", null, 2)) ==
+      Seq(("missing_required_field", "008"), ("string_pattern_mismatch", null)))
+    assert(ids(ldr, nul) == Seq(("missing_required_field", "008"),
+      ("missing_required_field", "245"), ("string_pattern_mismatch", null)))
+    // two null kinds are not a repeated tag, and a 1XX next to them stays alone
+    assert(ids(ldr, Span("008", "x" * 40, null, 1), nul, Span("100", "1 $aA", null, 3), nul,
+      Span("245", "00$aT", null, 5)) ==
+      Seq(("string_pattern_mismatch", null), ("string_pattern_mismatch", null)))
+  }
+
   // --- subfield text codec --------------------------------------------------
   test("subfield parse/encode round-trips, including $$ escapes") {
     val subs = Seq(('a', "Title :"), ('b', "has $ sign"), ('c', ""), ('d', "$$"))

@@ -208,9 +208,17 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   test("ValidateScanExec rows equal the row reader's rows (synth, fixtures, adversarial)") {
     import spark.implicits._
-    // one doc with null spans and one with none, next to the hand-built and
-    // generated edge cases
-    val edge = (FastCheckSpec.adversarial ++ FastCheckSpec.generated.take(500))
+    // one doc with null spans, one with none, and docs with null span
+    // elements (a null struct: null kind and text), next to the hand-built
+    // and generated edge cases
+    val valid = Fixtures.validDoc.spans
+    val nullElements = Seq(
+      valid.take(1) :+ null,
+      valid.patch(1, Seq(null), 0),
+      valid.patch(2, Seq(null, null), 0),
+      null +: valid,
+      Seq(null))
+    val edge = (FastCheckSpec.adversarial ++ FastCheckSpec.generated.take(500) ++ nullElements)
       .zipWithIndex.map { case (spans, i) => Doc(s"adv$i", spans) } ++
       Seq(Doc("null-spans", null), Doc("no-spans", Nil))
     val corpora = Map(
