@@ -182,19 +182,28 @@ object Drift {
     * null is one category because the rows are matched by grouping. A
     * group with a zero total on either side has no shares on that side, so
     * its psi is null (try_divide: under ANSI a plain n / 0 throws).
+    *
+    * Each group's (n_cur, n_base) pairs are collected into one row next to
+    * its totals and scored there, with no window and no join: a window
+    * over `psi`'s literal `g` lost its partition key to constant folding,
+    * and a join back to the totals is a self-join, whose second copy of the
+    * input reads past a cached input (in a streaming `foreachBatch`, it
+    * re-runs the micro-batch). Within a group either every share on a side
+    * is null (a zero total) or none is, so the fold's null is `sum`'s.
     */
   private def psiTagged(tagged: DataFrame): DataFrame = {
-    val byG = org.apache.spark.sql.expressions.Window.partitionBy(col("g"))
-    // greatest skips a null share, so a zero total must null it explicitly
-    def share(n: String): Column = {
-      val total = sum(col(n)).over(byG)
-      when(total =!= 0, greatest(try_divide(col(n), total), lit(Epsilon)))
-    }
-    tagged
+    val byG = tagged
       .groupBy(col("g"), col("cat"))
       .agg(sum(col("n_cur")).as("n_cur"), sum(col("n_base")).as("n_base"))
-      .select(col("g"), share("n_cur").as("p"), share("n_base").as("q"))
       .groupBy(col("g"))
-      .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
+      .agg(collect_list(struct(col("n_cur"), col("n_base"))).as("c"),
+        sum(col("n_cur")).as("t_cur"), sum(col("n_base")).as("t_base"))
+    // greatest skips a null share, so a zero total must null it explicitly
+    def share(n: Column, total: String): Column =
+      when(col(total) =!= 0, greatest(try_divide(n, col(total)), lit(Epsilon)))
+    byG.select(col("g"), aggregate(col("c"), lit(0.0), { (acc, x) =>
+      val (p, q) = (share(x("n_cur"), "t_cur"), share(x("n_base"), "t_base"))
+      acc + (p - q) * log(p / q)
+    }).as("psi"))
   }
 }

@@ -40,7 +40,7 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
   def this(rules: RuleSet) = this(rules, None)
 
   private val fieldDefault = contextRules.getOrElse(rules)
-  private val fastCheck = new FastCheck(fieldDefault, rules)
+  val fastCheck = new FastCheck(fieldDefault, rules)
   /** The result of every doc FastCheck proves clean; the full path always
     * returns a fresh array, so `eq` tells the two apart.
     */
@@ -52,8 +52,13 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
     * message rendering.
     */
   def validate(kinds: ArrayData, texts: ArrayData): ArrayData =
-    if (fastCheck.clean(kinds, texts)) noViolations
-    else validateFull(kinds, texts, rules, fieldDefault, _ => None)
+    if (fastCheck.clean(kinds, texts)) noViolations else validateFull(kinds, texts)
+
+  /** The full path alone, for a doc [[fastCheck]] did not prove clean: a
+    * fresh violations array, empty when the doc has none.
+    */
+  def validateFull(kinds: ArrayData, texts: ArrayData): ArrayData =
+    validateFull(kinds, texts, rules, fieldDefault, _ => None)
 
   /** The expression's one entry: recordJson/spanRules may be null (no
     * override), and with neither set this is [[validate]].

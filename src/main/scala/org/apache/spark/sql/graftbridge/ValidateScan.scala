@@ -12,12 +12,11 @@ import org.apache.spark.sql.execution.{ColumnarToRowTransition, FileSourceScanEx
 import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.execution.vectorized.WritableColumnVector
-import org.apache.spark.sql.types.Decimal
-import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarMap, ColumnVector}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
+import org.apache.spark.sql.vectorized.ColumnarArray
+import org.apache.spark.unsafe.Platform
 
-import graft.expr.{ValidateSpans, ValidatorKernel}
+import graft.expr.{FastCheck, ValidateSpans, ValidatorKernel}
 
 /** Plans `validate_marc(spans.kind, spans.text, null, null)` straight over a
   * columnar parquet scan as one [[ValidateScanExec]], so the kernel reads
@@ -87,13 +86,18 @@ object ValidateScanStrategy extends SparkStrategy {
   }
 }
 
-/** `validate_marc` over the column vectors of a parquet scan. For each doc
-  * of a batch, the kernel gets `ColumnarArray` views of the kind and text
-  * child vectors at the doc's span offset and length: FastCheck proves a
-  * clean doc without copying a span, and only the docs it cannot prove take
-  * the full path. Rows come out as `UnsafeRow`s with the replaced
-  * `Project`'s output: the kernel's result in place of the call, the other
-  * columns read from their vectors.
+/** `validate_marc` over the column vectors of a parquet scan. Per batch, a
+  * task's [[SpanBatch]] views the kind and text child vectors, and for each
+  * doc FastCheck reads the doc's spans through it: each kind dictionary
+  * entry is coded once per batch, a span's text is read only when its tag's
+  * rules need it, and each (code, text dictionary entry) pair is checked
+  * once per batch. This memo replaces a per-batch cache of decoded
+  * strings: no span's kind is decoded or parsed, only each entry once, and
+  * a text entry is copied out only to check a new pair. Only the docs
+  * FastCheck cannot prove take the full path, over `ColumnarArray` views of
+  * the raw vectors at the doc's span offset and length. Rows come out as
+  * `UnsafeRow`s with the replaced `Project`'s output: the kernel's result
+  * in place of the call, the other columns read from their vectors.
   *
   * A [[ColumnarToRowTransition]], so Spark inserts no `ColumnarToRow` over
   * the scan. Its metrics count the docs FastCheck proved clean, the docs
@@ -131,11 +135,13 @@ case class ValidateScanExec(projectList: Seq[NamedExpression], child: SparkPlan)
       val proj = UnsafeProjection.create(exprs)
       val violationsSlot = new GenericInternalRow(1)
       val joined = new JoinedRow(null, violationsSlot)
+      val view = new SpanBatch(kernel.fastCheck)
       batches.flatMap { batch =>
         val spansVec = batch.column(spansIdx).asInstanceOf[WritableColumnVector]
         val structs = spansVec.arrayData()
-        val kinds = new DecodedStrings(structs.getChild(kindOrd))
-        val texts = new DecodedStrings(structs.getChild(textOrd))
+        val kinds = structs.getChild(kindOrd)
+        val texts = structs.getChild(textOrd)
+        view.reset(kinds, texts)
         numOutputRows += batch.numRows()
         Iterator.tabulate(batch.numRows()) { i =>
           val result =
@@ -143,11 +149,16 @@ case class ValidateScanExec(projectList: Seq[NamedExpression], child: SparkPlan)
             else {
               val off = spansVec.getArrayOffset(i)
               val len = spansVec.getArrayLength(i)
-              val r = kernel.validate(new ColumnarArray(kinds, off, len),
-                new ColumnarArray(texts, off, len))
-              if (r eq kernel.noViolations) fastClean += 1
-              else { fullPath += 1; violations += r.numElements() }
-              r
+              if (kernel.fastCheck.clean(view.doc(off, len))) {
+                fastClean += 1
+                kernel.noViolations
+              } else {
+                val r = kernel.validateFull(new ColumnarArray(kinds, off, len),
+                  new ColumnarArray(texts, off, len))
+                fullPath += 1
+                violations += r.numElements()
+                r
+              }
             }
           violationsSlot.update(0, result)
           proj(joined.withLeft(batch.getRow(i)))
@@ -160,42 +171,115 @@ case class ValidateScanExec(projectList: Seq[NamedExpression], child: SparkPlan)
     copy(child = newChild)
 }
 
-/** One batch's string vector with each dictionary entry decoded once. The
-  * parquet reader keeps a dictionary-encoded column as ids, and each
-  * `getUTF8String` of such a vector copies the entry's bytes out again; here
-  * the first read of an id decodes it and later reads share the string.
-  * Only the reads the kernel makes are supported.
+/** One task's view of a batch's span `kind` and `text` vectors as
+  * [[FastCheck.Spans]], moved from doc to doc by [[doc]]. Over a
+  * dictionary-encoded vector it memoises by dictionary id: a kind gets its
+  * code once per id per batch, and a text its verdict once per (code, id)
+  * per batch. The code is part of the text key because the same text can
+  * sit under two tags. A plain-encoded vector is read in place: an on-heap
+  * text vector's bytes with no `UTF8String` made, any other vector through
+  * `getUTF8String`, which copies nothing. The memo arrays grow to the
+  * largest id seen and are kept for the task; [[reset]] voids their entries
+  * with a generation stamp instead of clearing or reallocating them.
   */
-private final class DecodedStrings(vec: WritableColumnVector)
-    extends ColumnVector(vec.dataType) {
-  private val ids = if (vec.hasDictionary) vec.getDictionaryIds else null
-  private var decoded = new Array[UTF8String](64)
+final class SpanBatch(fc: FastCheck) extends FastCheck.Spans {
+  private var kinds: WritableColumnVector = _
+  private var texts: WritableColumnVector = _
+  private var kindIds: WritableColumnVector = _ // null when plain-encoded
+  private var textIds: WritableColumnVector = _
+  // a plain-encoded on-heap text vector's byte array, read in place
+  private var textBytes: Array[Byte] = _
+  private var off = 0
+  private var len = 0
+  private var gen = 0
+  // kind id -> code, valid where kindGen(id) == gen
+  private var kindGen = new Array[Int](64)
+  private var kindCodes = new Array[Int](64)
+  // text id -> its latest verdict slot, valid where textGen(id) == gen; slot
+  // s holds a code, the text's verdict under it, and the id's previous slot
+  private var textGen = new Array[Int](256)
+  private var textHead = new Array[Int](256)
+  private var slotCode = new Array[Int](256)
+  private var slotOk = new Array[Boolean](256)
+  private var slotNext = new Array[Int](256)
+  private var slots = 0
 
-  override def getUTF8String(i: Int): UTF8String =
-    if (ids == null || vec.isNullAt(i)) vec.getUTF8String(i)
-    else {
-      val id = ids.getInt(i)
-      if (id >= decoded.length)
-        decoded = java.util.Arrays.copyOf(decoded, math.max(id + 1, decoded.length * 2))
-      if (decoded(id) == null) decoded(id) = vec.getUTF8String(i)
-      decoded(id)
+  /** Views the next batch's kind and text vectors. */
+  def reset(kinds: WritableColumnVector, texts: WritableColumnVector): Unit = {
+    this.kinds = kinds
+    this.texts = texts
+    kindIds = if (kinds.hasDictionary) kinds.getDictionaryIds else null
+    textIds = if (texts.hasDictionary) texts.getDictionaryIds else null
+    textBytes = texts.arrayData() match {
+      // an on-heap vector's byte buffer wraps its byte array, with no copy
+      case bytes: OnHeapColumnVector if textIds == null => bytes.getByteBuffer(0, 0).array()
+      case _ => null
     }
-  override def isNullAt(i: Int): Boolean = vec.isNullAt(i)
-  override def hasNull: Boolean = vec.hasNull
-  override def numNulls: Int = vec.numNulls
-  override def close(): Unit = ()
+    gen += 1
+    slots = 0
+  }
 
-  private def unsupported = throw new UnsupportedOperationException("DecodedStrings")
-  override def getBoolean(i: Int): Boolean = unsupported
-  override def getByte(i: Int): Byte = unsupported
-  override def getShort(i: Int): Short = unsupported
-  override def getInt(i: Int): Int = unsupported
-  override def getLong(i: Int): Long = unsupported
-  override def getFloat(i: Int): Float = unsupported
-  override def getDouble(i: Int): Double = unsupported
-  override def getArray(i: Int): ColumnarArray = unsupported
-  override def getMap(i: Int): ColumnarMap = unsupported
-  override def getDecimal(i: Int, p: Int, s: Int): Decimal = unsupported
-  override def getBinary(i: Int): Array[Byte] = unsupported
-  override def getChild(i: Int): ColumnVector = unsupported
+  /** Views the doc whose spans sit at `off` until `off + len`. */
+  def doc(off: Int, len: Int): this.type = {
+    this.off = off
+    this.len = len
+    this
+  }
+
+  override def size: Int = len
+
+  override def code(i: Int): Int = {
+    val j = off + i
+    if (kinds.isNullAt(j)) FastCheck.Reject
+    else if (kindIds == null) fc.kindCode(kinds.getUTF8String(j))
+    else {
+      val id = kindIds.getInt(j)
+      if (id >= kindGen.length) {
+        kindGen = grow(kindGen, id)
+        kindCodes = grow(kindCodes, id)
+      }
+      if (kindGen(id) != gen) {
+        kindCodes(id) = fc.kindCode(kinds.getUTF8String(j))
+        kindGen(id) = gen
+      }
+      kindCodes(id)
+    }
+  }
+
+  override def textOk(i: Int, code: Int): Boolean = {
+    val j = off + i
+    if (texts.isNullAt(j)) fc.spanOk(code, null)
+    else if (textBytes != null) fc.spanOk(code, textBytes,
+      Platform.BYTE_ARRAY_OFFSET + texts.getArrayOffset(j), texts.getArrayLength(j))
+    else if (textIds == null) fc.spanOk(code, texts.getUTF8String(j))
+    else {
+      val id = textIds.getInt(j)
+      if (id >= textGen.length) {
+        textGen = grow(textGen, id)
+        textHead = grow(textHead, id)
+      }
+      var s = if (textGen(id) == gen) textHead(id) else -1
+      while (s >= 0 && slotCode(s) != code) s = slotNext(s)
+      if (s >= 0) slotOk(s)
+      else {
+        val ok = fc.spanOk(code, texts.getUTF8String(j))
+        if (slots == slotCode.length) {
+          slotCode = grow(slotCode, slots)
+          slotNext = grow(slotNext, slots)
+          slotOk = java.util.Arrays.copyOf(slotOk, slotCode.length)
+        }
+        slotCode(slots) = code
+        slotOk(slots) = ok
+        slotNext(slots) = if (textGen(id) == gen) textHead(id) else -1
+        textHead(id) = slots
+        textGen(id) = gen
+        slots += 1
+        ok
+      }
+    }
+  }
+
+  /** `a` grown to hold index `i`, at least doubled. */
+  private def grow(a: Array[Int], i: Int): Array[Int] =
+    java.util.Arrays.copyOf(a, math.max(i + 1, a.length * 2))
 }

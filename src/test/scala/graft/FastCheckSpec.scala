@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
+import org.apache.spark.sql.execution.vectorized.{Dictionary, OnHeapColumnVector,
+  WritableColumnVector}
+import org.apache.spark.sql.graftbridge.SpanBatch
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarArray
 import org.apache.spark.unsafe.types.UTF8String
@@ -114,13 +116,143 @@ class FastCheckSpec extends AnyFunSuite {
           s"kernel results differ for $spans")
     } finally spansVec.close()
   }
+
+  test("character counts: multibyte control fields agree with the full path") {
+    FastCheckSpec.charCounts.foreach { case (spans, want) =>
+      val full = MarcValidator.validate(spans, rules).map(_.rule_id)
+      assert(full == want, s"full path for $spans")
+      assert(cleanOf(spans) == want.isEmpty, s"fast path for $spans")
+    }
+  }
+
+  /** Test dictionary over strings; like parquet's, it decodes a copy. */
+  private final class StringDictionary(entries: IndexedSeq[String]) extends Dictionary {
+    private val bytes = entries.map(_.getBytes("UTF-8"))
+    override def decodeToBinary(id: Int): Array[Byte] = bytes(id).clone()
+    private def unsupported = throw new UnsupportedOperationException("StringDictionary")
+    override def decodeToInt(id: Int): Int = unsupported
+    override def decodeToLong(id: Int): Long = unsupported
+    override def decodeToFloat(id: Int): Float = unsupported
+    override def decodeToDouble(id: Int): Double = unsupported
+  }
+
+  /** One string vector of `values` (null stays null), dictionary-encoded
+    * over the sorted distinct values (reversed when `reverse`) or plain.
+    */
+  private def stringVector(values: Seq[String], dict: Boolean,
+      reverse: Boolean): OnHeapColumnVector = {
+    val v = new OnHeapColumnVector(math.max(values.size, 1), StringType)
+    if (dict) {
+      val sorted = values.filter(_ != null).distinct.sorted
+      val entries = (if (reverse) sorted.reverse else sorted).toIndexedSeq
+      v.setDictionary(new StringDictionary(entries))
+      val ids = v.reserveDictionaryIds(math.max(values.size, 1))
+      values.zipWithIndex.foreach { case (x, j) =>
+        if (x == null) v.putNull(j) else ids.putInt(j, entries.indexOf(x))
+      }
+    } else values.zipWithIndex.foreach { case (x, j) =>
+      if (x == null) v.putNull(j) else v.putByteArray(j, x.getBytes("UTF-8"))
+    }
+    v
+  }
+
+  /** `docs` as one batch of kind and text child vectors (a null span has a
+    * null kind and text), read through `view` doc by doc: each doc's
+    * `clean` over the batch view next to its `clean` over the arrays.
+    */
+  private def batchClean(view: SpanBatch, docs: Seq[Seq[Span]], dictKinds: Boolean,
+      dictTexts: Boolean, reverse: Boolean = false): Seq[(Boolean, Boolean)] = {
+    val spans = docs.flatten
+    val kinds = stringVector(spans.map(s => if (s == null) null else s.kind), dictKinds, reverse)
+    val texts = stringVector(spans.map(s => if (s == null) null else s.text), dictTexts, reverse)
+    assert(kinds.hasDictionary == dictKinds && texts.hasDictionary == dictTexts)
+    try {
+      view.reset(kinds, texts)
+      val offsets = docs.scanLeft(0)(_ + _.size)
+      docs.zip(offsets).map { case (d, off) =>
+        def arr(f: Span => String) = new GenericArrayData(d.map(s =>
+          if (s == null || f(s) == null) null else UTF8String.fromString(f(s))).toArray[Any])
+        (fc.clean(view.doc(off, d.size)), fc.clean(arr(_.kind), arr(_.text)))
+      }
+    } finally { kinds.close(); texts.close() }
+  }
+
+  test("batch view: clean equals the ArrayData clean, dictionary and plain") {
+    val docs = Seq.empty[Span] +: (Fixtures.validDoc.spans +: Fixtures.invalidDoc.spans +:
+      ((0L until 90L).map(Synth.doc(_).spans) ++ FastCheckSpec.adversarial ++
+        FastCheckSpec.generated))
+    for (dictKinds <- Seq(true, false); dictTexts <- Seq(true, false)) {
+      val got = batchClean(new SpanBatch(fc), docs, dictKinds, dictTexts)
+      docs.zip(got).foreach { case (d, (view, arrays)) =>
+        assert(view == arrays, s"kinds dict $dictKinds, texts dict $dictTexts: $d")
+      }
+      assert(got.count(_._1) > 10, "too few clean docs to compare")
+    }
+  }
+
+  test("batch view: one text entry under two tags, misplaced LDR and media, nulls") {
+    import FastCheckSpec.{base, ldr}
+    val ctl = base(1)
+    val docs = Seq(
+      Seq(ldr, ctl, Span("245", "00$aX", null, 2)) -> true,
+      // the same text as a 100, whose second indicator must be blank
+      Seq(ldr, ctl, Span("245", "10$aY", null, 2), Span("100", "00$aX", null, 3)) -> false,
+      Seq(ldr, ctl, Span("245", "00$aX", null, 2)) -> true,
+      Seq(ldr, ctl, Span("245", "00$aX", null, 2), ldr.copy(offset = 3)) -> false,
+      Seq(Span("media", "", "asset-1", 0), ldr, ctl, base(2)) -> false,
+      Seq(ldr, ctl, base(2), Span("media", "", "asset-1", 3)) -> true,
+      Seq(ldr, ctl, base(2), null) -> false,
+      Seq(ldr, ctl, base(2), Span(null, "00$aX", null, 3)) -> false,
+      Seq(ldr, ctl, Span("245", null, null, 2)) -> false,
+      Seq(ldr, Span("008", null, null, 1), base(2)) -> false,
+      Seq(ldr.copy(text = null), ctl, base(2)) -> false,
+      Seq(ldr, ctl, base(2), Span("910", null, null, 3)) -> true)
+    for (dictKinds <- Seq(true, false); dictTexts <- Seq(true, false)) {
+      val got = batchClean(new SpanBatch(fc), docs.map(_._1), dictKinds, dictTexts)
+      docs.zip(got).foreach { case ((d, want), (view, arrays)) =>
+        assert(arrays == want, s"ArrayData clean for $d")
+        if (want) assert(MarcValidator.validate(d, rules).isEmpty, s"full path for $d")
+        assert(view == want, s"kinds dict $dictKinds, texts dict $dictTexts: $d")
+      }
+    }
+  }
+
+  test("batch view: a second batch with other dictionaries reads no stale memo entry") {
+    // the second batch numbers the same strings in reverse, so an entry kept
+    // from the first batch gives a span another string's code or verdict
+    val docs = FastCheckSpec.adversarial ++ (0L until 30L).map(Synth.doc(_).spans)
+    val view = new SpanBatch(fc)
+    Seq(false, true, false).foreach { reverse =>
+      val got = batchClean(view, docs, dictKinds = true, dictTexts = true, reverse)
+      docs.zip(got).foreach { case (d, (viewClean, arrays)) =>
+        assert(viewClean == arrays, s"reverse $reverse: $d")
+      }
+      assert(got.exists(_._1) && got.exists(!_._1))
+    }
+  }
 }
 
 object FastCheckSpec {
-  private val ldr = Span("LDR", "00454cam a22001575i 4500", null, 0)
-  private val base = Seq(ldr,
-    Span("008", "190306s2017    ht a   j      000 1 hat d", null, 1),
-    Span("245", "00$aT", null, 2))
+  private[graft] val ldr = Span("LDR", "00454cam a22001575i 4500", null, 0)
+  private val f008 = "190306s2017    ht a   j      000 1 hat d" // 40 chars
+  private[graft] val base = Seq(ldr, Span("008", f008, null, 1), Span("245", "00$aT", null, 2))
+
+  /** `base` with its 008 replaced by, or (for another tag) followed by, a
+    * control field `tag` holding `text`.
+    */
+  private def withField(tag: String, text: String): Seq[Span] =
+    if (tag == "008") base.updated(1, Span(tag, text, null, 1))
+    else base :+ Span(tag, text, null, 3)
+
+  /** Control fields whose character and byte counts differ, with the
+    * full path's rule ids.
+    */
+  lazy val charCounts: Seq[(Seq[Span], Seq[String])] = Seq(
+    withField("008", f008.dropRight(1) + "é") -> Nil, // 40 chars in 41 bytes
+    withField("008", f008.dropRight(2) + "é") -> // 39 chars in 40 bytes
+      Seq("control_field_length_invalid"),
+    withField("008", f008.dropRight(1) + "\uD834\uDD1E") -> Nil, // a 4-byte char: 40 chars
+    withField("007", "é|||||") -> Seq("control_field_length_invalid")) // multibyte first char
 
   /** Hand-built docs at the edges of every FastCheck branch. */
   val adversarial: Seq[Seq[Span]] = Seq(
@@ -152,7 +284,7 @@ object FastCheckSpec {
     base :+ Span("006", "m|||||學", null, 3), // 6 codepoints, 8 bytes: punt/agree
     base :+ Span("600", "10$aX,$aX,", null, 3), // non-rep subfield repeat
     base :+ Span("245", "學0$aT", null, 3), // multibyte indicator
-    base :+ Span("245", "0學$aT", null, 3))
+    base :+ Span("245", "0學$aT", null, 3)) ++ charCounts.map(_._1)
 
   /** 2000 property-generated docs from fixed seeds (the scalatestplus
     * bridge is not on the offline classpath): random tags including

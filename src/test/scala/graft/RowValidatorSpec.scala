@@ -144,10 +144,27 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
   private def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def writeDocs(docs: org.apache.spark.sql.DataFrame, prefix: String): String = {
+  private def writeDocs(docs: org.apache.spark.sql.DataFrame, prefix: String,
+      dictionary: Boolean = true): String = {
     val dir = tempDir(prefix)
-    docs.write.mode("overwrite").parquet(dir)
+    docs.write.mode("overwrite").option("parquet.enable.dictionary", dictionary).parquet(dir)
     dir
+  }
+
+  /** Whether any column chunk of the parquet files under `dir` has a
+    * dictionary page.
+    */
+  private def hasDictionaryPages(dir: String): Boolean = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).exists { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath), conf))
+      try reader.getFooter.getBlocks.asScala.exists(_.getColumns.asScala.exists(_.hasDictionaryPage))
+      finally reader.close()
+    }
   }
 
   private def nodes(df: org.apache.spark.sql.DataFrame) =
@@ -210,7 +227,8 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
     import spark.implicits._
     // one doc with null spans, one with none, and docs with null span
     // elements (a null struct: null kind and text), next to the hand-built
-    // and generated edge cases
+    // and generated edge cases; each corpus is written dictionary-encoded
+    // and plain, since a large file falls back to plain pages
     val valid = Fixtures.validDoc.spans
     val nullElements = Seq(
       valid.take(1) :+ null,
@@ -225,8 +243,10 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
       "synth" -> Synth.corpusDF(spark, 900),
       "fixtures" -> Seq(Fixtures.validDoc, Fixtures.invalidDoc).toDF(),
       "adversarial" -> edge.toDF())
-    corpora.foreach { case (name, docs) =>
-      val dir = writeDocs(docs, s"graft-vscan-$name")
+    for ((corpus, docs) <- corpora; dictionary <- Seq(true, false)) {
+      val name = s"$corpus (dictionary $dictionary)"
+      val dir = writeDocs(docs, s"graft-vscan-$corpus", dictionary)
+      assert(hasDictionaryPages(dir) == dictionary, name)
       def rows(df: => org.apache.spark.sql.DataFrame): Map[org.apache.spark.sql.Row, Int] =
         df.collect().groupBy(identity).map { case (r, rs) => r -> rs.length }
       // the last output inlines the call: Project [size(validate_marc(...)) AS n_violations]
