@@ -190,6 +190,12 @@ object Drift {
     * input reads past a cached input (in a streaming `foreachBatch`, it
     * re-runs the micro-batch). Within a group either every share on a side
     * is null (a zero total) or none is, so the fold's null is `sum`'s.
+    *
+    * A group's categories must fit in an executor's memory: `collect_list`
+    * holds the whole list on the heap, where a window could spill it. With
+    * `psiGrouped`'s cross join every group holds at least the baseline's
+    * categories, so a baseline of unbounded category cardinality (free-text
+    * values rather than kinds or tags) wants its categories bucketed first.
     */
   private def psiTagged(tagged: DataFrame): DataFrame = {
     val byG = tagged

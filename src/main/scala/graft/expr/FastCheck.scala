@@ -33,16 +33,16 @@ import graft.rules.RuleSet
   *     `getUTF8String` per field read;
   *   - `graftbridge.SpanBatch`, `graftbridge.ValidateScanExec`'s view of a
   *     parquet batch's kind and text vectors, which codes each kind
-  *     dictionary entry and checks each (code, text dictionary entry) pair
-  *     once per batch.
+  *     dictionary entry once per batch.
   *
   * Why: violations are rare in healthy corpora, so the hot loop is "prove
   * clean". The full path allocates ~30 objects/doc (spans, Strings,
   * counters); at 32 cores that allocation rate becomes the scaling limiter.
   * Per call this path allocates two 16-long bitsets, plus, on the
   * `ArrayData` form, its accessor and a UTF8String wrapper per field read.
-  * Over a batch view it makes UTF8Strings only where the memo misses: an
-  * on-heap plain-encoded text is checked in place.
+  * Over a batch view it makes a UTF8String per kind dictionary entry, per
+  * plain-encoded kind and per text a rule reads, except that an on-heap
+  * plain-encoded text is checked in place.
   */
 final class FastCheck(fieldRules: RuleSet, recordRules: RuleSet)
     extends Serializable {
@@ -354,7 +354,9 @@ object FastCheck {
     def size: Int
     /** [[FastCheck.kindCode]] of span `i`'s kind, [[Reject]] when null. */
     def code(i: Int): Int
-    /** [[FastCheck.spanOk]] of span `i`'s text under its kind's `code`. */
+    /** [[FastCheck.spanOk]] of span `i`'s text under its kind's `code`,
+      * one that [[FastCheck.needsText]].
+      */
     def textOk(i: Int, code: Int): Boolean
   }
 

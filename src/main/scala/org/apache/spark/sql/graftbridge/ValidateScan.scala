@@ -89,15 +89,14 @@ object ValidateScanStrategy extends SparkStrategy {
 /** `validate_marc` over the column vectors of a parquet scan. Per batch, a
   * task's [[SpanBatch]] views the kind and text child vectors, and for each
   * doc FastCheck reads the doc's spans through it: each kind dictionary
-  * entry is coded once per batch, a span's text is read only when its tag's
-  * rules need it, and each (code, text dictionary entry) pair is checked
-  * once per batch. This memo replaces a per-batch cache of decoded
+  * entry is coded once per batch, and a span's text is read only when its
+  * tag's rules need it. This replaces a per-batch cache of decoded
   * strings: no span's kind is decoded or parsed, only each entry once, and
-  * a text entry is copied out only to check a new pair. Only the docs
-  * FastCheck cannot prove take the full path, over `ColumnarArray` views of
-  * the raw vectors at the doc's span offset and length. Rows come out as
-  * `UnsafeRow`s with the replaced `Project`'s output: the kernel's result
-  * in place of the call, the other columns read from their vectors.
+  * a text is read only for a rule. Only the docs FastCheck cannot prove
+  * take the full path, over `ColumnarArray` views of the raw vectors at
+  * the doc's span offset and length. Rows come out as `UnsafeRow`s with the
+  * replaced `Project`'s output: the kernel's result in place of the call,
+  * the other columns read from their vectors.
   *
   * A [[ColumnarToRowTransition]], so Spark inserts no `ColumnarToRow` over
   * the scan. Its metrics count the docs FastCheck proved clean, the docs
@@ -172,21 +171,21 @@ case class ValidateScanExec(projectList: Seq[NamedExpression], child: SparkPlan)
 }
 
 /** One task's view of a batch's span `kind` and `text` vectors as
-  * [[FastCheck.Spans]], moved from doc to doc by [[doc]]. Over a
-  * dictionary-encoded vector it memoises by dictionary id: a kind gets its
-  * code once per id per batch, and a text its verdict once per (code, id)
-  * per batch. The code is part of the text key because the same text can
-  * sit under two tags. A plain-encoded vector is read in place: an on-heap
-  * text vector's bytes with no `UTF8String` made, any other vector through
-  * `getUTF8String`, which copies nothing. The memo arrays grow to the
-  * largest id seen and are kept for the task; [[reset]] voids their entries
-  * with a generation stamp instead of clearing or reallocating them.
+  * [[FastCheck.Spans]], moved from doc to doc by [[doc]]. A
+  * dictionary-encoded kind vector gets one code per dictionary id per
+  * batch; a plain-encoded one is coded per span. A text is read only for a
+  * span whose code [[FastCheck.needsText]]: a plain-encoded on-heap text in
+  * place, from the vector's byte array with no `UTF8String` made (about 7%
+  * of perfbench `validate_healthy`'s throughput on a 4-core host, where two
+  * thirds of the batches are plain), any other through `getUTF8String`.
+  * The kind memo grows to the largest id seen and is kept for the task;
+  * [[reset]] voids its entries with a generation stamp instead of clearing
+  * or reallocating it.
   */
 final class SpanBatch(fc: FastCheck) extends FastCheck.Spans {
   private var kinds: WritableColumnVector = _
   private var texts: WritableColumnVector = _
   private var kindIds: WritableColumnVector = _ // null when plain-encoded
-  private var textIds: WritableColumnVector = _
   // a plain-encoded on-heap text vector's byte array, read in place
   private var textBytes: Array[Byte] = _
   private var off = 0
@@ -195,28 +194,18 @@ final class SpanBatch(fc: FastCheck) extends FastCheck.Spans {
   // kind id -> code, valid where kindGen(id) == gen
   private var kindGen = new Array[Int](64)
   private var kindCodes = new Array[Int](64)
-  // text id -> its latest verdict slot, valid where textGen(id) == gen; slot
-  // s holds a code, the text's verdict under it, and the id's previous slot
-  private var textGen = new Array[Int](256)
-  private var textHead = new Array[Int](256)
-  private var slotCode = new Array[Int](256)
-  private var slotOk = new Array[Boolean](256)
-  private var slotNext = new Array[Int](256)
-  private var slots = 0
 
   /** Views the next batch's kind and text vectors. */
   def reset(kinds: WritableColumnVector, texts: WritableColumnVector): Unit = {
     this.kinds = kinds
     this.texts = texts
     kindIds = if (kinds.hasDictionary) kinds.getDictionaryIds else null
-    textIds = if (texts.hasDictionary) texts.getDictionaryIds else null
     textBytes = texts.arrayData() match {
       // an on-heap vector's byte buffer wraps its byte array, with no copy
-      case bytes: OnHeapColumnVector if textIds == null => bytes.getByteBuffer(0, 0).array()
+      case bytes: OnHeapColumnVector if !texts.hasDictionary => bytes.getByteBuffer(0, 0).array()
       case _ => null
     }
     gen += 1
-    slots = 0
   }
 
   /** Views the doc whose spans sit at `off` until `off + len`. */
@@ -251,32 +240,7 @@ final class SpanBatch(fc: FastCheck) extends FastCheck.Spans {
     if (texts.isNullAt(j)) fc.spanOk(code, null)
     else if (textBytes != null) fc.spanOk(code, textBytes,
       Platform.BYTE_ARRAY_OFFSET + texts.getArrayOffset(j), texts.getArrayLength(j))
-    else if (textIds == null) fc.spanOk(code, texts.getUTF8String(j))
-    else {
-      val id = textIds.getInt(j)
-      if (id >= textGen.length) {
-        textGen = grow(textGen, id)
-        textHead = grow(textHead, id)
-      }
-      var s = if (textGen(id) == gen) textHead(id) else -1
-      while (s >= 0 && slotCode(s) != code) s = slotNext(s)
-      if (s >= 0) slotOk(s)
-      else {
-        val ok = fc.spanOk(code, texts.getUTF8String(j))
-        if (slots == slotCode.length) {
-          slotCode = grow(slotCode, slots)
-          slotNext = grow(slotNext, slots)
-          slotOk = java.util.Arrays.copyOf(slotOk, slotCode.length)
-        }
-        slotCode(slots) = code
-        slotOk(slots) = ok
-        slotNext(slots) = if (textGen(id) == gen) textHead(id) else -1
-        textHead(id) = slots
-        textGen(id) = gen
-        slots += 1
-        ok
-      }
-    }
+    else fc.spanOk(code, texts.getUTF8String(j))
   }
 
   /** `a` grown to hold index `i`, at least doubled. */

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.execution.vectorized.{Dictionary, OnHeapColumnVector,
-  WritableColumnVector}
+import org.apache.spark.sql.execution.vectorized.{Dictionary, OffHeapColumnVector,
+  OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.graftbridge.SpanBatch
 import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarArray
@@ -137,16 +137,19 @@ class FastCheckSpec extends AnyFunSuite {
   }
 
   /** One string vector of `values` (null stays null), dictionary-encoded
-    * over the sorted distinct values (reversed when `reverse`) or plain.
+    * over the sorted distinct values (reversed when `reverse`) or plain,
+    * on or off the heap.
     */
-  private def stringVector(values: Seq[String], dict: Boolean,
-      reverse: Boolean): OnHeapColumnVector = {
-    val v = new OnHeapColumnVector(math.max(values.size, 1), StringType)
+  private def stringVector(values: Seq[String], dict: Boolean, reverse: Boolean,
+      offHeap: Boolean): WritableColumnVector = {
+    val cap = math.max(values.size, 1)
+    val v = if (offHeap) new OffHeapColumnVector(cap, StringType)
+      else new OnHeapColumnVector(cap, StringType)
     if (dict) {
       val sorted = values.filter(_ != null).distinct.sorted
       val entries = (if (reverse) sorted.reverse else sorted).toIndexedSeq
       v.setDictionary(new StringDictionary(entries))
-      val ids = v.reserveDictionaryIds(math.max(values.size, 1))
+      val ids = v.reserveDictionaryIds(cap)
       values.zipWithIndex.foreach { case (x, j) =>
         if (x == null) v.putNull(j) else ids.putInt(j, entries.indexOf(x))
       }
@@ -161,10 +164,13 @@ class FastCheckSpec extends AnyFunSuite {
     * `clean` over the batch view next to its `clean` over the arrays.
     */
   private def batchClean(view: SpanBatch, docs: Seq[Seq[Span]], dictKinds: Boolean,
-      dictTexts: Boolean, reverse: Boolean = false): Seq[(Boolean, Boolean)] = {
+      dictTexts: Boolean, reverse: Boolean = false,
+      offHeap: Boolean = false): Seq[(Boolean, Boolean)] = {
     val spans = docs.flatten
-    val kinds = stringVector(spans.map(s => if (s == null) null else s.kind), dictKinds, reverse)
-    val texts = stringVector(spans.map(s => if (s == null) null else s.text), dictTexts, reverse)
+    def vector(f: Span => String, dict: Boolean) =
+      stringVector(spans.map(s => if (s == null) null else f(s)), dict, reverse, offHeap)
+    val kinds = vector(_.kind, dictKinds)
+    val texts = vector(_.text, dictTexts)
     assert(kinds.hasDictionary == dictKinds && texts.hasDictionary == dictTexts)
     try {
       view.reset(kinds, texts)
@@ -181,10 +187,14 @@ class FastCheckSpec extends AnyFunSuite {
     val docs = Seq.empty[Span] +: (Fixtures.validDoc.spans +: Fixtures.invalidDoc.spans +:
       ((0L until 90L).map(Synth.doc(_).spans) ++ FastCheckSpec.adversarial ++
         FastCheckSpec.generated))
-    for (dictKinds <- Seq(true, false); dictTexts <- Seq(true, false)) {
-      val got = batchClean(new SpanBatch(fc), docs, dictKinds, dictTexts)
+    // an off-heap plain text vector is read through getUTF8String, an
+    // on-heap one from its byte array
+    for (dictKinds <- Seq(true, false); dictTexts <- Seq(true, false);
+         offHeap <- Seq(false, true)) {
+      val got = batchClean(new SpanBatch(fc), docs, dictKinds, dictTexts, offHeap = offHeap)
       docs.zip(got).foreach { case (d, (view, arrays)) =>
-        assert(view == arrays, s"kinds dict $dictKinds, texts dict $dictTexts: $d")
+        assert(view == arrays, s"kinds dict $dictKinds, texts dict $dictTexts, " +
+          s"off heap $offHeap: $d")
       }
       assert(got.count(_._1) > 10, "too few clean docs to compare")
     }
@@ -207,19 +217,22 @@ class FastCheckSpec extends AnyFunSuite {
       Seq(ldr, Span("008", null, null, 1), base(2)) -> false,
       Seq(ldr.copy(text = null), ctl, base(2)) -> false,
       Seq(ldr, ctl, base(2), Span("910", null, null, 3)) -> true)
-    for (dictKinds <- Seq(true, false); dictTexts <- Seq(true, false)) {
-      val got = batchClean(new SpanBatch(fc), docs.map(_._1), dictKinds, dictTexts)
+    for (dictKinds <- Seq(true, false); dictTexts <- Seq(true, false);
+         offHeap <- Seq(false, true)) {
+      val got = batchClean(new SpanBatch(fc), docs.map(_._1), dictKinds, dictTexts,
+        offHeap = offHeap)
       docs.zip(got).foreach { case ((d, want), (view, arrays)) =>
         assert(arrays == want, s"ArrayData clean for $d")
         if (want) assert(MarcValidator.validate(d, rules).isEmpty, s"full path for $d")
-        assert(view == want, s"kinds dict $dictKinds, texts dict $dictTexts: $d")
+        assert(view == want, s"kinds dict $dictKinds, texts dict $dictTexts, " +
+          s"off heap $offHeap: $d")
       }
     }
   }
 
   test("batch view: a second batch with other dictionaries reads no stale memo entry") {
     // the second batch numbers the same strings in reverse, so an entry kept
-    // from the first batch gives a span another string's code or verdict
+    // from the first batch gives a span another kind's code
     val docs = FastCheckSpec.adversarial ++ (0L until 30L).map(Synth.doc(_).spans)
     val view = new SpanBatch(fc)
     Seq(false, true, false).foreach { reverse =>
