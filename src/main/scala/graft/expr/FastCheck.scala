@@ -1,48 +1,43 @@
 package graft.expr
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.rules.RuleSet
+import graft.schema.{Span, Violation}
 
-/** Allocation-light clean-doc detector: returns true only when a document
-  * provably has ZERO violations, operating byte-wise on UTF8String without
-  * materializing java Strings. Any ambiguity (multi-byte indicator chars,
-  * non-digit tags with rules, malformed shapes) returns false and the full
-  * [[MarcValidator]] path runs — so the fast path can only ever agree with
-  * the reference semantics, never diverge (equivalence is property-tested
-  * against the full path in FastCheckSpec).
+/** The one walk of the MARC21 rule surface over a doc's spans: the leader
+  * check, the record checks (one 1XX, required and non-repeatable tags)
+  * and the dispatch of each span's field checks, in two modes:
+  *   - [[clean]] is true only when a doc provably has ZERO violations. It
+  *     reads span codes and UTF-8 bytes without making a Java string and
+  *     returns false at the first check that might fail (any ambiguity,
+  *     such as a multi-byte indicator char, fails it);
+  *   - [[violations]] renders every violation in [[MarcValidator]]'s order:
+  *     the leader and record checks from the same codes and tag bitsets,
+  *     and [[MarcValidator.checkField]] for a span only when its code is
+  *     `Reject`, its text fails [[spanOk]], or it has its own table. This
+  *     rests on a per-span contract (checked in FastCheckSpec): a span whose
+  *     text passes [[spanOk]] gets no field violation.
   *
-  * Per span the work is split in three: [[kindCode]] turns the kind into a
-  * tag number or a negative class, [[needsText]] says from a table built
-  * here whether that code's rules read the text at all (001/003/005, tags
-  * with no indicator, subfield or length rule such as 910, and media spans
-  * do not), and [[spanOk]] checks the text under the code. One loop,
-  * [[clean]], reads a doc through a [[FastCheck.Spans]] accessor and keeps
-  * the record-level checks (one 1XX, required and non-repeatable tags).
+  * Per span, [[kindCode]] turns the kind into a code (a tag number, a code
+  * past 999 for a rule key that is not three digits, or a negative class),
+  * [[needsText]] says whether that code's rules read the text at all
+  * (001/003/005, 910 and media do not), and [[spanOk]] checks the text. A
+  * [[FastCheck.Spans]] gives the walk a doc: the `spans.kind`/`spans.text`
+  * `ArrayData` pair ([[spans]]), which keeps the scan's nested-schema
+  * pruning, or `graftbridge.SpanBatch`, which codes each kind dictionary
+  * entry of a parquet batch once. Why: violations are rare in healthy
+  * corpora, and in a failing doc most spans pass; [[clean]] allocates two
+  * tag bitsets (plus, on `ArrayData`, its accessor and a UTF8String per
+  * field read), and [[violations]] decodes only the spans it renders.
   *
-  * Input shapes. The parallel (spans.kind, spans.text) string arrays rather
-  * than the array-of-struct column: feeding the extracted field arrays keeps
-  * Catalyst's nested-schema pruning (the parquet scan reads only the kind and
-  * text leaf columns) without `arrays_zip`'s per-span row materialization.
-  * Two accessors reach the loop:
-  *   - an `ArrayData` pair, `clean(kinds, texts)`: Tungsten arrays from the
-  *     codegen'd projection, generic arrays, or `ColumnarArray` views. It
-  *     parses each span's kind and reads the text a rule needs, one
-  *     `getUTF8String` per field read;
-  *   - `graftbridge.SpanBatch`, `graftbridge.ValidateScanExec`'s view of a
-  *     parquet batch's kind and text vectors, which codes each kind
-  *     dictionary entry once per batch.
-  *
-  * Why: violations are rare in healthy corpora, so the hot loop is "prove
-  * clean". The full path allocates ~30 objects/doc (spans, Strings,
-  * counters); at 32 cores that allocation rate becomes the scaling limiter.
-  * Per call this path allocates two 16-long bitsets, plus, on the
-  * `ArrayData` form, its accessor and a UTF8String wrapper per field read.
-  * Over a batch view it makes a UTF8String per kind dictionary entry, per
-  * plain-encoded kind and per text a rule reads, except that an on-heap
-  * plain-encoded text is checked in place.
+  * Field checks resolve against `fieldRules` (the context scope when there
+  * is one), record checks against `recordRules` (validators.py:52-55,
+  * 221-239).
   */
 final class FastCheck(fieldRules: RuleSet, recordRules: RuleSet)
     extends Serializable {
@@ -51,139 +46,194 @@ final class FastCheck(fieldRules: RuleSet, recordRules: RuleSet)
   def this(rules: RuleSet) = this(rules, rules)
 
   // ---- plan-time precomputation (all per-tag lookups become array reads) --
-  // field checks (length/indicator/subfield) resolve against fieldRules —
-  // the context scope when provided; record checks (required/non-repeatable)
-  // resolve against recordRules, mirroring MarcValidator's scope split
-  private val hasNonNumericRuleKeys: Boolean =
-    (fieldRules.entries.iterator ++ recordRules.entries.iterator)
-      .exists { case (t, _) => t.length != 3 || !t.forall(_.isDigit) }
+  // rule keys that are not three digits get the codes past 999, in order
+  private val extraTags: Array[String] =
+    (recordRules.entries ++ fieldRules.entries).map(_._1).filterNot(isTagNumber).distinct.toArray
+  private val numCodes = 1000 + extraTags.length
+  private val words = (numCodes + 63) >> 6
 
-  private val LenNone = 0; private val LenFixed = 1; private val LenMaterial = 2
+  // control tags 001-009: the lengths a rule accepts, null for no rule; one
+  // list for a fixed rule, one per ASCII first char for a material one (007)
+  private val ctlLen = new Array[Array[Array[Int]]](10)
+  // data tags: indicator and subfield rules
+  private val ind1Ok = new Array[Array[Boolean]](numCodes) // null = no check
+  private val ind2Ok = new Array[Array[Boolean]](numCodes)
+  private val sfCheck = new Array[Boolean](numCodes) // subfield rules present
+  private val sfValidEnabled = new Array[Boolean](numCodes) // valid list non-empty
+  private val sfValidLo = new Array[Long](numCodes); private val sfValidHi = new Array[Long](numCodes)
+  private val sfNonRepLo = new Array[Long](numCodes); private val sfNonRepHi = new Array[Long](numCodes)
 
-  private val lenKind = new Array[Byte](1000)
-  private val fixedOk = new Array[Array[Int]](1000)
-  private val materialOk = new Array[Array[Array[Int]]](1000) // [tag][firstChar<128][oks]
-  private val ind1Ok = new Array[Array[Boolean]](1000) // null = no check
-  private val ind2Ok = new Array[Array[Boolean]](1000)
-  private val sfCheck = new Array[Boolean](1000) // subfield rules present
-  private val sfValidEnabled = new Array[Boolean](1000) // valid list non-empty
-  private val sfValidLo = new Array[Long](1000); private val sfValidHi = new Array[Long](1000)
-  private val sfNonRepLo = new Array[Long](1000); private val sfNonRepHi = new Array[Long](1000)
-  private val nonRepeatableNums: Array[Int] = {
-    val b = Array.newBuilder[Int]
-    recordRules.entries.foreach { case (t, r) =>
-      if (!r.repeatable && t.length == 3 && t.forall(_.isDigit)) b += t.toInt
-    }
-    b.result()
-  }
-  private val requiredNums: Array[Int] =
-    recordRules.requiredTags.filter(t => t.length == 3 && t.forall(_.isDigit))
-      .map(_.toInt).toArray
-
-  fieldRules.entries.foreach { case (t, r) =>
-    if (t.length == 3 && t.forall(_.isDigit)) {
-      val n = t.toInt
-      r.length match {
-        case None => lenKind(n) = LenNone.toByte
-        case Some(RuleSet.FixedLen(spec)) =>
-          lenKind(n) = LenFixed.toByte; fixedOk(n) = spec.ok.toArray
+  locally {
+    // one array per distinct indicator domain, shared by the tags that have it
+    val domains = scala.collection.mutable.HashMap.empty[Seq[String], Array[Boolean]]
+    fieldRules.byTag.foreach { case (t, r) =>
+      val n = tagCode(t)
+      if (n > 0 && n < 10) ctlLen(n) = r.length match {
+        case None => null
+        case Some(RuleSet.FixedLen(spec)) => Array(spec.ok.toArray)
         case Some(RuleSet.MaterialLen(byChar)) =>
-          lenKind(n) = LenMaterial.toByte
           val m = new Array[Array[Int]](128)
           byChar.foreach { case (c, spec) =>
             if (c.length == 1 && c.charAt(0) < 128) m(c.charAt(0)) = spec.ok.toArray
           }
-          materialOk(n) = m
-      }
-      def dom(d: Option[Seq[String]]): Array[Boolean] = d.map { vs =>
-        val a = new Array[Boolean](128)
-        vs.foreach { v =>
-          if (v.isEmpty) a(' ') = true // "" and " " co-occur in every domain; the
-          else if (v.charAt(0) < 128) a(v.charAt(0)) = true // encoder maps "" to ' '
+          m
+      } else if (n >= 10) {
+        // an indicator is one char, so only a one-char value can match it
+        def dom(d: Option[Seq[String]]): Array[Boolean] = d.map(vs =>
+          domains.getOrElseUpdate(vs, {
+            val a = new Array[Boolean](128)
+            vs.foreach(v => if (v.length == 1 && v.charAt(0) < 128) a(v.charAt(0)) = true)
+            a
+          })).orNull
+        ind1Ok(n) = dom(r.ind1); ind2Ok(n) = dom(r.ind2)
+        def bits(codes: String, lo: Array[Long], hi: Array[Long]): Unit = codes.foreach { c =>
+          if (c < 64) lo(n) |= 1L << c else if (c < 128) hi(n) |= 1L << (c - 64)
         }
-        a
-      }.orNull
-      ind1Ok(n) = dom(r.ind1); ind2Ok(n) = dom(r.ind2)
-      r.subfields.foreach { sf =>
-        sfCheck(n) = true
-        sfValidEnabled(n) = sf.valid.nonEmpty
-        sf.valid.foreach { c =>
-          if (c < 64) sfValidLo(n) |= 1L << c
-          else if (c < 128) sfValidHi(n) |= 1L << (c - 64)
-        }
-        sf.nonRepeatable.foreach { c =>
-          if (c < 64) sfNonRepLo(n) |= 1L << c
-          else if (c < 128) sfNonRepHi(n) |= 1L << (c - 64)
+        r.subfields.foreach { sf =>
+          sfCheck(n) = true
+          sfValidEnabled(n) = sf.valid.nonEmpty
+          bits(sf.valid, sfValidLo, sfValidHi)
+          bits(sf.nonRepeatable, sfNonRepLo, sfNonRepHi)
         }
       }
     }
   }
 
+  // record checks, in the order they render: required tags in rule order,
+  // non-repeatable ones in tag order; the 1XX count is startsWith("1")
+  private val requiredTags: Array[String] = recordRules.requiredTags.toArray
+  private val requiredCodes: Array[Int] = requiredTags.map(tagCode)
+  private val nonRepeatableTags: Array[String] = recordRules.nonRepeatableTags.toArray.sorted
+  private val nonRepeatableCodes: Array[Int] = nonRepeatableTags.map(tagCode)
+  private val oneXX: Array[Boolean] = Array.tabulate(numCodes)(c =>
+    if (c < 1000) c >= 100 && c < 200 else extraTags(c - 1000).startsWith("1"))
+
   // whether a code's rules read the span's text, indexed by code - Reject
-  private val textNeeded: Array[Boolean] = {
-    val a = new Array[Boolean](1000 - Reject)
-    a(Leader - Reject) = true
-    var num = 1
-    while (num < 1000) {
-      a(num - Reject) =
-        if (num < 10) lenKind(num) != LenNone
-        else ind1Ok(num) != null || ind2Ok(num) != null || sfCheck(num)
-      num += 1
-    }
-    a
+  private val textNeeded: Array[Boolean] = Array.tabulate(numCodes - Reject) { j =>
+    val code = j + Reject
+    if (code <= 0) code == Leader
+    else if (code < 10) ctlLen(code) != null
+    else ind1Ok(code) != null || ind2Ok(code) != null || sfCheck(code)
   }
 
   /** True iff the doc provably has zero violations, over the parallel
     * (kind, text) arrays of one doc's spans.
     */
-  def clean(kinds: ArrayData, texts: ArrayData): Boolean =
-    texts.numElements() == kinds.numElements() && clean(new ArraySpans(this, kinds, texts))
+  def clean(kinds: ArrayData, texts: ArrayData): Boolean = clean(spans(kinds, texts))
 
   /** True iff the doc `spans` reads provably has zero violations. */
-  def clean(spans: Spans): Boolean = {
-    if (hasNonNumericRuleKeys) return false
-    val n = spans.size
-    if (n == 0) return false
-    // tag-occurrence bitsets (1000 bits): seen + seen-twice
-    val seen = new Array[Long](16)
-    val dup = new Array[Long](16)
-    var main1xx = 0
+  def clean(spans: Spans): Boolean = walk(spans, null)
 
-    var i = 0
+  /** Every violation of the doc `spans` reads. A span whose `perSpan(i)`
+    * is defined gets its field checks against that table ([[FastCheck.NoSpanTables]]
+    * for none).
+    */
+  def violations(spans: Spans, perSpan: Int => Option[RuleSet]): Seq[Violation] = {
+    val render = new Render(spans, perSpan)
+    walk(spans, render)
+    render.out.toSeq
+  }
+
+  /** One doc's (kind, text) arrays; a span past a shorter texts array has no text. */
+  def spans(kinds: ArrayData, texts: ArrayData): Spans = new ArraySpans(this, kinds, texts)
+
+  /** With no `render`, false at the first check that might fail, else
+    * true; with one, every check, rendering what fails.
+    */
+  private def walk(spans: Spans, render: Render): Boolean = {
+    val n = spans.size
+    val hasLeader = n > 0 && spans.code(0) == Leader
+    if (!hasLeader || !spans.textOk(0, Leader)) {
+      if (render == null) return false
+      if (hasLeader) render.out ++= MarcValidator.leaderViolation(spans.text(0))
+      else render.out += MarcValidator.NoLeader
+    }
+    // tag-occurrence bitsets: seen + seen-twice
+    val seen = new Array[Long](words)
+    val dup = new Array[Long](words)
+    var main1xx = 0
+    var i = if (hasLeader) 1 else 0
     while (i < n) {
       val code = spans.code(i)
       if (code > 0) {
-        if (i == 0) return false // spans[0] must be the leader
-        val w = code >> 6; val bit = 1L << (code & 63)
-        if ((seen(w) & bit) != 0) dup(w) |= bit else seen(w) |= bit
-        if (code >= 100 && code < 200) main1xx += 1
-      } else if (code == Leader) {
-        if (i != 0) return false // "LDR" anywhere else fails the tag pattern
-      } else if (i == 0 || code == Reject) return false
-      else if (code == OtherTag1) main1xx += 1 // the 1XX count is startsWith("1")
-      if (needsText(code) && !spans.textOk(i, code)) return false
+        mark(seen, dup, code)
+        if (oneXX(code)) main1xx += 1
+        val ok = !needsText(code) || spans.textOk(i, code)
+        if (render != null) render.field(i, !ok)
+        else if (!ok) return false
+      } else if (code == Reject) {
+        if (render == null) return false
+        val kind = spans.kind(i) // a rejected kind still counts, a null one not
+        if (kind != null) {
+          val c = tagCode(kind)
+          if (c >= 0) mark(seen, dup, c)
+          if (kind.startsWith("1")) main1xx += 1
+        }
+        render.field(i, failed = true)
+      } else if (code == OtherTag1 || code == OtherTag) {
+        if (code == OtherTag1) main1xx += 1
+        if (render != null) render.field(i, failed = false)
+      } else if (code == Leader && render == null) return false // renders nothing, not proved
       i += 1
     }
+    if (render != null) return render.record(seen, dup, main1xx)
     if (main1xx > 1) return false
     var r = 0
-    while (r < requiredNums.length) {
-      val num = requiredNums(r)
-      if ((seen(num >> 6) & (1L << (num & 63))) == 0) return false
-      r += 1
-    }
-    var k = 0
-    while (k < nonRepeatableNums.length) {
-      val num = nonRepeatableNums(k)
-      if ((dup(num >> 6) & (1L << (num & 63))) != 0) return false
-      k += 1
-    }
+    while (r < requiredCodes.length) { if (!has(seen, requiredCodes(r))) return false; r += 1 }
+    r = 0
+    while (r < nonRepeatableCodes.length) { if (has(dup, nonRepeatableCodes(r))) return false; r += 1 }
     true
   }
 
-  /** The code of a span kind: its tag number for "001"–"999", else one of
-    * the negative classes of [[FastCheck]]'s companion. Non-3-digit kinds
-    * match no rule (the table is numeric-only), but the tag-pattern search
-    * and the startsWith("1") 1XX count still apply to them.
+  private def mark(seen: Array[Long], dup: Array[Long], code: Int): Unit = {
+    val w = code >> 6; val bit = 1L << (code & 63)
+    if ((seen(w) & bit) != 0) dup(w) |= bit else seen(w) |= bit
+  }
+
+  private def has(bits: Array[Long], code: Int): Boolean =
+    (bits(code >> 6) & (1L << (code & 63))) != 0
+
+  /** One doc's violations as [[walk]] finds them: the leader's, then the
+    * record checks' after the walk, then each field's in span order.
+    */
+  private final class Render(spans: Spans, perSpan: Int => Option[RuleSet]) {
+    val out = ArrayBuffer.empty[Violation]
+    private val fields = ArrayBuffer.empty[Violation]
+
+    /** Span i's field checks, if the walk found it `failed` or it has its own table. */
+    def field(i: Int, failed: Boolean): Unit = {
+      val own = perSpan(i)
+      if (failed || own.isDefined) MarcValidator.checkField(
+        Span(spans.kind(i), spans.text(i), null, i), own.getOrElse(fieldRules), fields)
+    }
+
+    /** The record checks from the walk's bitsets and 1XX count, then the
+      * field violations; true iff there are none.
+      */
+    def record(seen: Array[Long], dup: Array[Long], main1xx: Int): Boolean = {
+      for (k <- nonRepeatableCodes.indices if has(dup, nonRepeatableCodes(k)))
+        out += MarcValidator.nonRepeatableField(nonRepeatableTags(k))
+      for (k <- requiredCodes.indices if !has(seen, requiredCodes(k)))
+        out += MarcValidator.missingRequiredField(requiredTags(k))
+      if (main1xx > 1) { // Counter.elements(): by first occurrence, repeated by count
+        val mains = (0 until spans.size).map(spans.kind).filter(k => k != null && k.startsWith("1"))
+        out += MarcValidator.multiple1xx(mains.distinct.flatMap(t => mains.filter(_ == t)))
+      }
+      out ++= fields
+      out.isEmpty
+    }
+  }
+
+  /** A rule key's or kind's code: its number when it is three digits, its
+    * code past 999 when it is another rule key, else -1.
+    */
+  private def tagCode(tag: String): Int =
+    if (isTagNumber(tag)) tag.toInt
+    else { val j = extraTags.indexOf(tag); if (j < 0) -1 else 1000 + j }
+
+  /** The code of a span kind: its tag number for "001"–"999", its code
+    * past 999 when it is a rule key that is not three digits, else one of
+    * the negative classes of [[FastCheck]]'s companion.
     */
   def kindCode(kind: UTF8String): Int = {
     val kb = kind.numBytes()
@@ -194,9 +244,12 @@ final class FastCheck(fieldRules: RuleSet, recordRules: RuleSet)
     } else if (kb == 3 && b(0) == 'L' && b(1) == 'D' && b(2) == 'R') Leader
     else if (kb == 5 && b(0) == 'm' && b(1) == 'e' && b(2) == 'd' && b(3) == 'i' &&
       b(4) == 'a') Media // skipped by MARC checks
-    else if (kb == 0 || !tagPatternSearch(kind)) Reject
-    else if (b(0) == '1') OtherTag1
-    else OtherTag
+    // any other "00" kind is a control tag outside 001-009: a literal_error
+    else if (kb < 3 || b(0) == '0' && b(1) == '0' || !tagPatternSearch(kind)) Reject
+    else {
+      val extra = if (extraTags.isEmpty) -1 else tagCode(kind.toString)
+      if (extra >= 0) extra else if (b(0) == '1') OtherTag1 else OtherTag
+    }
   }
 
   /** Whether [[spanOk]] reads the text of a span with this code; when it
@@ -258,19 +311,15 @@ final class FastCheck(fieldRules: RuleSet, recordRules: RuleSet)
     false
   }
 
-  private def checkControl(num: Int, base: AnyRef, offset: Long, nb: Int): Boolean =
-    if (lenKind(num) == LenNone) true // no length rule (001/003/005 or unknown 002/004/009)
-    else {
-      val chars = numChars(base, offset, nb)
-      if (lenKind(num) == LenFixed) contains(fixedOk(num), chars)
-      else { // 007 material dispatch on first char
-        if (nb == 0) return false
-        val c0 = Platform.getByte(base, offset)
-        if (c0 < 0) return false // multi-byte first char: slow path decides
-        val oks = materialOk(num)(c0)
-        oks != null && contains(oks, chars)
-      }
+  private def checkControl(num: Int, base: AnyRef, offset: Long, nb: Int): Boolean = {
+    val oks = ctlLen(num)
+    if (oks == null) true // no length rule (001/003/005 or unknown 002/004/009)
+    else if (oks.length == 1) contains(oks(0), numChars(base, offset, nb))
+    else { // 007 material dispatch on the first char; a multi-byte one fails
+      val c0 = if (nb == 0) -1 else Platform.getByte(base, offset)
+      c0 >= 0 && oks(c0) != null && contains(oks(c0), numChars(base, offset, nb))
     }
+  }
 
   /** The codepoint count of a text (Python len()): its byte count when
     * every byte is ASCII, tested 8 bytes at a time, else
@@ -335,7 +384,7 @@ final class FastCheck(fieldRules: RuleSet, recordRules: RuleSet)
 }
 
 object FastCheck {
-  // kindCode's classes of a kind that is not a tag "001"–"999"
+  // kindCode's classes of a kind that is not a tag "001"–"999" or a rule key
   /** "LDR": the leader, valid only as the first span. */
   final val Leader = -1
   /** "media": an asset span, skipped by the MARC checks. */
@@ -344,12 +393,15 @@ object FastCheck {
   final val OtherTag1 = -3
   /** Any other kind that passes the tag pattern. */
   final val OtherTag = -4
-  /** "000", an empty or null kind, or one the tag pattern rejects. */
+  /** "000", a "00" kind of another length, an empty or null kind, or one
+    * the tag pattern rejects.
+    */
   final val Reject = -5
 
-  /** One doc's spans as [[FastCheck.clean]] reads them: span `i`'s kind
-    * code, and whether its text passes the checks of that code.
-    */
+  private def isTagNumber(t: String): Boolean =
+    t.length == 3 && t.forall(c => c >= '0' && c <= '9')
+
+  /** One doc's spans as the walk reads them. */
   abstract class Spans {
     def size: Int
     /** [[FastCheck.kindCode]] of span `i`'s kind, [[Reject]] when null. */
@@ -358,15 +410,23 @@ object FastCheck {
       * one that [[FastCheck.needsText]].
       */
     def textOk(i: Int, code: Int): Boolean
+    /** Span `i`'s kind and text, decoded for a violation; null when null. */
+    def kind(i: Int): String
+    def text(i: Int): String
   }
 
-  /** A doc's (kinds, texts) arrays of the same length. */
+  /** A doc's (kinds, texts) arrays; texts may be the shorter. */
   private final class ArraySpans(fc: FastCheck, kinds: ArrayData, texts: ArrayData)
       extends Spans {
     def size: Int = kinds.numElements()
-    def code(i: Int): Int =
-      if (kinds.isNullAt(i)) Reject else fc.kindCode(kinds.getUTF8String(i))
-    def textOk(i: Int, code: Int): Boolean =
-      fc.spanOk(code, if (texts.isNullAt(i)) null else texts.getUTF8String(i))
+    def code(i: Int): Int = if (kinds.isNullAt(i)) Reject else fc.kindCode(kinds.getUTF8String(i))
+    def textOk(i: Int, code: Int): Boolean = fc.spanOk(code, utf8(texts, i))
+    def kind(i: Int): String = Option(utf8(kinds, i)).map(_.toString).orNull
+    def text(i: Int): String = Option(utf8(texts, i)).map(_.toString).orNull
+    private def utf8(a: ArrayData, i: Int): UTF8String =
+      if (i >= a.numElements() || a.isNullAt(i)) null else a.getUTF8String(i)
   }
+
+  /** [[violations]]' `perSpan` when no span has its own table. */
+  val NoSpanTables: Int => Option[RuleSet] = _ => None
 }

@@ -2,15 +2,20 @@ package graft.expr
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.rules.RuleSet
 import graft.schema.{Span, Violation}
 
-/** The per-document MARC21 rule kernel: one pass over a doc's spans producing
-  * the full violation list, re-expressing the reference's check surface
-  * (leader shape /root/reference/pydantic_marc/models.py:67-75; record-level
-  * checks validators.py:200-244; per-field checks validators.py:75-149,247-297)
-  * with the engine's documented edge policies for the reference's crash paths
-  * (SURVEY.md §1.5).
+/** The MARC21 rule surface's messages and string checks, re-expressing the
+  * reference's check surface (leader shape pydantic_marc/models.py:67-75;
+  * record-level checks validators.py:200-244; per-field checks
+  * validators.py:75-149,247-297)
+  * with the engine's documented edge policies for the reference's crash
+  * paths (SURVEY.md §1.5). [[FastCheck]]'s walk decides which checks fail
+  * and calls this object to render them; [[validate]] runs that walk over
+  * a `Seq[Span]`.
   *
   * Violations are data, not exceptions; order is canonical-deterministic:
   * leader, then record-level (non-repeatable by tag, required in rule order,
@@ -44,7 +49,7 @@ object MarcValidator extends Serializable {
   def pyList(xs: Seq[String]): String = xs.map(pyRepr).mkString("[", ", ", "]")
 
   def validate(spans: Seq[Span], rules: RuleSet): Seq[Violation] =
-    validate(spans, rules, rules, _ => None)
+    validate(spans, rules, rules, FastCheck.NoSpanTables)
 
   /** Three-scope rule resolution, mirroring the reference's
     * `check_marc_rules` (validators.py:27-72):
@@ -62,83 +67,69 @@ object MarcValidator extends Serializable {
     */
   def validate(spans: Seq[Span], recordRules: RuleSet, fieldDefault: RuleSet,
       perSpan: Int => Option[RuleSet]): Seq[Violation] = {
-    val rules = recordRules
-    val out = mutable.ArrayBuffer.empty[Violation]
-
-    // --- leader (spans[0] with kind "LDR") -------------------------------
-    val ldr = spans.headOption.filter(_.kind == "LDR")
-    ldr match {
-      case None =>
-        out += Violation("string_type", Seq("leader"), null, null,
-          "Input should be a valid string", null, Map.empty)
-      case Some(s) =>
-        val t = if (s.text == null) "" else s.text
-        val tLen = t.codePointCount(0, t.length) // Python len() semantics
-        if (tLen < 24)
-          out += Violation("too_short", Seq("leader"), null, null,
-            s"Value should have at least 24 items after validation, not $tLen",
-            t, Map("min_length" -> "24", "actual_length" -> tLen.toString))
-        else if (tLen > 24)
-          out += Violation("too_long", Seq("leader"), null, null,
-            s"Value should have at most 24 items after validation, not $tLen",
-            t, Map("max_length" -> "24", "actual_length" -> tLen.toString))
-        else if (leaderRegex.findFirstIn(t).isEmpty)
-          out += Violation("string_pattern_mismatch", Seq("leader"), null, null,
-            s"String should match pattern '$LeaderPattern'",
-            t, Map("pattern" -> LeaderPattern))
+    def column(f: Span => String) =
+      new GenericArrayData(spans.map(s => UTF8String.fromString(f(s))).toArray[Any])
+    val fc = lastCoded match {
+      case (f, r, c) if (f eq fieldDefault) && (r eq recordRules) => c
+      case _ =>
+        val c = new FastCheck(fieldDefault, recordRules)
+        lastCoded = (fieldDefault, recordRules, c)
+        c
     }
-
-    // --- MARC fields = every span that is neither leader nor media --------
-    val fields = spans.filter(s => s.kind != "LDR" && s.kind != "media")
-    // a null kind (a null span element) cannot be non-repeatable, required
-    // or 1XX, so the record-level checks skip it; validateData still gives
-    // the span its pattern violation
-    val tags = fields.map(_.kind).filter(_ != null)
-
-    // counts + first-occurrence key order (the reference's Counter semantics)
-    val counts = mutable.LinkedHashMap.empty[String, Int]
-    tags.foreach(t => counts.update(t, counts.getOrElse(t, 0) + 1))
-
-    // record-level: non-repeatable tags (canonical order: tag sort; the
-    // reference iterates a set — nondeterministic, SURVEY.md §1.5.8)
-    for (tag <- counts.keys.toSeq.sorted
-         if counts(tag) > 1 && rules.nonRepeatableTags.contains(tag))
-      out += Violation("non_repeatable_field", Seq("fields", tag), tag, null,
-        s"$tag: Has been marked as a non-repeating field.", tag,
-        Map("input" -> tag))
-
-    // record-level: required tags, in rule-table order (008 before 245)
-    for (tag <- rules.requiredTags if !counts.contains(tag))
-      out += Violation("missing_required_field", Seq("fields", tag), tag, null,
-        s"One $tag field must be present in a MARC21 record.", tag,
-        Map("input" -> tag))
-
-    // record-level: 1XX exclusivity — Counter.elements() order: first
-    // occurrence of each distinct tag, repeated by count; unknown tags count
-    val mains = counts.iterator
-      .filter(_._1.startsWith("1"))
-      .flatMap { case (t, n) => Iterator.fill(n)(t) }
-      .toSeq
-    if (mains.length > 1) {
-      val rendered = pyList(mains)
-      out += Violation("multiple_1xx_fields", Seq("fields") ++ mains, null, null,
-        s"1XX: Only one 1XX tag is allowed. Record contains: $rendered",
-        rendered, Map("input" -> rendered))
-    }
-
-    // --- per-field checks, in span order ----------------------------------
-    var i = 0
-    while (i < spans.length) {
-      val f = spans(i)
-      if (f.kind != "LDR" && f.kind != "media") {
-        val tbl = perSpan(i).getOrElse(fieldDefault)
-        if (f.kind != null && f.kind.startsWith("00")) validateControl(f, tbl, out)
-        else validateData(f, tbl, out)
-      }
-      i += 1
-    }
-    out.toSeq
+    fc.violations(fc.spans(column(_.kind), column(_.text)), perSpan)
   }
+
+  // the coded form of the last pair of tables [[validate]] was called with:
+  // callers repeat one table instance across docs, so it is matched by `eq`
+  @volatile private var lastCoded: (RuleSet, RuleSet, FastCheck) = (null, null, null)
+
+  /** The leader check's violation when span 0 is not an "LDR". */
+  val NoLeader: Violation = Violation("string_type", Seq("leader"), null, null,
+    "Input should be a valid string", null, Map.empty)
+
+  /** The leader check of an "LDR" span 0's text (null reads as ""). */
+  def leaderViolation(text: String): Option[Violation] = {
+    val t = if (text == null) "" else text
+    val tLen = t.codePointCount(0, t.length) // Python len() semantics
+    if (tLen < 24)
+      Some(Violation("too_short", Seq("leader"), null, null,
+        s"Value should have at least 24 items after validation, not $tLen",
+        t, Map("min_length" -> "24", "actual_length" -> tLen.toString)))
+    else if (tLen > 24)
+      Some(Violation("too_long", Seq("leader"), null, null,
+        s"Value should have at most 24 items after validation, not $tLen",
+        t, Map("max_length" -> "24", "actual_length" -> tLen.toString)))
+    else if (leaderRegex.findFirstIn(t).isEmpty)
+      Some(Violation("string_pattern_mismatch", Seq("leader"), null, null,
+        s"String should match pattern '$LeaderPattern'",
+        t, Map("pattern" -> LeaderPattern)))
+    else None
+  }
+
+  // record-level messages, rendered non-repeatable by tag (the reference
+  // iterates a set, SURVEY.md §1.5.8), required in rule order, then 1XX
+  def nonRepeatableField(tag: String): Violation =
+    Violation("non_repeatable_field", Seq("fields", tag), tag, null,
+      s"$tag: Has been marked as a non-repeating field.", tag, Map("input" -> tag))
+
+  def missingRequiredField(tag: String): Violation =
+    Violation("missing_required_field", Seq("fields", tag), tag, null,
+      s"One $tag field must be present in a MARC21 record.", tag, Map("input" -> tag))
+
+  def multiple1xx(mains: Seq[String]): Violation = {
+    val rendered = pyList(mains)
+    Violation("multiple_1xx_fields", Seq("fields") ++ mains, null, null,
+      s"1XX: Only one 1XX tag is allowed. Record contains: $rendered",
+      rendered, Map("input" -> rendered))
+  }
+
+  /** The record-scope field checks of span `f`, one that is neither leader
+    * nor media, against `rules`: a "00" kind is a control field, any other
+    * a data field.
+    */
+  def checkField(f: Span, rules: RuleSet, out: mutable.ArrayBuffer[Violation]): Unit =
+    if (f.kind != null && f.kind.startsWith("00")) validateControl(f, rules, out)
+    else validateData(f, rules, out)
 
   /** Standalone single-field validation, with the reference's standalone loc
     * convention: validating a `ControlField`/`DataField` directly yields
@@ -151,12 +142,10 @@ object MarcValidator extends Serializable {
     */
   def validateField(f: Span, rules: RuleSet = RuleSet.default): Seq[Violation] = {
     val out = mutable.ArrayBuffer.empty[Violation]
-    if (f.kind != null && f.kind.startsWith("00")) {
-      if (f.text == null) {
-        out += Violation("string_type", Seq("data"), f.kind, null,
-          "Input should be a valid string", null, Map.empty)
-      } else validateControl(f, rules, out)
-    } else validateData(f, rules, out)
+    if (f.kind != null && f.kind.startsWith("00") && f.text == null)
+      out += Violation("string_type", Seq("data"), f.kind, null,
+        "Input should be a valid string", null, Map.empty)
+    else checkField(f, rules, out)
     out.toSeq.map { v =>
       val standaloneLoc = v.rule_id match {
         case "control_field_length_invalid"           => Seq("data", v.tag)

@@ -1,64 +1,58 @@
 package graft.expr
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.rules.{RuleJson, RuleSet}
-import graft.schema.{DocSchema, Span, Violation}
+import graft.schema.{DocSchema, Violation}
 
-/** Row-at-a-time bridge between Tungsten rows and the pure Scala kernel.
+/** Row-at-a-time bridge between Tungsten rows and the [[FastCheck]] walk.
   * One instance per plan (rules are plan constants — the reference resolves
   * rules by dict lookup per field, /root/reference/pydantic_marc/validators.py:59;
   * here the whole table rides along as a codegen reference object, so the
   * per-row pass is a single fused function call with zero lookups or joins).
+  * [[validate]] proves a doc clean without rendering; only a doc it cannot
+  * prove is walked again with rendering.
   *
   * Scope resolution (reference check_marc_rules, validators.py:27-72):
-  *   - `rules`: plan-constant record-scope table (drives record-level AND,
-  *     absent a context, field-level checks);
-  *   - `contextRules`: plan-constant context scope — overrides the table
-  *     FIELD checks resolve against, but never the record-level checks
-  *     (validators.py:221-239 reads the record scope unconditionally);
-  *   - per-ROW `recordRulesJson` (string column): data-driven record scope,
-  *     replacing `rules` for that row entirely;
-  *   - per-SPAN `spanRulesJson` (array<string> column): data-driven field
-  *     scope, winning over everything for the spans where it is non-null.
-  *
-  * Rows with any data-driven override take the full-validation path; the
-  * allocation-free fast path continues to serve override-free rows, with
-  * its field/record tables split the same way (context vs record).
+  * `rules` is the record scope; `contextRules`, when set, the scope FIELD
+  * checks resolve against, never the record checks (validators.py:221-239);
+  * a per-ROW `recordRulesJson` replaces `rules` for that row, whose walk
+  * uses that table's coded form, built once per distinct JSON; a per-SPAN
+  * `spanRulesJson` wins for the spans where it is non-null.
   */
 final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet])
     extends Serializable {
 
   def this(rules: RuleSet) = this(rules, None)
 
-  private val fieldDefault = contextRules.getOrElse(rules)
-  val fastCheck = new FastCheck(fieldDefault, rules)
+  val fastCheck = new FastCheck(contextRules.getOrElse(rules), rules)
   /** The result of every doc FastCheck proves clean; the full path always
     * returns a fresh array, so `eq` tells the two apart.
     */
   val noViolations: ArrayData = new GenericArrayData(Array.empty[Any])
 
-  /** (kinds, texts) ArrayData pair -> violations ArrayData. The
-    * allocation-light fast path proves the common clean-doc case (FastCheck);
-    * only ambiguous or failing docs pay for the full decode + check +
-    * message rendering.
+  /** (kinds, texts) ArrayData pair -> violations ArrayData: the clean proof,
+    * then, for a doc it cannot prove, the rendering walk.
     */
   def validate(kinds: ArrayData, texts: ArrayData): ArrayData =
-    if (fastCheck.clean(kinds, texts)) noViolations else validateFull(kinds, texts)
+    if (fastCheck.clean(kinds, texts)) noViolations
+    else validateFull(fastCheck.spans(kinds, texts))
 
-  /** The full path alone, for a doc [[fastCheck]] did not prove clean: a
-    * fresh violations array, empty when the doc has none.
+  /** The rendering walk alone, for a doc [[fastCheck]] did not prove clean:
+    * a fresh violations array, empty when the doc has none.
     */
-  def validateFull(kinds: ArrayData, texts: ArrayData): ArrayData =
-    validateFull(kinds, texts, rules, fieldDefault, _ => None)
+  def validateFull(spans: FastCheck.Spans): ArrayData =
+    rows(fastCheck.violations(spans, FastCheck.NoSpanTables))
 
   /** The expression's one entry: recordJson/spanRules may be null (no
     * override), and with neither set this is [[validate]].
@@ -73,52 +67,35 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
       any
     }
     if (recordJson == null && !hasSpanRules) return validate(kinds, texts)
-    val recordTable =
-      if (recordJson == null) rules else RuleJson.parseCached(recordJson.toString)
     // context still outranks the row's record scope for FIELD checks
     // (validators.py:52-55: context wins whenever provided)
-    val fieldTable = contextRules.getOrElse(recordTable)
+    val coded = if (recordJson == null) fastCheck else recordCoded(recordJson.toString)
     val perSpan: Int => Option[RuleSet] =
-      if (!hasSpanRules) _ => None
+      if (!hasSpanRules) FastCheck.NoSpanTables
       else i =>
         if (i < spanRules.numElements() && !spanRules.isNullAt(i))
           Some(RuleJson.parseCached(spanRules.getUTF8String(i).toString))
         else None
-    validateFull(kinds, texts, recordTable, fieldTable, perSpan)
+    rows(coded.violations(coded.spans(kinds, texts), perSpan))
   }
 
-  private def validateFull(kinds: ArrayData, texts: ArrayData,
-      recordTable: RuleSet, fieldTable: RuleSet,
-      perSpan: Int => Option[RuleSet]): ArrayData = {
-    val n = kinds.numElements()
-    val nt = texts.numElements()
-    val decoded = new Array[Span](n)
-    var i = 0
-    while (i < n) {
-      decoded(i) = Span(
-        if (kinds.isNullAt(i)) null else kinds.getUTF8String(i).toString,
-        if (i >= nt || texts.isNullAt(i)) null else texts.getUTF8String(i).toString,
-        null, i)
-      i += 1
-    }
-    val vs = MarcValidator.validate(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(decoded),
-      recordTable, fieldTable, perSpan)
-    new GenericArrayData(vs.map(toRow).toArray[Any])
+  // coded forms of the row record tables, keyed by the JSON the row
+  // carries (no table is compared by value; the context is this kernel's
+  // constant), bounded like RuleJson's parse cache
+  @transient private lazy val codedByJson = new ConcurrentHashMap[String, FastCheck]()
+
+  private def recordCoded(json: String): FastCheck = {
+    val hit = codedByJson.get(json)
+    if (hit != null) return hit
+    val table = RuleJson.parseCached(json)
+    val built = new FastCheck(contextRules.getOrElse(table), table)
+    if (codedByJson.size >= RuleJson.MaxCache) codedByJson.clear()
+    codedByJson.put(json, built)
+    built
   }
 
-  private def u(s: String): UTF8String =
-    if (s == null) null else UTF8String.fromString(s)
-
-  private def toRow(v: Violation): InternalRow = {
-    val keys = new GenericArrayData(v.ctx.keys.map(k => u(k)).toArray[Any])
-    val vals = new GenericArrayData(v.ctx.values.map(x => u(x)).toArray[Any])
-    InternalRow(
-      u(v.rule_id),
-      new GenericArrayData(v.loc.map(l => u(l)).toArray[Any]),
-      u(v.tag), u(v.code), u(v.msg), u(v.input),
-      new ArrayBasedMapData(keys, vals))
-  }
+  private def rows(vs: Seq[Violation]): ArrayData = new GenericArrayData(vs.map(v =>
+    InternalRow.fromSeq(v.productIterator.map(CatalystTypeConverters.convertToCatalyst).toSeq)))
 }
 
 /** Catalyst expression `validate_marc(kinds, texts, record_rules,

@@ -101,13 +101,6 @@ object TextAnalysis {
     "fr" -> Seq(" le ", " les ", " et ", " que ", "eux", "oir"),
     "it" -> Seq(" il ", " di ", " al ", "che", "ere", " poi "))
 
-  /** Non-overlapping occurrence count of literal `g` in `text` via the
-    * replace() length delta — the cross-engine-stable counting primitive.
-    */
-  def gramCount(text: Column, g: String): Column =
-    ((length(text) - length(replace(text, lit(g), lit("")))) / lit(g.length))
-      .cast("int")
-
   /** Character-n-gram language ID: argmax over per-language profile-gram
     * occurrence totals ([[LangProfiles]]), ties to the lexicographically
     * larger code, zero signal -> "und". Upgrades the 10-marker-word

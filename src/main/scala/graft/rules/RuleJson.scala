@@ -72,7 +72,7 @@ object RuleJson {
   // Bounded decode cache: override JSONs repeat across rows; the map is
   // cleared if cardinality explodes (pathological input) rather than grown.
   private val cache = new ConcurrentHashMap[String, RuleSet]()
-  private val MaxCache = 4096
+  private[graft] val MaxCache = 4096
 
   def parseCached(json: String): RuleSet = {
     val hit = cache.get(json)

@@ -13,7 +13,6 @@ import org.apache.spark.sql.execution.datasources.{FileSourceStrategy, LogicalRe
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
-import org.apache.spark.sql.vectorized.ColumnarArray
 import org.apache.spark.unsafe.Platform
 
 import graft.expr.{FastCheck, ValidateSpans, ValidatorKernel}
@@ -93,8 +92,8 @@ object ValidateScanStrategy extends SparkStrategy {
   * tag's rules need it. This replaces a per-batch cache of decoded
   * strings: no span's kind is decoded or parsed, only each entry once, and
   * a text is read only for a rule. Only the docs FastCheck cannot prove
-  * take the full path, over `ColumnarArray` views of the raw vectors at
-  * the doc's span offset and length. Rows come out as `UnsafeRow`s with the
+  * take the full path, the rendering walk over the same view, which
+  * decodes only the spans it renders. Rows come out as `UnsafeRow`s with the
   * replaced `Project`'s output: the kernel's result in place of the call,
   * the other columns read from their vectors.
   *
@@ -148,12 +147,12 @@ case class ValidateScanExec(projectList: Seq[NamedExpression], child: SparkPlan)
             else {
               val off = spansVec.getArrayOffset(i)
               val len = spansVec.getArrayLength(i)
-              if (kernel.fastCheck.clean(view.doc(off, len))) {
+              val doc = view.doc(off, len)
+              if (kernel.fastCheck.clean(doc)) {
                 fastClean += 1
                 kernel.noViolations
               } else {
-                val r = kernel.validateFull(new ColumnarArray(kinds, off, len),
-                  new ColumnarArray(texts, off, len))
+                val r = kernel.validateFull(doc)
                 fullPath += 1
                 violations += r.numElements()
                 r
@@ -242,6 +241,12 @@ final class SpanBatch(fc: FastCheck) extends FastCheck.Spans {
       Platform.BYTE_ARRAY_OFFSET + texts.getArrayOffset(j), texts.getArrayLength(j))
     else fc.spanOk(code, texts.getUTF8String(j))
   }
+
+  override def kind(i: Int): String =
+    if (kinds.isNullAt(off + i)) null else kinds.getUTF8String(off + i).toString
+
+  override def text(i: Int): String =
+    if (texts.isNullAt(off + i)) null else texts.getUTF8String(off + i).toString
 
   /** `a` grown to hold index `i`, at least doubled. */
   private def grow(a: Array[Int], i: Int): Array[Int] =

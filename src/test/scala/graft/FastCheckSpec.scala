@@ -1,5 +1,8 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.execution.vectorized.{Dictionary, OffHeapColumnVector,
@@ -15,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.expr.{FastCheck, MarcValidator, ValidatorKernel}
 import graft.gen.{Fixtures, Synth}
 import graft.rules.RuleSet
-import graft.schema.{DocSchema, Span}
+import graft.schema.{DocSchema, Span, Violation}
 
 /** Soundness of the fast path: `clean(kinds, texts) == true` must imply the
   * full validator finds zero violations. (The converse may be false — the
@@ -50,7 +53,7 @@ class FastCheckSpec extends AnyFunSuite {
 
   private def agreeOnClean(spans: Seq[Span]): Unit = {
     val fast = cleanOf(spans)
-    val full = MarcValidator.validate(spans, rules)
+    val full = FastCheckSpec.recordPass(spans, rules, rules)
     if (fast) assert(full.isEmpty,
       s"fast path claimed clean but full path found: ${full.map(_.rule_id)} for $spans")
   }
@@ -110,7 +113,7 @@ class FastCheckSpec extends AnyFunSuite {
         val fast = fc.clean(k, t)
         assert(fast == fc.clean(kindsOf(spans), textsOf(spans)), s"fast paths disagree for $spans")
         val vs = violations(kernel.validate(k, t))
-        if (fast) assert(MarcValidator.validate(spans, rules).isEmpty,
+        if (fast) assert(FastCheckSpec.recordPass(spans, rules, rules).isEmpty,
           s"vector fast path claimed clean for $spans")
         assert(vs == violations(kernel.validate(kindsOf(spans), textsOf(spans))),
           s"kernel results differ for $spans")
@@ -123,6 +126,131 @@ class FastCheckSpec extends AnyFunSuite {
       assert(full == want, s"full path for $spans")
       assert(cleanOf(spans) == want.isEmpty, s"fast path for $spans")
     }
+  }
+
+  /** The kernel's violations of `spans` as (rule id, loc) pairs. */
+  private def rowsOf(kernel: ValidatorKernel, kinds: ArrayData,
+      texts: ArrayData): Seq[(String, Seq[String])] =
+    CatalystTypeConverters.convertToScala(kernel.validate(kinds, texts),
+      ArrayType(DocSchema.violationType)).asInstanceOf[Seq[Row]]
+      .map(r => (r.getString(0), r.getSeq[String](1)))
+
+  private def rowsOf(kernel: ValidatorKernel, spans: Seq[Span]): Seq[(String, Seq[String])] =
+    rowsOf(kernel, kindsOf(spans), textsOf(spans))
+
+  test("per-span contract: a span whose text passes spanOk gets no field violation") {
+    // the rendering walk hands a span to the field checks only when spanOk
+    // fails, so this must hold span by span, not only per doc
+    val docs = FastCheckSpec.adversarial ++ FastCheckSpec.generated :+
+      FastCheckSpec.base.updated(2, Span("245", " 0$aT", null, 2)) :+
+      FastCheckSpec.base.updated(2, Span("245", "10$aT", null, 2))
+    // a rule key that is not three digits gets a code past 999
+    val keyed = rules.withOverrides(Map("x100" -> Some(graft.rules.TagRule(true,
+      Some(Seq("1")), None, Some(RuleSet.Sf("a", "a", "")), None, required = false))))
+    var passed = 0
+    for (table <- rules +: keyed +: FastCheckSpec.contexts) {
+      val tfc = new FastCheck(table, rules)
+      for (d <- docs; sp <- d) {
+        val text = if (sp.text == null) null else UTF8String.fromString(sp.text)
+        val code = if (sp.kind == null) FastCheck.Reject
+          else tfc.kindCode(UTF8String.fromString(sp.kind))
+        if (code != FastCheck.Reject && code != FastCheck.Media && tfc.spanOk(code, text)) {
+          passed += 1
+          val out = mutable.ArrayBuffer.empty[Violation]
+          if (code == FastCheck.Leader) out ++= MarcValidator.leaderViolation(sp.text)
+          else MarcValidator.checkField(sp, table, out)
+          assert(out.isEmpty, s"spanOk passed $sp (code $code) but the field check found $out")
+        }
+      }
+    }
+    assert(passed > 10000)
+  }
+
+  test("rendering walk equals the string-keyed record pass it replaced") {
+    // the tables: the default, one keyed by non-3-digit tags, and the two
+    // context tables as the field scope
+    val keyed = rules.withOverrides(Map(
+      "1234" -> Some(graft.rules.TagRule(false, None, None, None, None, required = true)),
+      "x100" -> Some(graft.rules.TagRule(true, Some(Seq("1")), None,
+        Some(RuleSet.Sf("a", "a", "")), None, required = false))))
+    val keyedDocs = Seq(FastCheckSpec.base, FastCheckSpec.base :+ Span("1234", "  $aV", null, 3),
+      FastCheckSpec.base :+ Span("1234", "  $aV", null, 3) :+ Span("1234", "  $aW", null, 4),
+      FastCheckSpec.base :+ Span("100", "1 $aA", null, 3) :+ Span("1ab", "  $aV", null, 4) :+
+        Span("x100", "1 $aA", null, 5) :+ Span("x100", "  $aA", null, 6))
+    val docs = Fixtures.validDoc.spans +: Fixtures.invalidDoc.spans +:
+      ((0L until 90L).map(Synth.doc(_).spans) ++ FastCheckSpec.adversarial ++
+        FastCheckSpec.generated ++ keyedDocs)
+    val scopes = Seq(rules -> rules, keyed -> keyed) ++ FastCheckSpec.contexts.map(rules -> _)
+    var failing = 0
+    for ((record, field) <- scopes; d <- docs) {
+      val want = FastCheckSpec.recordPass(d, record, field)
+      assert(MarcValidator.validate(d, record, field, FastCheck.NoSpanTables) == want,
+        s"record $record field $field: $d")
+      if (want.nonEmpty) failing += 1
+    }
+    assert(failing > 1000)
+  }
+
+  test("context table: an indicator domain without a blank is not proved clean") {
+    for (ctx <- FastCheckSpec.contexts; ind1 <- Seq(" ", "1")) {
+      val doc = FastCheckSpec.base.updated(2, Span("245", ind1 + "0$aT", null, 2))
+      val got = rowsOf(new ValidatorKernel(rules, Some(ctx)), doc)
+      assert(got == Seq(("invalid_indicator", Seq("fields", "245", "ind1"))), s"$ctx: $doc")
+      assert(got == MarcValidator.validate(doc, rules, ctx, _ => None).map(v => (v.rule_id, v.loc)))
+    }
+  }
+
+  test("kernel: rule keys that are not three digits") {
+    import FastCheckSpec.base
+    val table = rules.withOverrides(Map("1234" -> Some(
+      graft.rules.TagRule(false, None, None, None, None, required = true))))
+    val kernel = new ValidatorKernel(table)
+    val k1234 = Span("1234", "  $aV", null, 3)
+    val s100 = Span("100", "1 $aA", null, 4)
+    val s1ab = Span("1ab", "  $aV", null, 5)
+    val cases = Seq(
+      base -> Seq(("missing_required_field", Seq("fields", "1234"))),
+      (base :+ k1234) -> Nil,
+      (base :+ k1234 :+ k1234) -> Seq(
+        ("non_repeatable_field", Seq("fields", "1234")),
+        ("multiple_1xx_fields", Seq("fields", "1234", "1234"))),
+      // a rejected kind still counts in the 1XX list
+      (base :+ s100 :+ s1ab) -> Seq(
+        ("missing_required_field", Seq("fields", "1234")),
+        ("multiple_1xx_fields", Seq("fields", "100", "1ab")),
+        ("string_pattern_mismatch", Seq("fields", "1ab"))),
+      (base :+ k1234 :+ s100 :+ s1ab) -> Seq(
+        ("multiple_1xx_fields", Seq("fields", "1234", "100", "1ab")),
+        ("string_pattern_mismatch", Seq("fields", "1ab"))))
+    cases.foreach { case (doc, want) =>
+      assert(rowsOf(kernel, doc) == want, s"$doc")
+      if (kernel.fastCheck.clean(kindsOf(doc), textsOf(doc))) assert(want.isEmpty, s"$doc")
+    }
+  }
+
+  test("kernel: full-path edge cases") {
+    import FastCheckSpec.{base, ldr}
+    val kernel = new ValidatorKernel(rules)
+    val media = Span("media", "", "asset-1", 3)
+    val cases = Seq(
+      // a null kind gets the pattern violation and no record count
+      (base :+ Span(null, "00$aX", null, 3)) ->
+        Seq(("string_pattern_mismatch", Seq("fields", "null"))),
+      (base :+ ldr.copy(offset = 3)) -> Nil, // "LDR" after span 0 is skipped
+      (base :+ media) -> Nil,
+      (media +: base) -> Seq(("string_type", Seq("leader"))),
+      (base :+ Span("002", "x", null, 3) :+ Span("004", "", null, 4) :+
+        Span("009", null, null, 5)) -> Nil, // control tags with no rules
+      (base :+ Span("000", "x", null, 3)) -> Seq(("literal_error", Seq("fields", "000"))),
+      (base :+ Span("1ab", "  $aV", null, 3) :+ Span("100", "1 $aA", null, 4)) -> Seq(
+        ("multiple_1xx_fields", Seq("fields", "1ab", "100")),
+        ("string_pattern_mismatch", Seq("fields", "1ab"))))
+    cases.foreach { case (doc, want) => assert(rowsOf(kernel, doc) == want, s"$doc") }
+    // a texts array shorter than the kinds array: the last span has no text
+    val longer = base :+ Span("008", "x", null, 3)
+    assert(rowsOf(kernel, kindsOf(longer), textsOf(base)) == Seq(
+      ("non_repeatable_field", Seq("fields", "008")),
+      ("control_field_length_invalid", Seq("fields", "008"))))
   }
 
   /** Test dictionary over strings; like parquet's, it decodes a copy. */
@@ -223,7 +351,7 @@ class FastCheckSpec extends AnyFunSuite {
         offHeap = offHeap)
       docs.zip(got).foreach { case ((d, want), (view, arrays)) =>
         assert(arrays == want, s"ArrayData clean for $d")
-        if (want) assert(MarcValidator.validate(d, rules).isEmpty, s"full path for $d")
+        if (want) assert(FastCheckSpec.recordPass(d, rules, rules).isEmpty, s"full path for $d")
         assert(view == want, s"kinds dict $dictKinds, texts dict $dictTexts, " +
           s"off heap $offHeap: $d")
       }
@@ -256,6 +384,41 @@ object FastCheckSpec {
   private def withField(tag: String, text: String): Seq[Span] =
     if (tag == "008") base.updated(1, Span(tag, text, null, 1))
     else base :+ Span(tag, text, null, 3)
+
+  /** Context tables whose 245 first-indicator domain holds no blank: only
+    * the empty string, or only a two-char value.
+    */
+  lazy val contexts: Seq[RuleSet] = {
+    val r245 = RuleSet.default.get("245").get
+    Seq(Seq(""), Seq("10")).map(d =>
+      RuleSet.default.withOverrides(Map("245" -> Some(r245.copy(ind1 = Some(d))))))
+  }
+
+  /** Every violation of `spans` as a string-keyed pass finds them, an
+    * oracle independent of the walker's codes and bitsets: the leader, then
+    * the record checks over a first-occurrence count of the non-null kinds
+    * of the spans that are neither leader nor media (non-repeatable by tag,
+    * required in `record`'s order, the 1XX kinds as `Counter.elements()`
+    * lists them), then each such span's field checks against `field`.
+    */
+  def recordPass(spans: Seq[Span], record: RuleSet, field: RuleSet): Seq[Violation] = {
+    val out = mutable.ArrayBuffer.empty[Violation]
+    spans.headOption.filter(_.kind == "LDR") match {
+      case None => out += MarcValidator.NoLeader
+      case Some(l) => out ++= MarcValidator.leaderViolation(l.text)
+    }
+    val fields = spans.filter(s => s.kind != "LDR" && s.kind != "media")
+    val counts = mutable.LinkedHashMap.empty[String, Int]
+    fields.map(_.kind).filter(_ != null).foreach(t => counts(t) = counts.getOrElse(t, 0) + 1)
+    for (t <- counts.keys.toSeq.sorted if counts(t) > 1 && record.nonRepeatableTags(t))
+      out += MarcValidator.nonRepeatableField(t)
+    for (t <- record.requiredTags if !counts.contains(t))
+      out += MarcValidator.missingRequiredField(t)
+    val mains = counts.toSeq.filter(_._1.startsWith("1")).flatMap { case (t, n) => Seq.fill(n)(t) }
+    if (mains.size > 1) out += MarcValidator.multiple1xx(mains)
+    fields.foreach(f => MarcValidator.checkField(f, field, out))
+    out.toSeq
+  }
 
   /** Control fields whose character and byte counts differ, with the
     * full path's rule ids.
@@ -297,7 +460,12 @@ object FastCheckSpec {
     base :+ Span("006", "m|||||學", null, 3), // 6 codepoints, 8 bytes: punt/agree
     base :+ Span("600", "10$aX,$aX,", null, 3), // non-rep subfield repeat
     base :+ Span("245", "學0$aT", null, 3), // multibyte indicator
-    base :+ Span("245", "0學$aT", null, 3)) ++ charCounts.map(_._1)
+    base :+ Span("245", "0學$aT", null, 3), // multibyte indicator
+    // "00" kinds outside 001-009 that hold a tag-pattern match: literal_error
+    base :+ Span("0010", "abc", null, 3),
+    base :+ Span("0012", "abc", null, 3),
+    base :+ Span("0099", "abc", null, 3),
+    base :+ Span("00100", "abc", null, 3)) ++ charCounts.map(_._1)
 
   /** 2000 property-generated docs from fixed seeds (the scalatestplus
     * bridge is not on the offline classpath): random tags including
@@ -306,7 +474,8 @@ object FastCheckSpec {
     */
   lazy val generated: Seq[Seq[Span]] = {
     val tagGen = Gen.oneOf(Gen.choose(0, 999).map(n => f"$n%03d"),
-      Gen.oneOf("LDR", "media", "910", "x100", "01a", "1234", ""))
+      Gen.oneOf("LDR", "media", "910", "x100", "01a", "1234", "", "0010", "0012", "0099",
+        "00100"))
     val textGen = Gen.oneOf(
       Gen.alphaNumStr.map(s => "  $a" + s.take(12)),
       Gen.oneOf("", " ", "00$aT", "11$zfoo", "1 $aFoo$eauthor", "  $a1$a2",

@@ -138,16 +138,17 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
   test("langIdNgram kernel is value-identical to the replace()-count column formulation") {
     // the r6 optimization fused the per-gram replace()-count columns into
     // one kernel; this pins the kernel row-for-row against the original
-    // greatest()-of-gramCounts formulation over the real corpus derivation
-    // (snippet + text slice, all five languages), plus null/und edges
-    def columnLangId(text: org.apache.spark.sql.Column) = {
-      val t = lower(text)
-      val scored = TextAnalysis.LangProfiles.map { case (lang, gs) =>
-        struct(gs.map(g => TextAnalysis.gramCount(t, g)).reduce(_ + _).as("score"),
-          lit(lang).as("lang"))
-      }
-      val best = greatest(scored: _*)
-      when(best.getField("score") > 0, best.getField("lang")).otherwise(lit("und"))
+    // formulation (per language the sum of each gram's non-overlapping
+    // replace() count, the greatest (score, lang) wins, zero signal or null
+    // -> "und"), computed in plain Scala over the collected rows of the real
+    // corpus derivation (snippet + text slice, all five languages), plus
+    // null/und edges
+    def columnLangId(t: String): String = if (t == null) "und" else {
+      def len(s: String) = s.codePointCount(0, s.length)
+      val (score, lang) = TextAnalysis.LangProfiles.map { case (lang, gs) =>
+        (gs.map(g => (len(t) - len(t.replace(g, ""))) / g.length).sum, lang)
+      }.max
+      if (score > 0) lang else "und"
     }
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val sn = typedLit(TextAnalysis.LangSnippets.map(_._2))
@@ -157,9 +158,8 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
         lit(" "), substring(lower(coalesce($"text", lit(""))), 1, 60)).as("t2"))
       .unionByName(Seq((-1L, "zzz qqq 12345")).toDF("doc_id", "t2"))
       .unionByName(Seq((-2L, null.asInstanceOf[String])).toDF("doc_id", "t2"))
-    val diff = derived.select(
-        TextAnalysis.langIdNgram($"t2").as("a"), columnLangId($"t2").as("b"))
-      .where(not($"a" <=> $"b")).count()
+    val diff = derived.select(TextAnalysis.langIdNgram($"t2"), lower($"t2")).collect()
+      .count(r => r.getString(0) != columnLangId(r.getString(1)))
     assert(diff == 0)
   }
 
