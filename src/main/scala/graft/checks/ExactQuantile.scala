@@ -105,7 +105,7 @@ object ExactQuantile {
       rows.map(r => r.getLong(0) -> r.getLong(1))
 
     var shift = 64 - RadixBits
-    val top = keys.groupBy(shiftRight(k, shift).as("p"))
+    val top = keys.groupBy(shiftright(k, shift).as("p"))
       .agg(count(lit(1)).as("c"),
         cuts.flatMap(q => Seq(count(when(k <= q, 1)), count(when(k < q, 1)))): _*)
       .collect()
@@ -120,8 +120,8 @@ object ExactQuantile {
     while (targets.exists(wide)) {
       val sub = shift - RadixBits
       val children = prefixCounts(
-        keys.where(shiftRight(k, shift).isin(targets.filter(wide).map(_.prefix).distinct: _*))
-          .groupBy(shiftRight(k, sub).as("p")).agg(count(lit(1)).as("c")).collect())
+        keys.where(shiftright(k, shift).isin(targets.filter(wide).map(_.prefix).distinct: _*))
+          .groupBy(shiftright(k, sub).as("p")).agg(count(lit(1)).as("c")).collect())
         .groupBy(_._1 >> RadixBits).view.mapValues(_.sortBy(_._1)).toMap
       targets = targets.map(t => if (wide(t)) locate(sub, children(t.prefix), t.rank) else t)
       shift = sub
@@ -134,7 +134,7 @@ object ExactQuantile {
       if (narrow.isEmpty) Map.empty
       else {
         val inNarrow = narrow.groupBy(_._1)
-          .map { case (s, ps) => shiftRight(k, s).isin(ps.map(_._2): _*) }.reduce(_ || _)
+          .map { case (s, ps) => shiftright(k, s).isin(ps.map(_._2): _*) }.reduce(_ || _)
         val got = keys.where(inNarrow).collect().map(_.getLong(0))
         narrow.map { case (s, p) => (s, p) -> got.filter(c => (c >> s) == p).sorted }.toMap
       }

@@ -299,14 +299,4 @@ object MarcValidator extends Serializable {
     flush()
     out.toSeq
   }
-
-  /** Encode subfields back to span text (inverse of [[parseSubfields]]). */
-  def encodeSubfields(ind1: String, ind2: String, subs: Seq[(Char, String)]): String = {
-    val sb = new java.lang.StringBuilder
-    sb.append(if (ind1.isEmpty) " " else ind1).append(if (ind2.isEmpty) " " else ind2)
-    subs.foreach { case (c, v) =>
-      sb.append('$').append(c).append(v.replace("$", "$$"))
-    }
-    sb.toString
-  }
 }

@@ -69,28 +69,38 @@ final class ValidatorKernel(val rules: RuleSet, val contextRules: Option[RuleSet
     if (recordJson == null && !hasSpanRules) return validate(kinds, texts)
     // context still outranks the row's record scope for FIELD checks
     // (validators.py:52-55: context wins whenever provided)
-    val coded = if (recordJson == null) fastCheck else recordCoded(recordJson.toString)
+    val coded =
+      if (recordJson == null) fastCheck
+      else cached(codedByJson, recordJson) { json =>
+        val table = RuleJson.parse(json)
+        new FastCheck(contextRules.getOrElse(table), table)
+      }
     val perSpan: Int => Option[RuleSet] =
       if (!hasSpanRules) FastCheck.NoSpanTables
       else i =>
         if (i < spanRules.numElements() && !spanRules.isNullAt(i))
-          Some(RuleJson.parseCached(spanRules.getUTF8String(i).toString))
+          Some(cached(tableByJson, spanRules.getUTF8String(i))(RuleJson.parse))
         else None
     rows(coded.violations(coded.spans(kinds, texts), perSpan))
   }
 
-  // coded forms of the row record tables, keyed by the JSON the row
-  // carries (no table is compared by value; the context is this kernel's
-  // constant), bounded like RuleJson's parse cache
-  @transient private lazy val codedByJson = new ConcurrentHashMap[String, FastCheck]()
+  // the coded forms of the row record tables and the parsed span tables,
+  // keyed by the JSON bytes the row carries, so a hit decodes no String (no
+  // table is compared by value; the context is this kernel's constant)
+  @transient private lazy val codedByJson = new ConcurrentHashMap[UTF8String, FastCheck]()
+  @transient private lazy val tableByJson = new ConcurrentHashMap[UTF8String, RuleSet]()
 
-  private def recordCoded(json: String): FastCheck = {
-    val hit = codedByJson.get(json)
+  /** The map's value for `json`, built from its text on a miss. The key is
+    * copied only when inserted, since a row's string may point into a
+    * reused buffer; a full map (4096 JSONs) is cleared, not grown.
+    */
+  private def cached[V](map: ConcurrentHashMap[UTF8String, V], json: UTF8String)(
+      build: String => V): V = {
+    val hit = map.get(json)
     if (hit != null) return hit
-    val table = RuleJson.parseCached(json)
-    val built = new FastCheck(contextRules.getOrElse(table), table)
-    if (codedByJson.size >= RuleJson.MaxCache) codedByJson.clear()
-    codedByJson.put(json, built)
+    val built = build(json.toString)
+    if (map.size >= 4096) map.clear()
+    map.put(json.copy(), built)
     built
   }
 

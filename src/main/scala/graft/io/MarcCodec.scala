@@ -56,34 +56,42 @@ object MarcCodec {
   }
 
   /** Decode every record in a buffer (one .mrc file). Framing follows
-    * pymarc's MARCReader: records are length-prefixed via leader[0,5); on a
-    * bad length prefix the remainder of the buffer is skipped with one
+    * pymarc's MARCReader: records are length-prefixed via leader[0,5), and
+    * the last byte of a record is its RECORD_TERM (the only one in it). On
+    * a bad length prefix, a missing or misplaced terminator, or a tail too
+    * short for a prefix, the remainder of the buffer is skipped with one
     * violation-only record (a resync scan could over-read silently — the
     * loud option is the safe one for a validation engine).
     */
   def decodeStream(bytes: Array[Byte]): Iterator[DecodedRecord] = new Iterator[DecodedRecord] {
     private var pos = 0
-    private var bad: Option[DecodedRecord] = None
     private def skipTerms(): Unit =
       while (pos < bytes.length &&
         (bytes(pos) == RecordTerm || bytes(pos) == '\n' || bytes(pos) == '\r')) pos += 1
     skipTerms()
-    override def hasNext: Boolean = bad.nonEmpty || pos + 5 <= bytes.length
+    override def hasNext: Boolean = pos < bytes.length
     override def next(): DecodedRecord = {
-      if (bad.nonEmpty) { val r = bad.get; bad = None; return r }
       digits(bytes, pos, pos + 5) match {
-        case Some(recLen) if recLen >= 24 && pos + recLen <= bytes.length =>
+        case Some(recLen) if recLen >= 24 && pos + recLen <= bytes.length &&
+            terminatedAt(bytes, pos, pos + recLen - 1) =>
           val rec = decodeRecord(bytes, pos, recLen)
           pos += recLen
           skipTerms()
           rec
         case _ =>
-          val r = DecodedRecord(Vector.empty, Vector(
-            stringTypeViolation(Seq("leader"), utf8(bytes, pos, pos + 5))))
+          val r = DecodedRecord(Vector.empty, Vector(stringTypeViolation(Seq("leader"),
+            utf8(bytes, pos, math.min(pos + 5, bytes.length)))))
           pos = bytes.length // cannot frame further records
           r
       }
     }
+  }
+
+  /** Whether the first RECORD_TERM at or after `from` is at `end`. */
+  private def terminatedAt(bytes: Array[Byte], from: Int, end: Int): Boolean = {
+    var i = from
+    while (i < end && bytes(i) != RecordTerm) i += 1
+    i == end && bytes(end) == RecordTerm
   }
 
   /** Decode one record at [off, off+len). */
@@ -107,20 +115,19 @@ object MarcCodec {
     while (d + 12 <= dirEnd && bytes(d) != FieldTerm) {
       val tag = utf8(bytes, d, d + 3)
       (digits(bytes, d + 3, d + 7), digits(bytes, d + 7, d + 12)) match {
-        case (Some(fLen), Some(fStart)) =>
+        // field length includes the trailing terminator
+        case (Some(fLen), Some(fStart)) if fLen >= 1 && base + fStart + fLen <= len &&
+            bytes(off + base + fStart + fLen - 1) == FieldTerm =>
           val fOff = off + base + fStart
-          val fEnd = fOff + fLen // field length includes the trailing terminator
-          if (fEnd <= off + len && fLen >= 1) {
-            val textEnd = if (bytes(fEnd - 1) == FieldTerm) fEnd - 1 else fEnd
-            add(tag, decodeFieldText(tag, bytes, fOff, textEnd))
-          } else {
-            viols += stringTypeViolation(Seq("fields", tag), tag)
-          }
+          add(tag, decodeFieldText(tag, bytes, fOff, fOff + fLen - 1))
         case _ =>
           viols += stringTypeViolation(Seq("fields", tag), tag)
       }
       d += 12
     }
+    // the directory ends exactly at base-1, in whole entries
+    if (d != dirEnd || bytes(dirEnd) != FieldTerm)
+      viols += stringTypeViolation(Seq("leader"), leader)
     DecodedRecord(spans.result(), viols.result())
   }
 

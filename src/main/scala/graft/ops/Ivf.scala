@@ -188,7 +188,7 @@ object Ivf {
     val probed =
       if (nProbe == model.k) index
       else index.where(col("cluster").isin(
-        q.select(col("cluster")).collect().map(_.getInt(0)).distinct.map(Int.box): _*))
+        q.select(col("cluster")).collect().map(_.getInt(0)).distinct.toSeq: _*))
     val scored = probed.join(broadcast(q), Seq("cluster"))
       .select(col("qid"), col("id"), cosineSim(col("v"), col("qv")).as("cosine"))
     Similarity.rankTopK(scored, topK)

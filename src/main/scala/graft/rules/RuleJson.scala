@@ -1,7 +1,5 @@
 package graft.rules
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -67,19 +65,5 @@ object RuleJson {
   def parse(json: String): RuleSet = {
     val obj = JsonMethods.parse(json).asInstanceOf[JObject]
     RuleSet(obj.obj.map { case (tag, v) => tag -> tagRule(v) }.toVector)
-  }
-
-  // Bounded decode cache: override JSONs repeat across rows; the map is
-  // cleared if cardinality explodes (pathological input) rather than grown.
-  private val cache = new ConcurrentHashMap[String, RuleSet]()
-  private[graft] val MaxCache = 4096
-
-  def parseCached(json: String): RuleSet = {
-    val hit = cache.get(json)
-    if (hit != null) return hit
-    val parsed = parse(json)
-    if (cache.size >= MaxCache) cache.clear()
-    cache.put(json, parsed)
-    parsed
   }
 }

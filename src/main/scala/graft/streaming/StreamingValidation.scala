@@ -4,11 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.checks.RowValidator
-import graft.expr.SketchExprs.{minhashBandKeys, minhashSig}
-import graft.ops.Dedup
-import graft.rules.RuleSet
-
 /** Structured-Streaming form of the engine. The batch core is a pure
   * DataFrame -> DataFrame function, so the streaming variant is the same
   * plan bound to a streaming source (SURVEY.md §2 Part B "Streaming"):
@@ -17,17 +12,6 @@ import graft.rules.RuleSet
   * and [[graft.checks.RowValidator.violations]] applied to a streaming frame.
   */
 object StreamingValidation {
-
-  /** Windowed violation-rate over an event-time column: watermarked tumbling
-    * windows, late data dropped past the watermark (stateful aggregation).
-    */
-  def windowedViolationRate(docs: DataFrame, tsCol: String,
-      windowLen: String = "1 hour", watermark: String = "2 hours",
-      rules: RuleSet = RuleSet.default): DataFrame =
-    RowValidator.withViolations(docs, rules) // stateless; keeps the ts column
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), windowLen), col("passed"))
-      .agg(count(lit(1)).as("n"))
 
   /** Windowed span-kind frequencies on a streaming docs frame: watermarked
     * tumbling windows x kind -> counts — the streaming input to the drift
@@ -124,8 +108,7 @@ object StreamingValidation {
     * compatible, so restoring a checkpoint written by the pre-`maxTsMs`
     * build fails at restore time (state-encoder schema mismatch). Restart
     * such queries from a fresh checkpoint; within-watermark dedup state
-    * rebuilds from the replayed source offsets. The same applies to
-    * [[BandBucket]].
+    * rebuilds from the replayed source offsets.
     */
   final case class SeenKeys(keys: List[String], maxTsMs: Long = Long.MinValue)
 
@@ -181,113 +164,6 @@ object StreamingValidation {
             // would otherwise leave this key's state with no expiry — an
             // unbounded state leak. With no event time seen EVER, fall back
             // to the current watermark + ttl; never at/behind the watermark.
-            val expiryBase =
-              if (maxTs != Long.MinValue) maxTs else state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(
-              math.max(expiryBase + math.max(ttlMs, 1L),
-                state.getCurrentWatermarkMs() + 1))
-            out.result().iterator
-          }
-      }
-      .toDF()
-  }
-
-  /** One band-fanned streamed row for near-dup candidate generation. */
-  final case class BandIn(band: Int, bh: Long, doc_id: String, sig: Seq[Long],
-      ts: java.sql.Timestamp)
-  /** A bucket-resident signature. */
-  final case class BandMember(doc_id: String, sig: Seq[Long])
-  /** Per-(band, bucket) state: resident members, capped at `maxBucket`,
-    * plus the event-time high-water mark the TTL is anchored to (see
-    * [[SeenKeys]] — prevents expiry rewind on all-null-ts batches).
-    */
-  final case class BandBucket(members: List[BandMember],
-      maxTsMs: Long = Long.MinValue)
-  /** Candidate event: (a, b) with the unbiased signature-estimated jaccard
-    * and the arrival time of the LATER doc (so downstream
-    * `withWatermark("ts", ...).dropDuplicatesWithinWatermark("a", "b")` can
-    * collapse the same pair surfacing from multiple bands).
-    */
-  final case class CandidateOut(a: String, b: String, est_jaccard: Double,
-      ts: java.sql.Timestamp)
-
-  /** Streaming near-dup CANDIDATE generation — the incremental form of
-    * [[graft.ops.Dedup.minhashPairs]] for continuous corpus ingestion: each
-    * arriving doc is minhash-signed, fanned to its `bands` LSH buckets, and
-    * compared (signature estimate only) against the bucket's resident
-    * members; a collision at estimate >= threshold - estMargin emits a
-    * candidate pair event. Exact-jaccard verification is deliberately NOT
-    * done here — signatures, not shingle sets, live in state (64 longs vs
-    * unbounded text per doc), and the batch verify (one scan + one
-    * candidate-sized shuffle, `Dedup.minhashPairs`'s tail) runs downstream
-    * over the emitted candidates.
-    *
-    * Scale shape mirrors the batch operator: state keys are (band, bucket
-    * hash) so the shuffle carries thin rows; buckets cap at `maxBucket`
-    * members (the mass-duplicate guard — a boilerplate flood cannot grow a
-    * bucket's state or its per-arrival compare cost past the cap); state
-    * expires `ttlMs` past the watermark (dedup-within-watermark semantics,
-    * like [[firstSeenStream]]).
-    */
-  def nearDupCandidatesStream(docs: DataFrame, id: Column, text: Column,
-      tsCol: String, watermark: String = "1 hour", threshold: Double = 0.8,
-      estMargin: Double = 0.2, numHashes: Int = 64, bands: Int = 32,
-      maxBucket: Int = 64, ttlMs: Long = 0L): DataFrame = {
-    val rows = numHashes / bands
-    require(rows * bands == numHashes, "bands must divide numHashes")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val minMatches = math.ceil((threshold - estMargin) * numHashes).toInt
-    // null text is EXCLUDED (no content to compare) — same guard as the
-    // batch ops ([[graft.ops.Dedup.minhashPairs]]): without it a null sig
-    // lands in bucket state and the next arrival's m.sig(i) compare NPEs
-    // the executor, terminating the streaming query
-    val bandRows = docs
-      .where(text.isNotNull)
-      .withWatermark(tsCol, watermark)
-      .select(id.cast("string").as("doc_id"),
-        minhashSig(Dedup.shingles(text), numHashes).as("sig"),
-        col(tsCol).as("ts"))
-      .select(posexplode(minhashBandKeys(col("sig"), bands, rows))
-          .as(Seq("band", "bh")),
-        col("doc_id"), col("sig"), col("ts"))
-      .as[BandIn]
-    bandRows
-      .groupByKey(r => (r.band, r.bh))
-      .flatMapGroupsWithState[BandBucket, CandidateOut](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Int, Long), incoming: Iterator[BandIn], state: GroupState[BandBucket]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val prior = state.getOption
-            var members = prior.map(_.members).getOrElse(Nil)
-            var seen = members.iterator.map(_.doc_id).toSet
-            var maxTs = prior.map(_.maxTsMs).getOrElse(Long.MinValue)
-            val out = List.newBuilder[CandidateOut]
-            incoming.foreach { e =>
-              if (e.ts != null) maxTs = math.max(maxTs, e.ts.getTime)
-              if (!seen.contains(e.doc_id)) {
-                members.foreach { m =>
-                  var matches = 0
-                  var i = 0
-                  while (i < numHashes) {
-                    if (m.sig(i) == e.sig(i)) matches += 1
-                    i += 1
-                  }
-                  if (matches >= minMatches) {
-                    val (a, b) =
-                      if (e.doc_id < m.doc_id) (e.doc_id, m.doc_id)
-                      else (m.doc_id, e.doc_id)
-                    out += CandidateOut(a, b, matches.toDouble / numHashes, e.ts)
-                  }
-                }
-                if (members.lengthCompare(maxBucket) < 0) {
-                  members = BandMember(e.doc_id, e.sig) :: members
-                  seen += e.doc_id
-                }
-              }
-            }
-            state.update(BandBucket(members, maxTs))
             val expiryBase =
               if (maxTs != Long.MinValue) maxTs else state.getCurrentWatermarkMs()
             state.setTimeoutTimestamp(

@@ -49,26 +49,4 @@ object Bridge {
     df.queryExecution.analyzed.collectFirst {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.getCheckpointFile
     }.flatten
-
-  /** Every node of the FINAL executed physical plan, with the adaptive
-    * wrappers unwrapped: `AdaptiveSparkPlanExec` hides its re-optimized
-    * tree from `TreeNode.collect` (the final plan is not among its
-    * children), and materialized stages wrap their exchanges in
-    * `QueryStageExec`. Run an action on the Dataset FIRST — before
-    * execution the adaptive plan is still the initial one. This is what
-    * lets plan-shape tests assert the same invariants AQE-ON that they pin
-    * AQE-OFF (round-5 verdict: AQE re-plans exchanges, so an AQE-off pin
-    * can miss exactly the divergence it exists to prevent).
-    */
-  def finalPlanNodes(df: org.apache.spark.sql.Dataset[_])
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec        => q +: walk(q.plan)
-      case other                    => other +: other.children.flatMap(walk)
-    }
-    walk(df.queryExecution.executedPlan)
-  }
 }

@@ -248,7 +248,7 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // one hot-key row per input partition enters the shuffle
     val executed = Uniqueness.dupKeys(data, col("k"))
     executed.collect()
-    val nodes = org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(executed)
+    val nodes = finalPlanNodes(executed)
     val partialAggs = nodes.collect {
       case h: org.apache.spark.sql.execution.aggregate.HashAggregateExec
           if h.aggregateExpressions.exists(e => e.mode == Partial

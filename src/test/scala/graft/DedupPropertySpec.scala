@@ -174,6 +174,33 @@ class DedupPropertySpec extends AnyFunSuite with SparkSessionTestWrapper {
       s"single task read $maxRead shuffle records — hot key not combined/split")
   }
 
+  test("adversarial length: lineDedupIntra's per-line rate holds at 20 000-line docs") {
+    // the same 200 000 lines as 2 000 docs of 100 lines and as 10 docs of
+    // 20 000 lines, half of each doc's lines repeated within the doc; a
+    // per-line rescan of the doc (or an optimizer rewrite that undoes
+    // bindOnce and re-splits the text per line) is quadratic in doc length
+    // and drops the long-doc rate by far more than 10x
+    val totalLines = 200000
+    def rate(linesPerDoc: Int): Double = {
+      val docs = spark.range(totalLines / linesPerDoc).select(col("id"),
+        concat_ws("\n", transform(sequence(lit(0), lit(linesPerDoc - 1)),
+          i => concat(lit("line-content-"), col("id") % 1000, lit("-"),
+            pmod(i, lit(linesPerDoc / 2))))).as("text"))
+        .localCheckpoint() // generation stays out of the timing
+      def run(): Double = {
+        val t0 = System.nanoTime()
+        val dropped = Dedup.lineDedupIntra(docs, col("id"), col("text"))
+          .agg(sum(col("n_dropped"))).as[Long].collect().head
+        assert(dropped == totalLines / 2)
+        (System.nanoTime() - t0) / 1e9
+      }
+      run() // warm-up
+      totalLines / Seq.fill(3)(run()).min
+    }
+    val (short, long) = (rate(100), rate(20000))
+    assert(long * 10 >= short, f"$long%.0f lines/s at 20 000 lines vs $short%.0f at 100")
+  }
+
   test("property: dupClusters equals union-find on arbitrary edge lists") {
     val edgeGen = for {
       n <- Gen.choose(1, 25)

@@ -171,7 +171,7 @@ class IvfSpec extends AnyFunSuite with SparkSessionTestWrapper {
     def assertPrunes(queries: org.apache.spark.sql.DataFrame): Array[Long] = {
       val search = Ivf.search(index, model, queries, $"qid", $"qv", topK = 5, nProbe = 1)
       val got = search.collect().map(_.getAs[Long]("id"))
-      val scanNode = org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(search)
+      val scanNode = finalPlanNodes(search)
         .collect { case f: FileSourceScanExec => f }.head
       assert(scanNode.toString.contains("PartitionFilters") &&
         scanNode.toString.contains("cluster"),

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expr.MarcValidator
@@ -72,6 +74,57 @@ class MarcSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     rec(12) = 'x'.toByte
     val d2 = MarcCodec.decodeStream(rec).toSeq
     assert(d2.head.decodeViolations.exists(_.rule_id == "string_type"))
+  }
+
+  /** Encoded Synth records (1-4 per stream), each stream broken once: cut
+    * inside a record, a record's leader length or base address rewritten
+    * to other digits (near the true value or anywhere), or one field or
+    * record terminator removed.
+    */
+  private val malformed: Gen[Array[Byte]] = for {
+    ids <- Gen.nonEmptyListOf(Gen.choose(0L, 10000L)).map(_.take(4))
+    recs = ids.map(i => MarcCodec.encodeRecord(Synth.doc(i).spans))
+    k <- Gen.choose(0, recs.length - 1)
+    broken <- breakRecord(recs.toArray.flatten, recs.take(k).map(_.length).sum, recs(k))
+  } yield broken
+
+  /** `bytes` with the record `rec`, which starts at `at`, broken once. */
+  private def breakRecord(bytes: Array[Byte], at: Int, rec: Array[Byte]): Gen[Array[Byte]] = {
+    def rewrite(field: Int, truth: Int): Gen[Array[Byte]] =
+      // any other 5 digits, or within 3 of the truth (mod 10^5)
+      Gen.oneOf(Gen.choose(1, 99999), Gen.oneOf(1, 2, 3, 99997, 99998, 99999)).map { d =>
+        val out = bytes.clone()
+        f"${(truth + d) % 100000}%05d".getBytes("US-ASCII").copyToArray(out, at + field)
+        out
+      }
+    def without(i: Int): Array[Byte] = bytes.patch(at + i, Nil, 1)
+    Gen.oneOf(
+      Gen.choose(1, rec.length - 1).map(cut => bytes.take(at + cut)),
+      rewrite(0, rec.length),
+      rewrite(12, new String(rec, 12, 5, "US-ASCII").toInt),
+      Gen.oneOf(rec.indices.filter(rec(_) == MarcCodec.FieldTerm)).map(without),
+      Gen.const(without(rec.length - 1)))
+  }
+
+  test("property: malformed ISO 2709 yields decode violations, never an exception") {
+    (0 until 500).foreach { i =>
+      val bytes = malformed(Gen.Parameters.default, Seed(7L + i)).get
+      val decoded = MarcCodec.decodeStream(bytes).toSeq
+      assert(decoded.exists(_.decodeViolations.exists(_.rule_id == "string_type")),
+        s"seed ${7L + i}: ${decoded.map(_.spans.map(_.kind))}")
+    }
+  }
+
+  test("MarcSource reads a malformed .mrc file into violation rows") {
+    val dir = Files.createTempDirectory("graft-marc-bad").toFile
+    val good = MarcCodec.encodeStream((0L until 2L).map(Synth.doc(_).spans))
+    val cut = MarcCodec.encodeRecord(Synth.doc(2L).spans).take(3)
+    Files.write(new java.io.File(dir, "bad.mrc").toPath, good ++ cut)
+    val rows = MarcSource.read(spark, dir.getAbsolutePath + "/*.mrc").collect()
+    assert(rows.map(_.decode_violations.size).sorted.toSeq == Seq(0, 0, 1))
+    val bad = rows.find(_.decode_violations.nonEmpty).get
+    assert(bad.doc_id.endsWith("bad.mrc#2") && bad.spans.isEmpty)
+    assert(bad.decode_violations.head.rule_id == "string_type")
   }
 
   test("MarcSource reads .mrc files distributed and ids records by 001") {

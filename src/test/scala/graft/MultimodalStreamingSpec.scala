@@ -150,40 +150,6 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     } finally q.stop()
   }
 
-  test("streaming: near-dup candidates surface within and across micro-batches") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(String, String, java.sql.Timestamp)]
-    val docs = input.toDF().toDF("doc_id", "text", "ts")
-    val q = StreamingValidation.nearDupCandidatesStream(
-        docs, col("doc_id"), col("text"), "ts", threshold = 0.8)
-      .writeStream.format("memory").queryName("neardup_stream")
-      .outputMode("append").start()
-    def t(m: Int) = java.sql.Timestamp.valueOf(f"2026-01-01 00:$m%02d:00")
-    val base = "the quick brown fox jumps over the lazy dog and runs far away"
-    try {
-      // batch 1: d1 and an intra-batch exact clone d2, plus a distinct doc
-      input.addData(("d1", base, t(0)), ("d2", base, t(1)),
-        ("d3", "completely different text about spark columnar engines here", t(2)))
-      q.processAllAvailable()
-      // batch 2: cross-batch near-clone of d1 (one appended token)
-      input.addData(("d4", base + " tonight", t(3)),
-        ("d5", "another unrelated piece of content entirely its own words", t(4)))
-      q.processAllAvailable()
-      val got = spark.table("neardup_stream")
-        .select("a", "b", "est_jaccard").collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-      // exact clone: estimate 1.0; candidate events may repeat per band but
-      // always with the same (a, b, est)
-      assert(got.get(("d1", "d2")).contains(1.0), s"got $got")
-      // cross-batch near-clone collides in >= 1 band with a high estimate
-      assert(got.contains(("d1", "d4")) || got.contains(("d2", "d4")), s"got $got")
-      // unrelated docs never pair
-      assert(!got.keySet.exists { case (a, b) => Set(a, b).intersect(Set("d3", "d5")).nonEmpty },
-        s"got $got")
-    } finally q.stop()
-  }
-
   test("streaming: windowed kind frequencies match batch; per-window PSI vs baseline") {
     import graft.checks.Drift
     val dir = Files.createTempDirectory("graft-stream3").toString
@@ -220,24 +186,5 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .collect().map(r => r.getDouble(1))
     assert(psis.length == 3)
     assert(psis.forall(p => p >= 0 && p < 0.1), s"unexpected drift: ${psis.toSeq}")
-  }
-
-  test("streaming: watermarked windowed violation-rate aggregates by hour") {
-    val dir = Files.createTempDirectory("graft-stream2").toString
-    val docs = Synth.corpusDF(spark, 90)
-      .withColumn("ts", timestamp_seconds(
-        unix_timestamp(to_timestamp(lit("2026-01-01 00:00:00"))) +
-          (col("doc_id").substr(lit(5), lit(10)).cast("long") % 180) * 60))
-    docs.write.mode("overwrite").parquet(s"$dir/in")
-    val schema = spark.read.parquet(s"$dir/in").schema
-    val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-    val q = StreamingValidation.windowedViolationRate(stream, "ts")
-      .writeStream.format("memory").queryName("rate_stream")
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    val out = spark.table("rate_stream").collect()
-    // 3 hour-windows x (passed, failed) = up to 6 groups, counts sum to 90
-    assert(out.map(_.getAs[Long]("n")).sum == 90)
-    assert(out.length >= 4 && out.length <= 6)
   }
 }

@@ -533,7 +533,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // the same assertions run twice: against the static AQE-off plan AND
     // against the AQE-ON final executed plan (round-5 verdict: AQE
     // re-plans exchanges, so an AQE-off-only pin can miss exactly the
-    // divergence it exists to prevent; Bridge.finalPlanNodes unwraps the
+    // divergence it exists to prevent; finalPlanNodes unwraps the
     // adaptive wrappers after an action has materialized the stages)
     // NB: a Dataset caches its QueryExecution on first access, and
     // df.write spawns a SEPARATE execution — so each phase gets a freshly
@@ -543,7 +543,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     def exchanges(df: org.apache.spark.sql.DataFrame, aqe: Boolean) =
       if (aqe) {
         df.collect()
-        org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(df).collect {
+        finalPlanNodes(df).collect {
           case e: ShuffleExchangeExec => e
         }.distinct
       } else {
@@ -871,7 +871,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     def mkPlan = Similarity.annTopKCosine(emb, $"vec_id", $"embedding",
       queries, $"vec_id", $"embedding", k = 10, bands = 16, rowsPerBand = 4)
     // the thin-exchange invariant, pinned BOTH AQE-off (static plan) and
-    // AQE-on (final executed plan via Bridge.finalPlanNodes — round-5
+    // AQE-on (final executed plan via finalPlanNodes — round-5
     // verdict asked for the adaptive re-pin)
     def vecExchanges(nodes: Seq[org.apache.spark.sql.execution.SparkPlan]) =
       nodes.collect {
@@ -896,7 +896,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       // collect() above materialized the adaptive stages: pin the invariant
       // on the FINAL executed plan too
       val adaptiveVec = vecExchanges(
-        org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(plan))
+        finalPlanNodes(plan))
       assert(adaptiveVec.size <= 1,
         s"vector payload rides ${adaptiveVec.size} exchanges (aqe final): " +
           s"${adaptiveVec.map(_.output)}")

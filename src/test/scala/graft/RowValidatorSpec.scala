@@ -168,7 +168,7 @@ class RowValidatorSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   private def nodes(df: org.apache.spark.sql.DataFrame) =
-    org.apache.spark.sql.graftbridge.Bridge.finalPlanNodes(df)
+    finalPlanNodes(df)
 
   private def scanNodes(df: org.apache.spark.sql.DataFrame): Seq[ValidateScanExec] =
     nodes(df).collect { case v: ValidateScanExec => v }
