@@ -8,11 +8,10 @@ import graft.checks.{Drift, Referential, RowValidator, Uniqueness}
 import graft.gen.{Fixtures, Synth}
 import graft.ops.{Dedup, Similarity, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every `queries` key has a matching `oracleSql` entry (DuckDB-runnable over
-  * the same parquet tables) unless the operator is not SQL-expressible, in
-  * which case the driver records a rows-only check.
+  * Every `queries` key has a matching `oracleSql` entry, DuckDB-runnable over
+  * the same parquet tables (pinned by SparkEntrySpec).
   */
 object SparkEntry {
 
@@ -27,6 +26,14 @@ object SparkEntry {
     RowValidator.verdicts(docs)
   }
 
+  /** The synthetic MARC corpus keyed by the driver's documents.doc_id. */
+  private def corpus(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val ids = s.read.parquet(s"$dir/documents.parquet")
+      .select($"doc_id".cast("long")).as[java.lang.Long]
+    Synth.corpusFromIds(ids).toDF()
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // MARC binary source: encode the golden fixtures to ISO 2709 bytes,
@@ -39,7 +46,7 @@ object SparkEntry {
       java.nio.file.Files.write(dir.resolve("fixtures.mrc"),
         graft.io.MarcCodec.encodeStream(
           Seq(Fixtures.validDoc.spans, Fixtures.invalidDoc.spans)))
-      val docs = graft.io.MarcSource.read(s, dir.toString + "/*.mrc")
+      val docs = graft.io.MarcSource.read(s, dir.toString)
         .select($"doc_id", $"spans")
       RowValidator.violations(docs)
         .select($"doc_id", $"rule_id", array_join($"loc", "/").as("loc_path"), $"msg")
@@ -80,18 +87,12 @@ object SparkEntry {
     // documents.doc_id; per-rule violation counts are closed-form in doc_id.
     "marc_corpus_verdicts" -> ((s, dir) => {
       import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      val docs = Synth.corpusFromIds(ids).toDF()
-      RowValidator.violations(docs)
+      RowValidator.violations(corpus(s, dir))
         .groupBy($"rule_id").agg(count(lit(1)).as("n"))
     }),
     "marc_corpus_passed" -> ((s, dir) => {
       import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      val docs = Synth.corpusFromIds(ids).toDF()
-      RowValidator.verdicts(docs)
+      RowValidator.verdicts(corpus(s, dir))
         .agg(
           count(when($"passed", 1)).as("n_passed"),
           count(when(!$"passed", 1)).as("n_failed"),
@@ -104,10 +105,7 @@ object SparkEntry {
     // closed-form in doc_id for the oracle
     "span_invariant_check" -> ((s, dir) => {
       import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      val docs = Synth.corpusFromIds(ids).toDF()
-      val corrupted = docs
+      val corrupted = corpus(s, dir)
         .withColumn("spans",
           when(substring($"doc_id", 5, 20).cast("long") % 7 === 0, reverse($"spans"))
             .otherwise($"spans"))
@@ -139,7 +137,9 @@ object SparkEntry {
       val b = Referential.dangling(ev, col("user_id"), cust, col("c_custkey"))
         .agg(count(lit(1)).as("n")).withColumn("check", lit("events_customer"))
       // reversed direction has real "dangling" rows: parts never ordered
-      val c = Referential.dangling(part, col("p_partkey"), li, col("l_partkey"))
+      // (distinct keys, so the broadcast side is one row per part ordered)
+      val c = Referential.dangling(part, col("p_partkey"),
+        li.select(col("l_partkey")).distinct(), col("l_partkey"))
         .agg(count(lit(1)).as("n")).withColumn("check", lit("unreferenced_parts"))
       a.unionByName(b).unionByName(c).select(col("check"), col("n"))
     }),
@@ -196,12 +196,7 @@ object SparkEntry {
     }),
     // span-kind frequency histogram over the synthetic corpus (the input to
     // kind-frequency drift); counts are closed-form in doc_id defect class
-    "drift_kind_freq" -> ((s, dir) => {
-      import s.implicits._
-      val ids = s.read.parquet(s"$dir/documents.parquet")
-        .select($"doc_id".cast("long")).as[java.lang.Long]
-      Drift.kindFrequencies(Synth.corpusFromIds(ids).toDF())
-    }),
+    "drift_kind_freq" -> ((s, dir) => Drift.kindFrequencies(corpus(s, dir))),
     // exact dedup over a corpus with injected duplicates (every 10th doc)
     "dedup_exact_docs" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet")
@@ -733,6 +728,41 @@ object SparkEntry {
          |              (acc, b) -> ((xor(acc, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT)::HUGEINT""".stripMargin
     def signedPmod(u: String, m: Long): String =
       s"((CASE WHEN $u >= 9223372036854775808::HUGEINT THEN $u - 18446744073709551616::HUGEINT ELSE $u END) % $m + $m) % $m"
+    // The text oracles' shared CTEs: `tokens` splits each doc into lowercase
+    // words; `shingles` adds its distinct word 3-gram set (Dedup.shingled);
+    // `jaccardCandidates` pairs docs sharing a shingle and `jaccardVerify`
+    // keeps the pairs at exact Jaccard >= 0.8; `components` labels each
+    // paired doc with every id it reaches, the least being its cluster
+    // (needs WITH RECURSIVE).
+    val tokens = """t AS (
+          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
+        )"""
+    val shingles = s"""$tokens, shq AS (
+          SELECT doc_id,
+            list_distinct(CASE WHEN len(toks) >= 3
+              THEN list_transform(generate_series(1, len(toks) - 2),
+                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
+              ELSE [array_to_string(toks, ' ')] END) AS sh
+          FROM t
+        )"""
+    val jaccardCandidates = """inv AS (
+          SELECT doc_id, unnest(sh) AS g FROM shq
+        ), cand AS (
+          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
+          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
+        )"""
+    val jaccardVerify = """SELECT a, b FROM cand
+        JOIN shq sa ON sa.doc_id = cand.a
+        JOIN shq sb ON sb.doc_id = cand.b
+        WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
+              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8"""
+    val components = """edges AS (
+          SELECT a AS x, b AS y FROM pairs UNION ALL SELECT b, a FROM pairs
+        ), cc AS (
+          SELECT DISTINCT x AS id, x AS label FROM edges
+          UNION
+          SELECT e.x AS id, cc.label FROM edges e JOIN cc ON cc.id = e.y
+        )"""
     Map(
       "marc_fixture_violations" ->
         s"SELECT * FROM (VALUES $fixtureRows) AS t(doc_id, rule_id, loc_path, msg)",
@@ -977,115 +1007,31 @@ object SparkEntry {
                (n_lines - n_kept)::BIGINT AS n_dropped, text_clean
         FROM agg a JOIN tot USING (doc_id)
       """.trim,
-      "dedup_near_pairs" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        )
-        SELECT a, b FROM cand
-        JOIN shq sa ON sa.doc_id = cand.a
-        JOIN shq sb ON sb.doc_id = cand.b
-        WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
+      "dedup_near_pairs" -> s"""
+        WITH $shingles, $jaccardCandidates
+        $jaccardVerify
       """.trim,
-      "dedup_clusters" -> """
-        WITH RECURSIVE t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        ), pairs AS (
-          SELECT a, b FROM cand
-          JOIN shq sa ON sa.doc_id = cand.a
-          JOIN shq sb ON sb.doc_id = cand.b
-          WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-                / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-        ), edges AS (
-          SELECT a AS x, b AS y FROM pairs UNION ALL SELECT b, a FROM pairs
-        ), cc AS (
-          SELECT DISTINCT x AS id, x AS label FROM edges
-          UNION
-          SELECT e.x AS id, cc.label FROM edges e JOIN cc ON cc.id = e.y
-        )
+      "dedup_clusters" -> s"""
+        WITH RECURSIVE $shingles, $jaccardCandidates, pairs AS (
+          $jaccardVerify
+        ), $components
         SELECT id AS doc_id, min(label)::BIGINT AS cluster FROM cc GROUP BY id
       """.trim,
       // same recursive-CTE reachability as dedup_clusters, extended with the
       // keep-one step: drop every cluster member except its minimum id
-      "dedup_keep_one" -> """
-        WITH RECURSIVE t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        ), pairs AS (
-          SELECT a, b FROM cand
-          JOIN shq sa ON sa.doc_id = cand.a
-          JOIN shq sb ON sb.doc_id = cand.b
-          WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-                / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
-        ), edges AS (
-          SELECT a AS x, b AS y FROM pairs UNION ALL SELECT b, a FROM pairs
-        ), cc AS (
-          SELECT DISTINCT x AS id, x AS label FROM edges
-          UNION
-          SELECT e.x AS id, cc.label FROM edges e JOIN cc ON cc.id = e.y
-        ), losers AS (
+      "dedup_keep_one" -> s"""
+        WITH RECURSIVE $shingles, $jaccardCandidates, pairs AS (
+          $jaccardVerify
+        ), $components, losers AS (
           SELECT id FROM (SELECT id, min(label) AS cluster FROM cc GROUP BY id)
           WHERE id <> cluster
         )
         SELECT d.doc_id, d.text FROM documents d
         WHERE d.doc_id NOT IN (SELECT id FROM losers)
       """.trim,
-      "dedup_ngram_pairs" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), inv AS (
-          SELECT doc_id, unnest(sh) AS g FROM shq
-        ), cand AS (
-          SELECT l.doc_id AS a, r.doc_id AS b FROM inv l JOIN inv r USING (g)
-          WHERE l.doc_id < r.doc_id GROUP BY 1, 2
-        )
-        SELECT a, b FROM cand
-        JOIN shq sa ON sa.doc_id = cand.a
-        JOIN shq sb ON sb.doc_id = cand.b
-        WHERE len(list_intersect(sa.sh, sb.sh))::DOUBLE
-              / (len(sa.sh) + len(sb.sh) - len(list_intersect(sa.sh, sb.sh))) >= 0.8
+      "dedup_ngram_pairs" -> s"""
+        WITH $shingles, $jaccardCandidates
+        $jaccardVerify
       """.trim,
       "dedup_embed_pairs" -> """
         WITH planted AS (
@@ -1253,19 +1199,13 @@ object SparkEntry {
       """.trim,
       // FNV-1a over (doc_id || salt), pmod 1e6 < 100000 — the HUGEINT
       // modular-multiply recompute, signed like Spark's pmod
-      "sample_hash_docs" -> """
+      "sample_hash_docs" -> s"""
         WITH h AS (
           SELECT doc_id,
-            list_reduce(
-              list_prepend(14695981039346656037::UBIGINT,
-                list_transform(generate_series(1, length(doc_id::VARCHAR || 'r4')),
-                  i -> ascii(substr(doc_id::VARCHAR || 'r4', i, 1))::UBIGINT)),
-              (acc, b) -> ((xor(acc, b)::HUGEINT * 1099511628211) % 18446744073709551616)::UBIGINT)::HUGEINT AS u
+            ${fnvU("doc_id::VARCHAR || 'r4'")} AS u
           FROM documents)
         SELECT doc_id FROM h
-        WHERE ((CASE WHEN u >= 9223372036854775808::HUGEINT
-                     THEN u - 18446744073709551616::HUGEINT ELSE u END) % 1000000
-               + 1000000) % 1000000 < 100000
+        WHERE ${signedPmod("u", 1000000L)} < 100000
       """.trim,
       // the window formulation the engine-side bounded-heap operator avoids
       "sample_domain_cap" -> """
@@ -1417,10 +1357,8 @@ object SparkEntry {
         WHERE embedding IS NOT NULL
         GROUP BY label, i
       """.trim,
-      "text_fingerprints" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), g0 AS (
+      "text_fingerprints" -> s"""
+        WITH $tokens, g0 AS (
           SELECT doc_id,
             CASE WHEN len(toks) >= 5
               THEN list_transform(generate_series(1, len(toks) - 4),
@@ -1490,9 +1428,7 @@ object SparkEntry {
             s"len(list_filter(toks, t -> list_contains($arr, t))) AS s FROM t"
         }.mkString("\n          UNION ALL ")
         s"""
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents
-        ), scores AS (
+        WITH $tokens, scores AS (
           $scoreSelects
         ), best AS (
           SELECT doc_id, s, lang,
@@ -1510,10 +1446,8 @@ object SparkEntry {
         SELECT term, count(*)::BIGINT AS n FROM toks
         GROUP BY term ORDER BY n DESC, term LIMIT 100
       """.trim,
-      "text_repetition" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), g AS (
+      "text_repetition" -> s"""
+        WITH $tokens, g AS (
           SELECT doc_id,
             CASE WHEN len(toks) >= 3
               THEN list_transform(generate_series(1, len(toks) - 2),
@@ -1524,17 +1458,8 @@ object SparkEntry {
                len(list_distinct(grams))::BIGINT AS n_distinct
         FROM g
       """.trim,
-      "text_contamination" -> """
-        WITH t AS (
-          SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents
-        ), shq AS (
-          SELECT doc_id,
-            list_distinct(CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                   i -> array_to_string(list_slice(toks, i, i + 2), ' '))
-              ELSE [array_to_string(toks, ' ')] END) AS sh
-          FROM t
-        ), bg AS (
+      "text_contamination" -> s"""
+        WITH $shingles, bg AS (
           SELECT DISTINCT unnest(sh) AS g FROM shq WHERE doc_id % 50 = 0
         ), dg AS (
           SELECT doc_id, unnest(sh) AS g FROM shq WHERE doc_id % 50 <> 0

@@ -24,10 +24,12 @@ final case class MarcDoc(doc_id: String, spans: Seq[Span],
   */
 object MarcSource {
 
-  /** Read .mrc file(s) into decoded docs (path may be a glob/directory). */
-  def read(spark: SparkSession, path: String): Dataset[MarcDoc] = {
+  /** Read the .mrc files of a directory into decoded docs; other files in it
+    * are skipped.
+    */
+  def read(spark: SparkSession, dir: String): Dataset[MarcDoc] = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(path)
+    spark.read.format("binaryFile").option("pathGlobFilter", "*.mrc").load(dir)
       .select("path", "content")
       .as[(String, Array[Byte])]
       .flatMap { case (file, bytes) => decodeFile(file, bytes) }

@@ -698,7 +698,7 @@ object Dedup {
     *     collision);
     *   - buckets are capped at `maxBucket` members (deterministic by id
     *     order) so mass-near-identical embeddings — clone farms, all-zero
-    *     rows — cannot go quadratic; audit with [[embeddingBucketStats]];
+    *     rows — cannot go quadratic;
     *   - candidate pairs are deduped across bands BEFORE any vector work,
     *     then both vectors are fetched with ONE extra scan + one
     *     candidate-sized shuffle and cosine is computed once per pair.
@@ -716,30 +716,11 @@ object Dedup {
     // requires unique ids: a duplicated id expands to self-pairs (dropped)
     // and makes its genuine pairs ambiguous at the vector fetch (the nsides
     // filter drops those too)
-    val candidates = bucketPairs(
-      embeddingBands(withVec, bands, rowsPerBand, dims), maxBucket)((_, _) => lit(true))
+    val bandRows = withVec.select(col("id"),
+      posexplode(hyperplaneBands(col("v"), bands, rowsPerBand, dims)).as(Seq("band", "bh")))
+    val candidates = bucketPairs(bandRows, maxBucket)((_, _) => lit(true))
     verifyPairs(candidates, withVec, "v", cosineSim, "cosine", minCosine)
   }
-
-  /** Hyperplane band rows (id, band, bh) of an (id, v) vector table — no
-    * vector column in the band exchange (asserted by a plan test in
-    * OpsSpec).
-    */
-  private def embeddingBands(withVec: DataFrame, bands: Int, rowsPerBand: Int,
-      dims: Int): DataFrame =
-    withVec.select(col("id"),
-      posexplode(hyperplaneBands(col("v"), bands, rowsPerBand, dims))
-        .as(Seq("band", "bh")))
-
-  /** Band-bucket occupancy audit for [[embeddingCosinePairs]]: (band, bh,
-    * n) for buckets of at least `minSize` vectors, over the operator's own
-    * band rows ([[bucketStats]]).
-    */
-  def embeddingBucketStats(df: DataFrame, id: Column, vec: Column,
-      bands: Int = 16, rowsPerBand: Int = 16, dims: Int = 64,
-      minSize: Long = 2): DataFrame =
-    bucketStats(embeddingBands(df.select(id.as("id"), vec.as("v")),
-      bands, rowsPerBand, dims), minSize)
 
   /** Intra-document line dedup: drop repeated lines WITHIN each document,
     * keeping the first occurrence — the per-page counterpart of the global

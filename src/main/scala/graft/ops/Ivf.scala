@@ -14,8 +14,8 @@ import graft.expr.SketchExprs.cosineSim
   * `graft.ops`, [[search]] takes a query TABLE (qid, qvec) and returns
   * (qid, rank, id, cosine).
   *
-  * Scale shape (the reason IVF beats both brute force and LSH at 100 TB for
-  * repeated queries):
+  * Scale shape (the reason IVF beats brute force at 100 TB for repeated
+  * queries):
   *   - TRAIN: each Lloyd iteration is one scan + one aggregation whose
   *     map-side-combined state is k × dims doubles per partition
   *     ([[graft.agg.VectorAvgAgg]]) — never a N × dims shuffle. Train on a

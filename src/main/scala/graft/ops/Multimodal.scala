@@ -6,27 +6,25 @@ import org.apache.spark.sql.functions._
 import graft.io.MediaCodec.{Bmp, BmpCodec, FrameContainer, Wav, WavCodec}
 
 /** Multimodal columns: image/audio/video as opaque `binary` columns with
-  * typed metadata, plus REAL decode / feature-extract / resize / frame-sample
-  * stages over pure-JVM codecs ([[graft.io.MediaCodec]]: RIFF/WAV PCM, 24bpp
-  * BMP, length-prefixed frame container). No stubs: the bytes in the
-  * synthetic catalog are genuine encoded media and the extractors parse them
+  * typed metadata, plus REAL decode / feature-extract / frame-sample stages
+  * over pure-JVM codecs ([[graft.io.MediaCodec]]: RIFF/WAV PCM, 24bpp BMP,
+  * length-prefixed frame container). No stubs: the bytes in the synthetic
+  * catalog are genuine encoded media and the extractors parse them
   * byte-for-byte — verified against a closed-form DuckDB oracle
   * (mm_* queries) that recomputes the decoded features from the generative
   * formulas.
   *
   * Scale shape: decode is embarrassingly parallel (one mapPartitions pass,
-  * one asset at a time, no shuffle); metadata-only stages (mediaStats,
-  * sampleFramePlan) never touch the binary column, so column pruning keeps
-  * payload bytes out of the scan.
+  * one asset at a time, no shuffle); each extractor's kind filter pushes to
+  * the scan, so other kinds' payload bytes are never deserialized.
+  * Malformed payloads are dropped (each codec returns a `Left`, never
+  * throws).
   */
 object Multimodal {
 
   /** Asset row: opaque payload + typed metadata. */
   final case class Asset(doc_id: Long, kind: String, mime: String,
       bytes: Array[Byte], width: Int, height: Int, duration_ms: Long)
-
-  /** Unified embedding width of [[extractFeatures]]. */
-  val FeatureDim = 16
 
   // ------------------------------------------------ synthetic generation ---
   // Closed-form generators (mirrored by the DuckDB oracle SQL in SparkEntry):
@@ -68,9 +66,7 @@ object Multimodal {
 
   /** Deterministic synthetic media catalog over a set of doc ids: every doc
     * gets one asset whose payload is REAL encoded bytes (BMP/WAV/GVF1 by
-    * doc_id % 3). Metadata columns mirror the container truth, so
-    * metadata-only plans (frame-sample planning, media stats) agree with the
-    * bytes.
+    * doc_id % 3). Metadata columns mirror the container truth.
     */
   def syntheticCatalog(ids: Dataset[java.lang.Long]): Dataset[Asset] = {
     import ids.sparkSession.implicits._
@@ -102,8 +98,7 @@ object Multimodal {
   // ----------------------------------------------------------- decoding ---
 
   /** Audio features via real WAV decode: (doc_id, sample_rate, n_samples,
-    * duration_ms, abs_sum, peak). Malformed payloads are dropped here and
-    * surfaced by [[decodeErrors]].
+    * duration_ms, abs_sum, peak). Malformed payloads are dropped.
     */
   def audioFeatures(assets: Dataset[Asset]): DataFrame = {
     import assets.sparkSession.implicits._
@@ -164,17 +159,6 @@ object Multimodal {
     }.toDF("doc_id", "frame_idx", "ts_ms", "lum_sum")
   }
 
-  /** Unified FeatureDim-float embedding per asset (any modality): image ->
-    * 4x4 nearest-neighbor resize luminances / 255; audio -> 16-window RMS /
-    * 32768; video -> frame 0's 4x4 luminances / 255.
-    */
-  def extractFeatures(assets: Dataset[Asset]): DataFrame = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      it.flatMap(a => decodeEmbedding(a).map(f => (a.doc_id, a.kind, f)))
-    }.toDF("doc_id", "kind", "features")
-  }
-
   /** Sum of the luminances of every pixel of a decoded image. */
   private def lumSum(img: Bmp): Long = {
     var sum = 0L
@@ -186,70 +170,4 @@ object Multimodal {
     }
     sum
   }
-
-  private def imageEmbedding(img: Bmp): Array[Float] = {
-    val s = BmpCodec.resizeNearest(img, 4, 4)
-    Array.tabulate(FeatureDim)(i => s.lum(i % 4, i / 4) / 255f)
-  }
-
-  private[graft] def decodeEmbedding(a: Asset): Option[Array[Float]] = a.kind match {
-    case "image" => BmpCodec.decode(a.bytes).toOption.map(imageEmbedding)
-    case "audio" =>
-      WavCodec.decode(a.bytes).toOption.map { w =>
-        val n = w.samples.length
-        Array.tabulate(FeatureDim) { win =>
-          val lo = n.toLong * win / FeatureDim
-          val hi = n.toLong * (win + 1) / FeatureDim
-          if (hi <= lo) 0f
-          else {
-            var sq = 0.0
-            var i = lo
-            while (i < hi) { val v = w.samples(i.toInt).toDouble; sq += v * v; i += 1 }
-            (math.sqrt(sq / (hi - lo)) / 32768.0).toFloat
-          }
-        }
-      }
-    case "video" =>
-      FrameContainer.sampleFrames(a.bytes, Seq(0)).toOption
-        .flatMap(_.headOption).map { case (_, img) => imageEmbedding(img) }
-    case _ => None
-  }
-
-  /** Malformed payloads surfaced as typed rows (decode-time violation
-    * policy): (doc_id, kind, err).
-    */
-  def decodeErrors(assets: Dataset[Asset]): DataFrame = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      it.flatMap { a =>
-        val res: Either[String, Unit] = a.kind match {
-          case "image" => BmpCodec.decode(a.bytes).map(_ => ())
-          case "audio" => WavCodec.decode(a.bytes).map(_ => ())
-          case "video" => FrameContainer.header(a.bytes).map(_ => ())
-          case k       => Left(s"unknown kind '$k'")
-        }
-        res.left.toOption.map(err => (a.doc_id, a.kind, err))
-      }
-    }.toDF("doc_id", "kind", "err")
-  }
-
-  /** Frame-sampling PLAN from typed metadata only (every `everyMs` ms) —
-    * intra-row sequence, no byte reads; the downstream decode fans out one
-    * row per sampled frame only where kind='video'.
-    */
-  def sampleFramePlan(assets: DataFrame, everyMs: Long = 1000L): DataFrame =
-    assets
-      .where(col("kind") === "video")
-      .withColumn("frame_ts",
-        sequence(lit(0L), col("duration_ms"), lit(everyMs)))
-      .select(col("doc_id"), posexplode(col("frame_ts")).as(Seq("frame_idx", "ts_ms")))
-
-  /** Media metadata summary per kind (no byte decode: the binary column is
-    * only length-counted; metadata-only variants prune it entirely).
-    */
-  def mediaStats(assets: DataFrame): DataFrame =
-    assets.groupBy(col("kind")).agg(
-      count(lit(1)).as("n"),
-      sum(length(col("bytes"))).as("total_bytes"),
-      avg(col("duration_ms")).as("avg_duration_ms"))
 }

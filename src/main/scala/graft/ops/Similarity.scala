@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.expr.SketchExprs.{cosineSim, hyperplaneBands}
+import graft.expr.SketchExprs.cosineSim
 
 /** Approximate-nearest-neighbor search over an embedding column. Every
   * search here (and [[Ivf.search]]) takes a query TABLE `(qid, qvec)` —
@@ -13,9 +13,8 @@ import graft.expr.SketchExprs.{cosineSim, hyperplaneBands}
   *
   * Baseline: brute-force cosine top-k ([[topKCosine]]: one scan, no shuffle
   * of corpus data — correct at any scale, O(N·Q·d) work).
-  * Scale path: deterministic random-hyperplane LSH bucketing
-  * ([[annTopKCosine]]) — candidates share a bucket in >=1 band, then exact
-  * re-rank. At 100 TB the bucket join replaces the full scan per query batch.
+  * Scale path: the IVF index ([[Ivf.search]]) — each query scans only its
+  * probed clusters' partitions, then exact re-rank.
   */
 object Similarity {
 
@@ -24,8 +23,8 @@ object Similarity {
     * corpus — so the corpus streams map-side with NO shuffle of corpus data;
     * the grouped top-k is [[graft.agg.TopKAgg]], whose bounded O(k) buffer
     * partial-aggregates map-side, so the only shuffle carries <= k rows per
-    * (task, query). Exact at any scale (the LSH/IVF paths trade exactness
-    * for less compute).
+    * (task, query). Exact at any scale (the IVF path trades exactness for
+    * less compute).
     *
     * @return (qid, rank, id, cosine), rank 1..k per query by
     *         (cosine DESC, id ASC).
@@ -35,42 +34,6 @@ object Similarity {
     val corpus = df.select(id.as("id"), vec.as("v"))
     val q = queries.select(qid.as("qid"), qvec.as("qv"))
     val scored = corpus.join(broadcast(q))
-      .select(col("qid"), col("id"), cosineSim(col("v"), col("qv")).as("cosine"))
-    rankTopK(scored, k)
-  }
-
-  /** LSH-bucketed top-k: prefilter each query to the vectors sharing >=1
-    * hyperplane band bucket with it ([[graft.expr.HyperplaneBands]]), then
-    * exact cosine re-rank. The corpus band rows carry (id, bh) ONLY — the
-    * vector must not ride the x`bands` explode (it did in v1: a x32 copy of
-    * every embedding through the band join); same shape as
-    * [[Dedup.embeddingCosinePairs]], plan-tested in OpsSpec. The query band
-    * keys are broadcast, candidates are deduped to thin (qid, id) rows
-    * across bands, then ONE vector fetch per surviving candidate and a
-    * bounded [[graft.agg.TopKAgg]] top-k per query. Approximate — recall
-    * measured against [[topKCosine]] in OpsSpec.
-    *
-    * Defaults are scale-safe: each band key has 2^rowsPerBand values, so
-    * rowsPerBand=16 (65k buckets per band) keeps expected bucket occupancy
-    * sub-quadratic at corpus scale, and bands=32 buys recall back. On toy
-    * corpora — thousands of rows, where even moderately-similar vectors
-    * must collide to be found — pass a coarser banding explicitly (e.g.
-    * bands=8, rowsPerBand=4, as the OpsSpec recall test does on 500
-    * near-orthogonal vectors).
-    */
-  def annTopKCosine(df: DataFrame, id: Column, vec: Column,
-      queries: DataFrame, qid: Column, qvec: Column, k: Int,
-      bands: Int = 32, rowsPerBand: Int = 16, dims: Int = 64): DataFrame = {
-    val corpus = df.select(id.as("id"), vec.as("v"))
-    val bandRows = corpus.select(col("id"),
-      explode(hyperplaneBands(col("v"), bands, rowsPerBand, dims)).as("bh"))
-    val q = queries.select(qid.as("qid"), qvec.as("qv"))
-    val qBands = q.select(col("qid"),
-      explode(hyperplaneBands(col("qv"), bands, rowsPerBand, dims)).as("bh"))
-    val candIds = bandRows
-      .join(broadcast(qBands), Seq("bh"))
-      .select(col("qid"), col("id")).distinct() // thin (qid, id) exchange
-    val scored = candIds.join(corpus, Seq("id")).join(broadcast(q), Seq("qid"))
       .select(col("qid"), col("id"), cosineSim(col("v"), col("qv")).as("cosine"))
     rankTopK(scored, k)
   }

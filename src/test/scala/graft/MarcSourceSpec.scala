@@ -120,7 +120,7 @@ class MarcSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val good = MarcCodec.encodeStream((0L until 2L).map(Synth.doc(_).spans))
     val cut = MarcCodec.encodeRecord(Synth.doc(2L).spans).take(3)
     Files.write(new java.io.File(dir, "bad.mrc").toPath, good ++ cut)
-    val rows = MarcSource.read(spark, dir.getAbsolutePath + "/*.mrc").collect()
+    val rows = MarcSource.read(spark, dir.getAbsolutePath).collect()
     assert(rows.map(_.decode_violations.size).sorted.toSeq == Seq(0, 0, 1))
     val bad = rows.find(_.decode_violations.nonEmpty).get
     assert(bad.doc_id.endsWith("bad.mrc#2") && bad.spans.isEmpty)
@@ -134,7 +134,7 @@ class MarcSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
       MarcCodec.encodeStream(docs.take(5).map(_.spans)))
     Files.write(new java.io.File(dir, "b.mrc").toPath,
       MarcCodec.encodeStream(docs.drop(5).map(_.spans)))
-    val ds = MarcSource.read(spark, dir.getAbsolutePath + "/*.mrc")
+    val ds = MarcSource.read(spark, dir.getAbsolutePath)
     val rows = ds.collect().sortBy(_.doc_id)
     assert(rows.length == 9)
     // doc_id = the 001 control number (Synth writes "on%012d")
@@ -148,5 +148,16 @@ class MarcSourceSpec extends AnyFunSuite with SparkSessionTestWrapper {
       val cls = (i % Synth.NumClasses).toInt
       assert(verdicts(f"on$i%012d") == (Synth.violationsPerClass(cls) == 0))
     }
+  }
+
+  test("MarcSource reads only the .mrc files of a directory") {
+    val dir = Files.createTempDirectory("graft-marc-mixed").toFile
+    Files.write(new java.io.File(dir, "a.mrc").toPath,
+      MarcCodec.encodeStream((0L until 2L).map(Synth.doc(_).spans)))
+    // valid ISO 2709 bytes under another extension: read, they would decode
+    Files.write(new java.io.File(dir, "b.dat").toPath,
+      MarcCodec.encodeStream((2L until 5L).map(Synth.doc(_).spans)))
+    val ids = MarcSource.read(spark, dir.getAbsolutePath).collect().map(_.doc_id).sorted
+    assert(ids.toSeq == (0L until 2L).map(i => f"on$i%012d"))
   }
 }

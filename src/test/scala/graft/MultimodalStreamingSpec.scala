@@ -14,29 +14,6 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   import spark.implicits._
 
-  test("multimodal: feature extraction is deterministic, batched, and schema-typed") {
-    val assets = Multimodal.syntheticCatalog(spark, 200)
-    val f1 = Multimodal.extractFeatures(assets).orderBy("doc_id").collect()
-    val f2 = Multimodal.extractFeatures(assets.repartition(7)).orderBy("doc_id").collect()
-    assert(f1.length == 200) // every payload decoded — no malformed drops
-    assert(f1.map(_.getSeq[Float](2)).head.size == Multimodal.FeatureDim)
-    // partitioning must not change results
-    assert(f1.map(r => (r.getLong(0), r.getSeq[Float](2))).toSeq ==
-      f2.map(r => (r.getLong(0), r.getSeq[Float](2))).toSeq)
-  }
-
-  test("multimodal: frame-sample plan fans out only video assets, per metadata") {
-    val assets = Multimodal.syntheticCatalog(spark, 99).toDF()
-    val frames = Multimodal.sampleFramePlan(assets, everyMs = 1000)
-    val videos = assets.where($"kind" === "video")
-      .select($"doc_id", (col("duration_ms") / 1000 + 1).cast("long").as("expected"))
-    val got = frames.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val joined = videos.join(got, "doc_id")
-      .where($"n" =!= $"expected")
-    assert(joined.count() == 0)
-    assert(frames.select("doc_id").distinct().count() == videos.count())
-  }
-
   test("multimodal: real decode — features match the generative formulas") {
     val ids = spark.range(60).map(java.lang.Long.valueOf(_))
     val cat = Multimodal.syntheticCatalog(ids)
@@ -76,28 +53,23 @@ class MultimodalStreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
   }
 
   test("multimodal: malformed payloads become typed error rows, never exceptions") {
+    import graft.io.MediaCodec.{BmpCodec, FrameContainer, WavCodec}
     val good = Multimodal.syntheticCatalog(spark, 9)
     val bad = good.map(a => a.copy(bytes = a.bytes.take(6))) // truncate all payloads
-    assert(Multimodal.decodeErrors(good).count() == 0)
-    val errs = Multimodal.decodeErrors(bad).collect()
-    assert(errs.length == 9)
-    assert(errs.forall(_.getString(2).nonEmpty))
+    // each codec turns a truncated payload into a typed error (a Left)
+    bad.collect().foreach { a =>
+      val res = a.kind match {
+        case "image" => BmpCodec.decode(a.bytes)
+        case "audio" => WavCodec.decode(a.bytes)
+        case _       => FrameContainer.header(a.bytes)
+      }
+      assert(res.left.exists(_.nonEmpty), s"doc ${a.doc_id} (${a.kind}) decoded")
+    }
     // extractors drop malformed rows rather than throwing
-    assert(Multimodal.extractFeatures(bad).count() == 0)
     assert(Multimodal.audioFeatures(bad).count() == 0)
-  }
-
-  test("multimodal: media stats prune the binary column from the scan") {
-    val dir = Files.createTempDirectory("graft-media").toString
-    Multimodal.syntheticCatalog(spark, 50).write.mode("overwrite").parquet(dir)
-    val stats = Multimodal.mediaStats(
-      spark.read.parquet(dir).select($"kind", $"bytes", $"duration_ms"))
-    assert(stats.count() == 3)
-    val metaOnly = spark.read.parquet(dir)
-      .groupBy($"kind").agg(count(lit(1)).as("n"), avg($"duration_ms").as("a"))
-    val plan = metaOnly.queryExecution.executedPlan.toString
-    assert(plan.contains("ReadSchema") && !plan.contains("bytes"),
-      s"binary not pruned:\n$plan")
+    assert(Multimodal.imageFeatures(bad).count() == 0)
+    assert(Multimodal.videoFrameFeatures(bad).count() == 0)
+    assert(Multimodal.audioFeatures(good).count() == 3)
   }
 
   test("multimodal: kind filters push to the scan (payload bytes prune per kind)") {
