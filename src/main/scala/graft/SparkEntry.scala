@@ -427,7 +427,7 @@ object SparkEntry {
         .select(col("id").as("doc_id"), col("n_overlap"))
     }),
     // winnowing fingerprint size per doc. Oracle-checked: grams use the
-    // FNV-1a hash (graft.expr.Fnv64), so DuckDB recomputes the full
+    // FNV-1a hash (graft.expr.SketchExprs.fnv64), so DuckDB recomputes the full
     // pipeline — order-preserving distinct grams, signed-min window minima,
     // distinct count — in plain SQL
     // PII scrub pass over a deterministic PII-bearing construction (the

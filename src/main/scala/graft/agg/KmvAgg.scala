@@ -4,8 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -103,7 +102,14 @@ object Kmv {
     * hash (the k-th smallest overall when the buffer is full) — the
     * oracle-recomputable witness of the sketch's entire content boundary.
     */
-  def decode(c: Column): Column = Bridge.column(KmvDecode(Bridge.expression(c)))
+  def decode(c: Column): Column = Bridge.invoke(Kmv, "decodeRow", decodeType, Seq(c))
+
+  /** [[decode]]'s kernel, one row per sketch. */
+  def decodeRow(bytes: Array[Byte]): InternalRow = {
+    val buf = KmvBuf.deserialize(bytes)
+    val kth: Any = if (buf.set.isEmpty) null else buf.set.last().longValue()
+    InternalRow(buf.k, buf.set.size.toLong, kth, buf.estimate)
+  }
 
   val decodeType: StructType = StructType(Seq(
     StructField("k", IntegerType, nullable = false),
@@ -195,21 +201,4 @@ case class KmvMergeAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): KmvMergeAgg =
     copy(child = newChildren.head)
-}
-
-/** Scalar decode of a serialized [[KmvBuf]] (one row per sketch — never a
-  * hot path, so interpreted eval is fine).
-  */
-case class KmvDecode(child: Expression) extends UnaryExpression with CodegenFallback {
-  override def dataType: DataType = Kmv.decodeType
-  override def prettyName: String = "kmv_decode"
-
-  override def nullSafeEval(input: Any): Any = {
-    val buf = KmvBuf.deserialize(input.asInstanceOf[Array[Byte]])
-    val kth: Any = if (buf.set.isEmpty) null else buf.set.last().longValue()
-    InternalRow(buf.k, buf.set.size.toLong, kth, buf.estimate)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): KmvDecode =
-    copy(child = newChild)
 }

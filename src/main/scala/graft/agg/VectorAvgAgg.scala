@@ -4,6 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -60,6 +61,14 @@ case class VectorAvgAgg(
   override def nullable: Boolean = false
   override def dataType: DataType = VectorAvgAgg.resultType
   override def prettyName: String = "vector_avg"
+
+  // fail at analysis: VecBuf reads floats, so a double array would be
+  // summed as pairs of 4-byte halves
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"vector_avg requires an array<float> child (got ${other.catalogString})")
+  }
 
   override def createAggregationBuffer(): VecBuf = new VecBuf(0L, null)
 

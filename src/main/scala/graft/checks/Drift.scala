@@ -196,6 +196,9 @@ object Drift {
     * `psiGrouped`'s cross join every group holds at least the baseline's
     * categories, so a baseline of unbounded category cardinality (free-text
     * values rather than kinds or tags) wants its categories bucketed first.
+    * Tested bound (ChecksSpec): one group of 100 000 categories against a
+    * 100 000-category baseline, 150 000 categories in all, scores within
+    * 1e-9 of a plain-Scala PSI in the test suite's 8 GB heap.
     */
   private def psiTagged(tagged: DataFrame): DataFrame = {
     val byG = tagged

@@ -1,8 +1,6 @@
 package graft.checks
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
@@ -43,7 +41,8 @@ object ExactQuantile {
 
   /** Order-preserving signed code of a double, in Spark's order: -0.0 and
     * 0.0 share a code, and NaN (every NaN bit pattern) sorts above +Infinity.
-    * Public because generated code calls it.
+    * Public because generated code calls it: a float or double column's
+    * radix code is this method's [[Bridge.invoke]] call.
     */
   def orderKey(d: Double): Long = {
     val b = java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
@@ -99,7 +98,7 @@ object ExactQuantile {
     val k = col("k")
     val code =
       if (integral) value.cast(LongType)
-      else Bridge.column(DoubleOrderKey(Bridge.expression(value.cast(DoubleType))))
+      else Bridge.invoke(ExactQuantile, "orderKey", LongType, Seq(value.cast(DoubleType)))
     val keys = df.where(value.isNotNull).select(code.as("k"))
     def prefixCounts(rows: Array[Row]): Array[(Long, Long)] =
       rows.map(r => r.getLong(0) -> r.getLong(1))
@@ -157,21 +156,4 @@ object ExactQuantile {
     while (before + counts(i)._2 < rank) { before += counts(i)._2; i += 1 }
     Target(shift, counts(i)._1, counts(i)._2, rank - before)
   }
-}
-
-/** double_order_key(d) -> bigint: [[ExactQuantile.orderKey]] as a codegen'd
-  * expression, the radix code of a float or double value column.
-  */
-private[checks] case class DoubleOrderKey(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "double_order_key"
-
-  override def nullSafeEval(input: Any): Any =
-    ExactQuantile.orderKey(input.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.checks.ExactQuantile.orderKey($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): DoubleOrderKey =
-    copy(child = newChild)
 }

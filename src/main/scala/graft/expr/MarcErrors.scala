@@ -1,11 +1,9 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.schema.Violation
@@ -110,50 +108,22 @@ object MarcErrors {
     sb.toString
   }
 
+  /** `marc_errors_json(violations)` -> string: [[json]] over the fields of
+    * a violations array, taken by name. Null violations give null.
+    */
   def jsonColumn(violations: Column): Column =
-    Bridge.column(MarcErrorsJsonExpr(Bridge.expression(violations)))
-}
+    Bridge.invoke(MarcErrors, "jsonFields", StringType,
+      Seq("rule_id", "loc", "tag", "code", "msg", "input", "ctx").map(violations(_)))
 
-/** `marc_errors_json(violations)` -> string. */
-case class MarcErrorsJsonExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "marc_errors_json"
-
-  @transient private lazy val ords: Map[String, Int] = child.dataType match {
-    case ArrayType(st: StructType, _) =>
-      st.fields.map(_.name).zipWithIndex.toMap
-    case _ => Map.empty
+  /** [[jsonColumn]]'s kernel over the parallel violation field arrays. */
+  def jsonFields(ruleIds: ArrayData, locs: ArrayData, tags: ArrayData, codes: ArrayData,
+      msgs: ArrayData, inputs: ArrayData, ctxs: ArrayData): UTF8String = {
+    def str(a: ArrayData, i: Int) = if (a.isNullAt(i)) null else a.getUTF8String(i).toString
+    def strs(a: ArrayData) = (0 until a.numElements()).map(str(a, _))
+    UTF8String.fromString(json((0 until ruleIds.numElements()).map { i =>
+      val ctx = ctxs.getMap(i)
+      Violation(str(ruleIds, i), strs(locs.getArray(i)), str(tags, i), str(codes, i),
+        str(msgs, i), str(inputs, i), strs(ctx.keyArray()).zip(strs(ctx.valueArray())).toMap)
+    }))
   }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val o = ords
-    val vs = (0 until arr.numElements()).map { i =>
-      val r = arr.getStruct(i, o.size)
-      def str(name: String): String = {
-        val ix = o(name)
-        if (r.isNullAt(ix)) null else r.getUTF8String(ix).toString
-      }
-      val locArr = r.getArray(o("loc"))
-      val loc = (0 until locArr.numElements()).map(j => locArr.getUTF8String(j).toString)
-      val ctxMap = r.getMap(o("ctx"))
-      val keys = ctxMap.keyArray(); val vals = ctxMap.valueArray()
-      val ctx = (0 until ctxMap.numElements()).map { j =>
-        keys.getUTF8String(j).toString ->
-          (if (vals.isNullAt(j)) null else vals.getUTF8String(j).toString)
-      }.toMap
-      Violation(str("rule_id"), loc, str("tag"), str("code"), str("msg"),
-        str("input"), ctx)
-    }
-    UTF8String.fromString(MarcErrors.json(vs))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("marcErrors", this, classOf[MarcErrorsJsonExpr].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $ref.nullSafeEval($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MarcErrorsJsonExpr =
-    copy(child = newChild)
 }

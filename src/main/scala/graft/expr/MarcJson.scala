@@ -1,11 +1,9 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType, StructType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.schema.Span
@@ -87,40 +85,17 @@ object MarcJson {
     sb.toString
   }
 
+  /** `marc_json(spans)` -> string: [[serialize]] over the `kind` and `text`
+    * fields of a spans array, taken by name, so the scan reads only those
+    * two leaves. Null spans give null.
+    */
   def column(spans: Column): Column =
-    Bridge.column(MarcJsonExpr(Bridge.expression(spans)))
-}
+    Bridge.invoke(MarcJson, "serializeFields", StringType, Seq(spans("kind"), spans("text")))
 
-/** `marc_json(spans)` -> string (codegen via kernel call, like ValidateSpans). */
-case class MarcJsonExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "marc_json"
-
-  @transient private lazy val ords: (Int, Int, Int) = child.dataType match {
-    case ArrayType(st: StructType, _) =>
-      (st.fields.indexWhere(_.name == "kind"), st.fields.indexWhere(_.name == "text"), st.size)
-    case _ => (-1, -1, -1)
+  /** [[column]]'s kernel over the parallel kind and text arrays. */
+  def serializeFields(kinds: ArrayData, texts: ArrayData): UTF8String = {
+    def str(a: ArrayData, i: Int) = if (a.isNullAt(i)) null else a.getUTF8String(i).toString
+    UTF8String.fromString(serialize(
+      (0 until kinds.numElements()).map(i => Span(str(kinds, i), str(texts, i), null, i))))
   }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val (kOrd, tOrd, nf) = ords
-    val spans = (0 until arr.numElements()).map { i =>
-      val r = arr.getStruct(i, nf)
-      Span(
-        if (r.isNullAt(kOrd)) null else r.getUTF8String(kOrd).toString,
-        if (r.isNullAt(tOrd)) null else r.getUTF8String(tOrd).toString,
-        null, i)
-    }
-    UTF8String.fromString(MarcJson.serialize(spans))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("marcJson", this, classOf[MarcJsonExpr].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.unsafe.types.UTF8String) $ref.nullSafeEval($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MarcJsonExpr =
-    copy(child = newChild)
 }

@@ -1,9 +1,9 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{coalesce, lit, when}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,264 +30,10 @@ object Mix64 {
   }
 }
 
-/** minhash_sig(shingles, k) -> array<bigint>: k min-hash values over a string
-  * array, one pass (O(shingles * k) mixes, no per-hash string re-hash).
-  * Empty/null input -> k sentinel Long.MaxValue values (matches no band).
+/** The sketch kernels: static methods that [[SketchExprs]] puts in a plan
+  * with [[Bridge.invoke]]. The vector kernels read `array<float>` or
+  * `array<double>` input, as their `isFloat` flag says.
   */
-case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.minhash(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) graft.expr.SketchKernels.minhash($c, $numHashes)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** simhash64(tokens) -> bigint: 64-bit SimHash over a string array (sign of
-  * per-bit weighted sums of token hashes).
-  */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.simhash(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.SketchKernels.simhash($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-/** fnv64(s) -> bigint: FNV-1a 64 over the string's UTF-8 bytes — the same
-  * base hash the minhash/simhash family uses ([[Mix64.hashUtf8]]). Exposed
-  * as a Column so operators whose outputs must be ORACLE-reproducible
-  * (winnowing fingerprints) can use a hash DuckDB can recompute in plain
-  * SQL (xor + modular multiply), unlike xxhash64's stripe algorithm.
-  */
-case class Fnv64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fnv64"
-
-  override def nullSafeEval(input: Any): Any =
-    Mix64.hashUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.Mix64.hashUtf8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Fnv64 =
-    copy(child = newChild)
-}
-
-/** cosine_rank(vec) -> array<int>: the `n` best centroids (rows of the
-  * constant `centroids` matrix) for `vec`, best first — the one IVF
-  * cluster-ranking kernel: assignment is rank 1 ([[graft.ops.Ivf.clusterOf]]),
-  * probing is the first nProbe ([[graft.ops.Ivf.probeClusters]]), so a
-  * partial probe always reaches the cluster a vector was assigned to. Order:
-  * `Double.compare` on the negated cosine (the cosine uses the same double
-  * accumulation order as [[SketchKernels.cosine]]), ties to the lower
-  * index, so a NaN cosine ranks LAST; on a dimension mismatch the clusters
-  * come back in index order. One fused codegen'd loop (k·dims multiply-adds
-  * plus an n·k selection); the centroid matrix rides a codegen reference
-  * object, so the generated source is identical across models and the
-  * codegen cache hits.
-  */
-case class CosineRank(child: Expression, centroids: Array[Array[Float]], n: Int)
-    extends UnaryExpression {
-  require(centroids.nonEmpty && n >= 1 && n <= centroids.length)
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "cosine_rank"
-
-  @transient private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.rankCosine(input.asInstanceOf[ArrayData], centroids, isFloat, n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("centroids", centroids, "float[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) " +
-        s"graft.expr.SketchKernels.rankCosine($c, $cRef, $isFloat, $n)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CosineRank =
-    copy(child = newChild)
-}
-
-/** minhash_band_keys(sig) -> array<bigint>: per-band LSH bucket keys over a
-  * minhash signature, bit-identical to the SQL formulation
-  * `array(xxhash64(lit(b), slice(sig, b*rows+1, rows)) for b < bands)` it
-  * replaces: Spark's XxHash64 chains its children left-to-right from seed
-  * 42 (int via XXH64.hashInt, array elements via XXH64.hashLong — both
-  * public statics reused here verbatim), so the fused loop reproduces the
-  * exact key values. The point is code size, not hashing speed: the
-  * 32-slice SQL array generated ~32 inlined xxhash64-over-slice hashers,
-  * which the first minhash query of every session paid as janino compile
-  * time. Requires a non-null LongType signature with containsNull=false
-  * ([[MinHashSig]]'s output contract).
-  */
-case class MinhashBandKeys(child: Expression, bands: Int, rowsPerBand: Int)
-    extends UnaryExpression {
-  require(bands > 0 && rowsPerBand > 0)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_band_keys"
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.minhashBandKeys(input.asInstanceOf[ArrayData], bands, rowsPerBand)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) " +
-        s"graft.expr.SketchKernels.minhashBandKeys($c, $bands, $rowsPerBand)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashBandKeys =
-    copy(child = newChild)
-}
-
-/** langid_ngram(lowered_text) -> string: argmax over per-language
-  * profile-gram occurrence totals — the fused kernel behind
-  * [[graft.ops.TextAnalysis.langIdNgram]]. Value-identical to the
-  * `greatest()` over per-gram replace()-count columns it replaces: each
-  * gram's count is its non-overlapping left-to-right occurrence count
-  * (indexOf stepping by the gram length — exactly what the
-  * (len - len(replace(t, g, ''))) / len(g) formulation measures), the
-  * winner is the max (score, lang) pair with ties to the
-  * lexicographically larger code (struct-greatest semantics), and a zero
-  * total yields "und". One pass per gram without the per-gram full-string
-  * replace ALLOCATION (the old form materialized ~31 rewritten copies of
-  * the text per row).
-  */
-case class LangIdNgram(child: Expression, profiles: Seq[(String, Seq[String])])
-    extends UnaryExpression {
-  require(profiles.nonEmpty && profiles.forall(_._2.nonEmpty))
-  override def dataType: DataType = StringType
-  override def prettyName: String = "langid_ngram"
-
-  @transient private lazy val langsU: Array[UTF8String] =
-    profiles.map(p => UTF8String.fromString(p._1)).toArray
-  @transient private lazy val gramsU: Array[Array[UTF8String]] =
-    profiles.map(_._2.map(UTF8String.fromString).toArray).toArray
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.langIdNgram(input.asInstanceOf[UTF8String], langsU, gramsU)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val lRef = ctx.addReferenceObj("langs", langsU,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    val gRef = ctx.addReferenceObj("grams", gramsU,
-      "org.apache.spark.unsafe.types.UTF8String[][]")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expr.SketchKernels.langIdNgram($c, $lRef, $gRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): LangIdNgram =
-    copy(child = newChild)
-}
-
-/** cosine_sim(a, b) -> double over two float/double arrays — the ANN hot
-  * path; a tight fused loop instead of zip_with+aggregate lambda towers.
-  * Returns 0.0 when either norm is 0; null on length mismatch.
-  */
-case class CosineSim(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_sim"
-  override def nullable: Boolean = true
-
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-  @transient private lazy val lf = isFloat(left)
-  @transient private lazy val rf = isFloat(right)
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchKernels.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], lf, rf)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val res = ctx.freshName("cos")
-      s"""
-         |java.lang.Double $res = graft.expr.SketchKernels.cosine($a, $b, $lf, $rf);
-         |if ($res == null) { ${ev.isNull} = true; } else { ${ev.value} = $res.doubleValue(); }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
-    copy(left = l, right = r)
-}
-
-/** hyperplane_bands(vec, bands, rowsPerBand, dims) -> array<bigint>: per-band
-  * random-hyperplane LSH bucket keys. Plane weights derive from
-  * Mix64(planeSeed ^ Mix64(dim)) scaled to [-1,1) — deterministic on every
-  * executor, no materialized plane table, any dimensionality. `dims` is a
-  * loud-fail contract check: a vector of any other length throws (silent
-  * null-padding corrupted signatures in an earlier formulation). Band key =
-  * Mix64(Mix64(band) ^ packed sign bits), so keys from different bands never
-  * share a bucket space.
-  *
-  * This replaces an interpreted higher-order-function tower (nested
-  * transform/aggregate lambdas: bands x rows x dims interpreted closures per
-  * row — measured minutes for a few hundred rows) with one fused codegen'd
-  * loop: ~bands*rows*dims multiply-adds per row.
-  */
-case class HyperplaneBands(child: Expression, bands: Int, rowsPerBand: Int,
-    dims: Int) extends UnaryExpression {
-  require(bands > 0 && rowsPerBand > 0 && rowsPerBand <= 62 && dims > 0)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "hyperplane_bands"
-
-  @transient private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  // Plane weights are pure functions of (band, row, dim): precompute them
-  // ONCE per expression instance (per task after deserialization; ~128 KB at
-  // 16x16x64) instead of re-deriving 2 Mix64 calls per multiply-add in the
-  // row kernel — measured ~2.4x kernel speedup (see BENCH/BASELINE.md).
-  // Values identical to the in-loop derivation (pinned in OpsSpec), so
-  // signatures (and every persisted LSH key) are unchanged.
-  @transient private lazy val planeTable: Array[Double] =
-    HyperplaneBands.planes(bands, rowsPerBand, dims)
-
-  override def nullSafeEval(input: Any): Any =
-    SketchKernels.hyperplaneBands(input.asInstanceOf[ArrayData],
-      bands, rowsPerBand, dims, isFloat, planeTable)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planeTable, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"(org.apache.spark.sql.catalyst.util.ArrayData) " +
-        s"graft.expr.SketchKernels.hyperplaneBands($c, $bands, $rowsPerBand, $dims, $isFloat, $planesRef)")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): HyperplaneBands =
-    copy(child = newChild)
-}
-
-object HyperplaneBands {
-  /** Flat (bands*rows) x dims plane-weight table, row-major; weight of
-    * (plane p = b*rows + r, dim d) = Mix64(Mix64(p) ^ Mix64(d)) / 2^63,
-    * in [-1, 1) — byte-identical to the previous per-row derivation.
-    */
-  def planes(bands: Int, rows: Int, dims: Int): Array[Double] =
-    Array.tabulate(bands * rows * dims) { idx =>
-      val planeSeed = Mix64.mix((idx / dims).toLong)
-      Mix64.mix(planeSeed ^ Mix64.mix((idx % dims).toLong)).toDouble / 9.223372036854776e18
-    }
-}
-
-/** Static kernels callable from generated java code. */
 object SketchKernels {
   def minhash(arr: ArrayData, numHashes: Int): ArrayData = {
     val sig = Array.fill(numHashes)(Long.MaxValue)
@@ -328,6 +74,16 @@ object SketchKernels {
     while (b < 64) { if (acc(b) > 0) out |= (1L << b); b += 1 }
     out
   }
+
+  /** Flat (bands*rows) x dims plane-weight table of [[hyperplaneBands]],
+    * row-major: weight of (plane p = b*rows + r, dim d) is
+    * Mix64(Mix64(p) ^ Mix64(d)) / 2^63, in [-1, 1).
+    */
+  def planes(bands: Int, rows: Int, dims: Int): Array[Double] =
+    Array.tabulate(bands * rows * dims) { idx =>
+      val planeSeed = Mix64.mix((idx / dims).toLong)
+      Mix64.mix(planeSeed ^ Mix64.mix((idx % dims).toLong)).toDouble / 9.223372036854776e18
+    }
 
   def hyperplaneBands(vec: ArrayData, bands: Int, rows: Int, dims: Int,
       isFloat: Boolean, planes: Array[Double]): ArrayData = {
@@ -473,21 +229,113 @@ object SketchKernels {
   }
 }
 
+/** Column forms of the sketch kernels, each one [[Bridge.invoke]] call. A
+  * null input gives a null result.
+  */
 object SketchExprs {
+  private val LongArray = ArrayType(LongType, containsNull = false)
+
+  /** The vector kernels' float flag, true when `v` is an array of floats; a
+    * literal once constant folding has run. `coalesce` turns 0.1f into
+    * `v`'s element type, and only a float prints as "0.1" (a double prints
+    * 0.10000000149011612). `typeof(v) === "array<float>"` would read simpler,
+    * but Spark 4.1 generates Java for `typeof` that does not compile, and a
+    * filter over a local relation compiles the flag before folding it.
+    */
+  private def isFloat(v: Column): Column =
+    coalesce(when(lit(false), v)(0), lit(0.1f)).cast("string") === "0.1"
+
+  /** minhash_sig(shingles, k) -> array<bigint>: k min-hash values over a
+    * string array, one pass (O(shingles * k) mixes, no per-hash string
+    * re-hash). An empty array gives k sentinel Long.MaxValue values, which
+    * match no band.
+    */
   def minhashSig(c: Column, numHashes: Int = 64): Column =
-    Bridge.column(MinHashSig(Bridge.expression(c), numHashes))
-  def fnv64(c: Column): Column =
-    Bridge.column(Fnv64(Bridge.expression(c)))
+    Bridge.invoke(SketchKernels, "minhash", LongArray, Seq(c, lit(numHashes)))
+
+  /** fnv64(s) -> bigint: FNV-1a 64 over the string's UTF-8 bytes, the base
+    * hash of the minhash/simhash family ([[Mix64.hashUtf8]]). Operators
+    * whose outputs the oracle reproduces (winnowing fingerprints, hash
+    * sampling) use it because DuckDB recomputes it in plain SQL (xor plus
+    * modular multiply), unlike xxhash64's stripe algorithm.
+    */
+  def fnv64(c: Column): Column = Bridge.invoke(Mix64, "hashUtf8", LongType, Seq(c))
+
+  /** simhash64(tokens) -> bigint: 64-bit SimHash over a string array (sign
+    * of the per-bit weighted sums of the token hashes).
+    */
   def simhash64(c: Column): Column =
-    Bridge.column(SimHash64(Bridge.expression(c)))
+    Bridge.invoke(SketchKernels, "simhash", LongType, Seq(c))
+
+  /** cosine_sim(a, b) -> double over two float or double arrays, the ANN
+    * hot path: one fused loop instead of zip_with+aggregate lambda towers.
+    * 0.0 when either norm is 0; null on a length mismatch.
+    */
   def cosineSim(a: Column, b: Column): Column =
-    Bridge.column(CosineSim(Bridge.expression(a), Bridge.expression(b)))
-  def hyperplaneBands(vec: Column, bands: Int, rowsPerBand: Int, dims: Int): Column =
-    Bridge.column(HyperplaneBands(Bridge.expression(vec), bands, rowsPerBand, dims))
-  def cosineRank(vec: Column, centroids: Array[Array[Float]], n: Int): Column =
-    Bridge.column(CosineRank(Bridge.expression(vec), centroids, n))
-  def langIdNgram(loweredText: Column, profiles: Seq[(String, Seq[String])]): Column =
-    Bridge.column(LangIdNgram(Bridge.expression(loweredText), profiles))
-  def minhashBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    Bridge.column(MinhashBandKeys(Bridge.expression(sig), bands, rowsPerBand))
+    Bridge.invoke(SketchKernels, "cosine", DoubleType,
+      Seq(a, b, isFloat(a), isFloat(b)), returnsNull = true)
+
+  /** hyperplane_bands(vec) -> array<bigint>: per-band random-hyperplane LSH
+    * bucket keys over a `dims`-long vector; any other length throws, since
+    * silent null-padding corrupted signatures in an earlier formulation.
+    * Plane weights come from [[SketchKernels.planes]], built once per plan
+    * instead of two Mix64 calls per multiply-add (measured ~2.4x kernel
+    * speedup, see BENCH/BASELINE.md; values pinned in OpsSpec). Band key =
+    * Mix64(Mix64(band) ^ packed sign bits), so keys from different bands
+    * never share a bucket space. This replaces an interpreted tower of
+    * nested transform/aggregate lambdas (minutes for a few hundred rows)
+    * with one loop of ~bands*rows*dims multiply-adds per row.
+    */
+  def hyperplaneBands(vec: Column, bands: Int, rowsPerBand: Int, dims: Int): Column = {
+    require(bands > 0 && rowsPerBand > 0 && rowsPerBand <= 62 && dims > 0)
+    Bridge.invoke(SketchKernels, "hyperplaneBands", LongArray,
+      Seq(vec, lit(bands), lit(rowsPerBand), lit(dims), isFloat(vec),
+        Bridge.constant(SketchKernels.planes(bands, rowsPerBand, dims))))
+  }
+
+  /** cosine_rank(vec) -> array<int>: the `n` best rows of `centroids` for
+    * `vec`, best first, the one IVF cluster-ranking kernel: assignment is
+    * rank 1 ([[graft.ops.Ivf.clusterOf]]) and probing the first nProbe
+    * ([[graft.ops.Ivf.probeClusters]]), so a partial probe always reaches
+    * the cluster a vector was assigned to. Order: `Double.compare` on the
+    * negated cosine (accumulated as in [[SketchKernels.cosine]]), ties to
+    * the lower index, so a NaN cosine ranks last; on a dimension mismatch
+    * the clusters come back in index order. The centroids are a plan
+    * constant, so the generated code is the same for every model.
+    */
+  def cosineRank(vec: Column, centroids: Array[Array[Float]], n: Int): Column = {
+    require(centroids.nonEmpty && n >= 1 && n <= centroids.length)
+    Bridge.invoke(SketchKernels, "rankCosine", ArrayType(IntegerType, containsNull = false),
+      Seq(vec, Bridge.constant(centroids), isFloat(vec), lit(n)))
+  }
+
+  /** langid_ngram(lowered_text) -> string: argmax over per-language
+    * profile-gram occurrence totals, the kernel behind
+    * [[graft.ops.TextAnalysis.langIdNgram]]. Value-identical to the
+    * `greatest()` over per-gram replace()-count columns it replaces: a
+    * gram's count is its non-overlapping left-to-right occurrence count
+    * (what (len - len(replace(t, g, ''))) / len(g) measures), the winner is
+    * the max (score, lang) pair with ties to the larger code, and a zero
+    * total gives "und". It makes no rewritten copy of the text per gram.
+    */
+  def langIdNgram(loweredText: Column, profiles: Seq[(String, Seq[String])]): Column = {
+    require(profiles.nonEmpty && profiles.forall(_._2.nonEmpty))
+    Bridge.invoke(SketchKernels, "langIdNgram", StringType, Seq(loweredText,
+      Bridge.constant(profiles.map(p => UTF8String.fromString(p._1)).toArray),
+      Bridge.constant(profiles.map(_._2.map(UTF8String.fromString).toArray).toArray)))
+  }
+
+  /** minhash_band_keys(sig) -> array<bigint>: per-band LSH bucket keys of a
+    * [[minhashSig]] signature, bit-identical to
+    * `array(xxhash64(lit(b), slice(sig, b*rows+1, rows)) for b < bands)`:
+    * Spark's XxHash64 chains its children left to right from seed 42 (an
+    * int via XXH64.hashInt, array elements via XXH64.hashLong, both reused
+    * here), so the loop gives the same keys. The point is code size: the
+    * 32-slice SQL array generated ~32 inlined hashers for janino to compile.
+    */
+  def minhashBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column = {
+    require(bands > 0 && rowsPerBand > 0)
+    Bridge.invoke(SketchKernels, "minhashBandKeys", LongArray,
+      Seq(sig, lit(bands), lit(rowsPerBand)))
+  }
 }

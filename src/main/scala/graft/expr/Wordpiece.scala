@@ -1,10 +1,6 @@
 package graft.expr
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -68,7 +64,9 @@ object WordpieceKernel {
     StructField("n_words", IntegerType, nullable = false),
     StructField("n_pieces", IntegerType, nullable = false)))
 
-  /** (n_words, n_pieces) of one text. Static entry point for codegen. */
+  /** (n_words, n_pieces) of one text: the kernel of
+    * [[graft.ops.TextAnalysis.subwordStats]].
+    */
   def stats(s: UTF8String): InternalRow = {
     val bytes = s.getBytes
     var words = 0
@@ -110,25 +108,4 @@ object WordpieceKernel {
     }
     InternalRow(words, pieces)
   }
-}
-
-/** `wordpiece_stats(text)` -> struct(n_words, n_pieces) via
-  * [[WordpieceKernel]]. Null text -> null.
-  */
-case class WordpieceStats(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = WordpieceKernel.statsType
-  override def prettyName: String = "wordpiece_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    WordpieceKernel.stats(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.expr.WordpieceKernel.stats($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordpieceStats =
-    copy(child = newChild)
-}
-
-object WordpieceStats {
-  def stats(c: Column): Column = Bridge.column(WordpieceStats(Bridge.expression(c)))
 }

@@ -191,7 +191,7 @@ object Dedup {
     df.where(text.isNotNull).select(id.as("id"), shingles(text, n).as("sh"))
 
   /** MinHash band rows (id, sige, band, bh), one per doc and band. Band
-    * keys come from one fused kernel (MinhashBandKeys), bit-identical to
+    * keys come from one kernel call (minhashBandKeys), bit-identical to
     * xxhash64(band, sig-slice) (parity-pinned in OpsSpec): a sequence lambda
     * over `sig` re-evaluated the minhash per band (176 s vs 23 s), and a
     * literal array of 32 slices made janino compile 32 inlined hashers.
@@ -688,9 +688,9 @@ object Dedup {
   }
 
   /** Embedding near-dup pairs: random-hyperplane LSH (deterministic in-plan
-    * hash-derived planes, any dimensionality — see
-    * [[graft.expr.HyperplaneBands]]) -> capped band buckets -> exact cosine
-    * verification, mirroring the [[minhashPairs]] scale shape exactly:
+    * hash-derived planes, any dimensionality — see [[hyperplaneBands]]) ->
+    * capped band buckets -> exact cosine verification, mirroring the
+    * [[minhashPairs]] scale shape exactly:
     *
     *   - the band shuffle carries only (band, bucket-hash, id) — the vector
     *     never rides the x`bands` fan-out (an earlier formulation shuffled

@@ -63,7 +63,7 @@ object Ivf {
   }
 
   /** Cosine-nearest cluster id for `vec`, ties to the lower cluster id: rank
-    * 1 of [[graft.expr.CosineRank]], the kernel [[probeClusters]] ranks
+    * 1 of [[graft.expr.SketchExprs.cosineRank]], the kernel [[probeClusters]] ranks
     * with — so a partial probe always reaches the cluster a vector was
     * assigned to, and full probe is exact.
     */
@@ -71,7 +71,8 @@ object Ivf {
     graft.expr.SketchExprs.cosineRank(vec, model.centroids, 1).getItem(0)
 
   /** The `nProbe` clusters nearest `vec`, best first, as an array column
-    * (cosine DESC, ties to the lower cluster id; [[graft.expr.CosineRank]]).
+    * (cosine DESC, ties to the lower cluster id;
+    * [[graft.expr.SketchExprs.cosineRank]]).
     * k × dims multiply-adds per query row, map-only.
     */
   def probeClusters(vec: Column, model: Model, nProbe: Int): Column = {

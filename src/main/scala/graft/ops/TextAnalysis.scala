@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Text-analysis operators for training-data curation: token counting,
   * quality scoring, language identification, and document fingerprinting.
@@ -27,10 +28,12 @@ object TextAnalysis {
 
   /** Real subword tokenization: vocabulary-driven greedy longest-match
     * wordpiece counting over ASCII-letter word runs — see
-    * [[graft.expr.WordpieceKernel]]. struct(n_words, n_pieces); codegen'd
-    * per-row kernel, no shuffle.
+    * [[graft.expr.WordpieceKernel]]. struct(n_words, n_pieces), null for a
+    * null text; a per-row kernel call, no shuffle.
     */
-  def subwordStats(text: Column): Column = graft.expr.WordpieceStats.stats(text)
+  def subwordStats(text: Column): Column =
+    Bridge.invoke(graft.expr.WordpieceKernel, "stats", graft.expr.WordpieceKernel.statsType,
+      Seq(text))
 
   /** Quality metrics struct: n_chars, n_tokens, punct chars, digit chars,
     * stopword hits, mean token length — inputs for a curation filter.
@@ -109,7 +112,7 @@ object TextAnalysis {
     * scores. Pure codegen'd columns, no shuffle.
     */
   def langIdNgram(text: Column): Column =
-    // one fused codegen'd kernel ([[graft.expr.LangIdNgram]]) instead of a
+    // one kernel call (SketchExprs.langIdNgram) instead of a
     // greatest() over ~31 per-gram replace()-count columns, each of which
     // allocated a rewritten copy of the text per row; value parity with
     // the column formulation (including the null -> "und" path, handled
@@ -233,7 +236,7 @@ object TextAnalysis {
   /** Winnowing-style document fingerprint: k-gram hashes, window minima,
     * distinct — robust to small edits. Composed from higher-order
     * functions; `size(array_intersect(fp_a, fp_b))` estimates overlap.
-    * Gram hash is FNV-1a ([[graft.expr.Fnv64]]) so the whole pipeline is
+    * Gram hash is FNV-1a ([[graft.expr.SketchExprs.fnv64]]) so the whole pipeline is
     * reproducible by the DuckDB oracle in plain SQL (signed-min semantics
     * over the two's-complement hash values).
     */

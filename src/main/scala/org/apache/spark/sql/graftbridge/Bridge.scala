@@ -4,9 +4,11 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{DataType, ObjectType}
 
 /** Column <-> catalyst Expression bridge. Spark 4.x made this interop
   * package-private (`org.apache.spark.sql.classic.ExpressionUtils`), so the
@@ -16,6 +18,26 @@ import org.apache.spark.sql.execution.SQLExecution
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A call of the method `method` of the Scala object `kernels` on `args`,
+    * as Spark's own `StaticInvoke`: generated code calls the object's static
+    * forwarder directly, interpreted eval calls it by reflection. The
+    * method's parameters take the arguments' internal classes (`ArrayData`,
+    * `UTF8String`, `InternalRow`, `Array[Byte]`, a primitive, or a
+    * [[constant]]'s class) and it returns `dataType`'s. A null argument
+    * makes the result null without a call; `returnsNull` says the method
+    * itself may return null. Alias the column: a `StaticInvoke` has no SQL
+    * name of its own.
+    */
+  def invoke(kernels: AnyRef, method: String, dataType: DataType, args: Seq[Column],
+      returnsNull: Boolean = false): Column =
+    column(StaticInvoke(kernels.getClass, dataType, method, args.map(expression),
+      returnNullable = returnsNull))
+
+  /** A plan-time constant for an [[invoke]] parameter of `v`'s class;
+    * generated code reads it from the plan's reference objects.
+    */
+  def constant(v: AnyRef): Column = column(Literal(v, ObjectType(v.getClass)))
 
   /** Folds every row of `df` into one small value: each task folds its
     * partition's rows into its own copy of `zero` with `add`, and the driver

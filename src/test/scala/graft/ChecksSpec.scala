@@ -438,6 +438,21 @@ class ChecksSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(got("g3") > 1.0)           // novel + vanished category -> loud
   }
 
+  test("grouped PSI scores 100 000 categories against a 100 000-category baseline") {
+    // one group holding every category: its (n_cur, n_base) pairs are
+    // collected into one row, the heap bound psiTagged states
+    val n = 100000L
+    val grouped = spark.range(n)
+      .select(lit("g").as("g"), $"id".cast("string").as("cat"), ($"id" % 7 + 1).as("n"))
+    val baseline = spark.range(n / 2, n + n / 2)
+      .select($"id".cast("string").as("cat"), ($"id" % 5 + 1).as("n_base"))
+    val got = Drift.psiGrouped(grouped, baseline, $"g", $"cat", $"n").collect()
+    val ref = refPsi((0L until n).map(i => Option(i.toString) -> (i % 7 + 1)).toMap,
+      (n / 2 until n + n / 2).map(i => Option(i.toString) -> (i % 5 + 1)).toMap)
+    assert(got.length == 1)
+    assert(math.abs(got.head.getDouble(1) - ref) < 1e-9, s"${got.head.getDouble(1)} vs $ref")
+  }
+
   test("psiGrouped defensively sums duplicated (group, cat) input rows") {
     val base = Seq(("a", 50L), ("b", 50L)).toDF("cat", "n_base")
     val pre = Seq(("g1", "a", 30L), ("g1", "b", 70L)).toDF("g", "cat", "n")

@@ -53,6 +53,13 @@ class IvfSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(empty.getLong(0) == 0L && empty.isNullAt(1))
   }
 
+  test("vectorAvg rejects an array<double> column at analysis") {
+    // its buffer reads floats, so doubles would be summed as 4-byte halves
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      Seq((0, Seq(1.0, 2.0))).toDF("g", "v").agg(VectorAvgAgg.vectorAvg($"v")))
+    assert(e.getMessage.contains("array<float>"), e.getMessage)
+  }
+
   /** Result ids of a one-query search, best first. */
   private def ids(top: org.apache.spark.sql.DataFrame): Seq[Long] =
     top.orderBy($"rank").select($"id").collect().map(_.getLong(0)).toSeq

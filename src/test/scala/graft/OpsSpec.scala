@@ -111,7 +111,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // band keys (and every persisted LSH key) must match the formulation
     // that derives two Mix64 calls per multiply-add, bit for bit
     import org.apache.spark.sql.catalyst.util.GenericArrayData
-    import graft.expr.{HyperplaneBands, Mix64, SketchKernels}
+    import graft.expr.{Mix64, SketchKernels}
     def inLoopBands(vec: GenericArrayData, bands: Int, rows: Int, dims: Int): Array[Long] =
       Array.tabulate(bands) { b =>
         val key = (0 until rows).foldLeft(0L) { (k, r) =>
@@ -123,7 +123,7 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
         Mix64.mix(Mix64.mix(b.toLong) ^ key)
       }
     for ((bands, rows, dims) <- Seq((16, 16, 64), (4, 3, 7))) {
-      val planes = HyperplaneBands.planes(bands, rows, dims)
+      val planes = SketchKernels.planes(bands, rows, dims)
       (0 until 16).foreach { i =>
         val v = new GenericArrayData(Array.tabulate(dims)(d =>
           (Mix64.mix(i.toLong * 65537 + d).toDouble / 9.2e18).toFloat))
@@ -972,5 +972,64 @@ class OpsSpec extends AnyFunSuite with SparkSessionTestWrapper {
       .collect().head
     assert(c.getDouble(0) == 0.0 && math.abs(c.getDouble(1) - 1.0) < 1e-12 &&
       math.abs(c.getDouble(2) - 1.0) < 1e-12)
+  }
+
+  test("kernel calls: null input keeps its result, float and double vectors agree") {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.{Literal, TypeOf}
+    import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+    import org.apache.spark.sql.types.{ArrayType, BooleanType}
+    import graft.agg.Kmv
+    import graft.checks.ExactQuantile
+    import graft.expr.{MarcErrors, MarcJson}
+    import graft.ops.Ivf
+    import graft.schema.DocSchema
+    val centroids = Ivf.Model.axis(8, 64).centroids
+    // a null the optimizer cannot fold, so every call runs generated code
+    def nul(t: String): Column =
+      when($"id" < 0, if (t.startsWith("array")) array() else lit("")).cast(t)
+    val vec = nul("array<float>")
+    val cases = Seq[(String, Column, Any)](
+      ("minhashSig", minhashSig(nul("array<string>"), 16), null),
+      ("simhash64", simhash64(nul("array<string>")), null),
+      ("fnv64", fnv64(nul("string")), null),
+      ("minhashBandKeys", minhashBandKeys(nul("array<bigint>"), 4, 4), null),
+      ("cosineSim", cosineSim(vec, vec), null),
+      ("cosineRank", cosineRank(vec, centroids, 2), null),
+      ("hyperplaneBands", hyperplaneBands(vec, 4, 4, 64), null),
+      ("langIdNgram kernel", langIdNgram(nul("string"), TextAnalysis.LangProfiles), null),
+      ("TextAnalysis.langIdNgram", TextAnalysis.langIdNgram(nul("string")), "und"),
+      ("subwordStats", TextAnalysis.subwordStats(nul("string")), null),
+      ("Kmv.decode", Kmv.decode(nul("binary")), null),
+      ("MarcJson.column", MarcJson.column(nul("array<struct<kind:string,text:string>>")), null),
+      ("MarcErrors.jsonColumn", MarcErrors.jsonColumn(
+        nul(ArrayType(DocSchema.violationType).catalogString)), null))
+    val row = spark.range(1).select(cases.map { case (n, c, _) => c.as(n) }: _*).collect().head
+    cases.zipWithIndex.foreach { case ((n, _, want), i) => assert(row.get(i) == want, n) }
+    val q = ExactQuantile.percentiles(spark.range(3).select(nul("double").as("v")),
+      $"v", Seq(50)).collect().head
+    assert(q.getLong(0) == 0L && q.isNullAt(1))
+
+    // the same vectors as array<float> and array<double>: the double reads
+    // of a float are exact, so every kernel result must be identical
+    val vecs = emb.select($"embedding".as("f"), $"embedding".cast("array<double>").as("d"))
+    val kernels = Seq[Column => Column](
+      v => cosineSim(v, reverse(v)), v => cosineRank(v, centroids, 8),
+      v => hyperplaneBands(v, 16, 16, 64))
+    kernels.foreach(k => assert(vecs.where(not(k($"f") <=> k($"d"))).count() == 0))
+    // one float and one double argument in the same call
+    assert(vecs.where(not(cosineSim($"f", reverse($"d")) <=> cosineSim($"f", reverse($"f"))))
+      .count() == 0)
+    // the float flag is folded to a literal before codegen
+    def flags(c: Column): Seq[Any] = {
+      val plan = vecs.select(c.as("x")).queryExecution.optimizedPlan
+      assert(plan.expressions.forall(_.find(_.isInstanceOf[TypeOf]).isEmpty))
+      plan.expressions.flatMap(_.collect { case s: StaticInvoke => s.arguments }).flatten
+        .collect { case Literal(b, BooleanType) => b }
+    }
+    kernels.foreach { k =>
+      assert(flags(k($"f")).nonEmpty && flags(k($"f")).forall(_ == true))
+      assert(flags(k($"d")).nonEmpty && flags(k($"d")).forall(_ == false))
+    }
   }
 }

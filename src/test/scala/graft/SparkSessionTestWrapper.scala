@@ -4,7 +4,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
-/** One shared local session for the whole test JVM (Test / fork := true). */
+/** One shared local session for the whole test JVM (Test / fork := true).
+  * Generated code that does not compile fails the test that ran it, instead
+  * of logging a WARN and running interpreted: no whole-stage fallback, and
+  * projections and predicates are built by codegen only.
+  */
 object TestSpark {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -12,6 +16,8 @@ object TestSpark {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.codegen.fallback", "false")
+    .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     .getOrCreate()
 }
 
